@@ -190,9 +190,7 @@ def entry(spark: SparkSession) -> DataFrame:
     sf = "/root/testdata/sf0.001"
     pts = _event_points(spark, sf)
     polys = _pip_polygons_df(spark)
-    hits = point_in_polygon(
-        pts, polys, res=5, point_id="event_id", broadcast_polygons=True
-    )
+    hits = point_in_polygon(pts, polys, res=5, point_id="event_id")
     tiled = tiles.assign_tiles(hits, TILE_Z)
     return (
         tiled.groupBy("polygon_id", "tile_z", "tile_x", "tile_y")
@@ -8091,10 +8089,9 @@ def q_kmv_distinct(spark, sf):
 def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Full query registry in historical (rounds 1-3) insertion order.
 
-    Window rotation no longer lives here: `queries()` below reorders this
-    dict so the round's 50-entry driver window (`_R4_WINDOW`) leads.  Keep
-    appending new queries at the END of this dict; promote them into the
-    window list when they need a driver signature.
+    `queries()` below reorders this dict so the 50-entry lead list
+    (`_R5_WINDOW`) comes first.  Keep appending new queries at the END of
+    this dict.
     """
     return {
         # -- round-2 driver red, oracle dtype fixed (pos 0) -------------
@@ -8379,74 +8376,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- round 4 ------------------------------------------------------
         "q_layout_prune": q_layout_prune,
     }
-
-
-# Round-4 driver window (VERDICT r3 item 1): the driver gate signs exactly
-# the FIRST 50 registry entries each round, so this list IS the round's
-# signing budget.  Composition: 46 never-driver-signed queries (the
-# LLM-pipeline / flagship-adjacent batch first, then spatial statistics,
-# then web-crawl ops — VERDICT r3's priority order) + 4 re-sign slots for
-# previously-signed queries whose modules are edited this round (codegen
-# staging in extract/pip/geometry + the flagship).  All ten queries from
-# the r3 codegen-64KB fallback cluster and all five ADVICE-touched queries
-# sit inside the window, so every edit this round lands a fresh signature.
-_R4_WINDOW = [
-    # -- LLM-data-pipeline batch (never signed) --------------------------
-    "q_dedup_eval",
-    "q_incremental_dedup",
-    "q_bpe_tokenize",
-    "q_media_clusters",
-    "q_ahash",
-    "q_ahash_pairs",
-    "q_warc_parse",
-    "q_warc_stats",
-    "q_warc_pipeline",
-    "q_pq_codes",
-    "q_pq_topk",
-    "q_int8_quant",
-    "q_matryoshka_recall",
-    "q_jaccard_join",
-    "q_cdc_chunks",
-    "q_cdc_dedup",
-    "q_containment_pairs",
-    "q_dedup_best",
-    "q_set_cover",
-    "q_minhash_error",
-    # -- spatial-statistics batch (never signed) -------------------------
-    "q_morans_i",
-    "q_hot_spots",
-    "q_adaptive_tiles",
-    "q_map_match",
-    "q_nn_graph",
-    "q_gearys_c",
-    "q_ripley_k",
-    "q_knox",
-    "q_variogram",
-    "q_hex_assign",
-    "q_hex_disk",
-    "q_voronoi",
-    # -- web-crawl batch (never signed) -----------------------------------
-    "q_link_graph",
-    "q_host_rank",
-    "q_crawl_frontier",
-    "q_robots_rules",
-    "q_url_templates",
-    "q_redirects",
-    "q_crawl_budget",
-    "q_dead_links",
-    "q_web_tables",
-    "q_kcore",
-    "q_dom_stats",
-    "q_anchor_terms",
-    # -- ADVICE-touched modules (never signed) ----------------------------
-    "q_rendezvous",
-    "q_bitext_candidates",
-    # -- re-sign: modules edited this round (codegen staging) + flagship --
-    "q_pages_pipeline",
-    "q_extract_entities",
-    "q_simplify_ways",
-    "q_pip",
-]
 
 
 # Round-5 driver window: the oldest-unsigned 50 per BENCH/SIGNING.md's

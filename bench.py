@@ -37,7 +37,7 @@ from skyway_spark.sources.generate import generate_pages, generate_polygons  # n
 # audits) are excluded here — their cost is dominated by driver-side
 # serialization or subprocess orchestration, not operator throughput,
 # so a wall-clock row would measure the harness. The emitted JSON
-# carries the exact excluded set under "suite_excluded" so the suite
+# carries SUITE_EXCLUDED (below) under "suite_excluded" so the suite
 # count is never mistaken for registry coverage (VERDICT r4 item 5).
 BENCH_QUERIES = [
     "q01_pricing_summary",
@@ -277,6 +277,52 @@ BENCH_QUERIES = [
     "q_minhash_error",
 ]
 
+# Registry entries deliberately left out of the timed suite. Together
+# with BENCH_QUERIES this must cover the registry exactly: main() fails
+# before timing anything when a query is in both lists or in neither.
+SUITE_EXCLUDED = [
+    "q_array_map_funcs",
+    "q_bbox_cover",
+    "q_bib_coupling",
+    "q_cocitation",
+    "q_cust_order_left",
+    "q_datetime_funcs",
+    "q_dedup_ngram",
+    "q_embed_neardup",
+    "q_extract_entities",
+    "q_extract_mentions",
+    "q_frame_sample",
+    "q_fuzzy_join",
+    "q_grouping_sets",
+    "q_heading_octants",
+    "q_interval_union",
+    "q_lang_id",
+    "q_lateral_view",
+    "q_layout_prune",
+    "q_media_features",
+    "q_nation_setops",
+    "q_null_funcs",
+    "q_opl_lines",
+    "q_orders_cube",
+    "q_orders_rollup",
+    "q_pages_pipeline",
+    "q_pbf_roundtrip",
+    "q_percentiles",
+    "q_polygon_area",
+    "q_quality",
+    "q_rank_funcs",
+    "q_reciprocity",
+    "q_relation_rollup",
+    "q_rolling_wau",
+    "q_scalar_subquery",
+    "q_simhash_pairs",
+    "q_stratified_sample",
+    "q_string_funcs",
+    "q_vector_tiles",
+    "q_way_lengths",
+    "q_zorder_range",
+]
+
 PAGES_N = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "4000000"))
 
 
@@ -297,6 +343,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
+    qs = entrymod.queries()
+    both = set(BENCH_QUERIES) & set(SUITE_EXCLUDED)
+    assert not both, f"queries both timed and excluded: {sorted(both)}"
+    drift = set(qs) ^ (set(BENCH_QUERIES) | set(SUITE_EXCLUDED))
+    assert not drift, f"bench lists and registry disagree on: {sorted(drift)}"
     spark = get_spark(
         "skyway-bench",
         cpus=cpus,
@@ -370,7 +421,6 @@ def main() -> None:
     docs_per_sec = PAGES_N / flagship_sec
 
     # ---- per-query operator suite ---------------------------------
-    qs = entrymod.queries()
     timings: dict[str, float] = {}
     # SPARK_GRAFT_BENCH_ONLY=flagship skips the operator suite — used
     # for quiet-window flagship re-measurement (the suite takes ~10 min
@@ -388,7 +438,6 @@ def main() -> None:
             print(f"warning: {name} returned 0 rows", file=sys.stderr)
     timings["flagship_pages_pipeline"] = round(flagship_sec, 3)
 
-    excluded = sorted(set(qs) - set(BENCH_QUERIES))
     print(
         json.dumps(
             {
@@ -409,8 +458,8 @@ def main() -> None:
                         "correctness-gated in the sf0.01 sweep "
                         "(BENCH/QUERIES_*.json)"
                     ),
-                    "count": len(excluded),
-                    "queries": excluded,
+                    "count": len(SUITE_EXCLUDED),
+                    "queries": SUITE_EXCLUDED,
                 },
             }
         )

@@ -3,34 +3,31 @@
 Strategy (north_rule: "point-in-polygon via ray-casting over
 cell-bucketed polygon partitions"):
 
-1. each polygon ring -> its covering cells at ``res`` (bbox cover);
+1. each polygon -> its adaptive covering cells, classified interior /
+   boundary (exterior cells dropped);
 2. points -> cell at the same res (pure Column math);
 3. equi-join on cell — polygon side broadcast, so the point side
    never shuffles;
-4. exact even-odd ray-cast refine, fully numpy-vectorized;
+4. exact even-odd ray-cast refine on boundary-band candidates only;
 5. hole handling: inside an ``outer`` ring and not inside any
    ``hole`` ring of the same polygon_id.
 
-Two physical paths:
+The polygon table is dimension-sized (the same assumption a broadcast
+join makes): ring geometry is collected ONCE on the driver and
+compiled into the plan. Two refine engines:
 
-- **broadcast path (default)**: the polygon table is dimension-sized
-  (same assumption a broadcast join makes). Ring geometry is
-  collected ONCE on the driver and compiled into the plan. Two refine
-  engines:
-  - ``refine='jvm'`` (default): ring edges become literal
-    array<struct> columns and the even-odd ray cast is a pure
-    higher-order-function expression (``exists``/``aggregate``) —
-    zero Python processes in the hot path, no Arrow transfer, stable
-    latency, and the whole pipeline stays narrow.
-  - ``refine='pandas'``: ships rings to Python workers inside a
-    pandas UDF closure and ray-casts each Arrow batch as one numpy
-    (points x edges) broadcast — useful when rings have thousands of
-    vertices, where numpy's vectorized matrix beats the per-edge
-    interpreted HOF lambda.
-- **distributed path** (``broadcast_polygons=False``): rings stay in
-  the DataFrame and ship per candidate row — for polygon sets too
-  large to hold on the driver; the cell equi-join then shuffles on
-  cell, where hot-cell salting (operators/salt.py) + AQE apply.
+- ``refine='jvm'``: ring edges become literal array<struct> columns
+  and the even-odd ray cast is a pure higher-order-function
+  expression (``exists``/``aggregate``) — zero Python processes in
+  the hot path, no Arrow transfer, stable latency, and the whole
+  pipeline stays narrow.
+- ``refine='pandas'``: ships rings to Python workers inside a pandas
+  UDF closure and ray-casts each Arrow batch as one numpy
+  (points x edges) broadcast — for rings with thousands of vertices,
+  where numpy's vectorized matrix beats the per-edge interpreted HOF
+  lambda and the literal plan would grow too large.
+
+``refine='auto'`` (default) picks between them by total edge count.
 
 Geometry is planar in (lat, lon) — fine for city-scale polygons away
 from the antimeridian (the generator guarantees this; a production
@@ -41,9 +38,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, LongType
+from pyspark.sql.types import BooleanType
 
 from skyway_spark.functions import cells
 
@@ -65,11 +62,6 @@ def _ray_cast_batch(py: np.ndarray, px: np.ndarray, ys: np.ndarray, xs: np.ndarr
     with np.errstate(divide="ignore", invalid="ignore"):
         xint = (x2 - x1) * (pyc - y1) / (y2 - y1) + x1
     return ((crosses & (pxc < xint)).sum(axis=1) % 2).astype(bool)
-
-
-# ---------------------------------------------------------------------------
-# broadcast path
-# ---------------------------------------------------------------------------
 
 
 def _edge_struct(y1: float, x1: float, y2: float, x2: float):
@@ -235,9 +227,7 @@ def point_in_polygon(
     point_id: str = "id",
     lat: str = "lat",
     lon: str = "lon",
-    broadcast_polygons: bool = True,
     refine: str = "auto",
-    interior_shortcut: bool = True,
 ) -> DataFrame:
     """Rows of ``points`` (all columns preserved) paired with every
     ``polygon_id`` containing them.
@@ -245,11 +235,8 @@ def point_in_polygon(
     ``refine='auto'`` (default) picks the jvm HOF refine while the
     total edge count fits JVM_REFINE_MAX_EDGES and the Arrow pandas
     refine beyond it — both produce bit-identical verdicts (same op
-    order, pinned by the 3-path tests). Pass 'jvm'/'pandas' to force.
+    order, pinned by the oracle tests). Pass 'jvm'/'pandas' to force.
     """
-    if not broadcast_polygons:
-        return _point_in_polygon_distributed(points, polygons, res, point_id, lat, lon)
-
     # driver-side: geometry grouped per POLYGON (all its outer + hole
     # rings together) so one UDF verdict = outer-minus-holes in a
     # single pass. The polygon table is dimension-sized by contract —
@@ -268,36 +255,19 @@ def point_in_polygon(
     # per-polygon resolution within INTERIOR_CELL_BUDGET.  Cells
     # provably inside the polygon short-circuit the refine entirely
     # (verdict true, no ray cast — the bulk of truly-contained
-    # points); provably-outside cells never become candidates at all
-    # (at the old coarse cover a 2.8-degree cell made every point
-    # near a city a candidate for its 0.3-degree polygon).  Only the
-    # thin boundary band pays the per-edge refine.
+    # points); provably-outside cells never become candidates at all.
+    # Only the thin boundary band pays the per-edge refine.
     cell_rows: list[tuple[int, int, int, bool]] = []  # (res, cell, geom, interior)
     used_res: set[int] = set()
     for gi, p in enumerate(pids):
         rings = by_pid[p]["outer"] + by_pid[p]["hole"]
         ys_all = np.concatenate([r[0] for r in rings])
         xs_all = np.concatenate([r[1] for r in rings])
-        if interior_shortcut:
-            f = _pick_cover_res(
-                float(ys_all.min()), float(ys_all.max()),
-                float(xs_all.min()), float(xs_all.max()), res,
-            )
-            ids, inter = _classify_cover(by_pid[p], f)
-        else:  # plain coarse bbox cover (pre-round-4 behavior, for A/B)
-            f = res
-            ids = np.unique(
-                np.concatenate(
-                    [
-                        cells.cells_covering_bbox(
-                            float(ys.min()), float(ys.max()),
-                            float(xs.min()), float(xs.max()), res,
-                        )
-                        for ys, xs in rings
-                    ]
-                )
-            )
-            inter = np.zeros(len(ids), dtype=bool)
+        f = _pick_cover_res(
+            float(ys_all.min()), float(ys_all.max()),
+            float(xs_all.min()), float(xs_all.max()), res,
+        )
+        ids, inter = _classify_cover(by_pid[p], f)
         used_res.add(f)
         cell_rows.extend(
             (f, int(c), gi, bool(i)) for c, i in zip(ids.tolist(), inter.tolist())
@@ -428,90 +398,6 @@ def point_in_polygon(
         .select(
             point_id, *passthrough, F.element_at(pid_arr, F.col("__geom") + 1).alias("polygon_id")
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# distributed path (very large polygon tables)
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(ArrayType(LongType(), False))
-def _covering_cells_udf(rings: pd.Series, res_s: pd.Series) -> pd.Series:
-    """ring (array<struct<lat,lon>>) -> covering cell ids (bbox cover)."""
-
-    def cover(args):
-        ring, res = args
-        ys, xs = _ring_arrays(ring)
-        return cells.cells_covering_bbox(
-            float(ys.min()), float(ys.max()), float(xs.min()), float(xs.max()), int(res)
-        ).tolist()
-
-    return pd.Series([cover(a) for a in zip(rings, res_s)])
-
-
-@F.pandas_udf(BooleanType())
-def _ray_cast_udf(lat_s: pd.Series, lon_s: pd.Series, rings: pd.Series) -> pd.Series:
-    """Ray cast with per-row rings (distributed path). Rows sharing a
-    ring object within the batch are grouped to keep numpy batching."""
-    py = lat_s.to_numpy(dtype=np.float64)
-    px = lon_s.to_numpy(dtype=np.float64)
-    out = np.zeros(len(py), dtype=bool)
-    # group rows by ring identity (first-vertex + length fingerprint)
-    groups: dict[tuple, list[int]] = {}
-    ring_of: dict[tuple, object] = {}
-    for i, ring in enumerate(rings):
-        mid = ring[len(ring) // 2]
-        k = (len(ring), ring[0]["lat"], ring[0]["lon"], mid["lat"], mid["lon"],
-             ring[1]["lat"], ring[1]["lon"])
-        groups.setdefault(k, []).append(i)
-        ring_of[k] = ring
-    for k, idxs in groups.items():
-        ys, xs = _ring_arrays(ring_of[k])
-        ii = np.array(idxs)
-        out[ii] = _ray_cast_batch(py[ii], px[ii], ys, xs)
-    return pd.Series(out)
-
-
-def polygon_cells(polygons: DataFrame, res: int) -> DataFrame:
-    """polygon rings -> (cell, polygon_id, ring_role, ring): one row
-    per covering cell, bucketed for the equi-join."""
-    return polygons.select(
-        "polygon_id",
-        "ring_role",
-        "ring",
-        F.explode(_covering_cells_udf(F.col("ring"), F.lit(res))).alias("cell"),
-    )
-
-
-def _point_in_polygon_distributed(
-    points: DataFrame,
-    polygons: DataFrame,
-    res: int,
-    point_id: str,
-    lat: str,
-    lon: str,
-) -> DataFrame:
-    pts = points.withColumn("__cell", cells.cell_encode(F.col(lat), F.col(lon), res))
-    pcells = polygon_cells(polygons, res)
-    cand = pts.join(pcells, pts["__cell"] == pcells["cell"], "inner")
-    refined = cand.withColumn(
-        "__inside", _ray_cast_udf(F.col(lat), F.col(lon), F.col("ring"))
-    )
-    passthrough = [c for c in points.columns if c != point_id]
-    return (
-        refined.groupBy(point_id, "polygon_id")
-        .agg(
-            F.max(F.when(F.col("ring_role") == "outer", F.col("__inside")).otherwise(False)).alias(
-                "__in_outer"
-            ),
-            F.max(F.when(F.col("ring_role") == "hole", F.col("__inside")).otherwise(False)).alias(
-                "__in_hole"
-            ),
-            *[F.first(c).alias(c) for c in passthrough],
-        )
-        .where(F.col("__in_outer") & ~F.col("__in_hole"))
-        .select(point_id, *passthrough, "polygon_id")
     )
 
 

@@ -2,9 +2,9 @@
 --from/--to resolution (src/main.rs:23-48, src/readers/mod.rs:36-50,
 src/writers/mod.rs:25-48).
 
-Formats: read opl | json (OSM + Overpass) | xml | pbf(stub);
-write opl | json | overpass | xml. o5m is omitted — disabled in the
-reference itself (src/writers/mod.rs:27,40) with an unimplemented
+Formats: read opl | json (OSM + Overpass) | xml | pbf, one reader
+each; write opl | json | overpass | xml. o5m is omitted — disabled in
+the reference itself (src/writers/mod.rs:27,40) with an unimplemented
 element body and a latent descending-id bug we do not replicate
 (SURVEY §7.5). OSMX is an unreachable stub in the reference
 (src/readers/osmx.rs:12-14) and omitted.

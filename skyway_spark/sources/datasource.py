@@ -1,24 +1,18 @@
-"""Spark 4 Python DataSource wrappers: OSM formats as first-class
-``spark.read.format(...)`` sources.
+"""Spark 4 Python DataSource for WARC files on disk:
+``spark.read.format("warc")``.
 
     from skyway_spark.sources.datasource import register_datasources
     register_datasources(spark)
-    df = spark.read.format("opl").load("/data/*.opl")
-    df = spark.read.format("osmpbf").load("/data/planet.osm.pbf")
-    df = spark.read.format("osmjson").load("/data/export.json")
+    df = spark.read.format("warc").load("/data/*.warc")
 
-Partitioning is the scale story: OPL/JSON split per FILE (a 100 TB
-corpus arrives as many files; each task streams one), PBF splits per
-BLOB (the ~8 MB compressed block is the format's natural parallel
-unit — the same granularity the reference's rayon pool uses,
-src/readers/pbf.rs:129-160). Every reader yields plain tuples in the
-canonical elements schema; Spark's DataSource machinery handles the
-Arrow transfer.
+One partition per file (a crawl arrives as many files; each task
+streams one). Records are split by the same Content-Length parser that
+``sources/warc.read_warc`` uses, and Spark's DataSource machinery
+handles the Arrow transfer.
 
-These wrap the same pure-Python decoders the mapInPandas paths use
-(pbf.decode_primitive_block, jsonio._element_from_json,
-opl.parse_opl_line_py), so both APIs stay semantically identical —
-pinned by differential tests in tests/test_converters.py.
+The OSM formats have no DataSource here: each has exactly one reader,
+dispatched by ``sources/convert.read_elements`` (``read_opl``,
+``read_json``, ``read_xml``, ``read_pbf``).
 """
 
 from __future__ import annotations
@@ -28,29 +22,6 @@ import os
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql import types as T
-
-from skyway_spark.schema import ELEMENTS_SCHEMA
-
-
-def _deep_nullable(dt: T.DataType) -> T.DataType:
-    """ELEMENTS_SCHEMA with every field/element nullable: the Python
-    DataSource ENFORCES declared nullability on returned rows (unlike
-    Column projections), and malformed/blank lines legitimately yield
-    null fields in permissive-style reading."""
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [T.StructField(f.name, _deep_nullable(f.dataType), True) for f in dt.fields]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_deep_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(
-            _deep_nullable(dt.keyType), _deep_nullable(dt.valueType), True
-        )
-    return dt
-
-
-NULLABLE_ELEMENTS_SCHEMA = _deep_nullable(ELEMENTS_SCHEMA)
 
 
 def _expand_paths(path: str) -> list[str]:
@@ -71,135 +42,6 @@ class _FilePartition(InputPartition):
         self.path = path
 
 
-class _BlobPartition(InputPartition):
-    def __init__(self, path: str, slices: list[tuple[int, int]]):
-        self.path = path
-        self.slices = slices
-
-
-class OplDataSource(DataSource):
-    """``spark.read.format('opl')`` — one partition per file."""
-
-    @classmethod
-    def name(cls):
-        return "opl"
-
-    def schema(self):
-        return NULLABLE_ELEMENTS_SCHEMA
-
-    def reader(self, schema):
-        return _OplReader(self.options)
-
-
-class _OplReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("opl source needs a path: .load('/data/*.opl')")
-
-    def partitions(self):
-        return [_FilePartition(p) for p in _expand_paths(self.path)]
-
-    def read(self, partition):
-        from skyway_spark.sources.opl import parse_opl_line_py
-
-        with open(partition.path, encoding="utf-8") as f:
-            for line in f:
-                # blank lines included: parse_opl_lines emits an
-                # all-null row for them, and the two APIs must agree
-                yield parse_opl_line_py(line.rstrip("\n"))
-
-
-class OsmJsonDataSource(DataSource):
-    """``spark.read.format('osmjson')`` — OSM/Overpass JSON documents,
-    one partition per file; unknown fields (bounds/geometry) ignored
-    exactly like the reference's lenient serde structs."""
-
-    @classmethod
-    def name(cls):
-        return "osmjson"
-
-    def schema(self):
-        return NULLABLE_ELEMENTS_SCHEMA
-
-    def reader(self, schema):
-        return _OsmJsonReader(self.options)
-
-
-class _OsmJsonReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("osmjson source needs a path")
-
-    def partitions(self):
-        return [_FilePartition(p) for p in _expand_paths(self.path)]
-
-    def read(self, partition):
-        import json
-
-        from skyway_spark.sources.jsonio import _element_from_json
-
-        with open(partition.path, encoding="utf-8") as f:
-            doc = json.load(f)
-        for e in doc.get("elements", []):
-            yield _element_from_json(e)
-
-
-class OsmPbfDataSource(DataSource):
-    """``spark.read.format('osmpbf')`` — one partition per group of
-    OSMData blobs (option ``blobs_per_task``, default 4)."""
-
-    @classmethod
-    def name(cls):
-        return "osmpbf"
-
-    def schema(self):
-        return NULLABLE_ELEMENTS_SCHEMA
-
-    def reader(self, schema):
-        return _OsmPbfReader(self.options)
-
-
-class _OsmPbfReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("osmpbf source needs a path")
-        self.blobs_per_task = int(options.get("blobs_per_task", "4"))
-
-    def partitions(self):
-        from skyway_spark.sources.pbf import scan_blob_index
-
-        parts = []
-        for p in _expand_paths(self.path):
-            slices = [
-                (off, size)
-                for (_path, off, size, btype) in scan_blob_index(p)
-                if btype == "OSMData"
-            ]
-            for i in range(0, len(slices), self.blobs_per_task):
-                parts.append(_BlobPartition(p, slices[i : i + self.blobs_per_task]))
-        if parts:
-            return parts
-        # header-only PBF (valid, zero OSMData blobs): one empty
-        # partition anchored to a REAL file path, never the raw glob
-        return [_BlobPartition(_expand_paths(self.path)[0], [])]
-
-    def read(self, partition):
-        from skyway_spark.sources.pbf import _blob_raw, decode_primitive_block
-
-        if not partition.slices:
-            return
-        order = [f.name for f in ELEMENTS_SCHEMA.fields]
-        with open(partition.path, "rb") as f:
-            for off, size in partition.slices:
-                f.seek(off)
-                blob = f.read(size)
-                for row in decode_primitive_block(_blob_raw(blob)):
-                    yield tuple(row.get(k) for k in order)
-
-
 class WarcDataSource(DataSource):
     """``spark.read.format('warc')`` — Common-Crawl-style WARC files,
     one partition per file, Content-Length-delimited records (parser
@@ -213,11 +55,15 @@ class WarcDataSource(DataSource):
     def schema(self):
         from skyway_spark.sources.warc import WARC_SCHEMA
 
-        return _deep_nullable(
-            T.StructType(
-                [T.StructField("path", T.StringType())]
-                + [f for f in WARC_SCHEMA.fields if f.name != "file_id"]
-            )
+        # every field nullable: the Python DataSource ENFORCES declared
+        # nullability on returned rows (unlike Column projections)
+        return T.StructType(
+            [T.StructField("path", T.StringType())]
+            + [
+                T.StructField(f.name, f.dataType, True)
+                for f in WARC_SCHEMA.fields
+                if f.name != "file_id"
+            ]
         )
 
     def reader(self, schema):
@@ -243,6 +89,5 @@ class _WarcReader(DataSourceReader):
 
 
 def register_datasources(spark) -> None:
-    """Idempotent registration of all four formats on a session."""
-    for ds in (OplDataSource, OsmJsonDataSource, OsmPbfDataSource, WarcDataSource):
-        spark.dataSource.register(ds)
+    """Idempotent registration of the ``warc`` format on a session."""
+    spark.dataSource.register(WarcDataSource)

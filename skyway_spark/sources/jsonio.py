@@ -217,66 +217,3 @@ def parse_json_document(spark: SparkSession, text: str) -> tuple[DataFrame, dict
 def read_json(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     with open(path, encoding="utf-8") as f:
         return parse_json_document(spark, f.read())
-
-
-def read_json_distributed(spark: SparkSession, path: str) -> DataFrame:
-    """Scale path: spark.read.json with an EXPLICIT document schema.
-
-    Inference is wrong twice at scale: it costs a full extra pass over
-    the input, and on real Overpass output it types ``tags`` as a
-    struct with one field per distinct tag key seen (133 fields on the
-    reference example corpus) — which cannot cast to map<string,string>.
-    With an explicit schema the reader projects exactly the element
-    fields and silently drops unknown ones (``bounds``/``geometry``),
-    matching the reference's lenient serde structs
-    (src/readers/json.rs:66-80)."""
-    from pyspark.sql import types as T
-
-    elem = T.StructType(
-        [
-            T.StructField("type", T.StringType()),
-            T.StructField("id", T.LongType()),
-            T.StructField("lat", T.DoubleType()),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("nodes", T.ArrayType(T.LongType())),
-            T.StructField(
-                "members",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("type", T.StringType()),
-                            T.StructField("ref", T.LongType()),
-                            T.StructField("role", T.StringType()),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-            T.StructField("changeset", T.LongType()),
-            T.StructField("uid", T.IntegerType()),
-            T.StructField("user", T.StringType()),
-            T.StructField("version", T.IntegerType()),
-            T.StructField("timestamp", T.StringType()),
-            T.StructField("visible", T.BooleanType()),
-        ]
-    )
-    doc = T.StructType([T.StructField("elements", T.ArrayType(elem))])
-    raw = spark.read.option("multiLine", "true").schema(doc).json(path)
-    el = raw.select(F.explode("elements").alias("e"))
-    return el.select(
-        F.col("e.type").alias("type"),
-        F.col("e.id").alias("id"),
-        F.col("e.lat").alias("lat"),
-        F.col("e.lon").alias("lon"),
-        F.col("e.nodes").alias("nodes"),
-        F.col("e.members").alias("members"),
-        F.coalesce(
-            F.col("e.tags"), F.from_json(F.lit("{}"), "map<string,string>")
-        ).alias("tags"),
-        F.col("e.changeset").alias("changeset"),
-        F.col("e.uid").alias("uid"),
-        F.col("e.user").alias("user"),
-        F.col("e.version").alias("version"),
-        F.col("e.timestamp").alias("timestamp"),
-        F.col("e.visible").alias("visible"),
-    )

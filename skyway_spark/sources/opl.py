@@ -388,90 +388,3 @@ def read_opl(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
 
     lines = spark.read.text(path)
     return parse_opl_lines(lines), empty_metadata()
-
-
-# ---------------------------------------------------------------------------
-# pure-Python line parser (Python DataSource path)
-# ---------------------------------------------------------------------------
-
-_TYPE_OF_CHAR = {"n": "node", "w": "way", "r": "relation"}
-_MEMBER_TYPE_OF = {"n": "node", "w": "way", "r": "relation"}
-
-
-def parse_opl_line_py(line: str) -> tuple:
-    """One OPL line -> elements-schema tuple, mirroring parse_opl_lines'
-    Column semantics field for field (null on unparseable pieces, {} for
-    missing tags, member-list None when any ref fails to parse). Used by
-    the spark.read.format('opl') Python DataSource, whose worker has no
-    Column engine; equality with the Column path is pinned by a
-    differential test in tests/test_converters.py."""
-    fields = line.split(" ")
-    head = fields[0] if fields else ""
-
-    def field(prefix: str) -> str | None:
-        for tok in fields:
-            if tok.startswith(prefix):
-                return tok[len(prefix):]
-        return None
-
-    def as_int(v):
-        try:
-            return int(v) if v is not None else None
-        except ValueError:
-            return None
-
-    def as_float(v):
-        try:
-            return float(v) if v is not None else None
-        except ValueError:
-            return None
-
-    etype = _TYPE_OF_CHAR.get(head[:1])
-    eid = as_int(head[1:] or None)
-    nodes_raw = field("N")
-    nodes = (
-        [as_int(t[1:] or None) for t in nodes_raw.split(",")]
-        if nodes_raw is not None
-        else None
-    )
-    members_raw = field("M")
-    members = None
-    if members_raw is not None:
-        members = []
-        for entry in members_raw.split(","):
-            if "@" not in entry:
-                continue
-            ref_part, role = entry.split("@", 1)
-            t = _MEMBER_TYPE_OF.get(ref_part[:1])
-            if t is None:
-                continue
-            ref = as_int(ref_part[1:] or None)
-            if ref is None:
-                members = None  # whole field unparseable (udf parity)
-                break
-            members.append((t, ref, unescape_opl(role)))
-    tags_raw = field("T")
-    tags = {}
-    if tags_raw:
-        for entry in tags_raw.split(","):
-            if "=" not in entry:
-                continue
-            k, v = entry.split("=", 1)
-            tags[unescape_opl(k)] = unescape_opl(v)
-    d_field = field("d")
-    user = field("u")
-    return (
-        etype,
-        eid,
-        as_float(field("y")),
-        as_float(field("x")),
-        nodes,
-        members,
-        tags,
-        as_int(field("c")),
-        as_int(field("i")),
-        unescape_opl(user) if user is not None else None,
-        as_int(field("v")),
-        field("t"),
-        True if d_field == "V" else False if d_field == "D" else None,
-    )

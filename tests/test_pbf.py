@@ -136,3 +136,121 @@ def test_decode_block_direct(pbf_path):
             f.seek(off)
             rows.extend(decode_primitive_block(_blob_raw(f.read(size))))
     assert len(rows) == len(ELS)
+
+
+# ------------------- seeded encode -> decode fuzz -------------------
+#
+# Random elements through encode_pbf -> read_pbf in both node layouts.
+# Ids are random and unsorted, so the delta-coded id, coordinate and ref
+# streams carry negative deltas; strings come from a small atom pool
+# (heavy string-table reuse) plus random code points, and include the
+# empty string as key, value, user and role.
+
+_ATOMS = ["", "a", "name", "highway", " ", ",", "=", "@", "%", "\n", "é", "ß",
+          "中文", "😱", "𒄈"]
+
+
+def _fuzz_str(rng) -> str:
+    if rng.random() < 0.1:
+        return ""
+    parts = []
+    for _ in range(rng.randrange(1, 4)):
+        if rng.random() < 0.8:
+            parts.append(rng.choice(_ATOMS))
+        else:
+            parts.append(chr(rng.choice((rng.randrange(0x20, 0xD7FF),
+                                         rng.randrange(0x10000, 0x10400)))))
+    return "".join(parts)
+
+
+def _fuzz_elements(seed: int, n: int) -> list[dict]:
+    import random
+
+    rng = random.Random(seed)
+    used: set[tuple[str, int]] = set()
+    els = []
+    while len(els) < n:
+        t = rng.choice(("node", "way", "relation"))
+        eid = rng.choice((rng.randrange(1, 1000), rng.randrange(1, 2**40)))
+        if (t, eid) in used:
+            continue
+        used.add((t, eid))
+        # the DenseNodes keys_vals stream ends each node's tags with
+        # string id 0 (the empty string), so a dense node cannot carry
+        # an empty key; every other tag list can
+        keys = [_fuzz_str(rng) for _ in range(rng.randrange(0, 5))]
+        e = {"type": t, "id": eid,
+             "tags": {k: _fuzz_str(rng) for k in keys if k or t != "node"}}
+        if t == "node":
+            e["lat"] = rng.choice((rng.randrange(-900_000_000, 900_000_001) / 1e7, 90.0, -90.0, 0.0))
+            e["lon"] = rng.choice((rng.randrange(-1_800_000_000, 1_800_000_001) / 1e7, 180.0, -180.0))
+        elif t == "way":
+            e["nodes"] = [rng.randrange(1, 2**40) for _ in range(rng.randrange(0, 8))]
+        else:
+            e["members"] = [
+                {"type": rng.choice(("node", "way", "relation")),
+                 "ref": rng.randrange(1, 2**40), "role": _fuzz_str(rng)}
+                for _ in range(rng.randrange(0, 6))
+            ]
+        if rng.random() < 0.5:
+            e["version"] = rng.randrange(0, 2**31)
+        if rng.random() < 0.5:
+            e["timestamp_ms"] = rng.randrange(0, 2**31) * 1000
+        if rng.random() < 0.5:
+            e["changeset"] = rng.randrange(0, 2**40)
+        if rng.random() < 0.5:
+            e["uid"] = rng.randrange(0, 2**31)
+        if rng.random() < 0.5:
+            e["user"] = _fuzz_str(rng)
+        if rng.random() < 0.5:
+            e["visible"] = rng.random() < 0.5
+        els.append(e)
+    return els
+
+
+def _fuzz_expected(e: dict, dense: bool) -> tuple:
+    import time
+
+    t = e["type"]
+    # the encoder writes no DenseInfo: dense nodes lose their metadata
+    info = {} if dense and t == "node" else e
+    ts = info.get("timestamp_ms")
+    return (
+        t, e["id"],
+        round(e["lat"], 7) if t == "node" else None,
+        round(e["lon"], 7) if t == "node" else None,
+        e["nodes"] if t == "way" else None,
+        [(m["type"], m["ref"], m["role"]) for m in e["members"]] if t == "relation" else None,
+        sorted(e["tags"].items()),
+        info.get("changeset"), info.get("uid"), info.get("user"), info.get("version"),
+        None if ts is None else time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime(ts // 1000)),
+        info.get("visible"),
+    )
+
+
+def _fuzz_canon(r) -> tuple:
+    return (
+        r["type"], r["id"],
+        None if r["lat"] is None else round(r["lat"], 7),
+        None if r["lon"] is None else round(r["lon"], 7),
+        r["nodes"],
+        None if r["members"] is None else [tuple(m) for m in r["members"]],
+        sorted(r["tags"].items()),
+        r["changeset"], r["uid"], r["user"], r["version"], r["timestamp"], r["visible"],
+    )
+
+
+@pytest.mark.parametrize("dense", [True, False], ids=["dense", "plain"])
+def test_seeded_encode_decode_fuzz(spark, tmp_path, dense):
+    els = _fuzz_elements(20261017, 360)
+    p = str(tmp_path / "fuzz.osm.pbf")
+    encode_pbf(p, els, dense=dense, block_size=50)
+    assert sum(1 for *_, t in scan_blob_index(p) if t == "OSMData") == 8
+    df = read_pbf(spark, p)
+    # one task per group of blobs, not one for the whole file
+    assert df.rdd.getNumPartitions() > 1
+    got = sorted((_fuzz_canon(r) for r in df.collect()), key=lambda c: (c[0], c[1]))
+    want = sorted((_fuzz_expected(e, dense) for e in els), key=lambda c: (c[0], c[1]))
+    assert len(got) == len(want) == 360
+    for w, g in zip(want, got):
+        assert g == w, f"\nwant {w}\ngot  {g}"

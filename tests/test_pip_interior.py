@@ -1,6 +1,6 @@
 """Direct unit pins for the round-4 PIP adaptive interior covering
 (operators/pip._classify_cover / _pick_cover_res): the end-to-end
-3-path equality tests in test_spatial.py prove the composition; these
+oracle tests in test_spatial.py prove the composition; these
 prove the classification invariants themselves against dense exact
 sampling, so a regression is localized instead of surfacing as a
 far-away verdict diff.

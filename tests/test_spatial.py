@@ -82,19 +82,13 @@ def _pip_oracle(points_rows, poly_rows):
 
 
 @pytest.mark.parametrize("res", [5, 7])
-@pytest.mark.parametrize(
-    "broadcast,refine",
-    [(True, "jvm"), (True, "pandas"), (False, "jvm")],
-    ids=["bcast-jvm", "bcast-pandas", "distributed"],
-)
-def test_pip_matches_oracle(spark, entities, res, broadcast, refine):
+@pytest.mark.parametrize("refine", ["jvm", "pandas"], ids=["bcast-jvm", "bcast-pandas"])
+def test_pip_matches_oracle(spark, entities, res, refine):
     polys = generate_polygons(spark)
     pts = entities.select("id", "lat", "lon").limit(3000).cache()
     got = {
         (r["id"], r["polygon_id"])
-        for r in point_in_polygon(
-            pts, polys, res=res, broadcast_polygons=broadcast, refine=refine
-        )
+        for r in point_in_polygon(pts, polys, res=res, refine=refine)
         .select("id", "polygon_id")
         .collect()
     }

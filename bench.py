@@ -1,9 +1,10 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32) and
-prints ONE JSON line:
-    {"metric": "...", "value": N, "unit": "...", "queries": {...}, "sf": ...}
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the host's
+CPU count) and prints ONE JSON line:
+    {"metric": "...", "value": N, "unit": "...", "queries": {...}, "sf": ...,
+     "nproc": ..., "loadavg": [1m, 5m, 15m], ...}
 
 The headline metric is the north-rule one: docs/sec through the
 spatial-join + tile-assignment pipeline (pages -> extract -> filter ->
@@ -341,7 +342,10 @@ def flagship_plan(spark, pages):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    # host context before Spark adds its own load: numbers only compare
+    # on the same host under similar contention
+    host = {"nproc": os.cpu_count(), "loadavg": [round(x, 2) for x in os.getloadavg()]}
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     qs = entrymod.queries()
     both = set(BENCH_QUERIES) & set(SUITE_EXCLUDED)
@@ -377,8 +381,7 @@ def main() -> None:
     # The headline number degrades ~25% when measured after the 60+
     # query suite (accumulated broadcast/codegen/GC state); a real
     # deployment runs this pipeline in its own job, so measure it the
-    # same way — pristine session, like the scaling harness's
-    # fresh-JVM-per-config children. Pages materialize to parquet once
+    # same way — pristine session. Pages materialize to parquet once
     # (input cost is not the pipeline's cost — a real deployment scans
     # Iceberg), on tmpfs when available: a freshly-written /tmp corpus
     # competes with its own disk writeback during the timed reads,
@@ -447,6 +450,7 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "cpus": cpus,
+                **host,
                 "flagship_pages": PAGES_N,
                 "flagship_walls": [round(w, 3) for w in walls],
                 "suite_excluded": {
@@ -479,6 +483,7 @@ def main() -> None:
                 "queries": {"flagship_pages_pipeline": round(flagship_sec, 3)},
                 "sf": sf,
                 "cpus": cpus,
+                **host,
                 "flagship_pages": PAGES_N,
                 "flagship_wall_best": round(flagship_sec, 3),
                 "flagship_wall_median": round(walls_sorted[len(walls_sorted) // 2], 3),

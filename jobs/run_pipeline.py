@@ -3,12 +3,12 @@
     spark-submit --py-files skyway_spark.zip jobs/run_pipeline.py \
         --pages 1000000 --out /tmp/skyway_out [--checkpoints /tmp/ckpt]
 
-pages -> extract geo entities -> OSMFilter+CEL filter chain -> cell
-encode -> hot-cell salted PIP join -> raster+vector tiles -> OPL
-convert. Every stage checkpoints through CheckpointManager, so a
-killed run resumes from the last completed stage with identical
-output; per-partition lineage + wall-time metrics print as one JSON
-line at the end.
+pages -> extract geo entities -> OSMFilter+CEL filter chain ->
+broadcast PIP join -> raster tiles -> OPL convert. Every stage
+checkpoints through CheckpointManager, so a killed run resumes from
+the last completed stage with identical output and a changed input
+recomputes every stage after it; per-stage rows (from the parquet
+footers, no extra Spark job) and wall times print as one JSON line.
 """
 
 from __future__ import annotations
@@ -22,9 +22,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from skyway_spark.functions import cells  # noqa: E402
 from skyway_spark.functions.filter import apply_filters  # noqa: E402
-from skyway_spark.operators import salt, tiles  # noqa: E402
+from skyway_spark.operators import tiles  # noqa: E402
 from skyway_spark.operators.extract import extract_geo_entities  # noqa: E402
 from skyway_spark.operators.pip import point_in_polygon  # noqa: E402
 from skyway_spark.plans.checkpoint import CheckpointManager  # noqa: E402
@@ -47,21 +46,21 @@ FILTERS = [
 
 PIP_RES = 6
 TILE_Z = 10
+OPL_ROWS = 10_000
 
 
 def run(pages_n: int, out: str, ckpt_root: str, cpus: int | None = None) -> dict:
     spark = get_spark("skyway-pipeline", cpus=cpus)
     cm = CheckpointManager(ckpt_root)
-    fp = f"pages={pages_n};v1"
 
-    pages = cm.stage(spark, "pages", fp, lambda: generate_pages(spark, pages_n))
-    entities = cm.stage(
-        spark, "extract", fp + ";extract", lambda: extract_geo_entities(pages)
+    pages = cm.stage(
+        spark, "pages", {"pages": pages_n}, lambda: generate_pages(spark, pages_n)
     )
+    entities = cm.stage(spark, "extract", None, lambda: extract_geo_entities(pages))
     filtered = cm.stage(
         spark,
         "filter",
-        fp + ";filter=" + str(hash(tuple(FILTERS))),
+        FILTERS,
         lambda: apply_filters(
             entities.select(
                 "url", "text", F.lit("node").alias("type"), "id", "lat", "lon", "tags"
@@ -69,28 +68,18 @@ def run(pages_n: int, out: str, ckpt_root: str, cpus: int | None = None) -> dict
             FILTERS,
         ),
     )
-
-    def _pip():
-        pts = filtered.withColumn(
-            "cell", cells.cell_encode(F.col("lat"), F.col("lon"), PIP_RES)
-        )
-        polys = generate_polygons(spark)
-        # hot-cell pre-pass feeds the salted polygon-cells join;
-        # point_in_polygon broadcasts the (small) polygon side, which
-        # already sidesteps shuffle skew — the salt pre-pass output is
-        # persisted in lineage for skew evidence at bench time
-        hot = salt.hot_cells(pts, "cell")
-        hot_n = hot.count()
-        out_df = point_in_polygon(
-            pts.select("url", "id", "lat", "lon"), polys, res=PIP_RES
-        )
-        return out_df.withColumn("hot_cells_detected", F.lit(hot_n))
-
-    hits = cm.stage(spark, "pip", fp + ";pip", _pip)
+    hits = cm.stage(
+        spark,
+        "pip",
+        {"res": PIP_RES},
+        lambda: point_in_polygon(
+            filtered.select("url", "id", "lat", "lon"), generate_polygons(spark), res=PIP_RES
+        ),
+    )
     tile_stats = cm.stage(
         spark,
         "tiles",
-        fp + ";tiles",
+        {"z": TILE_Z},
         lambda: tiles.raster_tiles(hits, TILE_Z).select(
             "tile_z", "tile_x", "tile_y", "n_points", F.size("pixels").alias("n_pixels")
         ),
@@ -99,18 +88,15 @@ def run(pages_n: int, out: str, ckpt_root: str, cpus: int | None = None) -> dict
     def _opl():
         from skyway_spark.operators.extract import pages_to_elements
 
-        return oplio.serialize_opl(pages_to_elements(pages).limit(10000))
+        return oplio.serialize_opl(pages_to_elements(pages).limit(OPL_ROWS))
 
-    cm.stage(spark, "opl", fp + ";opl", _opl)
+    cm.stage(spark, "opl", {"rows": OPL_ROWS}, _opl)
 
     tile_stats.write.mode("overwrite").parquet(out + "/tiles")
-    metrics = {
-        "pages": pages_n,
-        "entities": entities.count(),
-        "pip_hits": hits.count(),
-        "stages": cm.metrics(),
-    }
-    return metrics
+    stages = cm.metrics()
+    rows = {s["stage"]: s["rows"] for s in stages}
+    return {"pages": pages_n, "entities": rows["extract"], "pip_hits": rows["pip"],
+            "stages": stages}
 
 
 def main() -> None:

@@ -108,6 +108,72 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     assert m3["pip_hits"] == m1["pip_hits"]
 
 
+def test_checkpoint_resume_recomputes_missing_file(spark, tmp_path):
+    """A snapshot that lost one data file is never served: a fresh
+    manager recomputes the stage and returns every row."""
+    from pathlib import Path
+
+    root = str(tmp_path / "ckpt3")
+    calls = {"n": 0}
+
+    def compute():
+        calls["n"] += 1
+        return spark.range(0, 100, numPartitions=4)
+
+    CheckpointManager(root).stage(spark, "s1", "fp", compute)
+    m = json.load(open(f"{root}/s1/_MANIFEST.json"))
+    parts = sorted(Path(m["data_dir"]).glob("part-*.parquet"))
+    assert len(parts) == 4
+    parts[0].unlink()
+    cm2 = CheckpointManager(root)
+    got = cm2.stage(spark, "s1", "fp", compute)
+    assert calls["n"] == 2 and not cm2.results[0].resumed
+    assert sorted(r.id for r in got.collect()) == list(range(100))
+
+
+def test_pipeline_filter_change_recomputes_downstream(spark, tmp_path, monkeypatch):
+    """Changing FILTERS recomputes filter and every stage after it; the
+    stages before it resume."""
+    from jobs import run_pipeline
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
+    m1 = run_pipeline.run(2000, out, ckpt)
+    osmfilter, cel = run_pipeline.FILTERS
+    monkeypatch.setattr(run_pipeline, "FILTERS", [osmfilter, cel + " && id % 2 == 0"])
+    m2 = run_pipeline.run(2000, out, ckpt)
+    flags = {s["stage"]: s["resumed"] for s in m2["stages"]}
+    assert flags["pages"] and flags["extract"]
+    assert not (flags["filter"] or flags["pip"] or flags["tiles"])
+    assert 0 < m2["pip_hits"] < m1["pip_hits"]
+
+
+def test_stage_fingerprint_stable_across_hash_seeds():
+    """Two interpreters with different str-hash salts derive the same
+    fingerprint, so a plain-python run resumes a spark-submit run."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from skyway_spark.plans.checkpoint import stage_fingerprint; "
+        "from jobs.run_pipeline import FILTERS; "
+        "print(stage_fingerprint('filter', FILTERS, [('extract', 'e'), ('pages', 'p')]))"
+    )
+    fps = [
+        subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True,
+            text=True,
+            check=True,
+            cwd=str(Path(__file__).resolve().parents[1]),
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout.strip()
+        for seed in ("1", "2")
+    ]
+    assert len(fps[0]) == 64 and fps[0] == fps[1]
+
+
 def test_streaming_windowed_counts(spark, tmp_path):
     from skyway_spark.streaming.events import (
         read_events_stream,

@@ -14,13 +14,19 @@ cell-bucketed polygon partitions"):
 
 The polygon table is dimension-sized (the same assumption a broadcast
 join makes): ring geometry is collected ONCE on the driver and
-compiled into the plan. Two refine engines:
+compiled into the plan. The broadcast cell table is built as one
+Arrow table, which Spark plans as a ``LocalRelation`` (no RDD of
+pickled rows to deserialise again on every execution). Two refine
+engines:
 
 - ``refine='jvm'``: ring edges become literal array<struct> columns
   and the even-odd ray cast is a pure higher-order-function
   expression (``exists``/``aggregate``) — zero Python processes in
   the hot path, no Arrow transfer, stable latency, and the whole
-  pipeline stays narrow.
+  pipeline stays narrow. All ring, bbox and polygon-id constants are
+  rendered as SQL text and cross py4j as one ``F.expr`` string each,
+  so the plan build costs a fixed number of gateway calls whatever
+  the edge count.
 - ``refine='pandas'``: ships rings to Python workers inside a pandas
   UDF closure and ray-casts each Arrow batch as one numpy
   (points x edges) broadcast — for rings with thousands of vertices,
@@ -36,8 +42,11 @@ build would split rings at the antimeridian first).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
@@ -64,33 +73,46 @@ def _ray_cast_batch(py: np.ndarray, px: np.ndarray, ys: np.ndarray, xs: np.ndarr
     return ((crosses & (pxc < xint)).sum(axis=1) % 2).astype(bool)
 
 
-def _edge_struct(y1: float, x1: float, y2: float, x2: float):
-    return F.struct(
-        F.lit(float(y1)).alias("y1"),
-        F.lit(float(x1)).alias("x1"),
-        F.lit(float(y2)).alias("y2"),
-        F.lit(float(x2)).alias("x2"),
-    )
-
-
 _EDGES_T = "array<array<struct<y1:double,x1:double,y2:double,x2:double>>>"
+
+
+def _sql_double(v: float) -> str:
+    """Exact SQL literal for one double: ``repr`` is the shortest
+    decimal that round-trips, and Spark parses a ``D`` literal with
+    ``Double.parseDouble``. NaN and +-inf have no literal form."""
+    v = float(v)
+    if math.isfinite(v):
+        return repr(v) + "D"
+    name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def _array_sql(items) -> str:
+    return "array(" + ", ".join(items) + ")"
+
+
+def _struct_sql(**fields: float) -> str:
+    return "named_struct(" + ", ".join(
+        f"'{k}', {_sql_double(v)}" for k, v in fields.items()
+    ) + ")"
+
+
+def _rings_sql(ring_list) -> str:
+    """[(ys, xs), ...] -> SQL text of an array<array<edge struct>>."""
+    if not ring_list:
+        return f"CAST(array() AS {_EDGES_T})"
+    return _array_sql(
+        _array_sql(
+            _struct_sql(y1=ys[k], x1=xs[k], y2=ys[k + 1], x2=xs[k + 1])
+            for k in range(len(ys) - 1)
+        )
+        for ys, xs in ring_list
+    )
 
 
 def _rings_lit(ring_list):
     """[(ys, xs), ...] -> literal array<array<edge struct>> Column."""
-    if not ring_list:
-        return F.array().cast(_EDGES_T)
-    return F.array(
-        *[
-            F.array(
-                *[
-                    _edge_struct(ys[k], xs[k], ys[k + 1], xs[k + 1])
-                    for k in range(len(ys) - 1)
-                ]
-            )
-            for ys, xs in ring_list
-        ]
-    )
+    return F.expr(_rings_sql(ring_list))
 
 
 def _odd_crossings(ring, lat_c, lon_c):
@@ -112,12 +134,15 @@ def _odd_crossings(ring, lat_c, lon_c):
     return F.aggregate(ring, F.lit(0), lambda acc, e: acc + crossing(e)) % 2 == 1
 
 
-# jvm-refine compiles every polygon edge into literal Column arrays:
-# plan size grows with polygons x vertices, and past a few tens of
-# thousands of literals Catalyst planning slows and whole-stage
-# codegen falls back to interpreted expressions (64KB method limit).
-# Above this edge budget the auto mode switches to the pandas refine,
-# whose cost is O(1) in plan size (geometry ships in the UDF closure).
+# jvm-refine compiles every polygon edge into literal arrays: plan size
+# grows with polygons x vertices, and past a few tens of thousands of
+# literals Catalyst parsing/planning slows and whole-stage codegen falls
+# back to interpreted expressions (64KB method limit). The build no
+# longer grows in py4j calls per edge (the constants are one SQL
+# string), but a 10 000-edge jvm build still takes seconds where the
+# pandas refine takes a fraction of one. Above this edge budget the
+# auto mode switches to the pandas refine, whose cost is O(1) in plan
+# size (geometry ships in the UDF closure).
 JVM_REFINE_MAX_EDGES = 10_000
 
 # Adaptive interior covering (round 4): per polygon, the finest cell
@@ -249,6 +274,11 @@ def point_in_polygon(
         ].append(_ring_arrays(r["ring"]))
     pids = sorted(by_pid)
     geoms = [by_pid[p] for p in pids]  # indexed by __geom
+    passthrough = [c for c in points.columns if c != point_id]
+    if not pids:  # same schema as below: polygon_id is a non-null int
+        return points.where(F.lit(False)).select(
+            point_id, *passthrough, F.lit(0).alias("polygon_id")
+        )
 
     # Adaptive fine covering with interior/exterior classification
     # (round 4): each polygon's candidate cells live at the finest
@@ -257,26 +287,34 @@ def point_in_polygon(
     # (verdict true, no ray cast — the bulk of truly-contained
     # points); provably-outside cells never become candidates at all.
     # Only the thin boundary band pays the per-edge refine.
-    cell_rows: list[tuple[int, int, int, bool]] = []  # (res, cell, geom, interior)
-    used_res: set[int] = set()
-    for gi, p in enumerate(pids):
-        rings = by_pid[p]["outer"] + by_pid[p]["hole"]
+    cover_res, cover_ids, cover_inter = [], [], []  # indexed by __geom
+    for g in geoms:
+        rings = g["outer"] + g["hole"]
         ys_all = np.concatenate([r[0] for r in rings])
         xs_all = np.concatenate([r[1] for r in rings])
         f = _pick_cover_res(
             float(ys_all.min()), float(ys_all.max()),
             float(xs_all.min()), float(xs_all.max()), res,
         )
-        ids, inter = _classify_cover(by_pid[p], f)
-        used_res.add(f)
-        cell_rows.extend(
-            (f, int(c), gi, bool(i)) for c, i in zip(ids.tolist(), inter.tolist())
-        )
+        ids, inter = _classify_cover(g, f)
+        cover_res.append(f)
+        cover_ids.append(ids)
+        cover_inter.append(inter)
+    used_res = set(cover_res)
 
+    n_cells = [len(ids) for ids in cover_ids]
+    cell_table = pa.table(
+        {
+            "res": np.repeat(np.array(cover_res, dtype=np.int32), n_cells),
+            "cell": np.concatenate(cover_ids),
+            "__geom": np.repeat(np.arange(len(geoms), dtype=np.int32), n_cells),
+            "__interior": np.concatenate(cover_inter),
+        }
+    )
     spark = points.sparkSession
     pcells = F.broadcast(
         spark.createDataFrame(
-            cell_rows, "res int, cell long, __geom int, __interior boolean"
+            cell_table, "res int, cell long, __geom int, __interior boolean"
         )
     )
 
@@ -287,8 +325,8 @@ def point_in_polygon(
         )
         refine = "jvm" if total_edges <= JVM_REFINE_MAX_EDGES else "pandas"
     if refine == "jvm":
-        outer_by_geom = F.array(*[_rings_lit(g["outer"]) for g in geoms])
-        hole_by_geom = F.array(*[_rings_lit(g["hole"]) for g in geoms])
+        outer_by_geom = F.expr(_array_sql(_rings_sql(g["outer"]) for g in geoms))
+        hole_by_geom = F.expr(_array_sql(_rings_sql(g["hole"]) for g in geoms))
         # bbox short-circuit: covering cells are coarser than the
         # polygon, so most candidates fail four double compares and
         # never reach the per-edge ray cast (And short-circuits)
@@ -297,14 +335,9 @@ def point_in_polygon(
             ys = np.concatenate([r[0] for r in g["outer"]])
             xs = np.concatenate([r[1] for r in g["outer"]])
             bboxes.append(
-                F.struct(
-                    F.lit(float(ys.min())).alias("ymin"),
-                    F.lit(float(ys.max())).alias("ymax"),
-                    F.lit(float(xs.min())).alias("xmin"),
-                    F.lit(float(xs.max())).alias("xmax"),
-                )
+                _struct_sql(ymin=ys.min(), ymax=ys.max(), xmin=xs.min(), xmax=xs.max())
             )
-        bb = F.element_at(F.array(*bboxes), F.col("__geom") + 1)
+        bb = F.element_at(F.expr(_array_sql(bboxes)), F.col("__geom") + 1)
         in_bbox = (
             (lat_c >= bb["ymin"])
             & (lat_c <= bb["ymax"])
@@ -390,8 +423,7 @@ def point_in_polygon(
         join_cond = (pts["__rc"]["r"] == pcells["res"]) & (
             pts["__rc"]["c"] == pcells["cell"]
         )
-    pid_arr = F.array(*[F.lit(p) for p in pids])
-    passthrough = [c for c in points.columns if c != point_id]
+    pid_arr = F.expr(_array_sql(map(str, pids)))
     return (
         pts.join(pcells, join_cond, "inner")
         .where(inside_pred)

@@ -129,6 +129,102 @@ def test_pip_hole_and_concave(spark):
     assert got == {(1, 1), (3, 2), (5, 2)}
 
 
+@pytest.mark.parametrize("refine", ["auto", "jvm", "pandas"])
+def test_pip_empty_polygon_table(spark, refine):
+    """A 0-row polygon table yields 0 rows with the usual output schema
+    (it used to fail analysis on a VOID-typed cell column)."""
+    pts = spark.createDataFrame(
+        [(1, 1.0, 1.0), (2, 9.0, 9.0)], "id long, lat double, lon double"
+    )
+    square = [(0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0), (0.0, 0.0)]
+    one = spark.createDataFrame(
+        [(1, "sq", [{"lat": a, "lon": b} for a, b in square], "outer")], POLYGONS_SCHEMA
+    )
+    empty = spark.createDataFrame([], POLYGONS_SCHEMA)
+    got = point_in_polygon(pts, empty, res=4, refine=refine)
+    assert got.collect() == []
+    assert got.schema == point_in_polygon(pts, one, res=4, refine=refine).schema
+
+
+def test_rings_lit_doubles_exact(spark):
+    """Seeded fuzz of the double -> SQL literal rendering behind the jvm
+    refine: every finite double comes back bit-for-bit, and NaN/+-inf
+    evaluate exactly as F.lit does."""
+    import struct
+
+    from skyway_spark.operators.pip import _rings_lit
+
+    def bits(v):
+        return struct.pack("<d", v)
+
+    special = [-0.0, 5e-324, 2.2250738585072014e-308, 1.7976931348623157e308, 1e-05, 0.1 + 0.2]
+    rng = np.random.default_rng(20240611)
+    rand = rng.integers(0, 2**64, size=1000, dtype=np.uint64).view(np.float64)
+    vals = special + [-v for v in special] + rand[np.isfinite(rand)].tolist()
+    ys, xs = vals, vals[::-1]
+    edges = spark.range(1).select(_rings_lit([(ys, xs)])).first()[0][0]
+    assert len(edges) == len(vals) - 1
+    for k, e in enumerate(edges):
+        want = (ys[k], xs[k], ys[k + 1], xs[k + 1])
+        assert [bits(v) for v in e] == [bits(v) for v in want], (k, e, want)
+
+    ys = [float("nan"), float("inf"), float("-inf"), 1.0]
+    xs = ys[::-1]
+    got = spark.range(1).select(_rings_lit([(ys, xs)])).first()[0][0]
+    ref = spark.range(1).select(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(ys[k]).alias("y1"),
+                    F.lit(xs[k]).alias("x1"),
+                    F.lit(ys[k + 1]).alias("y2"),
+                    F.lit(xs[k + 1]).alias("x2"),
+                )
+                for k in range(len(ys) - 1)
+            ]
+        )
+    ).first()[0]
+    assert [[bits(v) for v in e] for e in got] == [[bits(v) for v in e] for e in ref]
+
+
+def test_pip_jvm_build_py4j_calls_flat_in_edges(spark):
+    """The jvm-refine plan build sends the ring constants through py4j
+    as one SQL string: a 1 024-edge ring must cost about as many
+    gateway commands as a 16-edge one (it used to cost ~80 per edge).
+    Memory (``m``) commands are not counted: they detach proxies that
+    Python's garbage collector frees, whenever it happens to run."""
+    import math
+
+    def ring_table(k):
+        ring = [
+            {"lat": 10 + math.sin(2 * math.pi * i / k), "lon": 20 + math.cos(2 * math.pi * i / k)}
+            for i in range(k)
+        ]
+        ring.append(ring[0])
+        return spark.createDataFrame([(1, "r", ring, "outer")], POLYGONS_SCHEMA)
+
+    pts = spark.createDataFrame([(1, 10.0, 20.0)], "id long, lat double, lon double")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    counts = {}
+    for k in (16, 1024):
+        polys = ring_table(k)
+        n = 0
+
+        def counting(command, *args, **kwargs):
+            nonlocal n
+            n += not command.startswith("m\n")
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            point_in_polygon(pts, polys, res=4, refine="jvm")
+        finally:
+            client.send_command = send
+        counts[k] = n
+    assert counts[1024] < 1.2 * counts[16], counts
+
+
 # ------------------------------ kNN ------------------------------
 
 

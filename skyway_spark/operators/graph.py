@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from skyway_spark.plans.session import local_frame
+
 
 def _root_map(c: DataFrame, max_depth: int = 40) -> DataFrame:
     """Flatten the min-pointer forest of edge list ``c`` to its roots.
@@ -167,9 +169,8 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         )
     finally:
         e.unpersist()
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        [row], "n_nodes long, n_edges long, max_degree long, n_triangles long"
+    return local_frame(
+        edges.sparkSession, [row], "n_nodes long, n_edges long, max_degree long, n_triangles long"
     )
 
 

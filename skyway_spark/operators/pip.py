@@ -14,10 +14,12 @@ cell-bucketed polygon partitions"):
 
 The polygon table is dimension-sized (the same assumption a broadcast
 join makes): ring geometry is collected ONCE on the driver and
-compiled into the plan. The broadcast cell table is built as one
-Arrow table, which Spark plans as a ``LocalRelation`` (no RDD of
-pickled rows to deserialise again on every execution). Two refine
-engines:
+compiled into the plan. When the polygon table is itself a
+``LocalRelation`` (``generate_polygons`` and every other frame built
+with ``local_frame``), that collect runs no Spark job. The broadcast
+cell table is built as one Arrow table, which Spark plans as a
+``LocalRelation`` too (no RDD of pickled rows to deserialise again on
+every execution). Two refine engines:
 
 - ``refine='jvm'``: ring edges become literal array<struct> columns
   and the even-odd ray cast is a pure higher-order-function
@@ -52,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from skyway_spark.functions import cells
+from skyway_spark.plans.session import local_frame
 
 
 def _ring_arrays(ring) -> tuple[np.ndarray, np.ndarray]:
@@ -311,10 +314,11 @@ def point_in_polygon(
             "__interior": np.concatenate(cover_inter),
         }
     )
-    spark = points.sparkSession
     pcells = F.broadcast(
-        spark.createDataFrame(
-            cell_table, "res int, cell long, __geom int, __interior boolean"
+        local_frame(
+            points.sparkSession,
+            cell_table,
+            "res int, cell long, __geom int, __interior boolean",
         )
     )
 

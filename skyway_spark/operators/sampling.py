@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from skyway_spark.plans.session import local_frame
+
 PRIME = 2_147_483_647  # 2^31 - 1 (Mersenne), same as the minhash perms
 _A = 1_103_515_245
 _B = 12_345
@@ -300,7 +302,7 @@ def greedy_set_cover(
         .localCheckpoint(eager=True)
     )
     spark = docs.sparkSession
-    covered = spark.createDataFrame([], "term string").localCheckpoint(eager=True)
+    covered = local_frame(spark, [], "term string").localCheckpoint(eager=True)
     picked_ids: list = []
     rows = []
     total = 0
@@ -326,6 +328,6 @@ def greedy_set_cover(
             .distinct()
             .localCheckpoint(eager=True)
         )
-    return spark.createDataFrame(
-        rows, "pick_order int, doc_id long, new_terms long, covered_total long"
+    return local_frame(
+        spark, rows, "pick_order int, doc_id long, new_terms long, covered_total long"
     )

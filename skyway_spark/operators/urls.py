@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from skyway_spark.plans.session import local_frame
+
 TRACKING_RE = r"^(utm_[a-z]+|fbclid|gclid)="
 
 
@@ -120,10 +122,7 @@ def filter_blocklist(
     and the anti-join keys back to the row by Spark's monotonic id,
     so callers need no unique column.
     """
-    spark = docs.sparkSession
-    bl = spark.createDataFrame(
-        [(d.lower(),) for d in blocklist], "sfx string"
-    )
+    bl = local_frame(docs.sparkSession, [(d.lower(),) for d in blocklist], "sfx string")
     keyed = docs.withColumn("__rk", F.monotonically_increasing_id())
     sfx = keyed.select(
         "__rk", F.explode(host_suffixes(host_of(F.col(url_col)))).alias("sfx")

@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and
+``local_frame``, the one way driver-side rows become a DataFrame.
 
 Single place where engine-wide configs live so tests, bench and
 spark-submit jobs all run with identical semantics. Designed for a
@@ -9,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 # Defaults chosen for the 100 TB design point, scaled down by the
 # caller for local runs:
@@ -54,6 +58,42 @@ def spread(df, target: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def local_frame(
+    spark: SparkSession, data: list | pa.Table, schema: StructType | str
+) -> DataFrame:
+    """The one way this package turns driver-side data into a DataFrame.
+
+    ``data`` is a list of row tuples (or a ``pyarrow.Table``) and
+    ``schema`` a ``StructType`` or DDL string. Rows are converted column
+    by column into a ``pyarrow.Table`` typed by ``to_arrow_schema``, so
+    Spark plans the frame as a ``LocalRelation`` with exactly
+    ``schema``, nullability included. A plain ``createDataFrame`` of a
+    row list instead ships pickled rows as a ``LogicalRDD``: each
+    ``collect()`` of it runs a Spark job, and every execution unpickles
+    the rows again in the JVM.
+
+    Checking stays strict: a value of the wrong type or out of range
+    raises while its column is built, and a null in a non-nullable
+    position (a column, a list element, a map value, a struct field)
+    raises ``ValueError`` when ``createDataFrame`` casts the table to
+    its schema. One exception: Arrow truncates a float given for an
+    integer column, so a caller taking integers from outside input
+    checks them first (as the JSON reader does)."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        columns = list(zip(*data, strict=True)) or [()] * len(arrow_schema)
+        data = pa.Table.from_arrays(
+            [
+                pa.array(col, type=field.type)
+                for col, field in zip(columns, arrow_schema, strict=True)
+            ],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(data, schema)
 
 
 def get_spark(

@@ -17,6 +17,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, POLYGONS_SCHEMA
 
 # ---------------------------------------------------------------------------
@@ -77,9 +78,7 @@ def element_rows(n_nodes=150, n_ways=100, n_rels=50, seed=42) -> list[tuple]:
 
 
 def generate_elements(spark: SparkSession, n_nodes=150, n_ways=100, n_rels=50, seed=42) -> DataFrame:
-    return spark.createDataFrame(
-        element_rows(n_nodes, n_ways, n_rels, seed), ELEMENTS_SCHEMA
-    )
+    return local_frame(spark, element_rows(n_nodes, n_ways, n_rels, seed), ELEMENTS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -310,8 +309,11 @@ def polygon_rows(n_scatter=35, seed=42) -> list[tuple]:
 
 def generate_polygons(spark: SparkSession, n_scatter=35, seed=42) -> DataFrame:
     """~40 polygons: 5 covering the hot-city disks (salting exercise),
-    the rest scattered; mix of convex / concave / one with a hole."""
-    return spark.createDataFrame(polygon_rows(n_scatter, seed), POLYGONS_SCHEMA)
+    the rest scattered; mix of convex / concave / one with a hole.
+
+    A ``LocalRelation`` (``local_frame``), so ``point_in_polygon``
+    collects its rings without running a Spark job."""
+    return local_frame(spark, polygon_rows(n_scatter, seed), POLYGONS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

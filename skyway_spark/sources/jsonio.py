@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
 from skyway_spark.sources._rowutil import records, seq
 
@@ -180,6 +181,14 @@ def _parse_metadata(doc: dict) -> dict:
     return md
 
 
+def _int_field(v):
+    """An optional integer field: a JSON float is a type error, as in
+    the reference's serde structs (Arrow would truncate it)."""
+    if isinstance(v, float):
+        raise TypeError(f"expected an integer, got {v!r}")
+    return v
+
+
 def _element_from_json(d: dict) -> tuple:
     t = d.get("type")
     members = None
@@ -195,10 +204,10 @@ def _element_from_json(d: dict) -> tuple:
         [int(n) for n in d.get("nodes", [])] if t == "way" else None,
         members,
         {str(k): str(v) for k, v in (d.get("tags") or {}).items()},
-        d.get("changeset"),
-        d.get("uid"),
+        _int_field(d.get("changeset")),
+        _int_field(d.get("uid")),
         d.get("user"),
-        d.get("version"),
+        _int_field(d.get("version")),
         d.get("timestamp"),
         d.get("visible"),
     )
@@ -207,11 +216,15 @@ def _element_from_json(d: dict) -> tuple:
 def parse_json_document(spark: SparkSession, text: str) -> tuple[DataFrame, dict]:
     """Whole-document parse (reference does the same driver-side,
     src/readers/json.rs:163-192). Unknown fields (Overpass bounds/
-    geometry) are ignored, matching serde's lenient structs."""
+    geometry) are ignored, matching serde's lenient structs.
+
+    The rows become an Arrow ``LocalRelation`` (``local_frame``): no
+    per-row pickling, and later jobs read the rows without unpickling
+    them again."""
     doc = json.loads(text)
     md = _parse_metadata(doc)
     rows = [_element_from_json(e) for e in doc.get("elements", [])]
-    return spark.createDataFrame(rows, ELEMENTS_SCHEMA), md
+    return local_frame(spark, rows, ELEMENTS_SCHEMA), md
 
 
 def read_json(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:

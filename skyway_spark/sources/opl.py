@@ -79,17 +79,18 @@ def escape_opl(s: str) -> str:
 
 def unescape_opl(s: str) -> str:
     """%hex% -> chr; empty/invalid hex silently dropped
-    (src/readers/opl.rs:75-85 'if let Ok')."""
+    (src/readers/opl.rs:75-85 'if let Ok'). Invalid means what
+    ``char::from_u32`` rejects: above 0x10FFFF or a surrogate
+    (0xD800-0xDFFF), which Arrow could not encode either."""
 
     def repl(m: re.Match) -> str:
         h = m.group(1)
         if not h:
             return ""
         cp = int(h, 16)
-        try:
-            return chr(cp)
-        except ValueError:
+        if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
             return ""
+        return chr(cp)
 
     return _UNESCAPE_RE.sub(repl, s)
 

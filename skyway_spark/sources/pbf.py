@@ -37,6 +37,7 @@ from pathlib import Path
 
 import pandas as pd
 
+from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA
 
 # ---------------------------------------------------------------------------
@@ -361,10 +362,10 @@ def read_pbf(spark, path: str, parallelism: int | None = None):
     unit — same granularity the reference parallelizes on)."""
     index = [e for e in scan_blob_index(path) if e[3] == "OSMData"]
     if not index:
-        return spark.createDataFrame([], ELEMENTS_SCHEMA)
+        return local_frame(spark, [], ELEMENTS_SCHEMA)
     par = parallelism or min(len(index), spark.sparkContext.defaultParallelism)
-    idx_df = spark.createDataFrame(
-        index, "path string, offset long, size long, btype string"
+    idx_df = local_frame(
+        spark, index, "path string, offset long, size long, btype string"
     ).repartition(par)
 
     def decode_slices(batches):

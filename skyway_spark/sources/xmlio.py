@@ -20,7 +20,9 @@ is driver-side. Canonical (type, id) order; tags sorted by key
 
 Reader (src/readers/xml.rs): whole-document parse; emits nodes, then
 ways, then relations (:250-273); ``bounds`` ignored (:146-157);
-permissive string->number/bool coercions (:4-7, 69-95).
+permissive string->number/bool coercions (:4-7, 69-95). The parsed
+rows reach Spark as an Arrow ``LocalRelation``, not an RDD of pickled
+rows.
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
 from skyway_spark.sources._rowutil import records, seq
 
@@ -185,6 +188,8 @@ def _meta_of(el: ET.Element) -> tuple:
 
 
 def parse_xml_document(spark: SparkSession, text: str) -> tuple[DataFrame, dict]:
+    """Whole-document parse on the driver, as the reference does; the
+    rows become an Arrow ``LocalRelation`` (``local_frame``)."""
     root = ET.fromstring(text)
     md = empty_metadata()
     for k in ("version", "generator", "copyright", "license"):
@@ -214,7 +219,7 @@ def parse_xml_document(spark: SparkSession, text: str) -> tuple[DataFrame, dict]
             ("relation", int(el.get("id")), None, None, None, members,
              _tags_of(el), cs, uid, user, ver, ts, vis)
         )
-    return spark.createDataFrame(rows, ELEMENTS_SCHEMA), md
+    return local_frame(spark, rows, ELEMENTS_SCHEMA), md
 
 
 def read_xml(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:

@@ -25,6 +25,8 @@ def test_unescape_str_vectors():
     assert opl.unescape_opl("%2c%%2c%") == ",,"
     assert opl.unescape_opl("%1f631%") == "😱"
     assert opl.unescape_opl("%12108%") == "𒄈"
+    # char::from_u32 rejects surrogates and values above 0x10FFFF alike
+    assert opl.unescape_opl("a%d800%b%dfff%%110000%%ffffffffffffffffff%") == "ab"
 
 
 def test_escape_char_vectors():
@@ -366,6 +368,13 @@ def test_opl_permissive_bad_member_ref(spark):
     # strict mode: no exception either; members null, rest parsed
     strict = {r["id"]: r for r in opl.parse_opl_lines(lines).collect()}
     assert strict[5]["members"] is None and strict[5]["type"] == "relation"
+
+
+def test_opl_escaped_surrogate_is_dropped(spark):
+    """An escaped lone surrogate cannot cross into Arrow; it is dropped
+    like any other invalid code point instead of failing the job."""
+    lines = spark.createDataFrame([("n1 Tname=a%d800%b",)], "value string")
+    assert opl.parse_opl_lines(lines).collect()[0]["tags"] == {"name": "ab"}
 
 
 def test_convert_cli_end_to_end(spark, elements, tmp_path):

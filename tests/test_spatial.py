@@ -51,6 +51,47 @@ def test_text_byte_identical_per_url(pages, entities):
     assert joined.count() == 0
 
 
+def test_extraction_adversarial_fields_equal_regex_groups(spark):
+    """Each field is its GEO_RE group, whatever ``(``, ``)``, ``=`` or
+    ``;`` the name and amenity hold; numbers a double cast rejects
+    give null lat/lon instead of failing the job."""
+    from skyway_spark.operators.extract import GEO_RE
+
+    texts = [
+        "@geo(1.5,2.5;name=a(b;amenity=cafe)",
+        "@geo(1.5,2.5;name=a)b;amenity=cafe)",
+        "x @geo(1.2.3,4;name=n;amenity=park) y @geo(.,-.;name=m;amenity=bench)",
+        "@geo(1,2;name=a=b;amenity=caf;e) @geo(-3,4;name=x,y;amenity=k=v)",
+        "@geo(40.7,-74.0;name=ok;amenity=(z)",
+    ]
+    pages = spark.createDataFrame(
+        [(f"u{i}", t) for i, t in enumerate(texts)], "url string, text string"
+    ).withColumn("lang", F.lit("en"))
+    got = extract_geo_entities(pages).select(
+        "url", "pos", "lat", "lon", F.col("tags")["name"].alias("name"),
+        F.col("tags")["amenity"].alias("amenity"),
+    )
+    mention = F.col("mention")
+    want = pages.select(
+        "url", F.posexplode(F.regexp_extract_all("text", F.lit(GEO_RE), 0)).alias("pos", "mention")
+    ).select(
+        "url",
+        "pos",
+        F.regexp_extract(mention, GEO_RE, 1).try_cast("double").alias("lat"),
+        F.regexp_extract(mention, GEO_RE, 2).try_cast("double").alias("lon"),
+        F.regexp_extract(mention, GEO_RE, 3).alias("name"),
+        F.regexp_extract(mention, GEO_RE, 4).alias("amenity"),
+    )
+    got_rows = sorted(tuple(r) for r in got.collect())
+    assert got_rows == sorted(tuple(r) for r in want.collect())
+    assert len(got_rows) == 7
+    names = {r[4]: r for r in got_rows}
+    assert {"a(b", "a)b", "a=b", "x,y"} <= set(names)
+    assert names["a=b"][5] == "caf;e" and names["x,y"][5] == "k=v"
+    assert names["n"][2] is None and names["n"][3] == 4.0
+    assert names["m"][2] is None and names["m"][3] is None
+
+
 def test_elements_projection_schema(entities, pages):
     els = pages_to_elements(pages)
     from skyway_spark.schema import ELEMENTS_SCHEMA

@@ -18,4 +18,13 @@ Everything is built on the public PySpark DataFrame API; the only
 Python that touches row data runs inside vectorized Arrow pandas UDFs.
 """
 
+import sys
+
+if sys.version_info < (3, 13):
+    # every Python worker imports this package when it unpickles a
+    # package UDF; see _zipcache for the per-task cost this removes
+    from skyway_spark import _zipcache
+
+    _zipcache.install()
+
 __version__ = "0.1.0"

@@ -88,8 +88,8 @@ def raster_tiles(
 
 
 def tile_stats(points: DataFrame, z: int, lat: str = "lat", lon: str = "lon") -> DataFrame:
-    """Lightweight per-tile aggregate (count + distinct-ish) used by
-    bench and the hot-cell pre-pass."""
+    """Lightweight per-tile aggregate: point count and approximate
+    distinct ids."""
     return (
         assign_tiles(points, z, lat, lon)
         .groupBy("tile_z", "tile_x", "tile_y")

@@ -1,4 +1,5 @@
-"""Helpers for struct-input scalar pandas UDFs.
+"""Helpers for the struct-input scalar pandas UDFs of the JSON and XML
+writers.
 
 A struct column arrives in a pandas UDF as a pd.DataFrame; nullable
 int/bool fields surface as float NaN / object None. These helpers
@@ -11,6 +12,26 @@ from __future__ import annotations
 import math
 
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+from skyway_spark.schema import ELEMENTS_SCHEMA
+
+
+def element_struct() -> Column:
+    """The elements row as one struct column. A nullable bigint field
+    (``changeset``) goes in as its decimal string: pandas stores an
+    int64 column that holds a null as float64, which rounds values
+    above 2**53 (the serializers' ``int()`` reads either form)."""
+    return F.struct(
+        *[
+            F.col(f.name).cast("string").alias(f.name)
+            if f.nullable and isinstance(f.dataType, LongType)
+            else F.col(f.name)
+            for f in ELEMENTS_SCHEMA.fields
+        ]
+    )
 
 
 def clean_value(v):

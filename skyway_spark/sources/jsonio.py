@@ -29,7 +29,7 @@ from pyspark.sql.types import StringType
 
 from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
-from skyway_spark.sources._rowutil import records, seq
+from skyway_spark.sources._rowutil import element_struct, records, seq
 
 _J = json.dumps  # compact string quoting, like json::stringify
 
@@ -114,7 +114,7 @@ def _type_rank():
 def element_json_col(df: DataFrame):
     """Column of per-element JSON strings (vectorized UDF over the
     full row struct)."""
-    return _element_json_udf(F.struct(*[F.col(f.name) for f in ELEMENTS_SCHEMA.fields]))
+    return _element_json_udf(element_struct())
 
 
 def serialize_json_string(

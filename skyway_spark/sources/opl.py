@@ -14,12 +14,13 @@ Serialization rules re-derived from the reference:
 
 Spark-first layout: the line is assembled with Column expressions
 (concat / when / transform over the nodes array), so the bulk of the
-serializer is JVM-side codegen. Python only runs inside three
-vectorized Arrow pandas UDFs: string escaping (user/tags/member
-roles), float shortest-repr formatting, and their inverses in the
-reader. Tag order is canonicalized to sorted-by-key — the reference's
-HashMap order is nondeterministic (SURVEY §7.5), so goldens are
-canonical.
+serializer is JVM-side codegen. Python only runs inside vectorized
+Arrow pandas UDFs: four in the writer (escaping the user, the tag
+list and the member list, and float shortest-repr formatting) and
+three in the reader (unescaping the user and the tag list, and
+parsing the member list). Tag order is canonicalized to sorted-by-key
+— the reference's HashMap order is nondeterministic (SURVEY §7.5), so
+goldens are canonical.
 
 One divergence by design: canonical ordering + clean errors instead
 of panics on malformed lines (src/readers/opl.rs:112,204).
@@ -93,6 +94,20 @@ def unescape_opl(s: str) -> str:
         return chr(cp)
 
     return _UNESCAPE_RE.sub(repl, s)
+
+
+# what ``try_cast(s AS BIGINT)`` accepts: ASCII digits with an optional
+# sign, padded by bytes 0x00-0x20 and 0x7f, within int64
+_BIGINT_RE = re.compile(r"[\x00-\x20\x7f]*([+-]?[0-9]+)[\x00-\x20\x7f]*")
+
+
+def _try_bigint(s: str) -> int | None:
+    """``try_cast(s AS BIGINT)`` in Python: the int, or None."""
+    m = _BIGINT_RE.fullmatch(s)
+    if m is None:
+        return None
+    v = int(m.group(1))
+    return v if -(1 << 63) <= v < 1 << 63 else None
 
 
 # ---------------------------------------------------------------------------
@@ -186,14 +201,13 @@ def _opl_members_parse_udf(s: pd.Series) -> pd.Series:
             t = tc.get(ref_part[:1])
             if t is None:
                 continue  # reference filter_maps unknown types away
-            try:
-                ref = int(ref_part[1:])
-            except ValueError:
+            ref = _try_bigint(ref_part[1:])
+            if ref is None:
                 # Non-numeric ref ('Mn@r', 'Mnx@r'): the whole M field is
                 # unparseable.  Python UDFs are evaluated eagerly regardless
                 # of surrounding F.when guards, so raising here would abort
-                # the job even in PERMISSIVE mode — return null instead and
-                # let parse_opl_lines' `bad` predicate quarantine the line.
+                # the job even in PERMISSIVE mode — return null instead,
+                # which is how parse_opl_lines' `bad` predicate spots it.
                 return None
             out.append({"type": t, "ref": ref, "role": unescape_opl(role)})
         return out
@@ -322,6 +336,8 @@ def parse_opl_lines(
     )
     d_field = _field(fields, "d")
     nodes_raw = _field(fields, "N")
+    m_raw = _field(fields, "M")
+    members = _opl_members_parse_udf(m_raw)
     cols = [
         ("type", etype),
         ("id", F.substring(head, 2, 1 << 20).try_cast("long")),
@@ -341,7 +357,7 @@ def parse_opl_lines(
                 ),
             ),
         ),
-        ("members", _opl_members_parse_udf(_field(fields, "M"))),
+        ("members", members),
         (
             "tags",
             F.coalesce(
@@ -358,23 +374,12 @@ def parse_opl_lines(
     ]
     if corrupt_col is None:
         return lines.select(*[c.alias(n) for n, c in cols])
-    m_raw = _field(fields, "M")
-    # member-parse failure flagged with PURE Column ops (mirrors the
-    # udf's return-None condition: an '@' entry with a known type char
-    # whose ref is non-numeric) — re-invoking the pandas UDF here would
-    # pay a second Arrow round-trip per relation row
-    bad_member = F.exists(
-        F.split(m_raw, ","),
-        lambda e: e.contains("@")
-        & F.substring(F.substring_index(e, "@", 1), 1, 1).isin("n", "w", "r")
-        & F.substring(F.substring_index(e, "@", 1), 2, 1 << 20)
-        .try_cast("long")
-        .isNull(),
-    )
+    # a present M field parsed to null is malformed; Spark evaluates the
+    # UDF once for both uses
     bad = (
         etype.isNull()
         | F.substring(head, 2, 1 << 20).try_cast("long").isNull()
-        | (m_raw.isNotNull() & bad_member)
+        | (m_raw.isNotNull() & members.isNull())
     )
     return lines.select(
         *[F.when(~bad, c).alias(n) for n, c in cols],

@@ -36,7 +36,7 @@ from pyspark.sql.types import StringType
 
 from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
-from skyway_spark.sources._rowutil import records, seq
+from skyway_spark.sources._rowutil import element_struct, records, seq
 
 
 def _esc(v: str) -> str:
@@ -121,7 +121,7 @@ def xml_envelope_open(metadata: dict | None) -> str:
 
 
 def element_xml_col(df: DataFrame):
-    return _element_xml_udf(F.struct(*[F.col(f.name) for f in ELEMENTS_SCHEMA.fields]))
+    return _element_xml_udf(element_struct())
 
 
 def serialize_xml_string(df: DataFrame, metadata: dict | None = None) -> str:

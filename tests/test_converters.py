@@ -377,6 +377,64 @@ def test_opl_escaped_surrogate_is_dropped(spark):
     assert opl.parse_opl_lines(lines).collect()[0]["tags"] == {"name": "ab"}
 
 
+def test_opl_member_ref_grammar_is_try_cast(spark):
+    """Member refs follow ``try_cast(... as bigint)``: strict ``members``
+    is null exactly on the lines PERMISSIVE mode quarantines, and every
+    parsed ref equals ``try_cast`` of its text. So a ref past int64
+    does not abort the job (Python's ``int`` would overflow int64), and
+    ``1_0`` and ``٥`` are malformed in both modes (``int`` reads 10, 5)."""
+    import random
+
+    rng = random.Random(6)
+    fixed = [
+        "99999999999999999999", "1_0", "٥", "١٢", "+5", "-0", "007", "\x015", "5\x01",
+        "\t5", "5\x7f", "5\x85", "　5", "1.5", "1e3", "0x10", "", "+", "-",
+    ] + [str(sign * 2**63 + k) for sign in (1, -1) for k in (-2, -1, 0, 1)]
+    pieces = ["+", "-", "_", "0", "1", "9", "٥", "\x00", "\x1f", "\t", "　", "."]
+    refs = fixed + [
+        "".join(rng.choice(pieces) for _ in range(rng.randint(1, 5))) for _ in range(150)
+    ] + [str(rng.randint(-(2**64), 2**64)) for _ in range(50)]
+    lines = spark.createDataFrame(
+        [(i, f"r{i} v1 Mn{ref}@x,w2@ Ta=b") for i, ref in enumerate(refs)],
+        "i long, value string",
+    )
+    want = {
+        r["i"]: r["ref"]
+        for r in spark.createDataFrame(list(enumerate(refs)), "i long, s string")
+        .select("i", F.col("s").try_cast("long").alias("ref"))
+        .collect()
+    }
+    strict = {r["id"]: r["members"] for r in opl.parse_opl_lines(lines).collect()}
+    flagged = {
+        int(r["_corrupt"].split(" ")[0][1:])
+        for r in opl.parse_opl_lines(lines, corrupt_col="_corrupt").collect()
+        if r["_corrupt"] is not None
+    }
+    assert flagged == {i for i, ref in want.items() if ref is None}
+    for i, members in strict.items():
+        assert (members is None) == (i in flagged), refs[i]
+        if members is not None:
+            assert [(m["type"], m["ref"]) for m in members] == [
+                ("node", want[i]), ("way", 2)
+            ], refs[i]
+
+
+def test_writers_keep_changeset_past_2_53_beside_a_null(spark):
+    """A null changeset in the same Arrow batch must not push the column
+    through float64: 2**53 + 1 is written exactly by all three writers."""
+    from skyway_spark.plans.session import local_frame
+    from skyway_spark.schema import ELEMENTS_SCHEMA
+
+    big = 2**53 + 1
+    row = ("node", 1, 1.0, 2.0, None, None, {}, big, None, None, None, None, None)
+    df = local_frame(spark, [row, ("node", 2, *row[2:7], None, *row[8:])], ELEMENTS_SCHEMA)
+    df = df.coalesce(1)
+    for col in (opl.opl_line(df), jsonio.element_json_col(df), xmlio.element_xml_col(df)):
+        out = [r[0] for r in df.select(col).collect()]
+        assert str(big) in out[0], out[0]
+        assert str(big - 1) not in "".join(out)
+
+
 def test_convert_cli_end_to_end(spark, elements, tmp_path):
     """jobs/convert.py: opl -> filter -> json, reference flag
     semantics (extension inference, filter chain order)."""

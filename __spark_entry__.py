@@ -2691,7 +2691,7 @@ def q_running_anomaly(spark, sf):
     against its user's PRIOR integer moments (n, s, ssq) with the
     cross-multiplied z^2 > 9 inequality — no division, no sqrt
     (operators/stats.running_zscore_flags).  ONE entity-keyed sort
-    shuffle; the streaming twin shares the state contract."""
+    shuffle."""
     from skyway_spark.operators.stats import running_zscore_flags
 
     (ev,) = _tables(spark, sf, "events")
@@ -8086,17 +8086,62 @@ def q_kmv_distinct(spark, sf):
     return kmv_distinct(ev, "event_type", "user_id", k=64)
 
 
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Full query registry in historical (rounds 1-3) insertion order.
-
-    `queries()` below reorders this dict so the 50-entry lead list
-    (`_R5_WINDOW`) comes first.  Keep appending new queries at the END of
-    this dict.
-    """
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registry query by name. The order is part of the external
+    contract (pinned by tests/test_registry_order.py): add new queries
+    at the end."""
     return {
-        # -- round-2 driver red, oracle dtype fixed (pos 0) -------------
+        "q_lm_coverage": q_lm_coverage,
+        "q_snapshot_diff": q_snapshot_diff,
+        "q_tile_diff": q_tile_diff,
+        "q_line_raster": q_line_raster,
+        "q_running_anomaly": q_running_anomaly,
+        "q_od_matrix": q_od_matrix,
+        "q_quality_gate": q_quality_gate,
+        "q_fetch_slots": q_fetch_slots,
+        "q_lang_confusion": q_lang_confusion,
+        "q_host_hits": q_host_hits,
+        "q_cell_trends": q_cell_trends,
+        "q_tile_bins": q_tile_bins,
+        "q_isochrone": q_isochrone,
+        "q_polygon_fill": q_polygon_fill,
+        "q_str_pack": q_str_pack,
+        "q_skyline": q_skyline,
+        "q_polygon_centroid": q_polygon_centroid,
+        "q_classifier_auc": q_classifier_auc,
+        "q_readability": q_readability,
+        "q_session_paths": q_session_paths,
+        "q_mention_city": q_mention_city,
+        "q_host_components": q_host_components,
+        "q_simpson_cells": q_simpson_cells,
+        "q_clip_rings": q_clip_rings,
+        "q_tile_clip": q_tile_clip,
+        "q_track_hausdorff": q_track_hausdorff,
+        "q_idw": q_idw,
+        "q_user_hulls": q_user_hulls,
+        "q_segment_crossings": q_segment_crossings,
+        "q_cocitation": q_cocitation,
+        "q_rolling_wau": q_rolling_wau,
+        "q_fuzzy_join": q_fuzzy_join,
+        "q_bib_coupling": q_bib_coupling,
+        "q_reciprocity": q_reciprocity,
+        "q_heading_octants": q_heading_octants,
+        "q_interval_union": q_interval_union,
+        "q_lcss_tracks": q_lcss_tracks,
+        "q_cusum": q_cusum,
+        "q_rbo_rankings": q_rbo_rankings,
+        "q_span_corrupt": q_span_corrupt,
+        "q_ra_links": q_ra_links,
+        "q_hull_diameter": q_hull_diameter,
+        "q_curve_locality": q_curve_locality,
+        "q_pit_join": q_pit_join,
+        "q_k_anonymity": q_k_anonymity,
+        "q_prune_stats": q_prune_stats,
+        "q_seq_patterns": q_seq_patterns,
+        "q_nearest_centroid": q_nearest_centroid,
+        "q_marker_thinning": q_marker_thinning,
+        "q_posting_sizes": q_posting_sizes,
         "q_raster_tiles": q_raster_tiles,
-        # -- never driver-signed: round-2 registry positions 50-67 ------
         "q_contamination": q_contamination,
         "q_grid_dbscan": q_grid_dbscan,
         "q_poly_overlap": q_poly_overlap,
@@ -8115,7 +8160,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_collocations": q_collocations,
         "q_raster_vectorize": q_raster_vectorize,
         "q_bottomk_sample": q_bottomk_sample,
-        # -- new in round 3 ----------------------------------------------
         "q_lev_verify": q_lev_verify,
         "q_chunk_dedup_rewrite": q_chunk_dedup_rewrite,
         "q_pagerank_cells": q_pagerank_cells,
@@ -8146,7 +8190,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_bpe_pairs": q_bpe_pairs,
         "q_winnow_decontam": q_winnow_decontam,
         "q_pages_pipeline": q_pages_pipeline,
-        # -- re-sign: modules edited this round + flagship ---------------
         "q_minhash": q_minhash,
         "q_minhash_lsh": q_minhash_lsh,
         "q_dedup_clusters": q_dedup_clusters,
@@ -8154,13 +8197,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_simhash_pairs": q_simhash_pairs,
         "q_boilerplate": q_boilerplate,
         "q_url_host_stats": q_url_host_stats,
-        # (q_pages_pipeline already registered above at position 48 —
-        # the flagship sits inside the driver window; a duplicate literal
-        # key here was a no-op and has been removed)
-        # ---- position 50+: driver-signed green in rounds 1-2 -----------
-        # (q_pip/q_pip_agg/q_extract_entities/q_cell_assign rotate below
-        # the cut: their modules are untouched this round and all four
-        # are driver-signed green in CORRECTNESS_r02)
         "q_bm25": q_bm25,
         "q_knn": q_knn,
         "q_top_ngrams": q_top_ngrams,
@@ -8248,95 +8284,44 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_way_lengths": q_way_lengths,
         "q_relation_rollup": q_relation_rollup,
         "q_embed_neardup": q_embed_neardup,
-        # -- round-3 late additions (will lead the round-4 window) -------
         "q_link_graph": q_link_graph,
         "q_anchor_terms": q_anchor_terms,
         "q_dom_stats": q_dom_stats,
         "q_host_rank": q_host_rank,
         "q_morans_i": q_morans_i,
         "q_containment_pairs": q_containment_pairs,
-        "q_lm_coverage": q_lm_coverage,
-        "q_snapshot_diff": q_snapshot_diff,
         "q_adaptive_tiles": q_adaptive_tiles,
         "q_crawl_frontier": q_crawl_frontier,
         "q_map_match": q_map_match,
         "q_hot_spots": q_hot_spots,
-        "q_tile_diff": q_tile_diff,
-        "q_line_raster": q_line_raster,
         "q_pq_codes": q_pq_codes,
         "q_pq_topk": q_pq_topk,
-        "q_running_anomaly": q_running_anomaly,
-        "q_od_matrix": q_od_matrix,
-        "q_quality_gate": q_quality_gate,
-        "q_fetch_slots": q_fetch_slots,
-        "q_lang_confusion": q_lang_confusion,
-        "q_host_hits": q_host_hits,
         "q_dedup_best": q_dedup_best,
-        "q_cell_trends": q_cell_trends,
-        "q_tile_bins": q_tile_bins,
         "q_dedup_eval": q_dedup_eval,
-        "q_isochrone": q_isochrone,
-        "q_polygon_fill": q_polygon_fill,
-        "q_str_pack": q_str_pack,
         "q_gearys_c": q_gearys_c,
-        "q_skyline": q_skyline,
-        "q_polygon_centroid": q_polygon_centroid,
-        "q_classifier_auc": q_classifier_auc,
         "q_robots_rules": q_robots_rules,
-        "q_readability": q_readability,
-        "q_session_paths": q_session_paths,
         "q_nn_graph": q_nn_graph,
-        "q_mention_city": q_mention_city,
-        "q_host_components": q_host_components,
         "q_url_templates": q_url_templates,
-        "q_simpson_cells": q_simpson_cells,
-        "q_clip_rings": q_clip_rings,
-        "q_tile_clip": q_tile_clip,
         "q_redirects": q_redirects,
         "q_ripley_k": q_ripley_k,
-        "q_track_hausdorff": q_track_hausdorff,
-        "q_idw": q_idw,
         "q_crawl_budget": q_crawl_budget,
-        "q_user_hulls": q_user_hulls,
         "q_kcore": q_kcore,
-        "q_segment_crossings": q_segment_crossings,
         "q_int8_quant": q_int8_quant,
-        "q_cocitation": q_cocitation,
-        "q_rolling_wau": q_rolling_wau,
-        "q_fuzzy_join": q_fuzzy_join,
-        "q_bib_coupling": q_bib_coupling,
-        "q_reciprocity": q_reciprocity,
-        "q_heading_octants": q_heading_octants,
-        "q_interval_union": q_interval_union,
         "q_ahash": q_ahash,
         "q_ahash_pairs": q_ahash_pairs,
         "q_warc_parse": q_warc_parse,
         "q_warc_stats": q_warc_stats,
-        "q_lcss_tracks": q_lcss_tracks,
-        "q_cusum": q_cusum,
         "q_bpe_tokenize": q_bpe_tokenize,
         "q_cdc_chunks": q_cdc_chunks,
         "q_cdc_dedup": q_cdc_dedup,
         "q_media_clusters": q_media_clusters,
         "q_hex_assign": q_hex_assign,
         "q_hex_disk": q_hex_disk,
-        "q_rbo_rankings": q_rbo_rankings,
-        "q_span_corrupt": q_span_corrupt,
-        "q_ra_links": q_ra_links,
-        "q_hull_diameter": q_hull_diameter,
         "q_web_tables": q_web_tables,
-        "q_curve_locality": q_curve_locality,
         "q_variogram": q_variogram,
         "q_warc_pipeline": q_warc_pipeline,
         "q_jaccard_join": q_jaccard_join,
         "q_matryoshka_recall": q_matryoshka_recall,
-        "q_pit_join": q_pit_join,
-        "q_k_anonymity": q_k_anonymity,
-        "q_prune_stats": q_prune_stats,
-        "q_seq_patterns": q_seq_patterns,
-        "q_nearest_centroid": q_nearest_centroid,
-        "q_marker_thinning": q_marker_thinning,
-        "q_posting_sizes": q_posting_sizes,
         "q_line_of_sight": q_line_of_sight,
         "q_data_mixture": q_data_mixture,
         "q_dead_links": q_dead_links,
@@ -8373,81 +8358,8 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_term_drift": q_term_drift,
         "q_bitext_candidates": q_bitext_candidates,
         "q_assortativity": q_assortativity,
-        # -- round 4 ------------------------------------------------------
         "q_layout_prune": q_layout_prune,
     }
-
-
-# Round-5 driver window: the oldest-unsigned 50 per BENCH/SIGNING.md's
-# deterministic rotation (r05 slots 0-49) — the spatial-stats/terrain/
-# mobility + graph/trajectory batches from rounds 3c/3d.  After this
-# round the unsigned backlog is the 29 r06-planned entries, which stay
-# guarded by the Arrow-strict local sweep + pytest.
-_R5_WINDOW = [
-    "q_lm_coverage",
-    "q_snapshot_diff",
-    "q_tile_diff",
-    "q_line_raster",
-    "q_running_anomaly",
-    "q_od_matrix",
-    "q_quality_gate",
-    "q_fetch_slots",
-    "q_lang_confusion",
-    "q_host_hits",
-    "q_cell_trends",
-    "q_tile_bins",
-    "q_isochrone",
-    "q_polygon_fill",
-    "q_str_pack",
-    "q_skyline",
-    "q_polygon_centroid",
-    "q_classifier_auc",
-    "q_readability",
-    "q_session_paths",
-    "q_mention_city",
-    "q_host_components",
-    "q_simpson_cells",
-    "q_clip_rings",
-    "q_tile_clip",
-    "q_track_hausdorff",
-    "q_idw",
-    "q_user_hulls",
-    "q_segment_crossings",
-    "q_cocitation",
-    "q_rolling_wau",
-    "q_fuzzy_join",
-    "q_bib_coupling",
-    "q_reciprocity",
-    "q_heading_octants",
-    "q_interval_union",
-    "q_lcss_tracks",
-    "q_cusum",
-    "q_rbo_rankings",
-    "q_span_corrupt",
-    "q_ra_links",
-    "q_hull_diameter",
-    "q_curve_locality",
-    "q_pit_join",
-    "q_k_anonymity",
-    "q_prune_stats",
-    "q_seq_patterns",
-    "q_nearest_centroid",
-    "q_marker_thinning",
-    "q_posting_sizes",
-]
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry ORDER is load-bearing: the driver gate checks exactly the
-    # first 50 entries in insertion order.  Lead with this round's window,
-    # then everything else in historical order — previously-signed rows
-    # stay regression-guarded by the full Arrow-strict local sweep
-    # (tools/check_oracle.py) + pytest.
-    reg = _registry()
-    window = {k: reg[k] for k in _R5_WINDOW}
-    assert len(window) == 50, f"driver window must be exactly 50, got {len(window)}"
-    rest = {k: v for k, v in reg.items() if k not in window}
-    return {**window, **rest}
 
 
 # ---------------------------------------------------------------------------

@@ -35,11 +35,11 @@ from skyway_spark.plans.session import get_spark  # noqa: E402
 from skyway_spark.sources.generate import generate_pages, generate_polygons  # noqa: E402
 
 # The timed operator suite. NOT the full 268-query registry: entries
-# whose value is a byte-exact converter golden, a streaming-parity
-# harness, or a plan-pinned physical check (layout pruning, pushdown
-# audits) are excluded here — their cost is dominated by driver-side
-# serialization or subprocess orchestration, not operator throughput,
-# so a wall-clock row would measure the harness. The emitted JSON
+# whose value is a byte-exact converter golden or a plan-pinned
+# physical check (layout pruning, pushdown audits) are excluded here —
+# their cost is dominated by driver-side serialization or subprocess
+# orchestration, not operator throughput, so a wall-clock row would
+# measure the harness. The emitted JSON
 # carries SUITE_EXCLUDED (below) under "suite_excluded" so the suite
 # count is never mistaken for registry coverage (VERDICT r4 item 5).
 BENCH_QUERIES = [
@@ -461,10 +461,9 @@ def main() -> None:
                 "suite_excluded": {
                     "rule": (
                         "registry entries not timed here: converter "
-                        "byte-goldens, streaming-parity harnesses, and "
-                        "plan-pinned physical checks, whose wall is "
-                        "harness- not operator-dominated; all remain "
-                        "correctness-gated in the sf0.01 sweep "
+                        "byte-goldens and plan-pinned physical checks, "
+                        "whose wall is harness- not operator-dominated; "
+                        "all remain correctness-gated in the sf0.01 sweep "
                         "(BENCH/QUERIES_*.json)"
                     ),
                     "count": len(SUITE_EXCLUDED),

@@ -202,12 +202,6 @@ def tile_xy(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
     return clamp(tx), clamp(ty)
 
 
-def tile_key(lat: Column, lon: Column, z: int) -> Column:
-    """int64 tile key: (z << 58) | (x << 29) | y."""
-    tx, ty = tile_xy(lat, lon, z)
-    return pack_cell(tx, ty, z)
-
-
 def zorder_key(lat: Column, lon: Column, bits: int = 16) -> Column:
     """Morton (Z-order) key interleaving ``bits`` bits of the grid x/y
     at res ``bits`` — the classic data-layout clustering key (Delta

@@ -48,8 +48,9 @@ _A2, _B2 = 69_069, 1  # VAX MTH$RANDOM LCG
 WORD_BITS = 62  # overflow-safe signed-int64 bit packing
 DEFAULT_M_BITS = WORD_BITS * 1024  # 63,488 bits / 1024 words (8 KB)
 LITERAL_BUDGET_WORDS = 1 << 16  # 512 KB: above this the plan-literal
-# array approaches codegen/plan-size limits -> auto-switch to a real
-# SparkContext.broadcast probed in vectorized numpy (VERDICT r2 #3)
+# array approaches codegen/plan-size limits -> switch to a real
+# SparkContext.broadcast probed in vectorized numpy (VERDICT r2 #3).
+# Read at call time, so a test can force either path by moving it.
 
 
 def _gram_hash(gram: Column) -> Column:
@@ -107,14 +108,12 @@ def bloom_contamination(
     m_bits: int = DEFAULT_M_BITS,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "auto",
-    literal_budget_words: int = LITERAL_BUDGET_WORDS,
 ) -> DataFrame:
     """Flag documents whose sliding n-token windows hit the filter:
     (doc_id, n_windows, n_flagged, contaminated).
 
     Two physical strategies, same results bit-for-bit (pinned by
-    tests/test_bloom.py parity):
+    tests/test_literal_budgets.py parity):
 
     - ``literal`` — the filter rides along as an array LITERAL and
       every probe is two integer ops + an array index inside
@@ -128,13 +127,9 @@ def bloom_contamination(
       vectorized numpy.  Slower per row (Python), unbounded in filter
       size — the 1.2 GB case this module was built for.
 
-    ``mode='auto'`` (the pip.py ``refine='auto'`` pattern) picks
-    literal up to ``literal_budget_words`` words (default 2^16 words
-    = 512 KB, well inside plan limits) and broadcast above."""
-    if mode not in ("auto", "literal", "broadcast"):
-        raise ValueError(f"mode must be auto|literal|broadcast, got {mode!r}")
-    if mode == "auto":
-        mode = "literal" if len(bloom) <= literal_budget_words else "broadcast"
+    The filter size picks the strategy (as pip.py picks its refine by
+    edge count): literal up to LITERAL_BUDGET_WORDS words (2^16 words
+    = 512 KB, well inside plan limits), broadcast above."""
     if m_bits != len(bloom) * WORD_BITS:
         # a mismatched modulus would probe past the array (ANSI error)
         # or, worse, silently produce FALSE NEGATIVES — the one failure
@@ -143,7 +138,7 @@ def bloom_contamination(
             f"m_bits={m_bits} inconsistent with filter of {len(bloom)} words"
             f" (expected {len(bloom) * WORD_BITS})"
         )
-    if mode == "broadcast":
+    if len(bloom) > LITERAL_BUDGET_WORDS:
         return _bloom_contamination_broadcast(
             docs, bloom, n, k, m_bits, id_col, text_col
         )

@@ -78,61 +78,6 @@ def apply_changelog(
     return survivors.unionByName(upserts)
 
 
-def apply_changelog_versioned(
-    snapshot: DataFrame,
-    changes: DataFrame,
-    key_cols: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-) -> DataFrame:
-    """Seq-aware changelog apply for OUT-OF-ORDER logs (the Hudi
-    precombine-field semantics): the snapshot itself carries
-    ``seq_col`` (the seq that produced each row), and a change wins a
-    key only if its seq is STRICTLY greater — a late-arriving stale
-    update or delete is a no-op, so replaying any permutation of the
-    same changelog converges to the same state (tested law).
-
-    Contrast with ``apply_changelog``: that one is for in-order logs
-    and keeps the big snapshot completely unshuffled (broadcast
-    anti-join).  Version comparison inherently needs to SEE the
-    snapshot's seq per key, so this variant pays one keyed full-outer
-    join of snapshot vs the latest-per-key change slice — co-located
-    (zero snapshot movement) when the snapshot is bucketed/partitioned
-    by the key, which is how a 100 TB upsert table is laid out anyway;
-    the change side is window-reduced to one row per touched key
-    first.  Output columns == snapshot columns (seq_col updated to the
-    winning seq).
-    """
-    payload = snapshot.columns
-    if seq_col not in payload:
-        raise ValueError(f"snapshot must carry {seq_col!r} for versioned apply")
-    missing = [c for c in payload + [op_col] if c not in changes.columns]
-    if missing:
-        raise ValueError(f"changelog missing columns: {missing}")
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(seq_col).desc(), F.col(op_col).desc()
-    )
-    latest = (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-        .select(*[F.col(c).alias(f"__c_{c}") for c in payload + [op_col]])
-    )
-    cond = [F.col(k) == F.col(f"__c_{k}") for k in key_cols]
-    j = snapshot.join(latest, cond, "full_outer")
-    change_wins = F.col(f"__c_{seq_col}").isNotNull() & (
-        F.col(seq_col).isNull() | (F.col(f"__c_{seq_col}") > F.col(seq_col))
-    )
-    dropped = change_wins & (F.col(f"__c_{op_col}") == "D")
-    out_cols = [
-        F.when(change_wins, F.col(f"__c_{c}")).otherwise(F.col(c)).alias(c)
-        for c in payload
-    ]
-    # change-only 'D' rows (key absent from snapshot) fall under
-    # `dropped` too, so the single filter covers deletes and no-ops
-    return j.where(~dropped).select(*out_cols)
-
-
 def changelog_to_scd2(
     changes: DataFrame,
     key_cols: list[str],
@@ -146,8 +91,7 @@ def changelog_to_scd2(
     the previous interval and emit no payload row (is_current handles
     the "deleted now" case by absence).
 
-    Together with apply_changelog/apply_changelog_versioned this
-    completes the CDC triad: latest state, versioned state, and full
+    Together with apply_changelog this gives both latest state and full
     history with time travel by seq (`WHERE valid_from <= s AND
     (valid_to IS NULL OR valid_to > s)`).
 

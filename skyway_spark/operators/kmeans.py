@@ -41,9 +41,10 @@ from pyspark.sql import functions as F
 DEFAULT_SCALE_BITS = 20
 LITERAL_BUDGET = 8192  # max k*dim int64 literals inlined into the plan:
 # beyond this (e.g. a k=4096 IVF coarse quantizer) the per-comparison
-# literal arrays blow codegen size limits -> auto-switch to a real
+# literal arrays blow codegen size limits -> switch to a real
 # SparkContext.broadcast probed in vectorized numpy (VERDICT r2 #4,
-# same policy as operators/bloom.py / pip.py refine='auto')
+# the same size policy as operators/bloom.py and pip.py). Read at call
+# time, so a test can force either path by moving it.
 
 
 def _quantize(vec_col: Column, scale_bits: int) -> Column:
@@ -62,29 +63,19 @@ def _sq_dist(q: Column, centroid: list[int]) -> Column:
     )
 
 
-def _assign(
-    qdf: DataFrame,
-    centroids: list[list[int]],
-    mode: str = "auto",
-    literal_budget: int = LITERAL_BUDGET,
-) -> DataFrame:
+def _assign(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Add (cluster, dist): argmin over per-centroid integer squared
     distances, ties to the lowest centroid id.
 
-    mode='literal' inlines the k*dim centroid values as Column
-    literals (scan-stage codegen, zero shuffle — right up to the plan
-    literal budget); mode='broadcast' ships them once per executor via
-    SparkContext.broadcast and computes the same int64 argmin in
-    Arrow-batched numpy (right for large k*dim coarse quantizers).
-    'auto' switches on k*dim > literal_budget.  Both paths are
-    bit-identical (ties: np.argmin takes the first minimum = lowest
-    cid, matching the struct-ordering argmin)."""
-    if mode not in ("auto", "literal", "broadcast"):
-        raise ValueError(f"mode must be auto|literal|broadcast, got {mode!r}")
-    if mode == "auto":
-        k_dim = len(centroids) * (len(centroids[0]) if centroids else 0)
-        mode = "literal" if k_dim <= literal_budget else "broadcast"
-    if mode == "broadcast":
+    Up to LITERAL_BUDGET k*dim values, the centroids are inlined as
+    Column literals (scan-stage codegen, zero shuffle); above it they
+    ship once per executor via SparkContext.broadcast and the same
+    int64 argmin runs in Arrow-batched numpy (right for large k*dim
+    coarse quantizers).  Both paths are bit-identical (ties: np.argmin
+    takes the first minimum = lowest cid, matching the struct-ordering
+    argmin)."""
+    k_dim = len(centroids) * (len(centroids[0]) if centroids else 0)
+    if k_dim > LITERAL_BUDGET:
         return _assign_broadcast(qdf, centroids)
     best = F.array_min(
         F.array(
@@ -151,7 +142,6 @@ def kmeans_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale_bits: int = DEFAULT_SCALE_BITS,
-    assign_mode: str = "auto",
 ) -> tuple[list[list[int]], DataFrame]:
     """Train ``iters`` Lloyd iterations from the k lowest-id vectors
     (deterministic init).  Returns (centroids, qdf) — the trained
@@ -165,7 +155,7 @@ def kmeans_train(
     dim = len(centroids[0])
     for _ in range(iters):
         stats = (
-            _assign(qdf, centroids, mode=assign_mode)
+            _assign(qdf, centroids)
             .select("cluster", F.posexplode("q").alias("d", "v"))
             .groupBy("cluster", "d")
             .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
@@ -186,7 +176,6 @@ def kmeans_fit_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale_bits: int = DEFAULT_SCALE_BITS,
-    assign_mode: str = "auto",
 ) -> DataFrame:
     """Train and return the final assignment: (vec_id, cluster, dist)
     with dist the integer squared distance in quantized units.
@@ -197,12 +186,8 @@ def kmeans_fit_assign(
     deliberate: at 10^12 rows the training sync points are the only
     passes worth pinning in cluster storage, and re-quantizing is two
     Column ops inside the output scan."""
-    centroids, qdf = kmeans_train(
-        vectors, k, iters, id_col, vec_col, scale_bits, assign_mode
-    )
-    out = _assign(qdf, centroids, mode=assign_mode).select(
-        "vec_id", "cluster", "dist"
-    )
+    centroids, qdf = kmeans_train(vectors, k, iters, id_col, vec_col, scale_bits)
+    out = _assign(qdf, centroids).select("vec_id", "cluster", "dist")
     qdf.unpersist()
     return out
 
@@ -217,7 +202,6 @@ def ivf_trained_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale_bits: int = DEFAULT_SCALE_BITS,
-    assign_mode: str = "auto",
 ) -> DataFrame:
     """IVF ANN with a TRAINED coarse quantizer (what
     similarity.ivf_topk's seeded-Gaussian centroids stand in for):
@@ -234,16 +218,14 @@ def ivf_trained_topk(
     """
     import math
 
-    centroids, qdf = kmeans_train(
-        vectors, k_lists, iters, id_col, vec_col, scale_bits, assign_mode
-    )
+    centroids, qdf = kmeans_train(vectors, k_lists, iters, id_col, vec_col, scale_bits)
     qq = [math.floor(float(x) * (1 << scale_bits)) for x in query]
     cdist = sorted(
         (sum((a - b) ** 2 for a, b in zip(qq, c)), i) for i, c in enumerate(centroids)
     )
     probe = [i for _, i in cdist[:nprobe]]
     out = (
-        _assign(qdf, centroids, mode=assign_mode)
+        _assign(qdf, centroids)
         .where(F.col("cluster").isin(probe))
         .select(
             "vec_id",
@@ -260,7 +242,7 @@ def ivf_trained_topk(
 def _argmin_literal(qcol: Column, centroids: list[list[int]]) -> Column:
     """(dist, cid) struct of the nearest literal centroid — argmin via
     array_min over per-centroid integer squared distances, ties to the
-    lowest centroid id (the same contract as _assign mode='literal')."""
+    lowest centroid id (the same contract as _assign's literal path)."""
     return F.array_min(
         F.array(
             *[

@@ -349,8 +349,8 @@ def voronoi_assign(
     the site list defines a total partition of the plane) and runs
     entirely in the scan stage: the sites ride as plan literals, the
     argmin is one array_min over a per-row struct array — zero
-    shuffles, zero Python.  Literal-budget doctrine (operators/pip.py
-    refine='auto'): fine for dimension-scale site lists (cities,
+    shuffles, zero Python.  Literal-budget doctrine (as operators/pip.py
+    picks its refine by edge count): fine for dimension-scale site lists (cities,
     depots, datacenters); for thousands of sites switch to
     snap_to_sites' cell join instead.
     """

@@ -3,11 +3,10 @@
 Media are opaque ``binary`` columns with typed metadata, exactly as a
 100 TB training-data lake stores them. The Spark-side machinery —
 schema, partitioning, Arrow batch shape, mapInPandas signatures — is
-real and tested; the codec step itself is stubbed because this
-container ships no image/audio libraries: ``decode_image`` raises
-NotImplementedError unless a deterministic fake decoder is requested
-(``fake=True``), which synthesizes a stable pseudo-pixel tensor from
-the bytes so downstream feature logic is testable end-to-end.
+real and tested; the codec step itself is a deterministic fold of
+the bytes (``_fake_decode``), because real image/audio codecs are out
+of scope: it synthesizes a stable pseudo-pixel tensor from the
+payload so downstream feature logic is testable end-to-end.
 """
 
 from __future__ import annotations
@@ -20,26 +19,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image|audio|video
-        StructField("mime", StringType(), True),
-        StructField("payload", BinaryType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-    ]
-)
 
 FEATURES_SCHEMA = StructType(
     [
@@ -61,24 +47,7 @@ def _fake_decode(payload: bytes, dim: int = 8) -> np.ndarray:
     return (folded % 256).astype(np.float32) / 255.0
 
 
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
-    """Real decoder unavailable in this container — STUB. ``fake=True``
-    uses the deterministic fold so pipelines are testable."""
-    if fake:
-        return _fake_decode(payload)
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "image decode needs Pillow/opencv; not in this environment — "
-            "use fake=True for the deterministic test decoder"
-        ) from e
-    raise NotImplementedError("PIL present but decoder not wired")
-
-
-def extract_media_features(
-    media: DataFrame, dim: int = 8, batch_hint: int = 1024, fake: bool = True
-) -> DataFrame:
+def extract_media_features(media: DataFrame, dim: int = 8) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     The Arrow batch shape is the real contract: each batch is a
@@ -90,9 +59,7 @@ def extract_media_features(
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [
-                (_fake_decode(p, dim) if fake else decode_image(p)).tolist()
-                if p is not None
-                else [0.0] * dim
+                _fake_decode(p, dim).tolist() if p is not None else [0.0] * dim
                 for p in pdf["payload"]
             ]
             yield pd.DataFrame(
@@ -124,41 +91,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
         .select("*", F.explode(grid).alias("frame_ts"))
         .withColumn("frame_idx", (F.col("frame_ts") / every_ms).cast("int"))
     )
-
-
-def resize_media(
-    media: DataFrame, out_w: int = 4, out_h: int = 4, fake: bool = True
-) -> DataFrame:
-    """mapInPandas decode+resize: fake-decode each payload to a square
-    pseudo-pixel tensor, nearest-neighbor resample to (out_h, out_w),
-    emit the flattened floats. Deterministic — independent of
-    partitioning and batch boundaries — so repartition(N) never
-    changes results (asserted in tests)."""
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("pixels", ArrayType(FloatType(), False), False),
-        ]
-    )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for p in pdf["payload"]:
-                if p is None or len(p) == 0:
-                    out.append([0.0] * (out_w * out_h))
-                    continue
-                if not fake:
-                    decode_image(p)  # raises NotImplementedError
-                arr = np.frombuffer(p, dtype=np.uint8).astype(np.float32) / 255.0
-                side = max(int(np.ceil(np.sqrt(arr.size))), 1)
-                img = np.pad(arr, (0, side * side - arr.size)).reshape(side, side)
-                ys = (np.arange(out_h) * side // out_h).astype(int)
-                xs = (np.arange(out_w) * side // out_w).astype(int)
-                out.append(img[np.ix_(ys, xs)].ravel().tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "pixels": out})
-
-    return media.select("media_id", "payload").mapInPandas(resize, out_schema)
 
 
 AUDIO_WINDOWS_SCHEMA = StructType(
@@ -234,20 +166,6 @@ def audio_windows(media: DataFrame, window: int = 256, hop: int = 128) -> DataFr
     return media.select("media_id", "payload").mapInPandas(frame, AUDIO_WINDOWS_SCHEMA)
 
 
-def pages_to_media(pages: DataFrame) -> DataFrame:
-    """Adapter: treat page html bytes as an image-like payload table
-    (exercises the binary plumbing on the pages fixture)."""
-    return pages.select(
-        F.xxhash64("url").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.col("html").alias("payload"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-
-
 AHASH_DIM = 64
 
 
@@ -272,7 +190,7 @@ def _ahash_int(payload: bytes, dim: int = AHASH_DIM) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def ahash64(media: DataFrame, fake: bool = True) -> DataFrame:
+def ahash64(media: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) per media row — the classic
     image near-dup fingerprint: threshold each decoded cell against
     the image mean, pack 64 bits.  With a real codec the cells are an
@@ -290,8 +208,6 @@ def ahash64(media: DataFrame, fake: bool = True) -> DataFrame:
 
     def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not fake:  # pragma: no cover - real codec stub
-                [decode_image(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],

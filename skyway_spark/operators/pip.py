@@ -19,23 +19,24 @@ compiled into the plan. When the polygon table is itself a
 with ``local_frame``), that collect runs no Spark job. The broadcast
 cell table is built as one Arrow table, which Spark plans as a
 ``LocalRelation`` too (no RDD of pickled rows to deserialise again on
-every execution). Two refine engines:
+every execution). Two refine engines, picked by total edge count:
 
-- ``refine='jvm'``: ring edges become literal array<struct> columns
-  and the even-odd ray cast is a pure higher-order-function
-  expression (``exists``/``aggregate``) — zero Python processes in
-  the hot path, no Arrow transfer, stable latency, and the whole
-  pipeline stays narrow. All ring, bbox and polygon-id constants are
+- jvm (up to ``JVM_REFINE_MAX_EDGES``): ring edges become literal
+  array<struct> columns and the even-odd ray cast is a pure
+  higher-order-function expression (``exists``/``aggregate``) — zero
+  Python processes in the hot path, no Arrow transfer, stable
+  latency, and the whole pipeline stays narrow. All ring, bbox and polygon-id constants are
   rendered as SQL text and cross py4j as one ``F.expr`` string each,
   so the plan build costs a fixed number of gateway calls whatever
   the edge count.
-- ``refine='pandas'``: ships rings to Python workers inside a pandas
+- pandas (above it): ships rings to Python workers inside a pandas
   UDF closure and ray-casts each Arrow batch as one numpy
   (points x edges) broadcast — for rings with thousands of vertices,
   where numpy's vectorized matrix beats the per-edge interpreted HOF
   lambda and the literal plan would grow too large.
 
-``refine='auto'`` (default) picks between them by total edge count.
+Both produce bit-identical verdicts (same op order, pinned by the
+oracle tests).
 
 Geometry is planar in (lat, lon) — fine for city-scale polygons away
 from the antimeridian (the generator guarantees this; a production
@@ -143,9 +144,10 @@ def _odd_crossings(ring, lat_c, lon_c):
 # back to interpreted expressions (64KB method limit). The build no
 # longer grows in py4j calls per edge (the constants are one SQL
 # string), but a 10 000-edge jvm build still takes seconds where the
-# pandas refine takes a fraction of one. Above this edge budget the
-# auto mode switches to the pandas refine, whose cost is O(1) in plan
-# size (geometry ships in the UDF closure).
+# pandas refine takes a fraction of one. Above this edge budget
+# point_in_polygon switches to the pandas refine, whose cost is O(1) in
+# plan size (geometry ships in the UDF closure). Read at call time, so
+# a test can force either engine by moving it.
 JVM_REFINE_MAX_EDGES = 10_000
 
 # Adaptive interior covering (round 4): per polygon, the finest cell
@@ -255,15 +257,12 @@ def point_in_polygon(
     point_id: str = "id",
     lat: str = "lat",
     lon: str = "lon",
-    refine: str = "auto",
 ) -> DataFrame:
     """Rows of ``points`` (all columns preserved) paired with every
     ``polygon_id`` containing them.
 
-    ``refine='auto'`` (default) picks the jvm HOF refine while the
-    total edge count fits JVM_REFINE_MAX_EDGES and the Arrow pandas
-    refine beyond it — both produce bit-identical verdicts (same op
-    order, pinned by the oracle tests). Pass 'jvm'/'pandas' to force.
+    The jvm HOF refine runs while the total edge count fits
+    JVM_REFINE_MAX_EDGES, the Arrow pandas refine beyond it.
     """
     # driver-side: geometry grouped per POLYGON (all its outer + hole
     # rings together) so one UDF verdict = outer-minus-holes in a
@@ -275,7 +274,8 @@ def point_in_polygon(
         by_pid.setdefault(r["polygon_id"], {"outer": [], "hole": []})[
             r["ring_role"]
         ].append(_ring_arrays(r["ring"]))
-    pids = sorted(by_pid)
+    # a polygon without an outer ring contains no point
+    pids = sorted(p for p, g in by_pid.items() if g["outer"])
     geoms = [by_pid[p] for p in pids]  # indexed by __geom
     passthrough = [c for c in points.columns if c != point_id]
     if not pids:  # same schema as below: polygon_id is a non-null int
@@ -323,12 +323,8 @@ def point_in_polygon(
     )
 
     lat_c, lon_c = F.col(lat), F.col(lon)
-    if refine == "auto":
-        total_edges = sum(
-            len(ys) - 1 for g in geoms for ys, _xs in g["outer"] + g["hole"]
-        )
-        refine = "jvm" if total_edges <= JVM_REFINE_MAX_EDGES else "pandas"
-    if refine == "jvm":
+    total_edges = sum(len(ys) - 1 for g in geoms for ys, _xs in g["outer"] + g["hole"])
+    if total_edges <= JVM_REFINE_MAX_EDGES:
         outer_by_geom = F.expr(_array_sql(_rings_sql(g["outer"]) for g in geoms))
         hole_by_geom = F.expr(_array_sql(_rings_sql(g["hole"]) for g in geoms))
         # bbox short-circuit: covering cells are coarser than the
@@ -377,7 +373,7 @@ def point_in_polygon(
                 lambda r: _odd_crossings(r, lat_c, lon_c),
             )
         )
-    elif refine == "pandas":
+    else:
 
         @F.pandas_udf(BooleanType())
         def inside_udf(lat_s: pd.Series, lon_s: pd.Series, geom_s: pd.Series) -> pd.Series:
@@ -397,8 +393,6 @@ def point_in_polygon(
             return pd.Series(out)
 
         inside_pred = F.col("__interior") | inside_udf(lat_c, lon_c, F.col("__geom"))
-    else:
-        raise ValueError(f"unknown refine engine: {refine!r}")
 
     # one cell per point per USED resolution (usually 1-2 distinct
     # levels across the polygon set); a polygon's cells all live at

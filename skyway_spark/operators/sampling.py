@@ -38,14 +38,6 @@ def hash_bucket(id_col: Column) -> Column:
     return F.pmod(reduced * _A + _B, F.lit(PRIME)) % BUCKETS
 
 
-def deterministic_sample(
-    df: DataFrame, rate: float, id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep ~rate of rows, decided per-row by content hash — stable
-    under repartitioning, appends, and engine choice."""
-    return df.where(hash_bucket(F.col(id_col)) < int(rate * BUCKETS))
-
-
 def stratified_sample(
     df: DataFrame, fractions: dict[str, float], strata_col: str = "lang",
     id_col: str = "doc_id", default: float = 0.0,

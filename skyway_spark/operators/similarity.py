@@ -15,8 +15,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from skyway_spark.operators.dedup import cosine_sim
-
 
 def _dot_literal(vec_col: Column, q: list[float]) -> Column:
     """dot(vec, literal query) without a UDF."""
@@ -165,31 +163,6 @@ def ivf_topk(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def pairwise_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "embedding",
-) -> DataFrame:
-    """Exact per-query top-k against a (small, broadcast) query table."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id), F.col(query_vec).cast("array<double>").alias("__qv")
-        )
-    )
-    v = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-    scored = v.crossJoin(q).select(
-        F.col(query_id),
-        F.col(id_col),
-        F.round(cosine_sim(F.col("__v"), F.col("__qv")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
 def semantic_dedup(
     vectors: DataFrame,
     tau: int,
@@ -198,7 +171,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale_bits: int = 20,
-    assign_mode: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate marking: (vec_id,
     cluster, keep) for EVERY input vector, keep = false iff a
@@ -223,10 +195,8 @@ def semantic_dedup(
     """
     from skyway_spark.operators.kmeans import _assign, kmeans_train
 
-    centroids, qdf = kmeans_train(
-        vectors, k, iters, id_col, vec_col, scale_bits, assign_mode
-    )
-    assigned = _assign(qdf, centroids, mode=assign_mode).select(
+    centroids, qdf = kmeans_train(vectors, k, iters, id_col, vec_col, scale_bits)
+    assigned = _assign(qdf, centroids).select(
         "vec_id", "cluster", "q"
     )
     qdf.unpersist()

@@ -64,7 +64,7 @@ def hll_sketch(
     m: int = 64,
 ) -> DataFrame:
     """Per-group HLL register table: (grp, bucket, rho) — the sketch
-    itself, union-mergeable with ``hll_merge`` (register max).
+    itself, union-mergeable by register max.
 
     ``value_col`` must be integral (ids); strings should pass through
     ``dedup.text_hash`` first.  bucket comes from one LCG draw, rho
@@ -95,17 +95,6 @@ def hll_sketch(
         .groupBy("grp", "bucket")
         .agg(F.max("rho").alias("rho"))
     )
-
-
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Union sketches built by ``hll_sketch`` (same m): register-wise
-    max.  hll_merge(sketch(A), sketch(B)) == sketch(A UNION ALL B)
-    exactly — the property that lets 100 TB build per-shard/per-day
-    sketches independently and combine kilobytes."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("grp", "bucket").agg(F.max("rho").alias("rho"))
 
 
 def hll_estimate(sketch: DataFrame, m: int = 64, alpha_milli: int | None = None) -> DataFrame:
@@ -222,16 +211,6 @@ def cms_estimate(
         .groupBy(term_col)
         .agg(F.min("n").alias("cms_n"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Union sketches built by ``cms_sketch`` (same w): counter-wise
-    sum — cms_merge(sketch(A), sketch(B)) == sketch(A UNION ALL B)
-    exactly, the per-shard build-then-combine path."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "bucket").agg(F.sum("n").alias("n"))
 
 
 def kmv_distinct(

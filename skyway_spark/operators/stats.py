@@ -301,9 +301,7 @@ def running_zscore_flags(
 
     Scale shape: ONE entity-keyed sort shuffle; the prior-window sums
     are a single running-frame window pass (O(1) state per row); the
-    flag predicate is scan-stage Column math.  The streaming twin
-    (streaming/events.zscore_stream) keeps the same (n, s, ssq) as
-    O(entities) state and is parity-pinned against this operator.
+    flag predicate is scan-stage Column math.
     """
     from pyspark.sql import Window
 

@@ -1,10 +1,14 @@
-"""Helpers for the struct-input scalar pandas UDFs of the JSON and XML
-writers.
+"""Helpers shared by the element writers.
 
-A struct column arrives in a pandas UDF as a pd.DataFrame; nullable
-int/bool fields surface as float NaN / object None. These helpers
-normalize each record to plain-Python values so serializers can rely
-on None for missing and int for integral fields.
+``canonical_order`` is the one element order every writer emits, and
+``write_enveloped`` the distributed text write with driver-written
+header/footer side files of the JSON and XML writers.
+
+The rest serve the struct-input scalar pandas UDFs of the JSON and XML
+writers. A struct column arrives in a pandas UDF as a pd.DataFrame;
+nullable int/bool fields surface as float NaN / object None. These
+helpers normalize each record to plain-Python values so serializers
+can rely on None for missing and int for integral fields.
 """
 
 from __future__ import annotations
@@ -12,11 +16,32 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from skyway_spark.schema import ELEMENTS_SCHEMA
+
+
+def canonical_order(df: DataFrame) -> DataFrame:
+    """Elements sorted nodes, then ways, then relations, each by id."""
+    rank = F.when(F.col("type") == "node", 0).when(F.col("type") == "way", 1).otherwise(2)
+    return df.orderBy(rank, F.col("id"))
+
+
+def write_enveloped(values: DataFrame, path: str, ext: str, header: str, footer: str) -> None:
+    """Distributed text write of the single-column ``values`` plus two
+    tiny side files the driver writes (metadata only, O(1) size):
+    ``_header.<ext>`` and ``_footer.<ext>``. A consumer concatenates
+    header + parts + footer."""
+    values.write.mode("overwrite").text(path)
+    sc = values.sparkSession.sparkContext
+    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = hadoop_path(path).getFileSystem(sc._jsc.hadoopConfiguration())
+    for name, text in (("_header", header), ("_footer", footer)):
+        out = fs.create(hadoop_path(f"{path}/{name}.{ext}"), True)
+        out.write(bytearray(text.encode()))
+        out.close()
 
 
 def element_struct() -> Column:

@@ -29,7 +29,13 @@ from pyspark.sql.types import StringType
 
 from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
-from skyway_spark.sources._rowutil import element_struct, records, seq
+from skyway_spark.sources._rowutil import (
+    canonical_order,
+    element_struct,
+    records,
+    seq,
+    write_enveloped,
+)
 
 _J = json.dumps  # compact string quoting, like json::stringify
 
@@ -107,10 +113,6 @@ def create_header(metadata: dict, overpass: bool) -> str:
     return h
 
 
-def _type_rank():
-    return F.when(F.col("type") == "node", 0).when(F.col("type") == "way", 1).otherwise(2)
-
-
 def element_json_col(df: DataFrame):
     """Column of per-element JSON strings (vectorized UDF over the
     full row struct)."""
@@ -124,7 +126,7 @@ def serialize_json_string(
     metadata = metadata or empty_metadata()
     body = ",".join(
         r["j"]
-        for r in df.orderBy(_type_rank(), "id").select(element_json_col(df).alias("j")).collect()
+        for r in canonical_order(df).select(element_json_col(df).alias("j")).collect()
     )
     return create_header(metadata, overpass) + body + "]}"
 
@@ -137,25 +139,8 @@ def write_json(
     downstream consumer concatenates header + (comma-joined) parts +
     footer; at fixture scale use serialize_json_string."""
     metadata = metadata or empty_metadata()
-    (
-        df.orderBy(_type_rank(), "id")
-        .select(element_json_col(df).alias("value"))
-        .write.mode("overwrite")
-        .text(path)
-    )
-    # tiny side files written by the driver (metadata only, O(1) size)
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    hadoop_conf = sc._jsc.hadoopConfiguration()
-    fs_path = sc._jvm.org.apache.hadoop.fs.Path(path + "/_header.json")
-    fs = fs_path.getFileSystem(hadoop_conf)
-    out = fs.create(fs_path, True)
-    out.write(bytearray(create_header(metadata, overpass).encode()))
-    out.close()
-    fs_path2 = sc._jvm.org.apache.hadoop.fs.Path(path + "/_footer.json")
-    out2 = fs.create(fs_path2, True)
-    out2.write(bytearray(b"]}"))
-    out2.close()
+    values = canonical_order(df).select(element_json_col(df).alias("value"))
+    write_enveloped(values, path, "json", create_header(metadata, overpass), "]}")
 
 
 # ---------------------------------------------------------------------------

@@ -33,17 +33,10 @@ import re
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, MapType, StringType
 
 from skyway_spark.schema import MEMBER_SCHEMA
+from skyway_spark.sources._rowutil import canonical_order
 
 # ---------------------------------------------------------------------------
 # escape / unescape (plain-Python core, reused inside the pandas UDFs)
@@ -277,14 +270,10 @@ def opl_line(df: DataFrame) -> Column:
     )
 
 
-def _type_rank():
-    return F.when(F.col("type") == "node", 0).when(F.col("type") == "way", 1).otherwise(2)
-
-
 def serialize_opl(df: DataFrame) -> DataFrame:
     """elements df -> single-column 'value' df of OPL lines in
     canonical (type, id) order."""
-    return df.orderBy(_type_rank(), F.col("id")).select(opl_line(df).alias("value"))
+    return canonical_order(df).select(opl_line(df).alias("value"))
 
 
 def write_opl(df: DataFrame, path: str) -> None:

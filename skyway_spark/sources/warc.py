@@ -14,9 +14,6 @@ searching for the next magic (a payload containing the literal bytes
 ``WARC/1.0`` must not split a record; tests/test_warc.py pins this).
 One scan, no shuffle; blob bytes never leave the scan stage.
 
-A `spark.read.format('warc')` Python DataSource wrapper lives in
-sources/datasource.py for file-based ingestion with the same parser.
-
 Format notes (public spec, iipc/warc-specifications): header block is
 ``WARC/1.0\\r\\n`` + ``Name: value`` lines terminated by a blank line;
 ``Content-Length`` counts payload bytes exactly; two CRLFs trail each
@@ -168,8 +165,8 @@ def pages_to_warc(
 def parse_warc_bytes(data: bytes) -> Iterator[tuple]:
     """Parse one WARC blob into record tuples
     (rec_no, warc_type, record_id, url, warc_date, content_length,
-    http_status, html). Pure function so the DataSource wrapper and the
-    mapInPandas path share one implementation."""
+    http_status, html). A pure function, so tests can call the same
+    parser the mapInPandas path runs."""
     pos, n, rec = 0, len(data), 0
     while pos < n:
         while data.startswith(b"\r\n", pos):

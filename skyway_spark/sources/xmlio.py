@@ -36,7 +36,13 @@ from pyspark.sql.types import StringType
 
 from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
-from skyway_spark.sources._rowutil import element_struct, records, seq
+from skyway_spark.sources._rowutil import (
+    canonical_order,
+    element_struct,
+    records,
+    seq,
+    write_enveloped,
+)
 
 
 def _esc(v: str) -> str:
@@ -106,10 +112,6 @@ def _element_xml_udf(rows: pd.DataFrame) -> pd.Series:
     return pd.Series([serialize_element_xml_py(r) for r in records(rows)])
 
 
-def _type_rank():
-    return F.when(F.col("type") == "node", 0).when(F.col("type") == "way", 1).otherwise(2)
-
-
 def xml_envelope_open(metadata: dict | None) -> str:
     metadata = metadata or empty_metadata()
     attrs = []
@@ -128,7 +130,7 @@ def serialize_xml_string(df: DataFrame, metadata: dict | None = None) -> str:
     """Driver-side full document in canonical order (fixtures)."""
     body = "".join(
         r["x"]
-        for r in df.orderBy(_type_rank(), "id").select(element_xml_col(df).alias("x")).collect()
+        for r in canonical_order(df).select(element_xml_col(df).alias("x")).collect()
     )
     return xml_envelope_open(metadata) + body + "</osm>"
 
@@ -136,23 +138,8 @@ def serialize_xml_string(df: DataFrame, metadata: dict | None = None) -> str:
 def write_xml(df: DataFrame, path: str, metadata: dict | None = None) -> None:
     """Distributed fragment write + O(1) envelope side files (the
     reference buffers everything in RAM instead, xml.rs:200-213)."""
-    (
-        df.orderBy(_type_rank(), "id")
-        .select(element_xml_col(df).alias("value"))
-        .write.mode("overwrite")
-        .text(path)
-    )
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path + "/_header.xml")
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    out.write(bytearray(xml_envelope_open(metadata).encode()))
-    out.close()
-    jpath2 = sc._jvm.org.apache.hadoop.fs.Path(path + "/_footer.xml")
-    out2 = fs.create(jpath2, True)
-    out2.write(bytearray(b"</osm>"))
-    out2.close()
+    values = canonical_order(df).select(element_xml_col(df).alias("value"))
+    write_enveloped(values, path, "xml", xml_envelope_open(metadata), "</osm>")
 
 
 # ---------------------------------------------------------------------------

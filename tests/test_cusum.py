@@ -51,33 +51,3 @@ def test_cusum_reset_after_dip(spark):
 )
 def test_cusum_matches_recurrence(spark, vals, k, h):
     assert _run(spark, vals, 0, k, h) == _ref(vals, 0, k, h)
-
-
-def test_cusum_stream_matches_batch(spark, tmp_path):
-    from skyway_spark.operators.stats import cusum_changepoints
-    from skyway_spark.streaming.events import (
-        cusum_stream,
-        read_events_stream,
-        run_bounded,
-    )
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    want = {
-        (r.entity, r.point_id, r.v_q, r.s_hi, r.s_lo)
-        for r in cusum_changepoints(ev, mu_q=5000, k_q=1000, h_q=30000).collect()
-    }
-    in_dir = str(tmp_path / "cs_in")
-    ev.coalesce(1).write.parquet(in_dir)
-    out_dir = str(tmp_path / "cs_out")
-    run_bounded(
-        cusum_stream(
-            read_events_stream(spark, in_dir), mu_q=5000, k_q=1000, h_q=30000
-        ),
-        str(tmp_path / "cs_ck"),
-        out_dir,
-    )
-    got = {
-        (r.entity, r.point_id, r.v_q, r.s_hi, r.s_lo)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == want and want

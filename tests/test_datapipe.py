@@ -193,19 +193,6 @@ def test_ivf_topk_recall(emb):
     assert rows[5]["vec_id"] in approx  # self's list is always probed
 
 
-def test_pairwise_topk(emb):
-    queries = emb.limit(5).select(F.col("vec_id").alias("query_id"), "embedding")
-    out = similarity.pairwise_topk(emb, queries, k=3).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append((r["rank"], r["vec_id"]))
-    assert set(by_q) == {r["query_id"] for r in queries.collect()}
-    for qid, lst in by_q.items():
-        lst.sort()
-        assert lst[0][1] == qid  # self at rank 1 (cos=1)
-        assert len(lst) == 3
-
-
 # ------------------------------ textstats ------------------------------
 
 
@@ -241,11 +228,18 @@ def test_lang_id_sane(docs):
 # ------------------------------ multimodal ------------------------------
 
 
+def _page_media(pages):
+    """(media_id, payload) over the page html, as q_media_features builds it."""
+    return pages.select(
+        F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long").alias("media_id"),
+        F.col("html").alias("payload"),
+    )
+
+
 def test_media_features(spark):
     from skyway_spark.sources.generate import generate_pages
 
-    pages = generate_pages(spark, 50, partitions=3)
-    media = multimodal.pages_to_media(pages)
+    media = _page_media(generate_pages(spark, 50, partitions=3))
     feats = multimodal.extract_media_features(media, dim=8).collect()
     assert len(feats) == 50
     for r in feats:
@@ -253,7 +247,7 @@ def test_media_features(spark):
         assert r["n_bytes"] > 0
         assert all(0.0 <= v <= 1.0 for v in r["feature"])
     # determinism across partitionings
-    media2 = multimodal.pages_to_media(generate_pages(spark, 50, partitions=7))
+    media2 = _page_media(generate_pages(spark, 50, partitions=7))
     feats2 = multimodal.extract_media_features(media2, dim=8).collect()
     a = {r["media_id"]: tuple(r["feature"]) for r in feats}
     b = {r["media_id"]: tuple(r["feature"]) for r in feats2}
@@ -283,28 +277,6 @@ def test_sample_frames(spark, docs):
     assert multimodal.sample_frames(audio).count() == 0
 
 
-def test_resize_media(spark):
-    from skyway_spark.sources.generate import generate_pages
-
-    media = multimodal.pages_to_media(generate_pages(spark, 30, partitions=3))
-    out = multimodal.resize_media(media, out_w=4, out_h=4).collect()
-    assert len(out) == 30
-    for r in out:
-        assert len(r["pixels"]) == 16
-        assert all(0.0 <= v <= 1.0 for v in r["pixels"])
-    # determinism across partitionings (batch boundaries must not leak)
-    media2 = multimodal.pages_to_media(generate_pages(spark, 30, partitions=7))
-    out2 = multimodal.resize_media(media2, out_w=4, out_h=4).collect()
-    assert {r["media_id"]: tuple(r["pixels"]) for r in out} == {
-        r["media_id"]: tuple(r["pixels"]) for r in out2
-    }
-
-
-def test_real_decoder_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"xxx", fake=False)
-
-
 def test_sampling_deterministic_and_exhaustive(spark, docs):
     from skyway_spark.operators import sampling
 
@@ -322,8 +294,8 @@ def test_sampling_deterministic_and_exhaustive(spark, docs):
     n = len(s1)
     assert sum(1 for v in s1.values() if v == "train") > 0.6 * n
     # sample subset law: lower rate selects a subset of a higher rate
-    a = {r["doc_id"] for r in sampling.deterministic_sample(sub, 0.2).collect()}
-    b = {r["doc_id"] for r in sampling.deterministic_sample(sub, 0.6).collect()}
+    a = {r["doc_id"] for r in sampling.stratified_sample(sub, {}, default=0.2).collect()}
+    b = {r["doc_id"] for r in sampling.stratified_sample(sub, {}, default=0.6).collect()}
     assert a <= b and len(a) < len(b) < n
     with pytest.raises(ValueError):
         sampling.hash_split(sub, {"a": 0.5, "b": 0.2})

@@ -419,62 +419,6 @@ def test_cooccurrence_pairs_counts_and_ordering(spark):
     assert filtered == {("x", "y"), ("y", "z")}
 
 
-def test_apply_changelog_versioned_out_of_order_converges(spark):
-    """Permutation law: replaying the same changelog in ANY batch
-    order converges to the same state when seqs travel with rows."""
-    from skyway_spark.operators.cdc import apply_changelog_versioned
-
-    snap0 = spark.createDataFrame(
-        [(1, 10, "a"), (2, 11, "b")], "k long, seq long, v string"
-    )
-    ddl = "k long, seq long, op string, v string"
-    batches = [
-        [(1, 20, "U", "a2")],          # fresh update
-        [(1, 15, "U", "stale")],       # stale update: must not override seq 20
-        [(2, 5, "D", "x")],            # stale delete: must not delete
-        [(3, 30, "U", "new")],         # insert
-        [(3, 25, "D", "x")],           # stale delete of the insert
-    ]
-    # representative permutations (fixed, not exhaustive — each Spark
-    # job chain is expensive): in-order, fully reversed, stale-first,
-    # insert-delete inversions, interleaved
-    perms = [
-        (0, 1, 2, 3, 4),
-        (4, 3, 2, 1, 0),
-        (1, 0, 2, 4, 3),
-        (3, 4, 0, 1, 2),
-        (2, 4, 1, 3, 0),
-        (4, 1, 3, 0, 2),
-    ]
-    finals = set()
-    for perm in perms:
-        snap = snap0
-        for i in perm:
-            snap = apply_changelog_versioned(
-                snap, spark.createDataFrame(batches[i], ddl), ["k"]
-            )
-        finals.add(frozenset((r.k, r.seq, r.v) for r in snap.collect()))
-    assert finals == {frozenset({(1, 20, "a2"), (2, 11, "b"), (3, 30, "new")})}
-
-
-def test_apply_changelog_versioned_fresh_delete_and_tie(spark):
-    from skyway_spark.operators.cdc import apply_changelog_versioned
-
-    snap = spark.createDataFrame([(1, 10, "a")], "k long, seq long, v string")
-    ch = spark.createDataFrame(
-        [(1, 11, "D", "x"), (1, 10, "U", "tie")],
-        "k long, seq long, op string, v string",
-    )
-    # latest per key = seq 11 delete; it beats snapshot seq 10 -> gone
-    assert apply_changelog_versioned(snap, ch, ["k"]).count() == 0
-    tie_only = spark.createDataFrame(
-        [(1, 10, "U", "tie")], "k long, seq long, op string, v string"
-    )
-    # equal seq does NOT win (strictly-greater rule)
-    got = apply_changelog_versioned(snap, tie_only, ["k"]).collect()
-    assert [(r.k, r.seq, r.v) for r in got] == [(1, 10, "a")]
-
-
 def test_changelog_to_scd2_intervals(spark):
     from skyway_spark.operators.cdc import changelog_to_scd2
 

@@ -211,164 +211,6 @@ def test_adaptive_tiles_base_equals_max(spark):
 
 
 # ---------------------------------------------------------------------------
-# left-outer stream-stream join
-# ---------------------------------------------------------------------------
-
-
-def test_stream_stream_left_outer_join_parity(spark, tmp_path):
-    """Null-padded unmatched views appear once the watermark passes;
-    for events older than max_ts - (watermark + within), streaming
-    left-outer == batch left join."""
-    from skyway_spark.streaming.events import (
-        join_streams_interval,
-        read_events_stream,
-        run_bounded,
-    )
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    in_dir = str(tmp_path / "lsj_in")
-    # one file -> one data microbatch: no row is late vs the watermark,
-    # so every unmatched view must surface as a null-padded row in the
-    # final no-data batch (the eviction semantics under test)
-    ev.coalesce(1).write.parquet(in_dir)
-    views_s = read_events_stream(spark, in_dir).where(F.col("event_type") == "view")
-    clicks_s = read_events_stream(spark, in_dir).where(F.col("event_type") == "click")
-    joined = join_streams_interval(views_s, clicks_s, how="left_outer")
-    out_dir = str(tmp_path / "lsj_out")
-    run_bounded(joined, str(tmp_path / "lsj_ck"), out_dir)
-    got_df = spark.read.parquet(out_dir)
-
-    # the GLOBAL watermark is the min across both input streams — the
-    # clicks stream ends hours before the views stream, so eviction is
-    # bounded by the click-side max, not the overall max
-    max_ts = min(
-        ev.where(F.col("event_type") == t).agg(F.max("ts")).first()[0]
-        for t in ("view", "click")
-    )
-    cutoff = max_ts - dt.timedelta(hours=3, minutes=5)  # watermark 2h + within 1h, strict margin
-    got = {
-        (r["user_id"], r["l_id"], r["r_id"])
-        for r in got_df.where(F.col("l_ts") <= F.lit(cutoff)).collect()
-    }
-    v = ev.where((F.col("event_type") == "view") & (F.col("ts") <= F.lit(cutoff))).select(
-        "user_id", F.col("ts").alias("l_ts"), F.col("event_id").alias("l_id")
-    )
-    c = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("u2"), F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("r_id"),
-    )
-    want = {
-        (r["user_id"], r["l_id"], r["r_id"])
-        for r in v.join(
-            c,
-            (F.col("user_id") == F.col("u2"))
-            & (F.col("r_ts") >= F.col("l_ts"))
-            & (F.col("r_ts") <= F.col("l_ts") + F.expr("interval 1 hour")),
-            "left",
-        ).collect()
-    }
-    assert got == want and want
-    # the outer rows are the point: some views must be null-padded
-    assert any(r_id is None for _, _, r_id in got)
-
-
-# ---------------------------------------------------------------------------
-# streaming geofence
-# ---------------------------------------------------------------------------
-
-
-def test_geofence_stream_matches_batch(spark, tmp_path):
-    """Streaming enter/exit/switch == batch geofence_transitions on
-    time-ordered single-batch input (the containment Column shares the
-    batch operator's exact ray-cast arithmetic)."""
-    from skyway_spark.operators.trajectory import geofence_transitions
-    from skyway_spark.schema import POLYGONS_SCHEMA
-    from skyway_spark.streaming.events import geofence_stream, run_bounded
-
-    fences = [
-        (0, "f0", [{"lat": -20.0, "lon": -20.0}, {"lat": -20.0, "lon": 60.0},
-                   {"lat": 60.0, "lon": 60.0}, {"lat": 60.0, "lon": -20.0},
-                   {"lat": -20.0, "lon": -20.0}], "outer"),
-        (1, "f1", [{"lat": 0.0, "lon": 0.0}, {"lat": 0.0, "lon": 179.0},
-                   {"lat": 80.0, "lon": 179.0}, {"lat": 80.0, "lon": 0.0},
-                   {"lat": 0.0, "lon": 0.0}], "outer"),
-    ]
-    polys = spark.createDataFrame(fences, POLYGONS_SCHEMA)
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    pts_cols = [
-        "event_id", "user_id", "ts",
-        ((F.col("user_id") * 7919) % 17000 / 100.0 - 85.0).alias("lat"),
-        ((F.col("event_id") * 104729) % 36000 / 100.0 - 180.0).alias("lon"),
-    ]
-    want = {
-        (r.entity, r.point_id, r.from_region, r.to_region, r.kind)
-        for r in geofence_transitions(ev.select(*pts_cols), polys, res=4).collect()
-    }
-
-    in_dir = str(tmp_path / "gf_in")
-    ev.coalesce(1).write.parquet(in_dir)
-    from skyway_spark.streaming.events import read_events_stream
-
-    stream_pts = read_events_stream(spark, in_dir).select(*pts_cols)
-    out_dir = str(tmp_path / "gf_out")
-    run_bounded(
-        geofence_stream(stream_pts, polys), str(tmp_path / "gf_ck"), out_dir
-    )
-    got = {
-        (r.entity, r.point_id, r.from_region, r.to_region, r.kind)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == want and want
-    assert {k for *_, k in got} == {"enter", "exit", "switch"}
-
-
-def test_geofence_stream_state_spans_batches(spark, tmp_path):
-    """A user inside a fence at the end of batch 1 must NOT re-emit
-    'enter' in batch 2 — the cross-trigger state is the point."""
-    from skyway_spark.schema import POLYGONS_SCHEMA
-    from skyway_spark.streaming.events import geofence_stream, run_bounded
-
-    polys = spark.createDataFrame(
-        [(0, "f", [{"lat": -10.0, "lon": -10.0}, {"lat": -10.0, "lon": 10.0},
-                   {"lat": 10.0, "lon": 10.0}, {"lat": 10.0, "lon": -10.0},
-                   {"lat": -10.0, "lon": -10.0}], "outer")],
-        POLYGONS_SCHEMA,
-    )
-    import datetime as dt2
-
-    t0 = dt2.datetime(2024, 1, 1)
-    rows = [
-        (1, t0, 7, "view", 0.0, "{}", 0.0, 0.0),          # inside
-        (2, t0 + dt2.timedelta(minutes=1), 7, "view", 0.0, "{}", 0.0, 1.0),  # inside
-        (3, t0 + dt2.timedelta(minutes=2), 7, "view", 0.0, "{}", 50.0, 50.0),  # outside
-    ]
-    ddl = ("event_id long, ts timestamp, user_id long, event_type string, "
-           "value double, props string, lat double, lon double")
-    in_dir = tmp_path / "gf2_in"
-    in_dir.mkdir()
-    # one file per event -> maxFilesPerTrigger forces separate batches
-    for i, r in enumerate(rows):
-        spark.createDataFrame([r], ddl).coalesce(1).write.parquet(
-            str(in_dir / f"b{i}")
-        )
-    stream = (
-        spark.readStream.schema(ddl)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "b*"))
-        .select("event_id", "user_id", "ts", "lat", "lon")
-    )
-    out_dir = str(tmp_path / "gf2_out")
-    run_bounded(geofence_stream(stream, polys), str(tmp_path / "gf2_ck"), out_dir)
-    got = sorted(
-        (r.point_id, r.from_region, r.to_region, r.kind)
-        for r in spark.read.parquet(out_dir).collect()
-    )
-    # exactly one enter (event 1) and one exit (event 3); event 2 is
-    # silent because state remembers region 0 across triggers
-    assert got == [(1, -1, 0, "enter"), (3, 0, -1, "exit")]
-
-
-# ---------------------------------------------------------------------------
 # crawl frontier + plan shapes
 # ---------------------------------------------------------------------------
 
@@ -647,7 +489,7 @@ def test_pq_train_joint_equals_per_block(spark):
 
 
 # ---------------------------------------------------------------------------
-# online anomaly detection (batch + streaming parity)
+# online anomaly detection
 # ---------------------------------------------------------------------------
 
 
@@ -669,34 +511,6 @@ def test_running_zscore_hand_case(spark):
     # the spike inflates the variance: the return to 10.05 must NOT
     # flag (its deviation is dominated by the spike's contribution)
     assert all(r.point_id != 7 for r in got)
-
-
-def test_zscore_stream_matches_batch(spark, tmp_path):
-    from skyway_spark.operators.stats import running_zscore_flags
-    from skyway_spark.streaming.events import (
-        read_events_stream,
-        run_bounded,
-        zscore_stream,
-    )
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    want = {
-        (r.entity, r.point_id, r.v_q, r.n_prior)
-        for r in running_zscore_flags(ev).collect()
-    }
-    in_dir = str(tmp_path / "zs_in")
-    ev.coalesce(1).write.parquet(in_dir)
-    out_dir = str(tmp_path / "zs_out")
-    run_bounded(
-        zscore_stream(read_events_stream(spark, in_dir)),
-        str(tmp_path / "zs_ck"),
-        out_dir,
-    )
-    got = {
-        (r.entity, r.point_id, r.v_q, r.n_prior)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == want and want
 
 
 def test_staging_pins_hold(spark):
@@ -744,43 +558,6 @@ def test_graph_ops_empty_graph(spark):
 
     # an empty graph also yields a None driver-scalar source id
     assert bellman_ford(empty, [None], iters=2).collect() == []
-
-
-def test_native_session_window_stream_equals_batch(spark, tmp_path):
-    """Spark's native session_window: the streaming run (append mode,
-    windows closed by the watermark) matches the batch run of the SAME
-    aggregation for every session that ended safely before the
-    watermark cutoff — and both agree with the custom sessionizer's
-    event counts."""
-    from skyway_spark.streaming.events import (
-        read_events_stream,
-        run_bounded,
-        session_window_counts,
-    )
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    in_dir = str(tmp_path / "sw_in")
-    ev.coalesce(1).write.parquet(in_dir)
-    out_dir = str(tmp_path / "sw_out")
-    run_bounded(
-        session_window_counts(read_events_stream(spark, in_dir)),
-        str(tmp_path / "sw_ck"),
-        out_dir,
-    )
-    got_df = spark.read.parquet(out_dir)
-
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    cutoff = max_ts - dt.timedelta(hours=2, minutes=35)  # watermark+gap+margin
-    batch = session_window_counts(ev)
-    want = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in batch.where(F.col("session_end") <= F.lit(cutoff)).collect()
-    }
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in got_df.where(F.col("session_end") <= F.lit(cutoff)).collect()
-    }
-    assert got == want and want
 
 
 def test_next_fit_bins_properties(spark):

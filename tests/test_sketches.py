@@ -4,6 +4,7 @@ weighted bottom-k determinism, geofence transitions."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from skyway_spark.operators import sketches
 from skyway_spark.operators.sampling import weighted_bottom_k
@@ -18,9 +19,14 @@ def test_hll_merge_equals_union_sketch(spark):
     a = _ids(spark, range(0, 500))
     b = _ids(spark, range(300, 900))
     direct = sketches.hll_sketch(a.unionAll(b), "grp", "v").collect()
-    merged = sketches.hll_merge(
-        sketches.hll_sketch(a, "grp", "v"), sketches.hll_sketch(b, "grp", "v")
-    ).collect()
+    # union-mergeable: the register-wise max of the two sketches
+    merged = (
+        sketches.hll_sketch(a, "grp", "v")
+        .unionByName(sketches.hll_sketch(b, "grp", "v"))
+        .groupBy("grp", "bucket")
+        .agg(F.max("rho").alias("rho"))
+        .collect()
+    )
     assert sorted(map(tuple, direct)) == sorted(map(tuple, merged))
 
 
@@ -77,9 +83,14 @@ def test_cms_merge_equals_union_sketch(spark):
     a = _docs(spark, ["a b c", "a a"])
     b = _docs(spark, ["b c d", "d d e"])
     direct = sketches.cms_sketch(a.unionAll(b), w=64).collect()
-    merged = sketches.cms_merge(
-        sketches.cms_sketch(a, w=64), sketches.cms_sketch(b, w=64)
-    ).collect()
+    # union-mergeable: the counter-wise sum of the two sketches
+    merged = (
+        sketches.cms_sketch(a, w=64)
+        .unionByName(sketches.cms_sketch(b, w=64))
+        .groupBy("row", "bucket")
+        .agg(F.sum("n").alias("n"))
+        .collect()
+    )
     assert sorted(map(tuple, direct)) == sorted(map(tuple, merged))
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from skyway_spark.functions import cells
 from skyway_spark.functions.geo import haversine_km_np
+from skyway_spark.operators import pip as pip_mod
 from skyway_spark.operators import salt, tiles
 from skyway_spark.operators.extract import extract_geo_entities, pages_to_elements
 from skyway_spark.operators.knn import knn_join
@@ -122,14 +123,25 @@ def _pip_oracle(points_rows, poly_rows):
     return expected
 
 
+# point_in_polygon picks its refine engine by total edge count; a test
+# forces one by moving the edge budget
+_REFINE_BUDGET = {"jvm": 10**18, "pandas": -1}
+
+
+def _force_refine(monkeypatch, refine):
+    if refine in _REFINE_BUDGET:
+        monkeypatch.setattr(pip_mod, "JVM_REFINE_MAX_EDGES", _REFINE_BUDGET[refine])
+
+
 @pytest.mark.parametrize("res", [5, 7])
 @pytest.mark.parametrize("refine", ["jvm", "pandas"], ids=["bcast-jvm", "bcast-pandas"])
-def test_pip_matches_oracle(spark, entities, res, refine):
+def test_pip_matches_oracle(spark, entities, res, refine, monkeypatch):
+    _force_refine(monkeypatch, refine)
     polys = generate_polygons(spark)
     pts = entities.select("id", "lat", "lon").limit(3000).cache()
     got = {
         (r["id"], r["polygon_id"])
-        for r in point_in_polygon(pts, polys, res=res, refine=refine)
+        for r in point_in_polygon(pts, polys, res=res)
         .select("id", "polygon_id")
         .collect()
     }
@@ -171,20 +183,26 @@ def test_pip_hole_and_concave(spark):
 
 
 @pytest.mark.parametrize("refine", ["auto", "jvm", "pandas"])
-def test_pip_empty_polygon_table(spark, refine):
+def test_pip_empty_polygon_table(spark, refine, monkeypatch):
     """A 0-row polygon table yields 0 rows with the usual output schema
-    (it used to fail analysis on a VOID-typed cell column)."""
+    (it used to fail analysis on a VOID-typed cell column). So does a
+    polygon with only ``hole`` rings: it contains no point (the jvm
+    refine used to abort on it while building its bbox)."""
+    _force_refine(monkeypatch, refine)
     pts = spark.createDataFrame(
         [(1, 1.0, 1.0), (2, 9.0, 9.0)], "id long, lat double, lon double"
     )
-    square = [(0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0), (0.0, 0.0)]
-    one = spark.createDataFrame(
-        [(1, "sq", [{"lat": a, "lon": b} for a, b in square], "outer")], POLYGONS_SCHEMA
-    )
+    square = [{"lat": a, "lon": b} for a, b in
+              [(0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0), (0.0, 0.0)]]
+    one = spark.createDataFrame([(1, "sq", square, "outer")], POLYGONS_SCHEMA)
+    hole_only = spark.createDataFrame([(2, "h", square, "hole")], POLYGONS_SCHEMA)
     empty = spark.createDataFrame([], POLYGONS_SCHEMA)
-    got = point_in_polygon(pts, empty, res=4, refine=refine)
+    got = point_in_polygon(pts, empty, res=4)
     assert got.collect() == []
-    assert got.schema == point_in_polygon(pts, one, res=4, refine=refine).schema
+    assert got.schema == point_in_polygon(pts, one, res=4).schema
+    assert point_in_polygon(pts, hole_only, res=4).collect() == []
+    mixed = point_in_polygon(pts, one.unionByName(hole_only), res=4)
+    assert {(r["id"], r["polygon_id"]) for r in mixed.collect()} == {(1, 1)}
 
 
 def test_rings_lit_doubles_exact(spark):
@@ -228,7 +246,7 @@ def test_rings_lit_doubles_exact(spark):
     assert [[bits(v) for v in e] for e in got] == [[bits(v) for v in e] for e in ref]
 
 
-def test_pip_jvm_build_py4j_calls_flat_in_edges(spark):
+def test_pip_jvm_build_py4j_calls_flat_in_edges(spark, monkeypatch):
     """The jvm-refine plan build sends the ring constants through py4j
     as one SQL string: a 1 024-edge ring must cost about as many
     gateway commands as a 16-edge one (it used to cost ~80 per edge).
@@ -244,6 +262,7 @@ def test_pip_jvm_build_py4j_calls_flat_in_edges(spark):
         ring.append(ring[0])
         return spark.createDataFrame([(1, "r", ring, "outer")], POLYGONS_SCHEMA)
 
+    _force_refine(monkeypatch, "jvm")
     pts = spark.createDataFrame([(1, 10.0, 20.0)], "id long, lat double, lon double")
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
@@ -259,7 +278,7 @@ def test_pip_jvm_build_py4j_calls_flat_in_edges(spark):
 
         client.send_command = counting
         try:
-            point_in_polygon(pts, polys, res=4, refine="jvm")
+            point_in_polygon(pts, polys, res=4)
         finally:
             client.send_command = send
         counts[k] = n
@@ -528,14 +547,12 @@ def test_relation_way_rollup(spark):
 
 
 def test_pip_auto_refine_guardrail(spark):
-    """refine='auto' must (a) stay on the jvm HOF path for
+    """point_in_polygon must (a) stay on the jvm HOF path for
     dimension-sized polygon tables and (b) switch to the pandas refine
     when polygons x vertices would blow up the literal plan — 2,000
     polygons x 200 vertices = 400k edges completes with a plan whose
     size is independent of the geometry (no 64KB-codegen fallback)."""
     import math
-
-    from skyway_spark.operators import pip as pip_mod
 
     # (a) small table -> jvm path: no Python evaluation in the plan
     small = generate_polygons(spark)
@@ -548,7 +565,7 @@ def test_pip_auto_refine_guardrail(spark):
     )
     assert "ArrowEvalPython" not in plan_small and "BatchEvalPython" not in plan_small
 
-    # (b) 2,000 x 200-vertex rings -> auto switches to pandas refine
+    # (b) 2,000 x 200-vertex rings -> switches to the pandas refine
     rows = []
     for pid in range(2000):
         lat0 = (pid % 50) * 0.5 - 12.0

@@ -91,26 +91,6 @@ def test_roundtrip_byte_identical_html(spark):
     assert all(r.mx == r.n - 1 for r in per_file)
 
 
-def test_datasource_parity(spark, tmp_path):
-    pages = generate_pages(spark, 20, partitions=2)
-    blobs = pages_to_warc(pages, records_per_file=10).collect()
-    for row in blobs:
-        (tmp_path / f"f{row.file_id}.warc").write_bytes(bytes(row.data))
-    from skyway_spark.sources.datasource import register_datasources
-
-    register_datasources(spark)
-    via_ds = spark.read.format("warc").load(str(tmp_path / "*.warc"))
-    got = {
-        (r.url, r.warc_type): (r.content_length, r.http_status, r.html)
-        for r in via_ds.collect()
-    }
-    want = {
-        (r.url, r.warc_type): (r.content_length, r.http_status, r.html)
-        for r in read_warc(spark.createDataFrame(blobs)).collect()
-    }
-    assert got == want and len(got) == 27  # 20 responses + 7 requests
-
-
 def test_read_warc_single_scan_no_shuffle(spark):
     plan = (
         read_warc(pages_to_warc(generate_pages(spark, 10)))

@@ -56,15 +56,17 @@ def run(pages_n: int, out: str, ckpt_root: str, cpus: int | None = None) -> dict
     pages = cm.stage(
         spark, "pages", {"pages": pages_n}, lambda: generate_pages(spark, pages_n)
     )
-    entities = cm.stage(spark, "extract", None, lambda: extract_geo_entities(pages))
+    # the page text is stored once, by the pages stage: later stages
+    # carry its url instead
+    entities = cm.stage(
+        spark, "extract", None, lambda: extract_geo_entities(pages).drop("text")
+    )
     filtered = cm.stage(
         spark,
         "filter",
         FILTERS,
         lambda: apply_filters(
-            entities.select(
-                "url", "text", F.lit("node").alias("type"), "id", "lat", "lon", "tags"
-            ),
+            entities.select("url", F.lit("node").alias("type"), "id", "lat", "lon", "tags"),
             FILTERS,
         ),
     )

@@ -77,17 +77,7 @@ def _assign(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
     k_dim = len(centroids) * (len(centroids[0]) if centroids else 0)
     if k_dim > LITERAL_BUDGET:
         return _assign_broadcast(qdf, centroids)
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    _sq_dist(F.col("q"), c).alias("dist"),
-                    F.lit(i).alias("cid"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
-    )
+    best = _argmin_literal(F.col("q"), centroids)
     return qdf.withColumns(
         {"cluster": best["cid"], "dist": best["dist"]}
     )

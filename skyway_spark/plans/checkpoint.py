@@ -1,13 +1,6 @@
-"""Snapshot checkpoint / resume (north_rule: "resumable from
-checkpoint with per-partition lineage + metrics").
-
-Iceberg's runtime jar is not available in this sandbox, so the
-manager implements the same contract on plain parquet + a JSON
-manifest per stage — the API mirrors what an Iceberg-backed
-implementation would do with snapshot ids (swap `_read`/`_write` for
-``df.writeTo(...).createOrReplace()`` + snapshot-id pinning when the
-catalog exists; the manifest fields are a superset of what that
-needs).
+"""Checkpoint / resume (north_rule: "resumable from checkpoint with
+per-partition lineage + metrics") on plain parquet plus one JSON
+manifest per stage.
 
 Semantics:
 - ``stage(spark, name, params, fn)`` returns the stage's DataFrame,
@@ -15,17 +8,23 @@ Semantics:
   which the manager derives itself: sha256 over the name, ``params``
   and every earlier stage's fingerprint, so any upstream change
   invalidates every later stage, in any process;
-- the manifest is written AFTER the data (write-ahead order), so a
-  kill between data and manifest, or a lost data file, leaves a
-  recomputable — never a wrongly-trusted — stage;
-- per-partition lineage (rows per written file) comes from the parquet
-  footers the write produced, so it costs no Spark job.
+- each stage keeps one data directory, ``<root>/<name>/data``, and a
+  recompute replaces it;
+- the manifest is removed before the data is written and written again
+  after it, so a write that fails or is killed, or a lost data file,
+  leaves a recomputable — never a wrongly-trusted — stage;
+- per-partition lineage (rows per written file) and the ``layout_by``
+  per-file column stats come from the parquet footers the write
+  produced, and the data is read back with the schema it was written
+  with, so none of them costs a Spark job.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
+import math
 import os
 import time
 from dataclasses import dataclass, field
@@ -34,6 +33,7 @@ from pathlib import Path
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_MANIFEST.json"
 BUCKET_COL = "__file_bucket"
@@ -46,11 +46,65 @@ def stage_fingerprint(name: str, params, upstream: list) -> str:
     return hashlib.sha256(blob.encode()).hexdigest()
 
 
-def _file_rows(snap_dir: str) -> dict[str, int]:
-    """Rows per written data file (path relative to ``snap_dir``), read
-    from the parquet footers on the driver."""
-    files = sorted(Path(snap_dir).rglob("part-*.parquet"))
-    return {str(p.relative_to(snap_dir)): pq.read_metadata(p).num_rows for p in files}
+def _min_max(chunks: list) -> list:
+    """[min, max] of one column over a file group's row-group statistics,
+    in Spark's order, where NaN sorts above every double: the writer
+    records NaN as a row group's max when the group holds one, so the
+    merged max is NaN when any chunk's is and the min is NaN only when
+    every chunk's is. ``[None, None]`` (never pruned on) when a chunk
+    records no min/max, e.g. because all its values are null."""
+    if not chunks or any(s is None or not s.has_min_max for s in chunks):
+        return [None, None]
+    highs = [s.max for s in chunks]
+    hi = math.nan if any(h != h for h in highs) else max(highs)
+    return [min((s.min for s in chunks if s.min == s.min), default=math.nan), hi]
+
+
+def _read_footers(data_dir: str, stats: list[str] | None) -> tuple[dict[str, int], list | None]:
+    """Rows per written data file (path relative to ``data_dir``) and,
+    for a ``layout_by`` write (``stats`` given), one manifest entry per
+    bucket directory: ``{file_id, rows, stats: {col: [min, max]}}``.
+    Both come from the parquet footers, read on the driver."""
+    partition_rows: dict[str, int] = {}
+    rows: dict[int, int] = {}
+    groups: dict[int, dict[str, list]] = {}
+    for p in sorted(Path(data_dir).rglob("part-*.parquet")):
+        md = pq.read_metadata(p)
+        partition_rows[str(p.relative_to(data_dir))] = md.num_rows
+        if stats is None:
+            continue
+        b = int(p.parent.name.removeprefix(f"{BUCKET_COL}="))
+        rows[b] = rows.get(b, 0) + md.num_rows
+        chunks = groups.setdefault(b, {c: [] for c in stats})
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                if col.path_in_schema in chunks:
+                    chunks[col.path_in_schema].append(col.statistics)
+    if stats is None:
+        return partition_rows, None
+    files = [
+        {"file_id": b, "rows": rows[b], "stats": {c: _min_max(s) for c, s in chunks.items()}}
+        for b, chunks in sorted(groups.items())
+    ]
+    return partition_rows, files
+
+
+def _read(spark: SparkSession, data_dir: str, schema: StructType, paths=()) -> DataFrame:
+    """A stage's rows (all of ``data_dir`` or only the bucket directories
+    ``paths``) read with the schema they were written with, so Spark runs
+    no schema-inference job; the bucket column is dropped."""
+    reader = spark.read.schema(schema).option("basePath", data_dir)
+    return reader.parquet(*(paths or [data_dir])).drop(BUCKET_COL)
+
+
+def _load_manifest(manifest_path: str) -> dict | None:
+    try:
+        with open(manifest_path, encoding="utf-8") as f:
+            return json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None
 
 
 @dataclass
@@ -69,14 +123,7 @@ class CheckpointManager:
 
     def _paths(self, name: str) -> tuple[str, str]:
         d = os.path.join(self.root, name)
-        return d, os.path.join(d, MANIFEST_NAME)
-
-    def _load_manifest(self, manifest_path: str) -> dict | None:
-        try:
-            with open(manifest_path, encoding="utf-8") as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
+        return os.path.join(d, "data"), os.path.join(d, MANIFEST_NAME)
 
     def stage(
         self,
@@ -90,11 +137,13 @@ class CheckpointManager:
         when the manifest matches the stage's fingerprint and every data
         file it lists still exists. ``params`` is any JSON-serialisable
         value holding the stage's own inputs; the manager adds the
-        fingerprints of the other stages it produced before.
+        fingerprints of the other stages it produced before. Otherwise
+        ``fn()`` is written over the stage's data directory.
 
-        The manifest's ``partition_rows`` ({file path in the snapshot:
-        rows}, one entry per write task) comes from the parquet footers;
-        ``metrics()`` reports their sum and the non-empty file count.
+        The manifest's ``partition_rows`` ({file path in the data
+        directory: rows}, one entry per write task) comes from the
+        parquet footers; ``metrics()`` reports their sum and the
+        non-empty file count.
 
         ``layout_by`` opts the stage into a clustered file layout —
         the 100-TB scan-savings path (VERDICT r3 item 8):
@@ -106,84 +155,53 @@ class CheckpointManager:
 
         Rows are routed to ``partitionBy`` bucket
         ``key * buckets // key_max`` (key-RANGE buckets — a
-        space-filling-curve key makes each file spatially tight), and
-        the manifest gains Iceberg-style per-file column stats
-        (``files``: [{file_id, rows, stats: {col: [min, max]}}]).
-        ``read_pruned`` plans a scan from those stats alone, reading
-        only the matching bucket directories."""
+        space-filling-curve key makes each file spatially tight); rows
+        whose key is null go to bucket ``buckets``. The manifest gains
+        Iceberg-style per-bucket column stats (``files``: [{file_id,
+        rows, stats: {col: [min, max]}}]), merged from the footers of
+        the bucket's files. ``read_pruned`` plans a scan from those
+        stats alone, reading only the matching bucket directories."""
         data_dir, manifest_path = self._paths(name)
         upstream = sorted({r.name: r.fingerprint for r in self.results if r.name != name}.items())
         fingerprint = stage_fingerprint(name, params, upstream)
-        m = self._load_manifest(manifest_path)
+        m = _load_manifest(manifest_path)
         if (
             m
             and m.get("fingerprint") == fingerprint
-            and all(os.path.exists(os.path.join(m["data_dir"], f)) for f in m["partition_rows"])
+            and all(os.path.exists(os.path.join(data_dir, f)) for f in m["partition_rows"])
         ):
             self.results.append(StageResult(name, fingerprint, m["partition_rows"], 0, True))
-            resumed = spark.read.parquet(m["data_dir"])
-            return resumed.drop(BUCKET_COL) if "files" in m else resumed
+            return _read(spark, data_dir, StructType.fromJson(m["schema"]))
 
         t0 = time.monotonic()
+        # unclaim the stage before its data directory is overwritten
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(manifest_path)
         df = fn()
-        # Iceberg-style snapshot history: every (re)computation lands
-        # in a fresh snap-<id> directory and the manifest log grows;
-        # the old snapshots stay readable (read_snapshot) until
-        # expire_snapshots prunes them.
-        prior = (m or {}).get("snapshots", [])
-        snap_id = (prior[-1]["id"] + 1) if prior else 1
-        snap_dir = os.path.join(data_dir, f"snap-{snap_id:05d}")
-        file_stats = None
-        if layout_by is not None:
+        stats = None
+        if layout_by is None:
+            df.write.mode("overwrite").parquet(data_dir)
+        else:
             nb, kmax = int(layout_by["buckets"]), int(layout_by["key_max"])
             bucket = F.floor(layout_by["key"] * nb / F.lit(kmax)).cast("int")
-            clustered = df.withColumn(BUCKET_COL, bucket)
-            clustered.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(snap_dir)
-            # file-level column stats from one aggregate over the data
-            # (nb rows) — what an Iceberg writer collects per data file
-            aggs = [F.count(F.lit(1)).alias("__rows")]
-            for c in layout_by.get("stats", []):
-                aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-            file_stats = [
-                {
-                    "file_id": int(r[BUCKET_COL]),
-                    "rows": int(r["__rows"]),
-                    "stats": {
-                        c: [r[f"__min_{c}"], r[f"__max_{c}"]]
-                        for c in layout_by.get("stats", [])
-                    },
-                }
-                for r in clustered.groupBy(BUCKET_COL).agg(*aggs).collect()
-            ]
-        else:
-            df.write.mode("overwrite").parquet(snap_dir)
-        out = spark.read.parquet(snap_dir)
-        if layout_by is not None:
-            out = out.drop(BUCKET_COL)
-        partition_rows = _file_rows(snap_dir)
+            clustered = df.withColumn(BUCKET_COL, F.coalesce(bucket, F.lit(nb)))
+            clustered.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_dir)
+            stats = layout_by.get("stats", [])
+        out = _read(spark, data_dir, df.schema)
+        partition_rows, files = _read_footers(data_dir, stats)
         row_count = sum(partition_rows.values())
         wall_ms = int((time.monotonic() - t0) * 1000)
         manifest = {
             "stage": name,
             "fingerprint": fingerprint,
-            "data_dir": snap_dir,
-            "snapshots": prior
-            + [
-                {
-                    "id": snap_id,
-                    "fingerprint": fingerprint,
-                    "dir": snap_dir,
-                    "row_count": row_count,
-                    "created_unix": int(time.time()),
-                }
-            ],
+            "data_dir": data_dir,
             "row_count": row_count,
             "partition_rows": partition_rows,
             "wall_ms": wall_ms,
             "schema": out.schema.jsonValue(),
         }
-        if file_stats is not None:
-            manifest["files"] = sorted(file_stats, key=lambda f: f["file_id"])
+        if files is not None:
+            manifest["files"] = files
         # manifest last: a crash before this line leaves the stage
         # unclaimed and it simply recomputes on resume
         tmp = manifest_path + ".tmp"
@@ -202,105 +220,33 @@ class CheckpointManager:
         """Manifest-stats scan planning over a ``layout_by`` stage —
         the Iceberg file-skipping move, from this manager's own JSON
         manifest: keep only the files whose [min, max] column stats
-        intersect every requested ``{col: (lo, hi)}`` range, and read
-        ONLY those bucket directories (driver-side planning on the
-        FILES-sized stats list; no data is touched for skipped files).
+        intersect every requested ``{col: (lo, hi)}`` range (a file
+        with unknown stats for a column is kept), and read ONLY those
+        bucket directories (driver-side planning on the FILES-sized
+        stats list; no data is touched for skipped files).
 
         Returns ``(df, scanned_file_ids, files_total)``.  The caller
         still applies the exact row-level predicate on ``df`` — stats
         pruning is a superset guarantee, identical to how a table
         format's planner composes with Spark's scan filters."""
         data_dir, manifest_path = self._paths(name)
-        m = self._load_manifest(manifest_path)
+        m = _load_manifest(manifest_path)
         if not m or "files" not in m:
             raise ValueError(f"stage {name!r} has no file-stats manifest")
-        keep = []
-        for f in m["files"]:
-            ok = True
+
+        def may_match(stats: dict) -> bool:
             for col, (lo, hi) in ranges.items():
-                mn, mx = f["stats"][col]
-                if mn > hi or mx < lo:
-                    ok = False
-                    break
-            if ok:
-                keep.append(int(f["file_id"]))
-        base = m.get("data_dir", data_dir)
-        paths = [os.path.join(base, f"{BUCKET_COL}={b}") for b in sorted(keep)]
-        if not paths:
-            return (
-                spark.read.parquet(base).drop(BUCKET_COL).limit(0),
-                [],
-                len(m["files"]),
-            )
-        df = spark.read.parquet(*paths)
-        return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df, sorted(keep), len(m["files"])
+                mn, mx = stats[col]
+                if mn is not None and (mn > hi or mx < lo):
+                    return False
+            return True
 
-    def snapshots(self, name: str) -> list[dict]:
-        """Snapshot log for a stage (oldest first), Iceberg-history
-        style."""
-        _, manifest_path = self._paths(name)
-        m = self._load_manifest(manifest_path)
-        return list((m or {}).get("snapshots", []))
-
-    def read_snapshot(self, spark: SparkSession, name: str, snapshot_id: int) -> DataFrame:
-        """Time travel: read a stage AS OF a snapshot id."""
-        for snap in self.snapshots(name):
-            if snap["id"] == snapshot_id:
-                return spark.read.parquet(snap["dir"])
-        raise KeyError(f"stage {name!r} has no snapshot {snapshot_id}")
-
-    def read_changes(
-        self,
-        spark: SparkSession,
-        name: str,
-        from_id: int,
-        to_id: int,
-        keys: list[str],
-        compare_cols: list[str],
-    ) -> DataFrame:
-        """Incremental scan: the keyed changelog (op I/U/D + old_/new_
-        columns) between two snapshots of a stage — the
-        Iceberg-changelog-style read that lets a downstream consumer
-        process only what moved between checkpoints instead of
-        rescanning the table.  One co-partitioned full-outer join
-        (operators/cdc.snapshot_diff); both snapshots stream from
-        their parquet, nothing driver-side."""
-        from skyway_spark.operators.cdc import snapshot_diff
-
-        return snapshot_diff(
-            self.read_snapshot(spark, name, from_id),
-            self.read_snapshot(spark, name, to_id),
-            keys,
-            compare_cols,
-        )
-
-    def expire_snapshots(self, name: str, keep: int = 1) -> list[int]:
-        """Drop all but the newest ``keep`` snapshots (never the
-        current one); returns expired ids."""
-        import shutil
-
-        data_dir, manifest_path = self._paths(name)
-        m = self._load_manifest(manifest_path)
-        if not m:
-            return []
-        snaps = m.get("snapshots", [])
-        keep = max(keep, 1)
-        to_drop = [s_ for s_ in snaps[:-keep] if s_["dir"] != m.get("data_dir")]
-        for s_ in to_drop:
-            shutil.rmtree(s_["dir"], ignore_errors=True)
-        m["snapshots"] = [s_ for s_ in snaps if s_ not in to_drop]
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(m, f)
-        os.replace(tmp, manifest_path)
-        return [s_["id"] for s_ in to_drop]
-
-    def invalidate(self, name: str) -> None:
-        _, manifest_path = self._paths(name)
-        try:
-            os.remove(manifest_path)
-        except FileNotFoundError:
-            pass
+        keep = [f["file_id"] for f in m["files"] if may_match(f["stats"])]
+        schema = StructType.fromJson(m["schema"])
+        if not keep:
+            return _read(spark, data_dir, schema).limit(0), [], len(m["files"])
+        paths = [os.path.join(data_dir, f"{BUCKET_COL}={b}") for b in keep]
+        return _read(spark, data_dir, schema, paths), keep, len(m["files"])
 
     def metrics(self) -> list[dict]:
         return [

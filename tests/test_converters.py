@@ -409,16 +409,25 @@ def test_convert_cli_end_to_end(spark, elements, tmp_path):
     import sys as _sys
     from pathlib import Path
 
-    _sys.path.insert(0, "/root/repo/jobs")
-    import convert as cli
+    # jobs/convert.py is a script, imported as the top-level module
+    # "convert"; it also puts its checkout's root on sys.path
+    saved_path, saved_mod = _sys.path[:], _sys.modules.pop("convert", None)
+    _sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
+    try:
+        import convert as cli
 
-    src = str(tmp_path / "in.opl")
-    Path(src).write_text(convert.serialize_string(elements, "opl") + "")
-    flt = tmp_path / "keep.cel"
-    flt.write_text('type == "node"')
-    out = str(tmp_path / "out.json")
-    rc = cli.main(["--input", src, "--output", out, "--to", "json",
-                   "--filter", str(flt)])
+        src = str(tmp_path / "in.opl")
+        Path(src).write_text(convert.serialize_string(elements, "opl") + "")
+        flt = tmp_path / "keep.cel"
+        flt.write_text('type == "node"')
+        out = str(tmp_path / "out.json")
+        rc = cli.main(["--input", src, "--output", out, "--to", "json",
+                       "--filter", str(flt)])
+    finally:
+        _sys.path[:] = saved_path
+        _sys.modules.pop("convert", None)
+        if saved_mod is not None:
+            _sys.modules["convert"] = saved_mod
     assert rc == 0
     import json as _json
 

@@ -3,8 +3,8 @@
 from __future__ import annotations
 
 import json
+import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from skyway_spark.plans.checkpoint import CheckpointManager
@@ -37,43 +37,12 @@ def test_checkpoint_resume_identical(spark, tmp_path):
     assert sum(m["partition_rows"].values()) == 100
 
 
-def test_checkpoint_snapshot_history_and_time_travel(spark, tmp_path):
-    """Every recompute appends an Iceberg-style snapshot; old ones
-    stay readable (time travel) until expired; current survives
-    expiry."""
-    root = str(tmp_path / "ckpt_snap")
-    cm = CheckpointManager(root)
-    cm.stage(spark, "s1", "fp1", lambda: spark.range(0, 10))
-    cm.stage(spark, "s1", "fp2", lambda: spark.range(0, 20))
-    cm.stage(spark, "s1", "fp3", lambda: spark.range(0, 30))
-    snaps = cm.snapshots("s1")
-    assert [s["id"] for s in snaps] == [1, 2, 3]
-    assert [s["row_count"] for s in snaps] == [10, 20, 30]
-    # time travel to snapshot 1
-    assert cm.read_snapshot(spark, "s1", 1).count() == 10
-    # expiry keeps the newest `keep` and never the current
-    dropped = cm.expire_snapshots("s1", keep=1)
-    assert dropped == [1, 2]
-    assert [s["id"] for s in cm.snapshots("s1")] == [3]
-    with pytest.raises(KeyError):
-        cm.read_snapshot(spark, "s1", 1)
-    # current read still resumes without recompute
-    calls = {"n": 0}
-
-    def compute():
-        calls["n"] += 1
-        return spark.range(30)
-
-    assert CheckpointManager(root).stage(spark, "s1", "fp3", compute).count() == 30
-    assert calls["n"] == 0
-
-
 def test_checkpoint_kill_between_data_and_manifest(spark, tmp_path):
     """A stage whose manifest is missing (crash window) recomputes."""
     root = str(tmp_path / "ckpt2")
     cm = CheckpointManager(root)
     cm.stage(spark, "s1", "fp", lambda: spark.range(10))
-    cm.invalidate("s1")  # simulates the crash-before-manifest state
+    os.remove(f"{root}/s1/_MANIFEST.json")  # the crash-before-manifest state
     calls = {"n": 0}
 
     def compute():
@@ -100,7 +69,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     assert m2["entities"] == m1["entities"]
     assert m2["pip_hits"] == m1["pip_hits"]
     # partial resume: nuke a late stage only
-    CheckpointManager(ckpt).invalidate("tiles")
+    os.remove(f"{ckpt}/tiles/_MANIFEST.json")
     m3 = run(2000, out, ckpt)
     flags = {s["stage"]: s["resumed"] for s in m3["stages"]}
     assert flags["pages"] and flags["extract"] and flags["pip"]
@@ -150,7 +119,6 @@ def test_pipeline_filter_change_recomputes_downstream(spark, tmp_path, monkeypat
 def test_stage_fingerprint_stable_across_hash_seeds():
     """Two interpreters with different str-hash salts derive the same
     fingerprint, so a plain-python run resumes a spark-submit run."""
-    import os
     import subprocess
     import sys
     from pathlib import Path
@@ -217,3 +185,25 @@ def test_entry_contract(spark):
     # q_media_features (deterministic fake decoder mirrored in SQL;
     # the real codec remains stubbed per driver instruction)
     assert set(qs) == set(oracles)
+
+
+def test_pipeline_stores_page_text_once(spark, tmp_path):
+    """Only the pages checkpoint stores ``text``: every extract row's
+    url is found there, and extraction over the stored pages carries
+    each page's text byte for byte."""
+    from jobs.run_pipeline import run
+    from skyway_spark.operators.extract import extract_geo_entities
+
+    ckpt = str(tmp_path / "ck")
+    run(500, str(tmp_path / "out"), ckpt)
+    pages = spark.read.parquet(f"{ckpt}/pages/data")
+    ents = spark.read.parquet(f"{ckpt}/extract/data")
+    assert "text" in pages.columns
+    assert "text" not in ents.columns
+    assert "text" not in spark.read.parquet(f"{ckpt}/filter/data").columns
+    assert pages.count() == pages.select("url").distinct().count()
+    assert ents.count() > 0
+    assert ents.join(pages, "url", "left_anti").count() == 0
+    got = extract_geo_entities(pages).alias("e").join(pages.alias("p"), "url")
+    assert got.count() == ents.count()
+    assert got.where(~F.col("e.text").eqNullSafe(F.col("p.text"))).count() == 0

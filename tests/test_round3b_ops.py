@@ -152,25 +152,6 @@ def test_snapshot_diff_classifies_iud(spark):
     assert both_null == []
 
 
-def test_checkpoint_read_changes(spark, tmp_path):
-    from skyway_spark.plans.checkpoint import CheckpointManager
-
-    cm = CheckpointManager(str(tmp_path / "ck"))
-    df1 = spark.createDataFrame([Row(k=1, v=10), Row(k=2, v=20)])
-    cm.stage(spark, "t", "v1", lambda: df1)
-    df2 = spark.createDataFrame([Row(k=2, v=25), Row(k=3, v=30)])
-    cm.stage(spark, "t", "v2", lambda: df2)
-    snaps = cm.snapshots("t")
-    assert len(snaps) >= 2
-    ch = {
-        r.k: r
-        for r in cm.read_changes(
-            spark, "t", snaps[-2]["id"], snaps[-1]["id"], ["k"], ["v"]
-        ).collect()
-    }
-    assert ch[1].op == "D" and ch[2].op == "U" and ch[3].op == "I"
-
-
 # ---------------------------------------------------------------------------
 # adaptive tiles
 # ---------------------------------------------------------------------------

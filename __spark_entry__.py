@@ -1668,9 +1668,10 @@ BLOOM_N, BLOOM_K, BLOOM_M = 8, 4, 62 * 1024
 def q_bloom_contamination(spark, sf):
     """Bloom-filter decontamination (operators/bloom.py): the filter is
     BUILT distributed from the benchmark windows (bit_or groupBy),
-    then probed as an 8 KB array literal inside the corpus scan — the
-    membership structure that still works when the benchmark registry
-    no longer broadcasts as a hash set. Every bit position is portable
+    then broadcast (8 KB) and probed in Arrow-batched numpy inside the
+    corpus scan — the membership structure that still works when the
+    benchmark registry no longer broadcasts as a hash set. Every bit
+    position is portable
     integer math, so the oracle reconstructs the identical bitmap and
     probe results in SQL — false positives and all."""
     from skyway_spark.operators.bloom import bloom_contamination, build_bloom

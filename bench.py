@@ -34,255 +34,15 @@ from skyway_spark.operators.pip import point_in_polygon  # noqa: E402
 from skyway_spark.plans.session import get_spark  # noqa: E402
 from skyway_spark.sources.generate import generate_pages, generate_polygons  # noqa: E402
 
-# The timed operator suite. NOT the full 268-query registry: entries
-# whose value is a byte-exact converter golden or a plan-pinned
-# physical check (layout pruning, pushdown audits) are excluded here —
-# their cost is dominated by driver-side serialization or subprocess
-# orchestration, not operator throughput, so a wall-clock row would
-# measure the harness. The emitted JSON
-# carries SUITE_EXCLUDED (below) under "suite_excluded" so the suite
-# count is never mistaken for registry coverage (VERDICT r4 item 5).
-BENCH_QUERIES = [
-    "q01_pricing_summary",
-    "q03_top_orders",
-    "q05_region_volume",
-    "q06_discount_revenue",
-    "q_running_window",
-    "q_json_props",
-    "q_ann_ivf",
-    "q_events_hourly",
-    "q_events_sessions",
-    "q_dedup_exact",
-    "q_minhash",
-    "q_minhash_lsh",
-    "q_simhash",
-    "q_simhash_clusters",
-    "q_token_stats",
-    "q_embed_topk",
-    "q_ann_topk",
-    "q_cell_assign",
-    "q_tile_assign",
-    "q_raster_tiles",
-    "q_cust_no_orders",
-    "q_late_orders_semi",
-    "q_pip",
-    "q_knn",
-    "q_range_join",
-    "q_cell_rollup",
-    "q_asof_join",
-    "q_gap_fill",
-    "q_window_range",
-    "q_pivot",
-    "q_funnel",
-    "q_retention",
-    "q_quadkey",
-    "q_zorder",
-    "q_compact_cells",
-    "q_pip_agg",
-    "q_dedup_clusters",
-    "q_hash_split",
-    "q_tag_freq",
-    "q_json_lines",
-    "q_xml_lines",
-    "q_tfidf_topterms",
-    "q_phrase_search",
-    "q_term_search",
-    "q_inverted_index",
-    "q_overlap_join",
-    "q_sliding_window",
-    "q_dedup_keep",
-    "q_cell_users",
-    "q_top_ngrams",
-    "q_audio_windows",
-    "q_salted_join",
-    "q_osmfilter",
-    "q_cel",
-    "q_pipeline_exact",
-    # round-2 additions
-    "q_cel_macros",
-    "q_bm25",
-    "q_url_host_stats",
-    "q_geohash",
-    "q_ewma",
-    # round-3 late additions
-    "q_str_pack",
-    "q_nn_graph",
-    "q_classifier_auc",
-    "q_session_paths",
-    "q_simplify_ways",
-    "q_rep_quality",
-    "q_boilerplate",
-    "q_pii_redact",
-    "q_contamination",
-    "q_grid_dbscan",
-    "q_poly_overlap",
-    "q_transitions",
-    # round-2 batch 2
-    "q_pack_sequences",
-    "q_rebalance",
-    "q_triangles",
-    "q_heatmap",
-    "q_tile_pyramid",
-    "q_trips",
-    "q_bloom_contamination",
-    "q_kmeans",
-    "q_ann_ivf_trained",
-    "q_curation_pipeline",
-    "q_var_stats",
-    "q_collocations",
-    "q_raster_vectorize",
-    "q_bottomk_sample",
-    # round-3 additions
-    "q_lev_verify",
-    "q_chunk_dedup_rewrite",
-    "q_pagerank_cells",
-    "q_quantiles",
-    "q_vocab_growth",
-    "q_url_blocklist",
-    "q_bigram_lm",
-    "q_snap_nodes",
-    "q_cell_regions",
-    "q_dup_chunk_by_source",
-    "q_histogram",
-    "q_stay_points",
-    "q_hll_users",
-    "q_cms_heavy_hitters",
-    "q_weighted_sample",
-    "q_geofence",
-    "q_semdedup",
-    "q_hash_classifier",
-    "q_dsir_resample",
-    "q_bellman_cells",
-    "q_winnow",
-    "q_hilbert",
-    "q_cdc_merge",
-    "q_group_sample",
-    "q_outliers",
-    "q_covisit",
-    "q_scd2",
-    "q_bpe_pairs",
-    "q_winnow_decontam",
-    # round-3 continuation
-    "q_link_graph",
-    "q_anchor_terms",
-    "q_dom_stats",
-    "q_host_rank",
-    "q_morans_i",
-    "q_containment_pairs",
-    "q_lm_coverage",
-    "q_snapshot_diff",
-    "q_adaptive_tiles",
-    "q_crawl_frontier",
-    "q_map_match",
-    "q_hot_spots",
-    "q_tile_diff",
-    "q_line_raster",
-    "q_pq_codes",
-    "q_pq_topk",
-    "q_running_anomaly",
-    "q_od_matrix",
-    "q_quality_gate",
-    "q_fetch_slots",
-    "q_lang_confusion",
-    "q_host_hits",
-    "q_dedup_best",
-    "q_cell_trends",
-    "q_tile_bins",
-    "q_dedup_eval",
-    "q_isochrone",
-    "q_polygon_fill",
-    "q_gearys_c",
-    "q_skyline",
-    "q_polygon_centroid",
-    "q_robots_rules",
-    "q_readability",
-    "q_mention_city",
-    "q_host_components",
-    "q_url_templates",
-    "q_simpson_cells",
-    "q_clip_rings",
-    "q_tile_clip",
-    "q_redirects",
-    "q_ripley_k",
-    "q_track_hausdorff",
-    "q_idw",
-    "q_crawl_budget",
-    "q_user_hulls",
-    "q_kcore",
-    "q_segment_crossings",
-    "q_int8_quant",
-    # round-3 final batch
-    "q_ahash",
-    "q_ahash_pairs",
-    "q_warc_parse",
-    "q_warc_stats",
-    "q_lcss_tracks",
-    "q_cusum",
-    "q_bpe_tokenize",
-    "q_cdc_chunks",
-    "q_cdc_dedup",
-    "q_media_clusters",
-    "q_hex_assign",
-    "q_hex_disk",
-    "q_rbo_rankings",
-    "q_span_corrupt",
-    "q_ra_links",
-    "q_hull_diameter",
-    "q_web_tables",
-    "q_curve_locality",
-    "q_variogram",
-    "q_warc_pipeline",
-    "q_jaccard_join",
-    "q_matryoshka_recall",
-    "q_pit_join",
-    "q_k_anonymity",
-    "q_prune_stats",
-    "q_seq_patterns",
-    "q_nearest_centroid",
-    "q_marker_thinning",
-    "q_posting_sizes",
-    "q_line_of_sight",
-    "q_data_mixture",
-    "q_dead_links",
-    "q_focal_stats",
-    "q_voronoi",
-    "q_bfs_hops",
-    "q_concordance",
-    "q_rle_raster",
-    "q_acf",
-    "q_kmv_distinct",
-    "q_resample_track",
-    "q_dilate",
-    "q_mann_kendall",
-    # continuation-session additions (one per new compute family)
-    "q_frechet",
-    "q_flow_accum",
-    "q_rag_chunks",
-    "q_label_communities",
-    "q_watershed",
-    "q_slope_aspect",
-    "q_term_drift",
-    "q_bitext_candidates",
-    "q_assortativity",
-    "q_colocation",
-    "q_set_cover",
-    "q_knox",
-    "q_dispersion",
-    "q_rendezvous",
-    "q_polygon_validity",
-    "q_join_counts",
-    "q_gini_cells",
-    "q_incremental_dedup",
-    "q_hot_percolation",
-    "q_radius_gyration",
-    "q_jump_sizes",
-    "q_emerging_hotspots",
-    "q_minhash_error",
-]
-
-# Registry entries deliberately left out of the timed suite. Together
-# with BENCH_QUERIES this must cover the registry exactly: main() fails
-# before timing anything when a query is in both lists or in neither.
+# Registry entries left out of the timed operator suite, which is
+# every other query of queries() in registry order: converter
+# byte-goldens and plan-pinned physical checks (layout pruning,
+# pushdown audits), whose cost is dominated by driver-side
+# serialization or subprocess orchestration, not operator throughput,
+# so a wall-clock row would measure the harness. The emitted JSON
+# carries this list under "suite_excluded" so the suite count is never
+# mistaken for registry coverage (VERDICT r4 item 5); main() fails
+# before timing anything when a name here is not in the registry.
 SUITE_EXCLUDED = [
     "q_array_map_funcs",
     "q_bbox_cover",
@@ -350,10 +110,8 @@ def main() -> None:
     host = {"nproc": os.cpu_count(), "loadavg": [round(x, 2) for x in os.getloadavg()]}
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     qs = entrymod.queries()
-    both = set(BENCH_QUERIES) & set(SUITE_EXCLUDED)
-    assert not both, f"queries both timed and excluded: {sorted(both)}"
-    drift = set(qs) ^ (set(BENCH_QUERIES) | set(SUITE_EXCLUDED))
-    assert not drift, f"bench lists and registry disagree on: {sorted(drift)}"
+    unknown = sorted(set(SUITE_EXCLUDED) - set(qs))
+    assert not unknown, f"SUITE_EXCLUDED names not in the registry: {unknown}"
     spark = get_spark(
         "skyway-bench",
         cpus=cpus,
@@ -432,7 +190,11 @@ def main() -> None:
     # SPARK_GRAFT_BENCH_ONLY=flagship skips the operator suite — used
     # for quiet-window flagship re-measurement (the suite takes ~10 min
     # and would pollute its own window)
-    suite = [] if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "flagship" else BENCH_QUERIES
+    suite = (
+        []
+        if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "flagship"
+        else [q for q in qs if q not in SUITE_EXCLUDED]
+    )
     for name in suite:
         q_walls = []
         for _ in range(2):  # min-of-2: codegen/JIT cold-start and

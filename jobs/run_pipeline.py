@@ -20,15 +20,17 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from skyway_spark.functions.filter import apply_filters  # noqa: E402
 from skyway_spark.operators import tiles  # noqa: E402
-from skyway_spark.operators.extract import extract_geo_entities  # noqa: E402
+from skyway_spark.operators.extract import extract_geo_entities, pages_to_elements  # noqa: E402
 from skyway_spark.operators.pip import point_in_polygon  # noqa: E402
 from skyway_spark.plans.checkpoint import CheckpointManager  # noqa: E402
 from skyway_spark.plans.session import get_spark  # noqa: E402
 from skyway_spark.sources import opl as oplio  # noqa: E402
+from skyway_spark.sources._rowutil import canonical_order  # noqa: E402
 from skyway_spark.sources.generate import generate_pages, generate_polygons  # noqa: E402
 
 FILTERS = [
@@ -47,6 +49,14 @@ FILTERS = [
 PIP_RES = 6
 TILE_Z = 10
 OPL_ROWS = 10_000
+
+
+def opl_sample(pages: DataFrame) -> DataFrame:
+    """OPL lines of the pages' first OPL_ROWS elements in canonical
+    (type, id) order: a top-k, so the sample does not depend on how
+    the pages are partitioned, and the writer UDFs see only those
+    rows."""
+    return oplio.serialize_opl(canonical_order(pages_to_elements(pages)).limit(OPL_ROWS))
 
 
 def run(pages_n: int, out: str, ckpt_root: str, cpus: int | None = None) -> dict:
@@ -87,12 +97,7 @@ def run(pages_n: int, out: str, ckpt_root: str, cpus: int | None = None) -> dict
         ),
     )
 
-    def _opl():
-        from skyway_spark.operators.extract import pages_to_elements
-
-        return oplio.serialize_opl(pages_to_elements(pages).limit(OPL_ROWS))
-
-    cm.stage(spark, "opl", {"rows": OPL_ROWS}, _opl)
+    cm.stage(spark, "opl", {"rows": OPL_ROWS, "order": "canonical"}, lambda: opl_sample(pages))
 
     tile_stats.write.mode("overwrite").parquet(out + "/tiles")
     stages = cm.metrics()

@@ -327,9 +327,11 @@ def point_in_polygon(
     if total_edges <= JVM_REFINE_MAX_EDGES:
         outer_by_geom = F.expr(_array_sql(_rings_sql(g["outer"]) for g in geoms))
         hole_by_geom = F.expr(_array_sql(_rings_sql(g["hole"]) for g in geoms))
-        # bbox short-circuit: covering cells are coarser than the
-        # polygon, so most candidates fail four double compares and
-        # never reach the per-edge ray cast (And short-circuits)
+        # bbox short-circuit: only boundary cells reach the refine,
+        # and a cell a ring edge crosses can stick out past the
+        # polygon's bounding box; candidates there fail four double
+        # compares and never reach the per-edge ray cast (And
+        # short-circuits)
         bboxes = []
         for g in geoms:
             ys = np.concatenate([r[0] for r in g["outer"]])

@@ -545,8 +545,9 @@ def hash_feature_score(
     + LCG family and the document score is the int64 SUM of its gram
     weights; quality = score > 0.  A real deployment would learn the
     bucket weights offline and broadcast them (operators/bloom.py's
-    auto literal/broadcast switch applies verbatim — the weight table
-    IS a Bloom-shaped int array); the fixed LCG weights here keep the
+    broadcast word array probed in Arrow-batched numpy applies
+    verbatim — the weight table IS a Bloom-shaped int array); the
+    fixed LCG weights here keep the
     contract engine-exact with zero training-data dependency.
 
     Scale shape: tokens, grams, hashes, weights, and the sum are all

@@ -104,9 +104,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cpus=None`` respects an existing session / spark-submit master;
-    an explicit value forces ``local[cpus]`` (used by the scaling
-    bench to compare local[8] vs local[32]).
+    ``cpus=None`` respects an existing session / spark-submit master
+    (or ``local[$SPARK_GRAFT_CPUS]`` when that is set); an explicit
+    value forces ``local[cpus]``.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
     builder = SparkSession.builder.appName(app_name)

@@ -150,13 +150,17 @@ def generate_pages(spark: SparkSession, n_rows: int, partitions: int | None = No
 
     Note on codegen: the mention arithmetic is a large expression
     tree, and ``prose`` feeds two output columns (html, text).  The
-    projection is therefore split by a Generate barrier
-    (plans/barrier.stage) that computes ``prose`` exactly once:
-    without it, CollapseProject re-inlines the tree per use when a
-    consumer fuses extraction regexes on top, and the fused stage
-    blows Janino's 64 KB method limit into interpreted fallback
-    (round-3 exit sweep: 9 of the 12 "Code grows beyond 64 KB" hits
-    were consumers of this generator -- BENCH/SWEEP_r03c.log)."""
+    expression is therefore built in three stacked projections
+    (coordinates, prose, output) whose multi-referenced columns
+    Catalyst's cost-aware CollapseProject keeps apart, so ``prose`` is
+    computed exactly once and each projection compiles to modest
+    methods.  Without the split, CollapseProject re-inlines the tree
+    per use when a consumer fuses extraction regexes on top, and the
+    fused stage blows Janino's 64 KB method limit into interpreted
+    fallback (round-3 exit sweep: 9 of the 12 "Code grows beyond 64
+    KB" hits were consumers of this generator --
+    BENCH/SWEEP_r03c.log).  A Generate barrier is wrong here: the
+    whole struct payload becomes one unsplittable method."""
     df = spark.range(0, n_rows, 1, partitions or spark.sparkContext.defaultParallelism)
     i = F.col("id")
 

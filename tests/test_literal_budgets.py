@@ -1,24 +1,24 @@
-"""Literal-budget guardrails (VERDICT r2 items 6+7): the Bloom filter
-and the k-means/IVF centroid assignment must switch from plan-literal
-arrays to real SparkContext.broadcast when the constant payload would
-blow plan/codegen limits — with BOTH strategies bit-identical on the
-same input. A parity test forces each strategy by moving the module's
-budget constant."""
+"""Bloom filters and k-means centroid sets larger than a plan literal
+could carry (VERDICT r2 items 6+7): both ship as a real
+SparkContext.broadcast and are probed in Arrow-batched numpy, so the
+executed plan stays small and the results stay exact. Also pins the
+Bloom windows to Spark's own ``split(trim(text), '\\s+')`` tokens on
+whitespace and code points where Java and Python disagree."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
-from skyway_spark.operators import bloom as bloom_mod
-from skyway_spark.operators import kmeans as kmeans_mod
 from skyway_spark.operators.bloom import (
-    DEFAULT_M_BITS,
-    LITERAL_BUDGET_WORDS,
+    PRIME,
     WORD_BITS,
     bloom_contamination,
     build_bloom,
 )
-from skyway_spark.operators.kmeans import LITERAL_BUDGET, kmeans_fit_assign
+from skyway_spark.operators.kmeans import kmeans_fit_assign
+from skyway_spark.operators.textstats import ngrams
 
 
 def _docs(spark, texts):
@@ -37,33 +37,13 @@ def _corpus(spark):
     return bench, _docs(spark, probe_texts)
 
 
-def test_bloom_modes_bit_identical(spark, monkeypatch):
-    bench, docs = _corpus(spark)
-    bl = build_bloom(bench, n=8, k=4, m_bits=DEFAULT_M_BITS)
-
-    def run(budget):
-        monkeypatch.setattr(bloom_mod, "LITERAL_BUDGET_WORDS", budget)
-        out = bloom_contamination(docs, bl, n=8, k=4, m_bits=DEFAULT_M_BITS)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        return sorted(map(tuple, out.collect())), "MapInPandas" in plan
-
-    lit, lit_python = run(len(bl))
-    bc, bc_python = run(len(bl) - 1)
-    assert not lit_python and bc_python  # each budget forced its strategy
-    assert lit == bc
-    assert any(r[3] for r in lit) and not all(r[3] for r in lit)
-
-
 def test_bloom_auto_switches_above_budget(spark):
     bench, docs = _corpus(spark)
-    # m_bits = 62 * 2^17 words -> 1 MiB filter, far over the literal
-    # budget: auto must pick the broadcast path and still be exact
+    # m_bits = 62 * 2^17 words -> 1 MiB filter: the word array ships
+    # off-plan, so the executed plan holds no 2^17-element literal
     big_m = WORD_BITS * (1 << 17)
     bl = build_bloom(bench, n=8, k=4, m_bits=big_m)
-    assert len(bl) > LITERAL_BUDGET_WORDS
     out = bloom_contamination(docs, bl, n=8, k=4, m_bits=big_m)
-    # broadcast path: probes run in Arrow batches, the 1 MiB word array
-    # ships off-plan — no giant literal in the executed plan
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert len(plan) < 100_000  # a 2^17-word literal would dwarf this
@@ -71,40 +51,56 @@ def test_bloom_auto_switches_above_budget(spark):
     assert got == {0: True, 1: False, 2: False}
 
 
-def test_bloom_auto_stays_literal_at_default(spark):
-    bench, docs = _corpus(spark)
-    bl = build_bloom(bench, n=8, k=4, m_bits=DEFAULT_M_BITS)
-    plan = bloom_contamination(docs, bl, n=8, k=4, m_bits=DEFAULT_M_BITS)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan  # pure Column probes at 8 KB
+# Each text splits differently under Java's ASCII-only \s plus a
+# U+0020-only trim than under Python's str.strip() and Unicode \s.
+SPLIT_EDGE_TEXTS = [
+    "\ta b c d",  # leading tab: Spark keeps a leading empty token
+    "a b c d\n",  # trailing newline: and a trailing one
+    "a\u00a0b c d e",  # NBSP is not Java whitespace
+    "a\x0bb c d",  # vertical tab is
+    "  café \U0001f600 x y  ",  # non-BMP code point; spaces trimmed
+    "",
+    None,
+]
 
 
-def test_kmeans_assign_modes_bit_identical(spark, monkeypatch):
-    rng = np.random.default_rng(11)
-    vecs = rng.normal(size=(160, 8)).astype("float32")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
+@pytest.mark.parametrize("n", [1, 3])
+def test_bloom_windows_are_spark_ngrams(spark, n):
+    docs = _docs(spark, SPLIT_EDGE_TEXTS)
+    k, m_bits = 4, WORD_BITS * (1 << 17)
+    bl = build_bloom(docs, n=n, k=k, m_bits=m_bits)
 
-    def run(budget):
-        monkeypatch.setattr(kmeans_mod, "LITERAL_BUDGET", budget)
-        out = kmeans_fit_assign(df, k=4, iters=2)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        return sorted(map(tuple, out.collect())), "MapInPandas" in plan
+    # the filter Spark's own ngrams() windows give, hashed in Python
+    want = [0] * (m_bits // WORD_BITS)
+    grams = docs.select(F.explode(ngrams(F.col("text"), n))).collect()
+    for (gram,) in grams:
+        g = 0
+        for ch in gram:
+            g = (g * 31 + ord(ch)) % (1 << 44)
+        r = g % PRIME
+        h1 = (r * 1_103_515_245 + 12_345) % PRIME
+        h2 = (r * 69_069 + 1) % PRIME
+        for j in range(k):
+            p = (h1 + j * h2) % m_bits
+            want[p // WORD_BITS] |= 1 << (p % WORD_BITS)
+    assert bl == want
 
-    # k*dim = 32 centroid values
-    lit, lit_python = run(32)
-    bc, bc_python = run(31)
-    assert not lit_python and bc_python  # each budget forced its strategy
-    assert lit == bc
+    expect = {
+        r["doc_id"]: r["nw"]
+        for r in docs.select("doc_id", F.size(ngrams(F.col("text"), n)).alias("nw")).collect()
+    }
+    got = {
+        r["doc_id"]: (r["n_windows"], r["n_flagged"])
+        for r in bloom_contamination(docs, bl, n=n, k=k, m_bits=m_bits).collect()
+    }
+    assert got == {d: (nw, nw) for d, nw in expect.items()}
+    assert expect[len(SPLIT_EDGE_TEXTS) - 1] == 0  # null text: no windows
 
 
 def test_kmeans_large_k_trains_via_broadcast(spark):
-    # k=256, dim=64 -> k*dim = 16384 > LITERAL_BUDGET: auto switches
+    # k=256, dim=64 -> k*dim = 16384 centroid values
     rng = np.random.default_rng(12)
     k, dim = 256, 64
-    assert k * dim > LITERAL_BUDGET
     vecs = rng.normal(size=(400, dim)).astype("float32")
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],

@@ -207,3 +207,22 @@ def test_pipeline_stores_page_text_once(spark, tmp_path):
     got = extract_geo_entities(pages).alias("e").join(pages.alias("p"), "url")
     assert got.count() == ents.count()
     assert got.where(~F.col("e.text").eqNullSafe(F.col("p.text"))).count() == 0
+
+
+def test_opl_sample_independent_of_partitioning(spark, monkeypatch):
+    """The pipeline's OPL stage keeps the first OPL_ROWS elements in
+    canonical (type, id) order, so two partitionings of the same pages
+    write the same lines."""
+    from jobs import run_pipeline
+    from skyway_spark.operators.extract import pages_to_elements
+    from skyway_spark.sources.generate import generate_pages
+    from skyway_spark.sources.opl import serialize_opl
+
+    monkeypatch.setattr(run_pipeline, "OPL_ROWS", 50)
+    pages = generate_pages(spark, 400, partitions=1)
+    lines = [r["value"] for r in run_pipeline.opl_sample(pages).collect()]
+    every = [r["value"] for r in serialize_opl(pages_to_elements(pages)).collect()]
+    assert len(every) > 50 and lines == every[:50]
+    for parts in (3, 8):
+        other = generate_pages(spark, 400, partitions=parts).repartition(parts)
+        assert [r["value"] for r in run_pipeline.opl_sample(other).collect()] == lines

@@ -324,10 +324,11 @@ def test_pages_scan_prunes_html(spark, tmp_path_factory):
 # ------------------- round-2 batch-2 operator plans -------------------
 
 
-def test_bloom_probe_is_shuffle_free_jvm_scan(spark):
-    """The Bloom probe must ride the corpus scan: the bitmap is an
-    array literal, every probe pure Column math — no join, no shuffle,
-    no Python in the hot path (the 100 TB-side plan)."""
+def test_bloom_probe_is_shuffle_free_scan(spark):
+    """The Bloom probe must ride the corpus scan: the bitmap is a
+    broadcast variable and the probe one Arrow-batched mapInPandas —
+    no join, no shuffle, no per-row Python UDF (the 100 TB-side
+    plan)."""
     from skyway_spark.operators.bloom import bloom_contamination
 
     docs = spark.createDataFrame(

@@ -15,11 +15,13 @@ and report files scanned, rows, and min-of-5 walls for both.  Result
 rows are asserted identical before any timing is trusted.
 
 Usage: python tools/bench_layout_serve.py [pages_n] [out.json]
+Runs on local[$SPARK_GRAFT_CPUS] (default: the host's CPU count).
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -44,7 +46,8 @@ from skyway_spark.sources.generate import generate_pages, generate_polygons  # n
 def main() -> None:
     pages_n = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
     out_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH/LAYOUT_SERVE_r05.json"
-    spark = get_spark("layout-serve", cpus=32)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    spark = get_spark("layout-serve", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     tmp = tempfile.mkdtemp(prefix="layout_serve_")

@@ -168,6 +168,9 @@ KNN_K = 5
 KNN_RADIUS = 300.0
 RANGE_RADIUS = 500.0
 ROLLUP_RES = 3
+# Spark's F.split(F.trim(text), r"\s+") in DuckDB: both trims strip
+# U+0020 only, and Java's \s is [ \t\n\x0B\f\r], where RE2's omits \x0B
+_WS_SPLIT = r"string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')"
 
 
 def _pip_polygons_df(spark: SparkSession) -> DataFrame:
@@ -4919,7 +4922,7 @@ def _bpe_tokenize_sql() -> str:
     )
     sql = f"""
         WITH toks AS (
-            SELECT unnest(string_split_regex(trim(text), '\\s+')) AS tok
+            SELECT unnest({_WS_SPLIT}) AS tok
             FROM documents),
         t0 AS MATERIALIZED (SELECT {wrap.format('tok')} AS s FROM toks)"""
     for r in range(1, BPE_MERGES + 1):
@@ -4935,7 +4938,7 @@ def _bpe_tokenize_sql() -> str:
         t{r} AS MATERIALIZED (SELECT {mrg.format('s')} AS s FROM t{r - 1}, m{r} m)"""
     sql += f""",
         words AS (
-            SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
+            SELECT doc_id, {_WS_SPLIT} AS ws
             FROM documents),
         e0 AS (
             SELECT doc_id, i, {wrap.format('ws[i]')} AS s
@@ -5282,7 +5285,7 @@ def _span_corrupt_sql() -> str:
     L = SPAN_LEN
     return f"""
         WITH w AS (
-            SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
+            SELECT doc_id, {_WS_SPLIT} AS ws
             FROM documents),
         bl AS (
             SELECT doc_id, b,
@@ -5672,7 +5675,7 @@ def _jaccard_join_sql() -> str:
         WITH d2 AS MATERIALIZED ({_DOCS2_SQL}),
         tk AS MATERIALIZED (
             SELECT DISTINCT doc_id AS id,
-                   unnest(string_split_regex(trim(text), '\\s+')) AS tok
+                   unnest({_WS_SPLIT}) AS tok
             FROM d2 WHERE doc_id % 100000 < 1000),
         sz AS (SELECT id, COUNT(*) AS n FROM tk GROUP BY 1),
         px AS (
@@ -6099,7 +6102,7 @@ def _posting_sizes_sql() -> str:
     return f"""
         WITH post AS (
             SELECT DISTINCT
-                   unnest(string_split_regex(trim(text), '\\s+')) AS term,
+                   unnest({_WS_SPLIT}) AS term,
                    doc_id
             FROM documents),
         d AS (
@@ -6250,7 +6253,7 @@ def _data_mixture_sql() -> str:
     return f"""
         WITH inv AS (
             SELECT source,
-                   (SUM(len(string_split_regex(trim(text), '\\s+'))))::BIGINT
+                   (SUM(len({_WS_SPLIT})))::BIGINT
                        AS tokens
             FROM documents GROUP BY 1),
         tgt AS (SELECT * FROM (VALUES {vals}) v(source, target_pct)),
@@ -7413,12 +7416,12 @@ def _set_cover_sql() -> str:
     """House pattern (cf. _lcss_sql / _bellman_sql): Python-generated
     round-unrolled CTE chain — greedy is sequential by definition, so
     the oracle replays the same <= k argmax rounds."""
-    sql = """
+    sql = f"""
         WITH t AS (
             SELECT doc_id AS doc,
-                   string_split_regex(trim(text), '\\s+') AS toks
+                   {_WS_SPLIT} AS toks
             FROM documents
-            WHERE len(string_split_regex(trim(text), '\\s+')) >= 2),
+            WHERE len({_WS_SPLIT}) >= 2),
         ui AS (SELECT doc, toks, unnest(range(1, len(toks))) AS i FROM t),
         dt AS MATERIALIZED (
             SELECT DISTINCT doc, toks[i] || ' ' || toks[i + 1] AS term
@@ -7476,7 +7479,7 @@ def _term_drift_sql() -> str:
     return f"""
         WITH t AS (
             SELECT source IN ({srcs}) AS a,
-                   unnest(string_split_regex(trim(text), '\\s+')) AS term
+                   unnest({_WS_SPLIT}) AS term
             FROM documents
             WHERE lang = 'en' AND length(trim(text)) > 0),
         per AS (
@@ -7513,8 +7516,8 @@ def _bitext_sql() -> str:
     return f"""
         WITH base AS (
             SELECT source, lang, doc_id AS doc,
-                   len(string_split_regex(trim(text), '\\s+'))::BIGINT AS l,
-                   (len(string_split_regex(trim(text), '\\s+'))
+                   len({_WS_SPLIT})::BIGINT AS l,
+                   (len({_WS_SPLIT})
                     // {BITEXT_BUCKET})::BIGINT AS bk
             FROM documents WHERE length(trim(text)) > 0),
         b AS (
@@ -7607,7 +7610,7 @@ def _rag_chunks_sql() -> str:
     return f"""
         WITH t AS (
             SELECT doc_id,
-                   string_split_regex(trim(text), '\\s+') AS toks
+                   {_WS_SPLIT} AS toks
             FROM documents WHERE length(trim(text)) > 0),
         g AS (
             SELECT doc_id, toks, len(toks) AS n,
@@ -8000,10 +8003,7 @@ def q_layout_prune(spark, sf):
     Scale shape: one FILES-sized aggregate per layout (map-side
     combined), then manifest math over 2 x 64 rows — the identical
     computation a table-format planner runs at 100 TB, so the prune
-    ratio is measured, not simulated.  tests/test_layout_prune.py
-    additionally does the PHYSICAL partitionBy write through
-    plans/checkpoint.stage(layout_by=...) and confirms the files
-    actually read match this query's prediction."""
+    ratio is measured, not simulated."""
     lat_lo, lat_hi, lon_lo, lon_hi = LAYOUT_BBOX
     pts = _event_points(spark, sf)
     hk = cells.hilbert_key(F.col("lat"), F.col("lon"), HILBERT_ORDER)
@@ -9193,7 +9193,7 @@ def _bloom_sql(n: int | None = None, k: int | None = None, m: int | None = None)
     h2 = "((g % 2147483647) * 69069 + 1) % 2147483647"
     return f"""
         WITH t AS (
-            SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+            SELECT doc_id, {_WS_SPLIT} AS toks
             FROM documents),
         base AS (
             SELECT doc_id, greatest(len(toks) - {n - 1}, 0)::INT AS nw, toks
@@ -9238,7 +9238,7 @@ def _curation_sql() -> str:
     return f"""
         WITH gated AS (
             SELECT doc_id, lang, text FROM documents
-            WHERE len(regexp_split_to_array(trim(text), '\\s+'))
+            WHERE len({_WS_SPLIT})
                   >= {CURATION_MIN_TOKENS}),
         surv AS (
             SELECT doc_id, lang, text FROM gated
@@ -9260,7 +9260,7 @@ def _curation_sql() -> str:
                    % 2147483647) % 1000000 < th.cut),
         t AS (
             SELECT doc_id,
-                   len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens
+                   len({_WS_SPLIT})::BIGINT AS n_tokens
             FROM reb),
         sp AS (
             SELECT doc_id, n_tokens,
@@ -9481,7 +9481,7 @@ def _hash_classifier_cte(n: int = 2) -> str:
     th = _sql_token_hash("tok")
     return f"""
         WITH t AS (
-            SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+            SELECT doc_id, {_WS_SPLIT} AS toks
             FROM documents),
         base AS (
             SELECT doc_id, greatest(len(toks) - {n - 1}, 0)::INT AS ng,
@@ -10010,11 +10010,11 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q_token_stats": f"""
             SELECT doc_id,
-                   len(regexp_split_to_array(trim(text), '\\s+'))::INT AS ws_tokens,
+                   len({_WS_SPLIT})::INT AS ws_tokens,
                    len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]'))::INT AS bpe_tokens,
                    len(text)::INT AS n_chars_actual,
                    list_reduce(list_prepend(0::BIGINT,
-                       list_transform(regexp_split_to_array(trim(text), '\\s+'),
+                       list_transform({_WS_SPLIT},
                                       tok -> {_sql_token_hash('tok')})),
                        (a, h) -> (a * {_FX} + h) % {_FM}) AS fingerprint
             FROM documents
@@ -10024,7 +10024,7 @@ def oracle_sql() -> dict[str, str]:
                 SELECT doc_id,
                        len(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g'))::DOUBLE / len(text)::DOUBLE AS pr,
                        (' ' || text || ' ') AS p,
-                       len(regexp_split_to_array(trim(text), '\\s+'))::DOUBLE AS ntok
+                       len({_WS_SPLIT})::DOUBLE AS ntok
                 FROM documents)
             SELECT doc_id,
                    round(pr, 6) AS punct_ratio,
@@ -10381,11 +10381,11 @@ def oracle_sql() -> dict[str, str]:
                        WHEN lang = 'en' THEN 500000
                        ELSE 100000 END
         """,
-        "q_phrase_search": """
+        "q_phrase_search": f"""
             WITH p AS (
                 SELECT doc_id,
-                       generate_subscripts(string_split_regex(trim(text), '\\s+'), 1) - 1 AS pos,
-                       unnest(string_split_regex(trim(text), '\\s+')) AS term
+                       generate_subscripts({_WS_SPLIT}, 1) - 1 AS pos,
+                       unnest({_WS_SPLIT}) AS term
                 FROM documents)
             SELECT a.doc_id, COUNT(*) AS n_matches
             FROM p a JOIN p b
@@ -10393,10 +10393,10 @@ def oracle_sql() -> dict[str, str]:
             WHERE a.term = 'the' AND b.term = 'table'
             GROUP BY 1
         """,
-        "q_inverted_index": """
+        "q_inverted_index": f"""
             WITH t AS (
                 SELECT DISTINCT doc_id,
-                       unnest(string_split_regex(trim(text), '\\s+')) AS term
+                       unnest({_WS_SPLIT}) AS term
                 FROM documents)
             SELECT term, COUNT(*) AS df,
                    array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
@@ -10405,20 +10405,20 @@ def oracle_sql() -> dict[str, str]:
                 SELECT MIN(cnt) FROM (
                     SELECT COUNT(*) AS cnt FROM t GROUP BY term) m)
         """,
-        "q_term_search": """
+        "q_term_search": f"""
             WITH t AS (
                 SELECT DISTINCT doc_id,
-                       unnest(string_split_regex(trim(text), '\\s+')) AS term
+                       unnest({_WS_SPLIT}) AS term
                 FROM documents)
             SELECT d.doc_id, d.lang FROM documents d
             WHERE d.doc_id IN (SELECT doc_id FROM t WHERE term = 'spark')
               AND d.doc_id IN (SELECT doc_id FROM t WHERE term = 'join')
               AND d.doc_id NOT IN (SELECT doc_id FROM t WHERE term = 'slow')
         """,
-        "q_tfidf_topterms": """
+        "q_tfidf_topterms": f"""
             WITH t AS (
                 SELECT doc_id,
-                       unnest(string_split_regex(trim(text), '\\s+')) AS term
+                       unnest({_WS_SPLIT}) AS term
                 FROM documents),
             tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t GROUP BY 1, 2),
             d AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1)
@@ -10431,9 +10431,9 @@ def oracle_sql() -> dict[str, str]:
                 FROM tf JOIN d USING (term))
             WHERE rank <= 3
         """,
-        "q_top_ngrams": """
+        "q_top_ngrams": f"""
             WITH toks AS (
-                SELECT string_split_regex(trim(text), '\\s+') AS t FROM documents),
+                SELECT {_WS_SPLIT} AS t FROM documents),
             g AS (
                 SELECT array_to_string(t[i:i+1], ' ') AS ngram
                 FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) u)
@@ -10529,9 +10529,9 @@ def oracle_sql() -> dict[str, str]:
             SELECT h.i AS media_id, strlen(h.h)::BIGINT AS n_bytes, c.chk
             FROM html h JOIN chk c USING (i)
         """,
-        "q_rep_quality": """
+        "q_rep_quality": f"""
             WITH t AS (
-                SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+                SELECT doc_id, {_WS_SPLIT} AS toks
                 FROM documents),
             base AS (
                 SELECT doc_id, len(toks)::INT AS n_tokens,
@@ -10551,9 +10551,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         # chunk identity: the STRING itself (Spark uses xxhash64 —
         # independent derivations, equal counts absent a collision)
-        "q_boilerplate": """
+        "q_boilerplate": f"""
             WITH t AS (
-                SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+                SELECT doc_id, {_WS_SPLIT} AS toks
                 FROM documents),
             base AS (SELECT doc_id, (len(toks) // 8)::INT AS nc, toks FROM t),
             ch AS (
@@ -10604,10 +10604,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         # log-free BM25 mirror: identical expression SHAPE (association
         # and operand order) so every IEEE op rounds identically
-        "q_bm25": """
+        "q_bm25": f"""
             WITH dls AS (
                 SELECT doc_id,
-                       len(string_split_regex(trim(text), '\\s+')) AS dl
+                       len({_WS_SPLIT}) AS dl
                 FROM documents),
             stats AS (
                 SELECT COUNT(*)::DOUBLE AS n_docs,
@@ -10616,7 +10616,7 @@ def oracle_sql() -> dict[str, str]:
             tf AS (
                 SELECT t.doc_id, t.term, d.dl, COUNT(*)::DOUBLE AS tf
                 FROM (SELECT doc_id,
-                             unnest(string_split_regex(trim(text), '\\s+')) AS term
+                             unnest({_WS_SPLIT}) AS term
                       FROM documents) t
                 JOIN dls d USING (doc_id)
                 WHERE t.term IN ('data', 'join', 'window')
@@ -10671,9 +10671,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         # window identity: the STRING itself (Spark uses xxhash64 —
         # independent derivations, equal counts absent a collision)
-        "q_contamination": """
+        "q_contamination": f"""
             WITH t AS (
-                SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+                SELECT doc_id, {_WS_SPLIT} AS toks
                 FROM documents),
             base AS (
                 SELECT doc_id, greatest(len(toks) - 7, 0)::INT AS nw, toks
@@ -10760,7 +10760,7 @@ def oracle_sql() -> dict[str, str]:
         "q_pack_sequences": f"""
             WITH t AS (
                 SELECT doc_id,
-                       len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens
+                       len({_WS_SPLIT})::BIGINT AS n_tokens
                 FROM documents),
             s AS (
                 SELECT doc_id, n_tokens,
@@ -10927,9 +10927,9 @@ def oracle_sql() -> dict[str, str]:
             FROM h WHERE op = 'U'
         """,
         "q_winnow_decontam": _winnow_decontam_sql(),
-        "q_bpe_pairs": """
+        "q_bpe_pairs": f"""
             WITH toks AS (
-                SELECT unnest(string_split_regex(trim(text), '\\s+')) AS tok
+                SELECT unnest({_WS_SPLIT}) AS tok
                 FROM documents),
             p AS (
                 SELECT substring(tok, i::INT, 2) AS pair
@@ -10993,10 +10993,10 @@ def oracle_sql() -> dict[str, str]:
             FROM runs GROUP BY y, isl
         """,
         # moments in int64, mean/var via the identical pinned double chain
-        "q_var_stats": """
+        "q_var_stats": f"""
             WITH t AS (
                 SELECT lang AS grp,
-                       len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS x
+                       len({_WS_SPLIT})::BIGINT AS x
                 FROM documents),
             g AS (
                 SELECT grp, COUNT(*) AS n, (SUM(x))::BIGINT AS sum_x,
@@ -11011,9 +11011,9 @@ def oracle_sql() -> dict[str, str]:
             FROM g
         """,
         # lift chain mirrored operation-for-operation (no log anywhere)
-        "q_collocations": """
+        "q_collocations": f"""
             WITH toks AS (
-                SELECT regexp_split_to_array(trim(text), '\\s+') AS t
+                SELECT {_WS_SPLIT} AS t
                 FROM documents),
             bi0 AS (
                 SELECT t[i] AS x, t[i + 1] AS y
@@ -11059,7 +11059,7 @@ def oracle_sql() -> dict[str, str]:
         "q_chunk_dedup_rewrite": f"""
             WITH docs2 AS ({_DOCS2_SQL}),
             t AS (SELECT doc_id,
-                         regexp_split_to_array(trim(text), '\\s+') AS tk
+                         {_WS_SPLIT} AS tk
                   FROM docs2),
             c AS (SELECT doc_id, i,
                          array_to_string(tk[(i*8+1):(i*8+8)], ' ') AS chunk
@@ -11097,10 +11097,10 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked CROSS JOIN px
             WHERE rn = (n * p + 99) // 100
         """,
-        "q_vocab_growth": """
+        "q_vocab_growth": f"""
             WITH t AS (
                 SELECT doc_id,
-                       unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
+                       unnest({_WS_SPLIT}) AS term
                 FROM documents),
             fd AS (SELECT term, MIN(doc_id) AS fd FROM t GROUP BY 1),
             mx AS (SELECT MAX(doc_id) AS mx FROM documents),
@@ -11123,10 +11123,10 @@ def oracle_sql() -> dict[str, str]:
             WHERE doc_id % 7 NOT IN (1, 4)
             GROUP BY 1
         """,
-        "q_bigram_lm": """
+        "q_bigram_lm": f"""
             WITH toks AS (
                 SELECT doc_id,
-                       regexp_split_to_array(trim(text), '\\s+') AS tk
+                       {_WS_SPLIT} AS tk
                 FROM documents),
             b AS (SELECT doc_id, tk[i] AS a, tk[i] || ' ' || tk[i+1] AS g
                   FROM toks, unnest(range(1, len(tk))) AS u(i)),
@@ -11205,7 +11205,7 @@ def oracle_sql() -> dict[str, str]:
         "q_dup_chunk_by_source": f"""
             WITH docs2 AS ({_DOCS2_SQL}),
             t AS (SELECT doc_id, source,
-                         regexp_split_to_array(trim(text), '\\s+') AS tk
+                         {_WS_SPLIT} AS tk
                   FROM docs2),
             c AS (SELECT doc_id,
                          array_to_string(tk[(i*8+1):(i*8+8)], ' ') AS chunk
@@ -11290,7 +11290,7 @@ def oracle_sql() -> dict[str, str]:
         # same min-over-rows point query for the exact top-20 terms
         "q_cms_heavy_hitters": f"""
             WITH tk AS (
-                SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
+                SELECT unnest({_WS_SPLIT}) AS term
                 FROM documents),
             tk2 AS (SELECT term FROM tk WHERE len(term) > 0),
             g AS (SELECT term,
@@ -11464,10 +11464,10 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes sb ON sb.id = inter.id_b
             WHERE inter * 100 >= 80 * least(sa.sz, sb.sz)
         """,
-        "q_lm_coverage": """
+        "q_lm_coverage": f"""
             WITH toks AS (
                 SELECT doc_id,
-                       regexp_split_to_array(trim(text), '\\s+') AS tk
+                       {_WS_SPLIT} AS tk
                 FROM documents),
             tb AS (SELECT doc_id, tk[i] AS a, tk[i] || ' ' || tk[i+1] AS g
                    FROM toks, unnest(range(1, len(tk))) AS u(i)),
@@ -11716,10 +11716,10 @@ def oracle_sql() -> dict[str, str]:
             node_alias="host",
         ),
     }
-    out["q_quality_gate"] = """
+    out["q_quality_gate"] = f"""
             WITH toks AS (
                 SELECT doc_id,
-                       regexp_split_to_array(trim(text), '\\s+') AS tk
+                       {_WS_SPLIT} AS tk
                 FROM documents),
             b AS (SELECT doc_id, tk[i] AS a, tk[i] || ' ' || tk[i+1] AS g
                   FROM toks, unnest(range(1, len(tk))) AS u(i)),
@@ -11972,16 +11972,16 @@ def oracle_sql() -> dict[str, str]:
                    (len(prefix))::INT AS rule_len
             FROM w WHERE rn = 1
         """
-    out["q_readability"] = """
+    out["q_readability"] = f"""
             WITH b AS (
                 SELECT doc_id,
-                       (len(regexp_split_to_array(trim(text), '\\s+')))::BIGINT
+                       (len({_WS_SPLIT}))::BIGINT
                            AS n_words,
                        greatest(
                            ((len(text) - len(replace(text, '.', '')))
                             + (len(text) - len(replace(text, '!', '')))
                             + (len(text) - len(replace(text, '?', ''))))::BIGINT,
-                           ((len(regexp_split_to_array(trim(text), '\\s+'))
+                           ((len({_WS_SPLIT})
                              + 24) // 25)::BIGINT) AS n_sents,
                        (len(regexp_extract_all(lower(text), '[aeiou]+')))::BIGINT
                            AS n_vowel_runs

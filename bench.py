@@ -2,16 +2,21 @@
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the host's
-CPU count) and prints ONE JSON line:
+CPU count) and prints the full record as one JSON line:
     {"metric": "...", "value": N, "unit": "...", "queries": {...}, "sf": ...,
      "nproc": ..., "loadavg": [1m, 5m, 15m], "plan_build_s": ..., ...}
+then a headline-only JSON line last (see the end of ``main``).
 
 The headline metric is the north-rule one: docs/sec through the
 spatial-join + tile-assignment pipeline (pages -> extract -> filter ->
 PIP -> tiles), measured end-to-end including the synthetic-page scan.
-Per-query wall seconds for the operator suite ride along in "queries";
-"plan_build_s" is the wall time of building the flagship plan (the
-eager polygon collect and PIP plan compile), apart from its runs.
+Per-query wall seconds for the operator suite ride along in "queries":
+each query is written to Spark's ``noop`` sink, so every output column
+is computed (a ``count()`` lets Spark prune the columns it does not
+need, and with them whole operators), and its row count comes from an
+``Observation`` on that same write. "plan_build_s" is the wall time of
+building the flagship plan (the eager polygon collect and PIP plan
+compile), apart from its runs.
 """
 
 from __future__ import annotations
@@ -24,6 +29,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -198,10 +204,12 @@ def main() -> None:
     for name in suite:
         q_walls = []
         for _ in range(2):  # min-of-2: codegen/JIT cold-start and
-            t0 = time.monotonic()  # neighbor noise land on run 1
-            df = qs[name](spark, sf_dir)
-            n = df.count()
+            obs = Observation()  # neighbor noise land on run 1
+            t0 = time.monotonic()
+            df = qs[name](spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows"))
+            df.write.format("noop").mode("overwrite").save()
             q_walls.append(time.monotonic() - t0)
+        n = obs.get["rows"]
         timings[name] = round(min(q_walls), 3)
         if n == 0 and name not in ("q_dedup_exact",):
             print(f"warning: {name} returned 0 rows", file=sys.stderr)

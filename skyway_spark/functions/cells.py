@@ -84,10 +84,6 @@ def cell_encode(lat: Column, lon: Column, res: int) -> Column:
     return pack_cell(x, y, res)
 
 
-def cell_res(cell: Column) -> Column:
-    return F.shiftrightunsigned(cell, _R_SHIFT).cast("int")
-
-
 def cell_x(cell: Column) -> Column:
     return F.shiftrightunsigned(cell, _X_SHIFT).bitwiseAND(F.lit(_XY_MASK))
 
@@ -106,15 +102,6 @@ def cell_parent(cell: Column, res: int, parent_res: int) -> Column:
         F.shiftrightunsigned(cell_y(cell), d),
         parent_res,
     )
-
-
-def cell_center(cell: Column, res: int) -> tuple[Column, Column]:
-    """(lat, lon) of the cell centroid."""
-    nx = float(1 << (res + 1))
-    ny = float(1 << res)
-    lon = (cell_x(cell).cast("double") + F.lit(0.5)) / F.lit(nx) * F.lit(360.0) - F.lit(180.0)
-    lat = F.lit(90.0) - (cell_y(cell).cast("double") + F.lit(0.5)) / F.lit(ny) * F.lit(180.0)
-    return lat, lon
 
 
 def k_ring(cell: Column, res: int, k: int) -> Column:

@@ -13,10 +13,9 @@ Semantics:
 - the manifest is removed before the data is written and written again
   after it, so a write that fails or is killed, or a lost data file,
   leaves a recomputable — never a wrongly-trusted — stage;
-- per-partition lineage (rows per written file) and the ``layout_by``
-  per-file column stats come from the parquet footers the write
-  produced, and the data is read back with the schema it was written
-  with, so none of them costs a Spark job.
+- per-partition lineage (rows per written file) comes from the parquet
+  footers the write produced, and the data is read back with the schema
+  it was written with, so neither costs a Spark job.
 """
 
 from __future__ import annotations
@@ -24,7 +23,6 @@ from __future__ import annotations
 import contextlib
 import hashlib
 import json
-import math
 import os
 import time
 from dataclasses import dataclass, field
@@ -32,11 +30,9 @@ from pathlib import Path
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_MANIFEST.json"
-BUCKET_COL = "__file_bucket"
 
 
 def stage_fingerprint(name: str, params, upstream: list) -> str:
@@ -46,57 +42,19 @@ def stage_fingerprint(name: str, params, upstream: list) -> str:
     return hashlib.sha256(blob.encode()).hexdigest()
 
 
-def _min_max(chunks: list) -> list:
-    """[min, max] of one column over a file group's row-group statistics,
-    in Spark's order, where NaN sorts above every double: the writer
-    records NaN as a row group's max when the group holds one, so the
-    merged max is NaN when any chunk's is and the min is NaN only when
-    every chunk's is. ``[None, None]`` (never pruned on) when a chunk
-    records no min/max, e.g. because all its values are null."""
-    if not chunks or any(s is None or not s.has_min_max for s in chunks):
-        return [None, None]
-    highs = [s.max for s in chunks]
-    hi = math.nan if any(h != h for h in highs) else max(highs)
-    return [min((s.min for s in chunks if s.min == s.min), default=math.nan), hi]
+def _read_footers(data_dir: str) -> dict[str, int]:
+    """Rows per written data file (path relative to ``data_dir``), from
+    the parquet footers, read on the driver."""
+    return {
+        str(p.relative_to(data_dir)): pq.read_metadata(p).num_rows
+        for p in sorted(Path(data_dir).glob("part-*.parquet"))
+    }
 
 
-def _read_footers(data_dir: str, stats: list[str] | None) -> tuple[dict[str, int], list | None]:
-    """Rows per written data file (path relative to ``data_dir``) and,
-    for a ``layout_by`` write (``stats`` given), one manifest entry per
-    bucket directory: ``{file_id, rows, stats: {col: [min, max]}}``.
-    Both come from the parquet footers, read on the driver."""
-    partition_rows: dict[str, int] = {}
-    rows: dict[int, int] = {}
-    groups: dict[int, dict[str, list]] = {}
-    for p in sorted(Path(data_dir).rglob("part-*.parquet")):
-        md = pq.read_metadata(p)
-        partition_rows[str(p.relative_to(data_dir))] = md.num_rows
-        if stats is None:
-            continue
-        b = int(p.parent.name.removeprefix(f"{BUCKET_COL}="))
-        rows[b] = rows.get(b, 0) + md.num_rows
-        chunks = groups.setdefault(b, {c: [] for c in stats})
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            for j in range(rg.num_columns):
-                col = rg.column(j)
-                if col.path_in_schema in chunks:
-                    chunks[col.path_in_schema].append(col.statistics)
-    if stats is None:
-        return partition_rows, None
-    files = [
-        {"file_id": b, "rows": rows[b], "stats": {c: _min_max(s) for c, s in chunks.items()}}
-        for b, chunks in sorted(groups.items())
-    ]
-    return partition_rows, files
-
-
-def _read(spark: SparkSession, data_dir: str, schema: StructType, paths=()) -> DataFrame:
-    """A stage's rows (all of ``data_dir`` or only the bucket directories
-    ``paths``) read with the schema they were written with, so Spark runs
-    no schema-inference job; the bucket column is dropped."""
-    reader = spark.read.schema(schema).option("basePath", data_dir)
-    return reader.parquet(*(paths or [data_dir])).drop(BUCKET_COL)
+def _read(spark: SparkSession, data_dir: str, schema: StructType) -> DataFrame:
+    """A stage's rows read with the schema they were written with, so
+    Spark runs no schema-inference job."""
+    return spark.read.schema(schema).parquet(data_dir)
 
 
 def _load_manifest(manifest_path: str) -> dict | None:
@@ -125,14 +83,7 @@ class CheckpointManager:
         d = os.path.join(self.root, name)
         return os.path.join(d, "data"), os.path.join(d, MANIFEST_NAME)
 
-    def stage(
-        self,
-        spark: SparkSession,
-        name: str,
-        params,
-        fn,
-        layout_by: dict | None = None,
-    ) -> DataFrame:
+    def stage(self, spark: SparkSession, name: str, params, fn) -> DataFrame:
         """Return the stage DataFrame, resuming from the checkpoint
         when the manifest matches the stage's fingerprint and every data
         file it lists still exists. ``params`` is any JSON-serialisable
@@ -143,24 +94,7 @@ class CheckpointManager:
         The manifest's ``partition_rows`` ({file path in the data
         directory: rows}, one entry per write task) comes from the
         parquet footers; ``metrics()`` reports their sum and the
-        non-empty file count.
-
-        ``layout_by`` opts the stage into a clustered file layout —
-        the 100-TB scan-savings path (VERDICT r3 item 8):
-
-            {"key": Column,        # layout key, e.g. hilbert_key(...)
-             "buckets": int,       # number of key-range files
-             "key_max": int,       # exclusive key domain upper bound
-             "stats": [col, ...]}  # columns to min/max per file
-
-        Rows are routed to ``partitionBy`` bucket
-        ``key * buckets // key_max`` (key-RANGE buckets — a
-        space-filling-curve key makes each file spatially tight); rows
-        whose key is null go to bucket ``buckets``. The manifest gains
-        Iceberg-style per-bucket column stats (``files``: [{file_id,
-        rows, stats: {col: [min, max]}}]), merged from the footers of
-        the bucket's files. ``read_pruned`` plans a scan from those
-        stats alone, reading only the matching bucket directories."""
+        non-empty file count."""
         data_dir, manifest_path = self._paths(name)
         upstream = sorted({r.name: r.fingerprint for r in self.results if r.name != name}.items())
         fingerprint = stage_fingerprint(name, params, upstream)
@@ -178,17 +112,9 @@ class CheckpointManager:
         with contextlib.suppress(FileNotFoundError):
             os.remove(manifest_path)
         df = fn()
-        stats = None
-        if layout_by is None:
-            df.write.mode("overwrite").parquet(data_dir)
-        else:
-            nb, kmax = int(layout_by["buckets"]), int(layout_by["key_max"])
-            bucket = F.floor(layout_by["key"] * nb / F.lit(kmax)).cast("int")
-            clustered = df.withColumn(BUCKET_COL, F.coalesce(bucket, F.lit(nb)))
-            clustered.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_dir)
-            stats = layout_by.get("stats", [])
+        df.write.mode("overwrite").parquet(data_dir)
         out = _read(spark, data_dir, df.schema)
-        partition_rows, files = _read_footers(data_dir, stats)
+        partition_rows = _read_footers(data_dir)
         row_count = sum(partition_rows.values())
         wall_ms = int((time.monotonic() - t0) * 1000)
         manifest = {
@@ -200,8 +126,6 @@ class CheckpointManager:
             "wall_ms": wall_ms,
             "schema": out.schema.jsonValue(),
         }
-        if files is not None:
-            manifest["files"] = files
         # manifest last: a crash before this line leaves the stage
         # unclaimed and it simply recomputes on resume
         tmp = manifest_path + ".tmp"
@@ -210,43 +134,6 @@ class CheckpointManager:
         os.replace(tmp, manifest_path)
         self.results.append(StageResult(name, fingerprint, partition_rows, wall_ms, False))
         return out
-
-    def read_pruned(
-        self,
-        spark: SparkSession,
-        name: str,
-        ranges: dict[str, tuple],
-    ) -> tuple[DataFrame, list[int], int]:
-        """Manifest-stats scan planning over a ``layout_by`` stage —
-        the Iceberg file-skipping move, from this manager's own JSON
-        manifest: keep only the files whose [min, max] column stats
-        intersect every requested ``{col: (lo, hi)}`` range (a file
-        with unknown stats for a column is kept), and read ONLY those
-        bucket directories (driver-side planning on the FILES-sized
-        stats list; no data is touched for skipped files).
-
-        Returns ``(df, scanned_file_ids, files_total)``.  The caller
-        still applies the exact row-level predicate on ``df`` — stats
-        pruning is a superset guarantee, identical to how a table
-        format's planner composes with Spark's scan filters."""
-        data_dir, manifest_path = self._paths(name)
-        m = _load_manifest(manifest_path)
-        if not m or "files" not in m:
-            raise ValueError(f"stage {name!r} has no file-stats manifest")
-
-        def may_match(stats: dict) -> bool:
-            for col, (lo, hi) in ranges.items():
-                mn, mx = stats[col]
-                if mn is not None and (mn > hi or mx < lo):
-                    return False
-            return True
-
-        keep = [f["file_id"] for f in m["files"] if may_match(f["stats"])]
-        schema = StructType.fromJson(m["schema"])
-        if not keep:
-            return _read(spark, data_dir, schema).limit(0), [], len(m["files"])
-        paths = [os.path.join(data_dir, f"{BUCKET_COL}={b}") for b in keep]
-        return _read(spark, data_dir, schema, paths), keep, len(m["files"])
 
     def metrics(self) -> list[dict]:
         return [

@@ -42,7 +42,6 @@ def test_cell_decode_roundtrip(points):
         df.withColumn("cell", cells.cell_encode(F.col("lat"), F.col("lon"), res))
         .select(
             "id",
-            cells.cell_res(F.col("cell")).alias("r"),
             cells.cell_x(F.col("cell")).alias("x"),
             cells.cell_y(F.col("cell")).alias("y"),
         )
@@ -50,7 +49,6 @@ def test_cell_decode_roundtrip(points):
         .toPandas()
     )
     x, y = cells.cell_xy_np(lat, lon, res)
-    assert (out["r"] == res).all()
     assert (out["x"].to_numpy() == x).all()
     assert (out["y"].to_numpy() == y).all()
 
@@ -65,17 +63,6 @@ def test_parent_hierarchy(points):
         .count()
     )
     assert out == 0
-
-
-def test_cell_center_in_cell(spark):
-    df = spark.createDataFrame([(37.7749, -122.4194)], "lat double, lon double")
-    res = 12
-    enc = df.select(cells.cell_encode(F.col("lat"), F.col("lon"), res).alias("cell"))
-    lat_c, lon_c = cells.cell_center(F.col("cell"), res)
-    out = enc.select(
-        "cell", cells.cell_encode(lat_c, lon_c, res).alias("reenc")
-    ).first()
-    assert out["cell"] == out["reenc"]
 
 
 def test_k_ring_size_and_wrap(spark):

@@ -15,21 +15,26 @@ systems ship ANN indexes (IVF trains on int8/int16-quantized vectors
 in FAISS/ScaNN for the same throughput reasons).
 
 Scale shape per iteration (the MLlib pattern):
-- assignment runs in the scan stage as Arrow-batched numpy — the
-  (k, dim) int64 centroid matrix ships once per executor as a
+- assignment runs in the scan stage as Arrow-batched numpy (``_assign``,
+  the package's one integer nearest-centroid engine; PQ, the trained
+  IVF probe and similarity.nearest_centroid_confusion use it too) —
+  each (k, dim) int64 codebook ships once per executor as a
   SparkContext.broadcast, so any k*dim fits (a k=4096 IVF coarse
   quantizer included); no join, no shuffle.  Not a Column argmin over
-  literal centroids: it measured slower at k=8 and k=64 alike, and
-  its plan build grows with k*dim (ROADMAP);
-- the update is ONE map-side-combined groupBy on (cluster, dim) —
-  k*dim output rows regardless of corpus size — collected to the
-  driver (k-means has an inherent per-iteration sync point; it is
-  k*dim*8 bytes, not data);
+  literal centroids: that measured slower for k-means, PQ and the
+  nearest-centroid classifier alike, and its plan build grows with
+  k*dim (CHANGES.md);
+- the update is ONE map-side-combined groupBy on (block, cluster, dim)
+  — k*dim output rows per codebook regardless of corpus size —
+  collected to the driver (k-means has an inherent per-iteration sync
+  point; it is k*dim*8 bytes, not data);
 - the input projection (vec_id, q) is cached once for all iterations.
 
 At 10^12 rows: same plan; the only driver traffic is k*dim longs per
 iteration.  Empty clusters keep their previous centroid (deterministic,
-mirrored by the oracle).
+mirrored by the oracle).  A null vector, a null element or a vector
+whose length is not its codebook's dim raises a ValueError naming the
+vec_id.
 
 No reference counterpart (skyway has no ML ops; SURVEY.md §2.4) —
 north-rule LLM-pipeline operator (IVF/coreset training for the ANN
@@ -37,6 +42,8 @@ index in operators/similarity.py).
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,56 +58,118 @@ def _quantize(vec_col: Column, scale_bits: int) -> Column:
     )
 
 
-def _sq_dist(q: Column, centroid: list[int]) -> Column:
-    lit = F.array(*[F.lit(int(v)).cast("long") for v in centroid])
-    return F.aggregate(
-        F.zip_with(q, lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, d: acc + d,
+def _bad_vector(vec_id, qcol: str, dim: int) -> ValueError:
+    return ValueError(
+        f"vec_id {vec_id}: vector {qcol!r} is null, holds a null or is not "
+        f"{dim} long"
     )
 
 
-def _assign(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """Add (cluster, dist): argmin over per-centroid integer squared
-    distances, ties to the lowest centroid id:
-    (vec_id, q) -> + (cluster int, dist long).
+def _assign(
+    df: DataFrame, books: list[tuple[str, list[list[int]], str, str]]
+) -> DataFrame:
+    """For each ``(qcol, codebook, cluster_col, dist_col)`` in ``books``,
+    append the index of the codebook row nearest to the int64 vector in
+    ``qcol`` (int, ties to the lowest index) and its integer squared
+    distance (long) — every codebook in ONE mapInArrow pass over ``df``,
+    which must carry ``vec_id``.
 
-    The (k, dim) int64 centroid matrix rides a SparkContext.broadcast
-    (off-plan, one torrent transfer per executor, any k*dim); each
-    Arrow batch computes the distances with vectorized int64 numpy,
-    looping over the k centroids so peak memory is O(batch * k), never
-    O(batch * k * dim)."""
+    The (k, dim) int64 codebooks ride a SparkContext.broadcast (off-plan,
+    one torrent transfer per executor, any k*dim).  Each Arrow batch's
+    list column is read as a (rows, dim) matrix without a per-row copy,
+    and a running minimum over the k rows keeps peak memory
+    O(rows * dim), never O(rows * k * dim)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructType
 
-    bc = qdf.sparkSession.sparkContext.broadcast(np.asarray(centroids, dtype=np.int64))
+    bc = df.sparkSession.sparkContext.broadcast(
+        [np.asarray(book, dtype=np.int64) for _, book, _, _ in books]
+    )
+
+    def matrix(rb, qcol: str, dim: int):
+        arr = rb.column(qcol)
+        bad = pc.list_value_length(arr).fill_null(-1).to_numpy() != dim
+        flat = arr.flatten()
+        if flat.null_count:
+            holes = pc.list_parent_indices(arr).filter(flat.is_null())
+            bad[holes.to_numpy()] = True
+        if bad.any():
+            vec_id = rb.column("vec_id")[int(bad.argmax())].as_py()
+            raise _bad_vector(vec_id, qcol, dim)
+        return flat.to_numpy().reshape(-1, dim)
 
     def assign(batches):
-        cmat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(
-                    cluster=pd.Series(dtype="int32"), dist=pd.Series(dtype="int64")
-                )
-                continue
-            qmat = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
-            dists = np.empty((len(pdf), len(cmat)), dtype=np.int64)
-            for i in range(len(cmat)):
-                d = qmat - cmat[i]
-                dists[:, i] = (d * d).sum(axis=1)
-            cid = dists.argmin(axis=1)  # first min = lowest cid on ties
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "q": pdf["q"],
-                    "cluster": cid.astype("int32"),
-                    "dist": dists[np.arange(len(pdf)), cid],
-                }
-            )
+        cmats = bc.value
+        for rb in batches:
+            out = list(rb.columns)
+            for (qcol, _, _, _), cmat in zip(books, cmats):
+                qmat = matrix(rb, qcol, cmat.shape[1])
+                cid = np.zeros(len(qmat), dtype=np.int32)
+                best = np.full(len(qmat), np.iinfo(np.int64).max)
+                for i, c in enumerate(cmat):
+                    d = qmat - c
+                    d = (d * d).sum(axis=1)
+                    closer = d < best  # strict: ties keep the lowest cid
+                    cid[closer] = i
+                    best[closer] = d[closer]
+                out += [pa.array(cid), pa.array(best)]
+            yield pa.RecordBatch.from_arrays(out, names=names)
 
-    return qdf.mapInPandas(
-        assign, "vec_id long, q array<bigint>, cluster int, dist long"
+    schema = StructType(list(df.schema.fields))
+    for _, _, c, d in books:
+        schema = schema.add(c, "integer").add(d, "long")
+    names = schema.fieldNames()
+    return df.mapInArrow(assign, schema)
+
+
+def _lloyd(staged: DataFrame, qcols: list[str], k: int, iters: int) -> list:
+    """``iters`` Lloyd iterations of one k-means codebook per quantized
+    column of ``staged`` (vec_id, *qcols), from the k lowest-id vectors
+    (deterministic init).  The codebooks never interact, so one pass per
+    iteration assigns them all and stacks their (cluster, dim)
+    aggregates into one (block, cluster, dim) aggregate — bit-identical
+    to training each column alone."""
+    init = sorted(
+        staged.orderBy("vec_id").limit(k).collect(), key=lambda r: r["vec_id"]
     )
+    books = [[r[c] for r in init] for c in qcols]
+    for c, book in zip(qcols, books):
+        dim = len(book[0] or ())  # the lowest-id vector sets the dim
+        for r, row in zip(init, book):
+            if not row or None in row or len(row) != dim:
+                raise _bad_vector(r["vec_id"], c, dim)
+    for _ in range(iters):
+        assigned = _assign(
+            staged,
+            [(c, books[b], f"__c{b}", f"__d{b}") for b, c in enumerate(qcols)],
+        )
+        stacked = assigned.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("b"),
+                            F.col(f"__c{b}").alias("cluster"),
+                            F.col(c).alias("q"),
+                        )
+                        for b, c in enumerate(qcols)
+                    ]
+                )
+            ).alias("e")
+        )
+        stats = (
+            stacked.select("e.b", "e.cluster", F.posexplode("e.q").alias("d", "v"))
+            .groupBy("b", "cluster", "d")
+            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
+            .collect()
+        )
+        nxt = [[list(c) for c in book] for book in books]  # empty clusters carry
+        for r in stats:
+            nxt[r["b"]][r["cluster"]][r["d"]] = r["s"] // r["c"]  # Python floor div
+        books = nxt
+    return books
 
 
 def kmeans_train(
@@ -118,23 +187,7 @@ def kmeans_train(
     qdf = vectors.select(
         F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col), scale_bits).alias("q")
     ).persist()
-    init = qdf.orderBy("vec_id").limit(k).collect()
-    centroids = [list(r["q"]) for r in sorted(init, key=lambda r: r["vec_id"])]
-    dim = len(centroids[0])
-    for _ in range(iters):
-        stats = (
-            _assign(qdf, centroids)
-            .select("cluster", F.posexplode("q").alias("d", "v"))
-            .groupBy("cluster", "d")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        nxt = [list(c) for c in centroids]  # empty clusters carry over
-        for r in stats:
-            nxt[r["cluster"]][r["d"]] = r["s"] // r["c"]  # Python floor div
-        centroids = nxt
-        assert all(len(c) == dim for c in centroids)
-    return centroids, qdf
+    return _lloyd(qdf, ["q"], k, iters)[0], qdf
 
 
 def kmeans_fit_assign(
@@ -155,7 +208,9 @@ def kmeans_fit_assign(
     passes worth pinning in cluster storage, and re-quantizing is two
     Column ops inside the output scan."""
     centroids, qdf = kmeans_train(vectors, k, iters, id_col, vec_col, scale_bits)
-    out = _assign(qdf, centroids).select("vec_id", "cluster", "dist")
+    out = _assign(qdf, [("q", centroids, "cluster", "dist")]).select(
+        "vec_id", "cluster", "dist"
+    )
     qdf.unpersist()
     return out
 
@@ -178,14 +233,14 @@ def ivf_trained_topk(
     so the trained index + probe carries an exact SQL oracle.
 
     Scale shape: training as kmeans_train (per-iteration driver sync
-    of k*dim longs); the probe is a scan-stage filter on the list id
-    (at rest: partition pruning on a list-partitioned layout) + a
-    TakeOrderedAndProject top-k — no shuffle of the corpus.  As in
-    kmeans_fit_assign the cache serves training only; the returned
-    probe re-quantizes inside its own scan by design.
+    of k*dim longs); the probe is one scan-stage ``_assign`` pass that
+    yields both the list id and the query distance (the query is a
+    one-row codebook), a filter on the list id (at rest: partition
+    pruning on a list-partitioned layout) + a TakeOrderedAndProject
+    top-k — no shuffle of the corpus.  As in kmeans_fit_assign the
+    cache serves training only; the returned probe re-quantizes inside
+    its own scan by design.
     """
-    import math
-
     centroids, qdf = kmeans_train(vectors, k_lists, iters, id_col, vec_col, scale_bits)
     qq = [math.floor(float(x) * (1 << scale_bits)) for x in query]
     cdist = sorted(
@@ -193,13 +248,11 @@ def ivf_trained_topk(
     )
     probe = [i for _, i in cdist[:nprobe]]
     out = (
-        _assign(qdf, centroids)
-        .where(F.col("cluster").isin(probe))
-        .select(
-            "vec_id",
-            "cluster",
-            _sq_dist(F.col("q"), qq).alias("qdist"),
+        _assign(
+            qdf, [("q", centroids, "cluster", "dist"), ("q", [qq], "__self", "qdist")]
         )
+        .where(F.col("cluster").isin(probe))
+        .select("vec_id", "cluster", "qdist")
         .orderBy("qdist", "vec_id")
         .limit(topk)
     )
@@ -207,20 +260,22 @@ def ivf_trained_topk(
     return out
 
 
-def _argmin_literal(qcol: Column, centroids: list[list[int]]) -> Column:
-    """(dist, cid) struct of the nearest literal centroid — argmin via
-    array_min over per-centroid integer squared distances, ties to the
-    lowest centroid id (the same contract as _assign)."""
-    return F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    _sq_dist(qcol, c).alias("dist"),
-                    F.lit(i).alias("cid"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
+def _pq_blocks(
+    vectors: DataFrame, m: int, id_col: str, vec_col: str, dim: int, scale_bits: int
+) -> DataFrame:
+    """(vec_id, __q0 .. __q{m-1}): the m quantized dim/m sub-blocks that
+    PQ trains and encodes on."""
+    if dim % m:
+        raise ValueError("dim must divide evenly into m blocks")
+    bs = dim // m
+    return vectors.select(
+        F.col(id_col).alias("vec_id"),
+        *[
+            _quantize(F.slice(F.col(vec_col), j * bs + 1, bs), scale_bits).alias(
+                f"__q{j}"
+            )
+            for j in range(m)
+        ],
     )
 
 
@@ -238,66 +293,43 @@ def pq_train(
     Lloyd iteration instead of m (and one init collect instead of m).
 
     Bit-identical to training each dim/m sub-block with kmeans_train
-    separately — same quantization, same k-lowest-id init (every vector
+    separately — both run the same Lloyd loop over the same
+    quantization and the same k lowest-id init rows (every vector
     carries all m blocks, so the per-block inits are slices of the same
-    k rows), same argmin with lowest-cid ties, same
-    order-independent int64 sums and floor-div updates, same
-    empty-cluster carry-over — because the blocks never interact: the
-    joint pass just stacks the m independent (cluster, dim) aggregates
-    into one (block, cluster, dim) aggregate.
+    k rows); the blocks never interact, the joint pass just stacks the
+    m independent (cluster, dim) aggregates into one (block, cluster,
+    dim) aggregate.
 
     Scale shape per iteration: ONE pass over the cached quantized
-    projection; the m per-block assignments are scan-stage literal
-    argmins; one explode to (block, cluster, d, v) feeds a map-side-
-    combined groupBy with m*k*(dim/m) = k*dim output rows regardless of
-    corpus size; one driver sync of k*dim longs — the cost of training
-    m codebooks collapses to the cost of training one.
+    projection; the m per-block assignments are one ``_assign`` pass;
+    one explode to (block, cluster, d, v) feeds a map-side-combined
+    groupBy with m*k*(dim/m) = k*dim output rows regardless of corpus
+    size; one driver sync of k*dim longs — the cost of training m
+    codebooks collapses to the cost of training one.
     """
-    if dim % m:
-        raise ValueError("dim must divide evenly into m blocks")
-    bs = dim // m
-    staged = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        *[
-            _quantize(F.slice(F.col(vec_col), j * bs + 1, bs), scale_bits).alias(
-                f"__q{j}"
-            )
-            for j in range(m)
-        ],
-    ).persist()
-    init = sorted(
-        staged.orderBy("vec_id").limit(k).collect(), key=lambda r: r["vec_id"]
-    )
-    books = [[list(r[f"__q{j}"]) for r in init] for j in range(m)]
-    for _ in range(iters):
-        stacked = staged.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("b"),
-                            _argmin_literal(F.col(f"__q{j}"), books[j])[
-                                "cid"
-                            ].alias("cluster"),
-                            F.col(f"__q{j}").alias("q"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("e")
-        )
-        stats = (
-            stacked.select("e.b", "e.cluster", F.posexplode("e.q").alias("d", "v"))
-            .groupBy("b", "cluster", "d")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        nxt = [[list(c) for c in book] for book in books]  # empty clusters carry
-        for r in stats:
-            nxt[r["b"]][r["cluster"]][r["d"]] = r["s"] // r["c"]
-        books = nxt
+    staged = _pq_blocks(vectors, m, id_col, vec_col, dim, scale_bits).persist()
+    books = _lloyd(staged, [f"__q{j}" for j in range(m)], k, iters)
     staged.unpersist()
     return books
+
+
+def _pq_encode(
+    vectors: DataFrame,
+    books: list[list[list[int]]],
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    scale_bits: int,
+) -> DataFrame:
+    m = len(books)
+    staged = _pq_blocks(vectors, m, id_col, vec_col, dim, scale_bits)
+    coded = _assign(
+        staged,
+        [(f"__q{j}", book, f"code_{j}", f"dist_{j}") for j, book in enumerate(books)],
+    )
+    return coded.select(
+        "vec_id", *[c for j in range(m) for c in (f"code_{j}", f"dist_{j}")]
+    )
 
 
 def pq_codes(
@@ -320,39 +352,21 @@ def pq_codes(
     Training reuses the engine-exact Lloyd's of ``kmeans_train`` on
     the SLICED sub-vectors (same quantization / floor-div / tie-break
     contract, so the whole index carries an exact SQL oracle); the
-    final encoding emits all m codes in ONE output scan — per block an
-    array_min(struct) argmin over the k literal sub-centroids, staged
-    through a quantized projection so the interpreted slice/quantize
-    HOFs evaluate once per block, not once per centroid.
+    final encoding emits all m codes in ONE output scan — the quantized
+    sub-blocks staged once, then one ``_assign`` pass probing all m
+    broadcast sub-codebooks.
 
     Output: (vec_id, code_0..dist_0.., code_{m-1}, dist_{m-1}) with
     dist_j the integer squared distance to the chosen sub-centroid.
 
     Scale shape: training is pq_train's one-scan-per-iteration joint
     Lloyd (one k*dim-long driver sync per iteration, shared by all m
-    codebooks); encoding is scan-stage Column math with zero shuffles
-    and zero joins — at 10^12 vectors the codes append to the scan like
-    any derived column.
+    codebooks); encoding is a scan-stage Arrow-batched pass with zero
+    shuffles and zero joins — at 10^12 vectors the codes append to the
+    scan like any derived column.
     """
-    if dim % m:
-        raise ValueError("dim must divide evenly into m blocks")
-    bs = dim // m
     books = pq_train(vectors, m, k, iters, id_col, vec_col, dim, scale_bits)
-    staged = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        *[
-            _quantize(F.slice(F.col(vec_col), j * bs + 1, bs), scale_bits).alias(
-                f"__q{j}"
-            )
-            for j in range(m)
-        ],
-    )
-    out_cols = [F.col("vec_id")]
-    for j, centroids in enumerate(books):
-        best = _argmin_literal(F.col(f"__q{j}"), centroids)
-        out_cols.append(best["cid"].alias(f"code_{j}"))
-        out_cols.append(best["dist"].alias(f"dist_{j}"))
-    return staged.select(*out_cols)
+    return _pq_encode(vectors, books, id_col, vec_col, dim, scale_bits)
 
 
 def pq_topk(
@@ -377,48 +391,29 @@ def pq_topk(
     Output: the ``topk`` (vec_id, approx_dist) rows, ordered
     (approx_dist, vec_id) — deterministic cut.
 
-    Scale shape: after pq_train's joint training (one scan + one
-    k*dim-long sync per Lloyd iteration), everything is one
-    output scan — per block an argmin over k literal sub-centroids
-    plus a literal-array table lookup — and a TakeOrdered top-k.  The
-    query vector is one driver-side row (the only collect); no joins,
-    no shuffle beyond the top-k reduction.
+    Scale shape: pq_codes' training and encoding scan, plus the sum of
+    m literal-array table lookups and a TakeOrdered top-k.  The query
+    vector is one driver-side row (the only collect); no joins, no
+    shuffle beyond the top-k reduction.
     """
-    if dim % m:
-        raise ValueError("dim must divide evenly into m blocks")
-    bs = dim // m
     qrow = vectors.where(F.col(id_col) == query_id).select(vec_col).collect()
     if not qrow:
         raise KeyError(f"query vector {query_id} not found")
-    import math
-
     scale = float(1 << scale_bits)
-    qvec = [int(math.floor(float(x) * scale)) for x in qrow[0][0]]
+    qvec = [math.floor(float(x) * scale) for x in qrow[0][0]]
 
     books = pq_train(vectors, m, k, iters, id_col, vec_col, dim, scale_bits)
-
-    staged = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        *[
-            _quantize(F.slice(F.col(vec_col), j * bs + 1, bs), scale_bits).alias(
-                f"__q{j}"
-            )
-            for j in range(m)
-        ],
-    )
+    bs = dim // m
     approx = F.lit(0).cast("long")
-    for j, centroids in enumerate(books):
+    for j, book in enumerate(books):
         qsub = qvec[j * bs : (j + 1) * bs]
-        dtab = [
-            sum((a - b) * (a - b) for a, b in zip(qsub, c)) for c in centroids
-        ]
-        best = _argmin_literal(F.col(f"__q{j}"), centroids)
+        dtab = [sum((a - b) * (a - b) for a, b in zip(qsub, c)) for c in book]
         approx = approx + F.element_at(
-            F.array(*[F.lit(int(d)).cast("long") for d in dtab]),
-            best["cid"] + 1,
+            F.array(*[F.lit(d).cast("long") for d in dtab]), F.col(f"code_{j}") + 1
         )
     return (
-        staged.select("vec_id", approx.alias("approx_dist"))
+        _pq_encode(vectors, books, id_col, vec_col, dim, scale_bits)
+        .select("vec_id", approx.alias("approx_dist"))
         .orderBy("approx_dist", "vec_id")
         .limit(topk)
     )

@@ -196,7 +196,7 @@ def semantic_dedup(
     from skyway_spark.operators.kmeans import _assign, kmeans_train
 
     centroids, qdf = kmeans_train(vectors, k, iters, id_col, vec_col, scale_bits)
-    assigned = _assign(qdf, centroids).select(
+    assigned = _assign(qdf, [("q", centroids, "cluster", "dist")]).select(
         "vec_id", "cluster", "q"
     )
     qdf.unpersist()
@@ -363,17 +363,22 @@ def nearest_centroid_confusion(
     Scale shape: training is one (label, dim) groupBy — map-side
     combined, alphabet-sized output — then a LABELS x DIMS driver sync
     (the kmeans.py convention: kilobytes); classification rides the
-    scan as Column math against centroid literals.  One shuffle for
-    the confusion groupBy.
+    scan as one kmeans._assign pass against the broadcast per-label
+    centroid matrix (labels sorted, so its lowest-index tie-break is
+    the lowest label).  One shuffle for the confusion groupBy.
 
     Output: (label, pred, n) — exact confusion matrix.
     """
+    from skyway_spark.operators.kmeans import _assign
+
     scale = 1 << scale_bits
+    # q = floor(v*2^b) * 2^b: the vector on the centroids' 2^(2b) grid
     quant = emb.select(
-        F.col(id_col).alias("id"),
+        F.col(id_col).alias("vec_id"),
         F.col(label_col).alias("label"),
         F.transform(
-            F.col(vec_col), lambda v: F.floor(v.cast("double") * scale).cast("long")
+            F.col(vec_col),
+            lambda v: F.floor(v.cast("double") * scale).cast("long") * scale,
         ).alias("q"),
     )
     sums = (
@@ -388,35 +393,14 @@ def nearest_centroid_confusion(
     for r in sums:
         # floor division on possibly-negative sums (python // floors,
         # matching the SQL mirror's pmod construction)
-        by_label.setdefault(int(r.label), {})[int(r.dim)] = (
-            int(r.s) * scale // int(r.n)
-        )
+        by_label.setdefault(int(r.label), {})[int(r.dim)] = int(r.s) // int(r.n)
     labels = sorted(by_label)
     dims = max(max(d) for d in by_label.values()) + 1
-    cents = {
-        lab: F.array(*[F.lit(by_label[lab][d]).cast("long") for d in range(dims)])
-        for lab in labels
-    }
-
-    def dist(lab):
-        return F.aggregate(
-            F.zip_with(
-                F.col("q"), cents[lab], lambda x, c: (x * scale - c) * (x * scale - c)
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(dist(lab).alias("d"), F.lit(lab).cast("int").alias("l"))
-                for lab in labels
-            ]
-        )
-    )
+    cents = [[by_label[lab][d] for d in range(dims)] for lab in labels]
+    pred = F.element_at(F.array(*[F.lit(lab) for lab in labels]), F.col("cluster") + 1)
     return (
-        quant.select("label", best["l"].alias("pred"))
+        _assign(quant, [("q", cents, "cluster", "dist")])
+        .select("label", pred.cast("int").alias("pred"))
         .groupBy("label", "pred")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -340,6 +340,19 @@ def test_bloom_probe_is_shuffle_free_scan(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_pq_codes_is_shuffle_free_scan(spark):
+    """Training runs (and collects) inside pq_codes; the encoding it
+    returns rides the corpus scan — no join, no shuffle."""
+    from skyway_spark.operators.kmeans import pq_codes
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 5) for d in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    plan = _executed_plan(pq_codes(emb, m=4, k=4, iters=1, dim=8))
+    assert "Exchange" not in plan
+
+
 def test_tile_pyramid_single_scan_two_shuffles(spark, elements_parquet):
     """Pyramid cost: one point scan, one fine-res agg shuffle, one
     cell-level re-agg shuffle — levels multiply the CELL table only."""

@@ -311,7 +311,8 @@ def test_kmeans_tiebreak_and_empty_cluster_carryover(spark):
     )
     # equidistant to two identical centroids -> ties break to cid 0
     qdf = df.select("vec_id", _quantize(F.col("embedding"), 20).alias("q"))
-    assert all(r["cluster"] == 0 for r in _assign(qdf, [[0, 0], [0, 0]]).collect())
+    tied = _assign(qdf, [("q", [[0, 0], [0, 0]], "cluster", "dist")])
+    assert all(r["cluster"] == 0 for r in tied.collect())
     # after one Lloyd step every vector lands in cluster 0, so cluster 1
     # carries its [0,0] init over -- and then wins back the origin vecs
     out = {r["vec_id"]: r["cluster"] for r in kmeans_fit_assign(df, k=2, iters=1).collect()}

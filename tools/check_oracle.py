@@ -12,6 +12,7 @@ carries the full registry).
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -170,7 +171,14 @@ def main() -> int:
             argv.remove(a)
     sf = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
-    spark = get_spark("oracle-check", cpus=8, shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    spark = get_spark(
+        "oracle-check",
+        cpus=cpus,
+        shuffle_partitions=cpus,
+        # progress bars would glue onto the OK/FAIL lines of a redirected log
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")

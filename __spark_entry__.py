@@ -2329,7 +2329,7 @@ def q_semdedup(spark, sf):
 def q_hash_classifier(spark, sf):
     """FastText-shaped hashed-bigram linear quality scorer: per doc
     the int64 sum of LCG-derived gram weights — the corpus-wide
-    quality-filter pass, zero shuffles (pure scan-stage Column HOFs)."""
+    quality-filter pass, zero shuffles (one Arrow-batched pass in the scan stage)."""
     from skyway_spark.operators.textstats import hash_feature_score
 
     (docs,) = _tables(spark, sf, "documents")
@@ -2350,9 +2350,9 @@ def q_dsir_resample(spark, sf):
         "w", F.greatest(F.col("score"), F.lit(0)).cast("long") + F.lit(1)
     )
     # Pin the scoring pass to exactly ONE evaluation: the sampler's
-    # filter + sort-key both reference w, and predicate/sort pushdown
-    # re-inlines the whole HOF scoring chain per reference (measured
-    # 5-12x the single-pass cost).  Scoring-then-sampling is two
+    # filter + sort-key both reference w, and predicate pushdown
+    # re-inlines the scoring UDF per reference (the plan then runs it
+    # twice).  Scoring-then-sampling is two
     # passes in every public DSIR recipe anyway; the materialized
     # slice is (id, score, w) longs — kilobytes per million docs.
     scored = scored.localCheckpoint(eager=False)
@@ -2516,7 +2516,7 @@ def q_winnow(spark, sf):
     """Winnowing (MOSS) fingerprints per document: char-8-gram
     rolling hashes, min-of-4-window selection, order-canonical fold
     checksum over the sorted fingerprint set — the position-robust
-    substring-dedup signature; pure scan-stage HOFs, zero shuffles."""
+    substring-dedup signature; one Arrow-batched pass in the scan stage, zero shuffles."""
     (docs,) = _tables(spark, sf, "documents")
     return dedup.winnow_fingerprints(docs, k=WINNOW_K, w=WINNOW_W)
 

@@ -1,19 +1,21 @@
 """Document deduplication operators (training-data pipeline suite).
 
 All hash arithmetic is deliberately portable integer math (polynomial
-rolling hashes mod fixed primes) rather than engine-specific hash
-functions, so every operator has an exact DuckDB SQL oracle and is
-reproducible across engines and versions.
+rolling hashes mod fixed primes and powers of two) rather than
+engine-specific hash functions, so every operator has an exact DuckDB
+SQL oracle and is reproducible across engines and versions.  The
+polynomial fold itself lives in ``functions/strhash``.
 
 Scale notes:
 - exact dedup: one map-side-combined groupBy on a 64-bit text hash —
   never shuffles full text;
-- MinHash+LSH: signatures are pure Column exprs (nested transform/
-  aggregate, JVM-side); banding turns O(n^2) pair search into an
-  equi-join on (band_idx, band_hash) buckets; candidate pairs are
-  verified with exact n-gram Jaccard. Bucket join is shuffle-on-key,
-  and pathological buckets are bounded by ``max_bucket`` (logged, not
-  silent);
+- MinHash+LSH: n-gram hashes, signatures and band hashes are
+  Arrow-batched UDFs over ``strhash``'s numpy span fold (one pass per
+  batch, chained in one Python worker); banding turns O(n^2) pair
+  search into an equi-join on (band_idx, band_hash) buckets; candidate
+  pairs are verified with exact n-gram Jaccard. Bucket join is
+  shuffle-on-key, and pathological buckets are bounded by
+  ``max_bucket`` (logged, not silent);
 - SimHash: 64-bit signature from token-hash bit voting; near-dups =
   identical band of high bits (hamming-adjacent candidates via 4-band
   split);
@@ -22,84 +24,58 @@ Scale notes:
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# portable hash constants (same in the SQL oracles). Sized so every
-# fold step stays far inside int64 under ANSI arithmetic:
-# acc < 2^44 -> acc*31 + codepoint < 2^49.
-HASH_MOD = 1 << 44
+from skyway_spark.functions import strhash
+from skyway_spark.functions.strhash import FP_MOD, FP_MULT, HASH_MOD, text_hash  # noqa: F401
+
 PRIME = 2_147_483_647  # 2^31-1 for minhash permutations
 
 # (a, b) pairs for minhash permutations h_i(x) = (a*x + b) % PRIME
 MINHASH_PERMS = [(2 * i + 1, 7919 * (i + 1) % PRIME) for i in range(16)]
 
 
-def _char_codes(col: Column) -> Column:
-    """array<int> of codepoints — one split pass instead of a
-    substring(col, i, 1) walk (which re-scans the string's UTF-8 bytes
-    from the start per index, O(L^2)). Matches the DuckDB oracle's
-    ord(substring(...)) per char; the empty string becomes [''] ->
-    [ascii('')] = [0], which folds to hash 0 exactly like the oracle's
-    empty range."""
-    return F.transform(F.split(col, ""), lambda c: F.ascii(c))
-
-
-def _fold_hash(codes: Column) -> Column:
-    return F.aggregate(
-        codes, F.lit(0).cast("long"), lambda acc, c: (acc * 31 + c) % HASH_MOD
-    )
-
-
-def text_hash(col: Column) -> Column:
-    """Portable polynomial hash of a string (matches the SQL oracle:
-    fold (acc*31 + codepoint) % 2^60); empty string -> 0."""
-    return F.when(F.length(col) > 0, _fold_hash(_char_codes(col))).otherwise(
-        F.lit(0).cast("long")
-    )
-
-
-# order-sensitive document fingerprint fold (textstats.fingerprint):
-# acc < 2^40 -> acc*FP_MULT < 2^60; + token hash (2^44) still < 2^61
-FP_MOD = 1 << 40
-FP_MULT = 1_048_573
-
-
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams (array<string>)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(col) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(col, i, F.lit(n))))
-
-
 def ngram_hashes(col: Column, n: int = 3) -> Column:
-    """Distinct n-grams -> portable int64 hashes (array<long>)."""
-    return F.array_distinct(
-        F.transform(char_ngrams(col, n), lambda g: _fold_hash(_char_codes(g)))
-    )
+    """Distinct char n-gram hashes (array<long>, first-occurrence
+    order): the portable fold of every n code points.  A text shorter
+    than n is one gram, the empty text hashes to [0] and a null text
+    gives [null]."""
+
+    def grams(texts: pa.Array) -> pa.Array:
+        cp, offs, valid = strhash.codes(texts)
+        per_row = np.maximum(np.diff(offs) - (n - 1), 1)
+        row, i = strhash.rows(per_row)
+        starts = offs[row] + i
+        h = strhash.fold(cp, offs, starts, np.minimum(starts + n, offs[row + 1]))
+        h, per_row = strhash.distinct(h, per_row)
+        return strhash.list_array(h, per_row, value_valid=np.repeat(valid, per_row))
+
+    return F.arrow_udf(grams, "array<bigint>")(col)
 
 
 def word_shingle_hashes(col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingle hashes (array<long>): tokens by
-    whitespace split, per-token portable hash, shingle = per-step-mod
-    fold of n consecutive token hashes. Word shingles are the standard
-    MinHash unit — char n-grams over a small shared vocabulary give
-    every document pair a high base Jaccard, which defeats LSH
-    banding (every bucket explodes); word shingles keep unrelated
-    pairs near zero while same-length edits stay ~1."""
-    tokens = F.split(col, " ")
-    th = F.transform(tokens, lambda t: _fold_hash(_char_codes(t)))
-    # zip_with over shifted slices, NOT transform(i -> slice(th, i)):
-    # interpreted HOF lambdas re-evaluate argument expressions per
-    # element, so indexing into `th` per shingle re-hashes every token
-    # per shingle (quadratic). With slices, `th` is evaluated O(1)
-    # times per row.  Shingle fold matches the portable per-step-mod
-    # arithmetic: ((h1*31 + h2) % M * 31 + h3) % M.
-    m = F.greatest(F.size(th) - (n - 1), F.lit(1))
-    shifted = [F.slice(th, i + 1, m) for i in range(n)]
-    acc = shifted[0]
-    for nxt in shifted[1:]:
-        acc = F.zip_with(acc, nxt, lambda a, b: (a * 31 + F.coalesce(b, F.lit(0))) % HASH_MOD)
-    return F.array_distinct(acc)
+    ``split(text, ' ')``, per-token portable hash, shingle = fold of n
+    consecutive token hashes; a text with fewer than n tokens is one
+    shingle whose missing tokens fold as 0, and a null text gives
+    null. Word shingles are the standard MinHash unit — char n-grams
+    over a small shared vocabulary give every document pair a high
+    base Jaccard, which defeats LSH banding (every bucket explodes);
+    word shingles keep unrelated pairs near zero while same-length
+    edits stay ~1."""
+
+    def shingles(texts: pa.Array) -> pa.Array:
+        th, toffs, valid = strhash.token_hashes(texts)
+        per_row = np.where(valid, np.maximum(np.diff(toffs) - (n - 1), 1), 0)
+        row, j = strhash.rows(per_row)
+        starts = toffs[row] + j
+        h, per_row = strhash.distinct(strhash.fold(th, toffs, starts, starts + n), per_row)
+        return strhash.list_array(h, per_row, valid=valid)
+
+    return F.arrow_udf(shingles, "array<bigint>")(col)
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -149,27 +125,51 @@ def minhash_signature(
     col: Column, n: int = 3, perms=MINHASH_PERMS, unit: str = "char"
 ) -> Column:
     """array<long> of len(perms) minhash values over n-gram hashes
-    (char n-grams or word shingles) — pure Column expr, fully
-    JVM-side."""
+    (char n-grams or word shingles) — Arrow-batched, see
+    minhash_from_grams."""
     grams = ngram_hashes(col, n) if unit == "char" else word_shingle_hashes(col, n)
     return minhash_from_grams(grams, perms)
 
 
 def minhash_from_grams(grams: Column, perms=MINHASH_PERMS) -> Column:
-    """All permutation minima in ONE aggregate pass with an
-    array<long> accumulator (acc_i = min(acc_i, (g*a_i + b_i) % P)) —
-    one lambda invocation per gram instead of len(perms) transform
-    passes over the gram array."""
-    init = F.array(*[F.lit(PRIME).cast("long") for _ in perms])
-    return F.aggregate(
-        grams,
-        init,
-        lambda acc, g: F.zip_with(
-            acc,
-            F.array(*[(g * a + b) % PRIME for (a, b) in perms]),
-            lambda x, y: F.least(x, y),
-        ),
-    )
+    """Per-row minima of (g*a_i + b_i) % PRIME over the gram hashes,
+    one numpy pass per permutation over the whole Arrow batch.  Null
+    grams are skipped, so no grams gives len(perms) x PRIME; a null
+    array gives null."""
+
+    def signature(arr: pa.Array) -> pa.Array:
+        g, offs, valid, gvalid = strhash.list_values(arr)
+        counts = np.bincount(strhash.rows(np.diff(offs))[0][gvalid], minlength=len(valid))
+        g, has = g[gvalid], counts > 0
+        at = strhash.row_offsets(counts)[:-1][has]
+        sig = np.full((len(valid), len(perms)), PRIME, np.int64)
+        for j, (a, b) in enumerate(perms if len(g) else []):
+            sig[has, j] = np.minimum.reduceat((g * a + b) % PRIME, at)
+        return strhash.list_array(sig[valid].ravel(), np.where(valid, len(perms), 0), valid)
+
+    return F.arrow_udf(signature, "array<bigint>")(grams)
+
+
+def _banded(sigs: DataFrame, bands: int) -> DataFrame:
+    """(id, band, bh) rows of an (id, signature) frame: bh is the
+    portable fold of the band's len(MINHASH_PERMS) // bands signature
+    values.  A null signature has no bands."""
+    rows_per_band = len(MINHASH_PERMS) // bands
+
+    def band(arr: pa.Array) -> pa.Array:
+        v, offs, valid, _ = strhash.list_values(arr)
+        per_row = np.where(valid, bands, 0)
+        row, i = strhash.rows(per_row)
+        starts = offs[row] + i * rows_per_band
+        h = strhash.fold(v, offs, starts, starts + rows_per_band)
+        return strhash.list_array(h, per_row, valid)
+
+    id_col, sig_col = sigs.columns
+    bh = F.arrow_udf(band, "array<bigint>")(F.col(sig_col))
+    # _outer: a plain posexplode gets an inferred size(bh) > 0 filter
+    # below the Generate, which evaluates the UDF chain a second time
+    out = sigs.select(F.col(id_col).alias("id"), F.posexplode_outer(bh).alias("band", "bh"))
+    return out.where(F.col("bh").isNotNull())
 
 
 def minhash_lsh_pairs(
@@ -188,7 +188,6 @@ def minhash_lsh_pairs(
     word_shingle_hashes for why char grams defeat banding)."""
     from pyspark.sql import Window
 
-    rows_per_band = len(MINHASH_PERMS) // bands
     gramf = ngram_hashes if unit == "char" else word_shingle_hashes
 
     def grams_of(df: DataFrame) -> DataFrame:
@@ -196,37 +195,17 @@ def minhash_lsh_pairs(
             F.col(id_col).alias("__id"), gramf(F.col(text_col), n).alias("__grams")
         )
 
-    # band on (band, bucket-hash, id) ONLY — the gram arrays (the
-    # heavy payload, ~10^2 longs/doc) never enter the banding shuffle
-    # or the self-join. The max_bucket window count rides the same
-    # light exchange, and the two self-join sides share it
-    # (ReusedExchange).
-    sig = grams_of(docs).withColumn("__sig", minhash_from_grams(F.col("__grams")))
-    banded = sig.select(
-        "__id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.aggregate(
-                        F.slice("__sig", i * rows_per_band + 1, rows_per_band),
-                        F.lit(0).cast("long"),
-                        lambda acc, v: (acc * 31 + v) % HASH_MOD,
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("__band", "__bh"),
-    )
-    w = Window.partitionBy("__band", "__bh")
-    banded = banded.withColumn("__bn", F.count(F.lit(1)).over(w)).where(
-        F.col("__bn") <= max_bucket
-    )
+    # band on (band, bucket-hash, id) ONLY — the gram arrays (~10^2
+    # longs/doc) never enter the banding shuffle or the self-join. The
+    # max_bucket window count rides the same light exchange, and the
+    # two self-join sides share it (ReusedExchange).
+    sig = grams_of(docs).select("__id", minhash_from_grams(F.col("__grams")))
+    w = Window.partitionBy("band", "bh")
+    banded = _banded(sig, bands).withColumn("__bn", F.count(F.lit(1)).over(w))
+    banded = banded.where(F.col("__bn") <= max_bucket)
     cand = (
-        banded.select("__band", "__bh", F.col("__id").alias("id_a"))
-        .join(
-            banded.select("__band", "__bh", F.col("__id").alias("id_b")),
-            ["__band", "__bh"],
-        )
+        banded.select("band", "bh", F.col("id").alias("id_a"))
+        .join(banded.select("band", "bh", F.col("id").alias("id_b")), ["band", "bh"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
@@ -234,18 +213,13 @@ def minhash_lsh_pairs(
         # below doesn't re-run the whole banding pipeline per use
         .localCheckpoint(eager=True)
     )
-    # exact-verify: gram arrays re-attach to CANDIDATE docs only — a
-    # candidate-id semi-join runs BELOW the gram hashing, so the
-    # (expensive, token-proportional) shingle hashing happens once for
-    # the candidate set instead of twice for the whole corpus; one
-    # narrow doc scan instead of two.  The verify joins stay
-    # deliberately UN-hinted: an explicit F.broadcast is honored
-    # regardless of size (AQE never overrides a hint), and on a
-    # duplicate-heavy corpus — the normal case for web crawls —
-    # candidate rows carrying ~10^2 longs of grams each would OOM the
-    # driver under a forced broadcast.  Un-hinted, AQE picks broadcast
-    # when the runtime size is small and degrades to a keyed shuffle
-    # otherwise (pinned by
+    # exact-verify: gram arrays re-attach to CANDIDATE docs only — the
+    # candidate-id semi-join runs BELOW the gram hashing, so shingles
+    # are hashed once for the candidate set, in one narrow doc scan.
+    # The verify joins stay UN-hinted: a forced broadcast of candidate
+    # rows carrying ~10^2 longs each would OOM the driver on a
+    # duplicate-heavy corpus; un-hinted, AQE broadcasts when small and
+    # degrades to a keyed shuffle otherwise (pinned by
     # tests/test_datapipe.py::test_minhash_lsh_join_degrades_to_shuffle).
     cand_ids = (
         cand.select(F.col("id_a").alias("__cid"))
@@ -298,32 +272,24 @@ def ngram_jaccard_pairs(
 
 
 def simhash(col: Column, bits: int = 32) -> Column:
-    """SimHash over whitespace tokens with the portable token hash:
-    bit b of the signature = majority vote of token-hash bit b.
+    """SimHash over ``split(text, ' ')`` tokens with the portable token
+    hash: bit b is set when more than half of the tokens have bit b
+    set; a null text gives null.  Token bits unpack into one (tokens,
+    64) matrix per Arrow batch and one segment sum counts the votes."""
 
-    All ``bits`` votes are tallied in ONE aggregate pass with an
-    array<long> accumulator (acc_b += (h & 2^b != 0)) — one lambda
-    invocation per token instead of ``bits`` full passes over the
-    token array; the signature then reassembles from the counters
-    (count*2 > ntok -> add the bit's mask)."""
-    tokens = F.split(col, " ")
-    th = F.transform(tokens, lambda t: _fold_hash(_char_codes(t)))
-    ntok = F.size(tokens).cast("long")
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-    counts = F.aggregate(
-        th,
-        F.array(*[F.lit(0).cast("long") for _ in range(bits)]),
-        lambda acc, h: F.zip_with(
-            acc, masks, lambda a, m: a + (h.bitwiseAND(m) != 0).cast("long")
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            counts, masks, lambda c, m: F.when(c * 2 > ntok, m).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda s, v: s + v,
-    )
+    def sign(texts: pa.Array) -> pa.Array:
+        th, toffs, valid = strhash.token_hashes(texts)
+        ntok = np.diff(toffs)
+        has = ntok > 0
+        sig = np.zeros(len(ntok), np.int64)
+        if has.any():
+            bit = np.unpackbits(th.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
+            votes = np.add.reduceat(bit[:, :bits], toffs[:-1][has], axis=0, dtype=np.int64)
+            won = (2 * votes > ntok[has, None]).astype(np.int64)
+            sig[has] = (won << np.arange(bits, dtype=np.int64)).sum(axis=1)
+        return pa.array(sig, mask=~valid)
+
+    return F.arrow_udf(sign, "bigint")(col)
 
 
 def simhash_near_dup_pairs(
@@ -452,48 +418,39 @@ def levenshtein_verify_pairs(
     )
 
 
-def _winnow_fps(
-    docs: DataFrame,
-    k: int,
-    w: int,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Shared staged pipeline: (id, __nk, __nw, __fps sorted-distinct
-    fingerprint array) — see winnow_fingerprints for the algorithm and
-    the staging rationale."""
-    t = F.lower(F.col(text_col))
-    s1 = docs.select(
-        F.col(id_col),
-        _char_codes(t).alias("__codes"),
-        F.greatest(F.length(t) - F.lit(k - 1), F.lit(0)).alias("__nk"),
-    )
-    hashes = F.when(
-        F.col("__nk") >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.col("__nk")),
-            lambda i: _fold_hash(F.slice(F.col("__codes"), i, k)),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    s2 = s1.select(id_col, "__nk", hashes.alias("__hashes"))
-    s3 = s2.select(
-        id_col,
-        "__nk",
-        F.greatest(F.size(F.col("__hashes")) - F.lit(w - 1), F.lit(0)).alias("__nw"),
-        "__hashes",
-    )
-    fps = F.when(
-        F.col("__nw") >= 1,
-        F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("__nw")),
-                    lambda j: F.array_min(F.slice(F.col("__hashes"), j, w)),
-                )
-            )
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    return s3.select(id_col, "__nk", "__nw", fps.alias("__fps"))
+def _winnow(docs: DataFrame, k: int, w: int, id_col: str, text_col: str) -> DataFrame:
+    """(id, __w) with __w = struct(nk, nw, fps, chk) of the lowercased
+    text: nk char k-gram hashes, nw windows of w consecutive hashes,
+    fps = the sorted distinct window minima, chk = their portable fold.
+    A null text has no k-grams."""
+
+    def winnow(texts: pa.Array) -> pa.Array:
+        cp, offs, _ = strhash.codes(texts)
+        nk = np.maximum(np.diff(offs) - (k - 1), 0)
+        row, i = strhash.rows(nk)
+        starts = offs[row] + i
+        h = strhash.fold(cp, offs, starts, starts + k)
+        hoffs = strhash.row_offsets(nk)
+        nw = np.maximum(nk - (w - 1), 0)
+        row, j = strhash.rows(nw)
+        at = hoffs[row] + j
+        mins = h[at]
+        for t in range(1, w):
+            mins = np.minimum(mins, h[at + t])
+        fps, n_fps = strhash.distinct(mins, nw, sort=True)
+        foffs = strhash.row_offsets(n_fps)
+        return pa.StructArray.from_arrays(
+            [
+                pa.array(nk.astype(np.int32)),
+                pa.array(nw.astype(np.int32)),
+                strhash.list_array(fps, n_fps),
+                pa.array(strhash.fold(fps, foffs, foffs[:-1], foffs[1:])),
+            ],
+            names=["nk", "nw", "fps", "chk"],
+        )
+
+    udf = F.arrow_udf(winnow, "nk int, nw int, fps array<bigint>, chk bigint")
+    return docs.select(F.col(id_col), udf(F.lower(F.col(text_col))).alias("__w"))
 
 
 def winnow_fingerprints(
@@ -510,38 +467,20 @@ def winnow_fingerprints(
     substring of length >= k+w-1 guarantees a shared fingerprint) and
     ~1/w the size of the full shingle set.
 
-    Output per doc: (id, n_kgrams, n_windows, n_fps, fp_chk) where
-    n_fps counts the distinct selected fingerprints and fp_chk is an
-    order-canonical fold checksum over the SORTED fingerprint set (the
-    same chk idiom as the geometry queries) — pinning the exact set
-    without shipping arrays.  The cross-doc application is the usual
-    one: explode fingerprints, equi-join on fp, verify candidates
-    (operators/dedup.levenshtein_verify_pairs) — same banding shape as
-    minhash LSH with the window guarantee instead of a probability.
-
-    Scale shape: hashes, window minima, distinct and checksum are all
-    row-local Column HOFs in the scan stage — ZERO shuffles; the
-    fingerprint table this feeds is (id, fp) longs, never text.
+    Output per doc: (id, n_kgrams, n_windows, n_fps, fp_chk): n_fps
+    distinct selected fingerprints and fp_chk, a fold checksum over the
+    SORTED set that pins it without shipping arrays.  Cross-doc use:
+    explode fingerprints (winnow_fp_table), equi-join on fp, verify
+    candidates — minhash LSH's shape with a guarantee instead of a
+    probability.  Scale shape: lowercasing in the JVM, then one
+    Arrow-batched numpy pass in the scan stage — ZERO shuffles.
     """
-    # STAGED projections, deliberately: higher-order functions are
-    # interpreted (no whole-stage codegen) and Spark's subexpression
-    # elimination does not reach inside lambda bodies, so an inlined
-    # `hashes` expression would be RE-COMPUTED for every window
-    # position — O(len^2 * k) interpreted lambda calls (measured:
-    # seconds per 300-char row).  Materializing codes -> hashes -> fps
-    # as separate select stages makes each array a column VALUE
-    # computed once per row; all stages still fuse into the one scan
-    # (projections, no shuffle).
-    s4 = _winnow_fps(docs, k, w, id_col, text_col)
-    chk = F.aggregate(
-        F.col("__fps"), F.lit(0).cast("long"), lambda a, b: (a * 31 + b) % HASH_MOD
-    )
-    return s4.select(
+    return _winnow(docs, k, w, id_col, text_col).select(
         F.col(id_col),
-        F.col("__nk").cast("int").alias("n_kgrams"),
-        F.col("__nw").cast("int").alias("n_windows"),
-        F.size("__fps").alias("n_fps"),
-        chk.alias("fp_chk"),
+        F.col("__w.nk").alias("n_kgrams"),
+        F.col("__w.nw").alias("n_windows"),
+        F.size("__w.fps").alias("n_fps"),
+        F.col("__w.chk").alias("fp_chk"),
     )
 
 
@@ -554,24 +493,11 @@ def winnow_fp_table(
 ) -> DataFrame:
     """Exploded fingerprint table (id, fp) — one row per distinct
     selected fingerprint per document; the join substrate for
-    fingerprint-based dedup and decontamination.
-
-    The fps array is localCheckpoint-pinned BEFORE the explode: the
-    optimizer merges projections under a Generate regardless of
-    reference counts, which re-inlines the staged hash pipeline into
-    the window-min lambda — O(len^2 * k) interpreted evaluation
-    (winnow_fingerprints' staging survives only because its summary
-    output keeps multiple references alive; explode keeps one).  The
-    size() column in the pinned frame preserves the double reference
-    so the checkpoint itself materializes from the staged plan.  At
-    scale the fingerprint table is exactly what you'd persist anyway.
-    """
-    pinned = (
-        _winnow_fps(docs, k, w, id_col, text_col)
-        .select(id_col, F.size("__fps").alias("__n_fps"), "__fps")
-        .localCheckpoint(eager=False)
-    )
-    return pinned.select(id_col, F.explode("__fps").alias("fp"))
+    fingerprint-based dedup and decontamination."""
+    # _outer: a plain explode gets an inferred size(fps) > 0 filter
+    # below the Generate, which evaluates the UDF a second time
+    fps = _winnow(docs, k, w, id_col, text_col).select(id_col, F.explode_outer("__w.fps").alias("fp"))
+    return fps.where(F.col("fp").isNotNull())
 
 
 def winnow_decontaminate(
@@ -657,11 +583,9 @@ def ngram_containment_pairs(
     standard posting-list cap from the dedup literature.
     """
     max_df = 64
-    # pin the (id, shingle-array) projection before the 3-branch
-    # fan-out (sizes / df counts / kept grams): the shingle fold is an
-    # interpreted HOF that Catalyst would otherwise re-evaluate per
-    # branch (the repo's staging discipline); the pinned table is
-    # int64 arrays only — text never leaves the scan
+    # pin the (id, shingles) projection before the 3-branch fan-out
+    # (sizes / df counts / kept grams), so the shingle UDF runs once,
+    # not per branch; the pinned table is int64 arrays only
     sh = docs.select(
         F.col(id_col).alias("__id"),
         word_shingle_hashes(F.col(text_col), n).alias("__g"),
@@ -713,41 +637,18 @@ def fuzzy_join_lev1(
     Output: (a_id, b_id, dist) with dist <= 1.
     """
 
+    def variants(df: DataFrame, side: str) -> DataFrame:
+        k = F.col(f"{side}_key")
+        deletions = F.transform(
+            F.sequence(F.lit(1), F.length(k)),
+            lambda i: F.concat(F.substring(k, F.lit(1), i - 1), F.substring(k, i + 1, F.length(k))),
+        )
+        return df.select(
+            F.col(id_col).alias(f"{side}_id"), F.col(key).alias(f"{side}_key")
+        ).withColumn("__v", F.explode(F.concat(F.array(k), deletions)))
+
     ka, kb = F.col("a_key"), F.col("b_key")
-    av = a.select(
-        F.col(id_col).alias("a_id"), F.col(key).alias("a_key")
-    ).withColumn(
-        "__v",
-        F.explode(
-            F.concat(
-                F.array(F.col("a_key")),
-                F.transform(
-                    F.sequence(F.lit(1), F.length("a_key")),
-                    lambda i: F.concat(
-                        F.substring(F.col("a_key"), F.lit(1), i - 1),
-                        F.substring(F.col("a_key"), i + 1, F.length("a_key")),
-                    ),
-                ),
-            )
-        ),
-    )
-    bv = b.select(
-        F.col(id_col).alias("b_id"), F.col(key).alias("b_key")
-    ).withColumn(
-        "__v",
-        F.explode(
-            F.concat(
-                F.array(F.col("b_key")),
-                F.transform(
-                    F.sequence(F.lit(1), F.length("b_key")),
-                    lambda i: F.concat(
-                        F.substring(F.col("b_key"), F.lit(1), i - 1),
-                        F.substring(F.col("b_key"), i + 1, F.length("b_key")),
-                    ),
-                ),
-            )
-        ),
-    )
+    av, bv = variants(a, "a"), variants(b, "b")
     cand = av.join(bv, "__v").select("a_id", "a_key", "b_id", "b_key").distinct()
     return cand.where(F.levenshtein(ka, kb) <= 1).select(
         "a_id", "b_id", F.levenshtein(ka, kb).alias("dist")
@@ -992,35 +893,13 @@ def incremental_dedup_census(
     """
     from pyspark.sql import Window
 
-    rows_per_band = len(MINHASH_PERMS) // bands
-
     def prep(df, with_text=False):
-        cols = [
-            F.col(id_col).alias("id"),
-            word_shingle_hashes(F.col(text_col), n).alias("g"),
-            text_hash(F.col(text_col)).alias("h"),
-        ]
-        if with_text:
-            cols.append(F.col(text_col).alias("txt"))
-        return df.select(*cols)
+        t = F.col(text_col)
+        cols = [F.col(id_col).alias("id"), word_shingle_hashes(t, n).alias("g"), text_hash(t).alias("h")]
+        return df.select(*cols, *([t.alias("txt")] if with_text else []))
 
     def banded(df):
-        sig = df.withColumn("sig", minhash_from_grams(F.col("g")))
-        return sig.select(
-            "id",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.aggregate(
-                            F.slice("sig", i * rows_per_band + 1, rows_per_band),
-                            F.lit(0).cast("long"),
-                            lambda acc, v: (acc * 31 + v) % HASH_MOD,
-                        )
-                        for i in range(bands)
-                    ]
-                )
-            ).alias("band", "bh"),
-        )
+        return _banded(df.select("id", minhash_from_grams(F.col("g"))), bands)
 
     b = prep(batch, with_text=True).localCheckpoint(eager=True)
     c = prep(corpus).localCheckpoint(eager=True)
@@ -1100,9 +979,10 @@ def minhash_error_histogram(
 
     Output: (pair_type, err_bucket, n_pairs, max_err_pp).
 
-    Scale shape: Column-only per pair (shingles, signatures, one
-    zip_with) — no joins beyond what the caller used to form pairs;
-    the histogram is a map-side-combined groupBy.
+    Scale shape: per pair, shingles and signatures are Arrow-batched
+    UDFs and the match count one zip_with — no joins beyond what the
+    caller used to form pairs; the histogram is a map-side-combined
+    groupBy.
     """
     P = len(MINHASH_PERMS)
     ga = word_shingle_hashes(F.col(text_a), n)

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from skyway_spark.operators.bloom import PRIME, _A1, _A2, _B1, _B2
-from skyway_spark.operators.dedup import text_hash
+from skyway_spark.functions.strhash import text_hash
 
 # inverse-power scale for the HLL harmonic sum: 2^20 is exact in int64
 # for every register value rho <= 31 (2^(20-rho) floors to 0 past 20,
@@ -67,7 +67,7 @@ def hll_sketch(
     itself, union-mergeable by register max.
 
     ``value_col`` must be integral (ids); strings should pass through
-    ``dedup.text_hash`` first.  bucket comes from one LCG draw, rho
+    ``strhash.text_hash`` first.  bucket comes from one LCG draw, rho
     (the register value) is 1 + trailing-zero count of an independent
     second draw: lowbit = h2 & -h2, rho = bit_count(lowbit - 1) + 1,
     h2 = 0 capped at 31 — pure integer ops, identical in any engine.

@@ -1,8 +1,10 @@
 """Text analysis operators: token counting, quality scoring,
 language ID, document fingerprinting.
 
-Everything is a pure Column expression — deterministic, JVM-side,
-and each has an exact DuckDB SQL oracle (see __spark_entry__). The
+Everything is deterministic and has an exact DuckDB SQL oracle (see
+__spark_entry__).  Most operators are Column expressions; the token
+hash folds (``fingerprint``, ``hash_feature_score``) are Arrow-batched
+UDFs over ``functions/strhash``'s numpy span fold.  The
 heuristics are deliberately simple closed-form scores so the oracle
 can reproduce them bit-for-bit; they are the shape of a real
 training-data pipeline stage (CCNet-style quality gates), not a
@@ -11,16 +13,17 @@ model.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from skyway_spark.functions import strhash
+from skyway_spark.functions.strhash import FP_MOD, FP_MULT, GRAM_MULT, HASH_MOD
 
 # BPE-ish token pieces: runs of letters, runs of digits, or a single
 # non-alphanumeric non-space char
 BPE_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
-
-# n-gram feature-hash combiner for hash_feature_score: token-hash h1
-# (< 2^44) times 2^17-1 stays < 2^61 before the mod
-GRAM_MULT = (1 << 17) - 1
 
 # tiny per-language stopword marker sets (substring counted with
 # spaces around them so they are word matches)
@@ -91,16 +94,17 @@ def lang_id(col: Column) -> Column:
 
 
 def fingerprint(col: Column) -> Column:
-    """Rolling polynomial hash over whitespace tokens: fold
-    (acc*FP_MULT + token_hash) % FP_MOD with token_hash the portable
-    char-code fold — an order-sensitive document fingerprint."""
-    from skyway_spark.operators.dedup import FP_MOD, FP_MULT, _char_codes, _fold_hash
+    """Order-sensitive document fingerprint: the portable fold
+    (acc*FP_MULT + token_hash) % FP_MOD over the
+    ``split(trim(text), '\\s+')`` token hashes, one Arrow-batched numpy
+    pass; a null text gives null."""
 
-    tokens = F.split(F.trim(col), r"\s+")
-    th = F.transform(tokens, lambda t: _fold_hash(_char_codes(t)))
-    return F.aggregate(
-        th, F.lit(0).cast("long"), lambda acc, h: (acc * FP_MULT + h) % FP_MOD
-    )
+    def fp(texts: pa.Array) -> pa.Array:
+        th, toffs, valid = strhash.token_hashes(texts, java_ws=True)
+        h = strhash.fold(th, toffs, toffs[:-1], toffs[1:], FP_MULT, FP_MOD)
+        return pa.array(h, mask=~valid)
+
+    return F.arrow_udf(fp, "bigint")(col)
 
 
 def ngrams(col: Column, n: int) -> Column:
@@ -541,57 +545,36 @@ def hash_feature_score(
     score, quality) — the quality-classifier primitive every public
     curation recipe (CCNet, Gopher, DSIR) applies corpus-wide.
 
-    Each word n-gram hashes into a weight via the repo's portable fold
-    + LCG family and the document score is the int64 SUM of its gram
-    weights; quality = score > 0.  A real deployment would learn the
-    bucket weights offline and broadcast them (operators/bloom.py's
-    broadcast word array probed in Arrow-batched numpy applies
-    verbatim — the weight table IS a Bloom-shaped int array); the
-    fixed LCG weights here keep the
-    contract engine-exact with zero training-data dependency.
-
-    Scale shape: tokens, grams, hashes, weights, and the sum are all
-    row-local Column HOFs inside the scan stage — ZERO shuffles, zero
-    Python; at 100 TB this is a pure map over the corpus.
+    A gram's hash folds its n token hashes (acc*GRAM_MULT + h) % 2^44,
+    an LCG maps it to a weight in [-1000, 1000], the score is the int64
+    SUM of the weights and quality = score > 0.  A real deployment
+    would learn the weights offline and broadcast them as bloom.py
+    broadcasts its word array; fixed LCG weights keep the contract
+    engine-exact.  Scale shape: one Arrow-batched numpy pass in the
+    scan stage — ZERO shuffles, a pure map over the corpus.
     """
-    from skyway_spark.operators.bloom import _A1, _B1
-    from skyway_spark.operators.dedup import HASH_MOD, PRIME, text_hash
+    from skyway_spark.operators.bloom import _A1, _B1, PRIME
 
-    # The gram feature hash COMBINES per-token fold hashes
-    # (h1 * GRAM_MULT + h2 ... mod 2^44) instead of re-folding the
-    # joined gram string: one char-level fold pass per document
-    # (staged ONCE — HOF lambdas are interpreted and un-CSE'd, see
-    # operators/dedup.winnow_fingerprints), then O(1) integer work per
-    # gram.  GRAM_MULT = 2^17-1 keeps h1 * mult < 2^61.
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    s1 = docs.select(
+    def score(texts: pa.Array) -> pa.Array:
+        th, toffs, _ = strhash.token_hashes(texts, java_ws=True)
+        n_grams = np.maximum(np.diff(toffs) - (n - 1), 0)
+        row, i = strhash.rows(n_grams)
+        starts = toffs[row] + i
+        g = strhash.fold(th, toffs, starts, starts + n, GRAM_MULT, HASH_MOD)
+        weight = (g % PRIME * _A1 + _B1) % PRIME % 2001 - 1000
+        total = np.r_[0, np.cumsum(weight)]
+        goffs = strhash.row_offsets(n_grams)
+        return pa.StructArray.from_arrays(
+            [pa.array(n_grams.astype(np.int32)), pa.array(total[goffs[1:]] - total[goffs[:-1]])],
+            names=["n_grams", "score"],
+        )
+
+    udf = F.arrow_udf(score, "n_grams int, score bigint")
+    return docs.select(F.col(id_col), udf(F.col(text_col)).alias("__s")).select(
         F.col(id_col),
-        F.transform(toks, lambda t: text_hash(t)).alias("__th"),
-    )
-    nt = F.size(F.col("__th"))
-    gram_h = lambda i: F.aggregate(  # noqa: E731
-        F.slice(F.col("__th"), i + 1, n - 1),
-        F.element_at(F.col("__th"), i),
-        lambda acc, h: (acc * F.lit(GRAM_MULT) + h) % F.lit(HASH_MOD),
-    )
-    weight = lambda g: (  # noqa: E731
-        F.pmod(F.pmod(g, F.lit(PRIME)) * _A1 + _B1, F.lit(PRIME))
-        % F.lit(2001)
-        - F.lit(1000)
-    )
-    grams_w = F.when(
-        nt >= n,
-        F.transform(F.sequence(F.lit(1), nt - F.lit(n - 1)), lambda i: weight(gram_h(i))),
-    ).otherwise(F.array().cast("array<long>"))
-    s2 = s1.select(id_col, grams_w.alias("__gw"))
-    score = F.aggregate(
-        F.col("__gw"), F.lit(0).cast("long"), lambda s, v: s + v
-    )
-    return s2.select(
-        F.col(id_col),
-        F.size("__gw").alias("n_grams"),
-        score.alias("score"),
-        (score > 0).alias("quality"),
+        F.col("__s.n_grams").alias("n_grams"),
+        F.col("__s.score").alias("score"),
+        (F.col("__s.score") > 0).alias("quality"),
     )
 
 

@@ -29,6 +29,8 @@ north-rule trajectory operator over the event-point fixture.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -335,101 +337,34 @@ def lcss_tracks(
     matches, diag+1 dominates up/left because adjacent LCSS cells
     differ by at most 1 — the max form and the textbook form agree).
 
-    Scale shape: candidate pairs come from the (entity, track)=
-    (entity, track+1) EQUI-join pattern — never a track cross join;
-    each track is clipped to its first ``max_pts`` points (one keyed
-    window) and collapsed to ONE row of coordinate arrays, so a pair
-    is a single row.  The DP runs in mapInPandas, VECTORIZED ACROSS
-    THE BATCH: tracks pad to max_pts with a no-match sentinel and the
-    fixed max_pts^2 cell updates run as numpy ops over every pair in
-    the Arrow batch at once — constant 64 vectorized steps per batch,
-    no per-group Python (the per-group applyInPandas form measured
-    ~1 ms/group = 59 s on 40k pairs; this form is bulk).
+    Scale shape: see _consecutive_track_dp; tracks pad with a no-match
+    sentinel, and the fixed max_pts^2 cell updates run as numpy ops
+    over every pair in the Arrow batch at once (the per-group
+    applyInPandas form measured ~1 ms/group = 59 s on 40k pairs).
 
     Output: (entity, track, n_a, n_b, lcss) comparing track with
     track+1.
     """
-    import numpy as np
-    import pandas as pd
-
-    clipped = (
-        points.select(
-            F.col(entity).alias("e"),
-            F.col(track).alias("k"),
-            F.col(x).alias("px"),
-            F.col(y).alias("py"),
-            *[F.col(c) for c in order_cols],
-        )
-        .withColumn("i", F.row_number().over(
-            Window.partitionBy("e", "k").orderBy(*[F.col(c) for c in order_cols])
-        ))
-        .where(F.col("i") <= max_pts)
-        .select("e", "k", "i", "px", "py")
-    )
-    arrs = clipped.groupBy("e", "k").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "px", "py"))),
-            lambda s: s["px"],
-        ).alias("xs"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "px", "py"))),
-            lambda s: s["py"],
-        ).alias("ys"),
-        F.count(F.lit(1)).cast("int").alias("n"),
-    )
-    b_side = arrs.select(
-        F.col("e"), (F.col("k") - 1).alias("k"),
-        F.col("xs").alias("bxs"), F.col("ys").alias("bys"),
-        F.col("n").alias("n_b"),
-    )
-    pairs = arrs.join(b_side, ["e", "k"]).select(
-        "e", "k", "xs", "ys", F.col("n").alias("n_a"), "bxs", "bys", "n_b"
-    )
-
     ex, ey, K = int(eps_x), int(eps_y), int(max_pts)
-    SENT = 1 << 60  # padding sentinel: can never match within eps
 
-    def dp(batches):
-        for pdf in batches:
-            B = len(pdf)
-            if B == 0:
-                continue
+    def dp(ax, ay, bx, by, na, nb):
+        B = len(ax)
+        # match[b, i, j] without per-pair loops
+        mt = (
+            np.abs(ax[:, :, None] - bx[:, None, :]) <= ex
+        ) & (np.abs(ay[:, :, None] - by[:, None, :]) <= ey)
+        L = np.zeros((B, K + 1, K + 1), dtype=np.int64)
+        for i in range(1, K + 1):
+            for j in range(1, K + 1):
+                d = np.where(mt[:, i - 1, j - 1], L[:, i - 1, j - 1] + 1, 0)
+                L[:, i, j] = np.maximum(
+                    np.maximum(L[:, i - 1, j], L[:, i, j - 1]), d
+                )
+        return L[np.arange(B), na, nb]
 
-            def pad(col):
-                out = np.full((B, K), SENT, dtype=np.int64)
-                for r, lst in enumerate(pdf[col]):
-                    v = np.asarray(lst, dtype=np.int64)
-                    out[r, : len(v)] = v
-                return out
-
-            ax, ay, bx, by = pad("xs"), pad("ys"), pad("bxs"), pad("bys")
-            # match[b, i, j] without per-pair loops
-            mt = (
-                np.abs(ax[:, :, None] - bx[:, None, :]) <= ex
-            ) & (np.abs(ay[:, :, None] - by[:, None, :]) <= ey)
-            L = np.zeros((B, K + 1, K + 1), dtype=np.int64)
-            for i in range(1, K + 1):
-                for j in range(1, K + 1):
-                    d = np.where(mt[:, i - 1, j - 1], L[:, i - 1, j - 1] + 1, 0)
-                    L[:, i, j] = np.maximum(
-                        np.maximum(L[:, i - 1, j], L[:, i, j - 1]), d
-                    )
-            na = pdf["n_a"].to_numpy(np.int64)
-            nb = pdf["n_b"].to_numpy(np.int64)
-            lcss = L[np.arange(B), na, nb]
-            yield pd.DataFrame(
-                {
-                    "e": pdf["e"].to_numpy(np.int64),
-                    "k": pdf["k"].to_numpy(np.int64),
-                    "n_a": pdf["n_a"].astype("int32"),
-                    "n_b": pdf["n_b"].astype("int32"),
-                    "lcss": lcss,
-                }
-            )
-
-    out = pairs.mapInPandas(dp, "e long, k long, n_a int, n_b int, lcss long")
-    return out.select(
-        F.col("e").alias(entity), F.col("k").alias(track), "n_a", "n_b", "lcss"
+    # padding sentinel 2^60: can never match within eps
+    return _consecutive_track_dp(
+        points, entity, track, x, y, order_cols, K, 1 << 60, dp, "lcss"
     )
 
 
@@ -456,18 +391,58 @@ def frechet_tracks(
     +inf) only takes max/min of those integers — bit-exact on any
     engine.
 
-    Scale shape: identical to lcss_tracks — candidate pairs are the
-    (entity, track)=(entity, track+1) EQUI-join (never a cross join),
-    tracks clip to ``max_pts`` points (one keyed window) and collapse
-    to single array rows, and the fixed max_pts^2-cell DP runs in
-    mapInPandas VECTORIZED ACROSS THE ARROW BATCH (numpy ops over
-    every pair at once; no per-group Python).
+    Scale shape: identical to lcss_tracks (see _consecutive_track_dp).
 
     Output: (entity, track, n_a, n_b, frechet) comparing track with
     track+1.
     """
-    import numpy as np
-    import pandas as pd
+    K = int(max_pts)
+    BIG = 1 << 60  # +inf stand-in: border cells
+
+    def dp(ax, ay, bx, by, na, nb):
+        B = len(ax)
+        d = np.maximum(
+            np.abs(ax[:, :, None] - bx[:, None, :]),
+            np.abs(ay[:, :, None] - by[:, None, :]),
+        )
+        Fm = np.full((B, K + 1, K + 1), BIG, dtype=np.int64)
+        Fm[:, 0, 0] = 0
+        for i in range(1, K + 1):
+            for j in range(1, K + 1):
+                prev = np.minimum(
+                    np.minimum(Fm[:, i - 1, j], Fm[:, i, j - 1]),
+                    Fm[:, i - 1, j - 1],
+                )
+                Fm[:, i, j] = np.maximum(d[:, i - 1, j - 1], prev)
+        return Fm[np.arange(B), na, nb]
+
+    # padded coords sit at 0: harmless, because the DP is only read at
+    # (n_a, n_b), inside the real region
+    return _consecutive_track_dp(
+        points, entity, track, x, y, order_cols, K, 0, dp, "frechet"
+    )
+
+
+def _consecutive_track_dp(
+    points: DataFrame,
+    entity: str,
+    track: str,
+    x: str,
+    y: str,
+    order_cols: tuple[str, ...],
+    max_pts: int,
+    pad_value: int,
+    dp,
+    out_col: str,
+) -> DataFrame:
+    """Shared staging of lcss_tracks and frechet_tracks: clip each
+    track to its first ``max_pts`` points (one keyed window), collapse
+    it to ONE row of coordinate arrays, pair (entity, track) with
+    (entity, track+1) by EQUI-join — never a track cross join — then
+    run ``dp(ax, ay, bx, by, n_a, n_b)`` once per Arrow batch in
+    mapInPandas, VECTORIZED ACROSS THE BATCH on (batch, max_pts)
+    coordinate matrices padded with ``pad_value`` (no per-group
+    Python).  Output: (entity, track, n_a, n_b, out_col)."""
 
     clipped = (
         points.select(
@@ -503,54 +478,34 @@ def frechet_tracks(
         "e", "k", "xs", "ys", F.col("n").alias("n_a"), "bxs", "bys", "n_b"
     )
 
-    K = int(max_pts)
-    BIG = 1 << 60  # +inf stand-in: border cells and padded points
-
-    def dp(batches):
+    def run(batches):
         for pdf in batches:
             B = len(pdf)
             if B == 0:
                 continue
 
             def pad(col):
-                # padded coords sit at 0: harmless, because the DP is
-                # only read at (n_a, n_b), inside the real region
-                out = np.zeros((B, K), dtype=np.int64)
+                out = np.full((B, max_pts), pad_value, dtype=np.int64)
                 for r, lst in enumerate(pdf[col]):
                     v = np.asarray(lst, dtype=np.int64)
                     out[r, : len(v)] = v
                 return out
 
-            ax, ay, bx, by = pad("xs"), pad("ys"), pad("bxs"), pad("bys")
-            d = np.maximum(
-                np.abs(ax[:, :, None] - bx[:, None, :]),
-                np.abs(ay[:, :, None] - by[:, None, :]),
-            )
-            Fm = np.full((B, K + 1, K + 1), BIG, dtype=np.int64)
-            Fm[:, 0, 0] = 0
-            for i in range(1, K + 1):
-                for j in range(1, K + 1):
-                    prev = np.minimum(
-                        np.minimum(Fm[:, i - 1, j], Fm[:, i, j - 1]),
-                        Fm[:, i - 1, j - 1],
-                    )
-                    Fm[:, i, j] = np.maximum(d[:, i - 1, j - 1], prev)
             na = pdf["n_a"].to_numpy(np.int64)
             nb = pdf["n_b"].to_numpy(np.int64)
-            fr = Fm[np.arange(B), na, nb]
             yield pd.DataFrame(
                 {
                     "e": pdf["e"].to_numpy(np.int64),
                     "k": pdf["k"].to_numpy(np.int64),
                     "n_a": pdf["n_a"].astype("int32"),
                     "n_b": pdf["n_b"].astype("int32"),
-                    "frechet": fr,
+                    out_col: dp(pad("xs"), pad("ys"), pad("bxs"), pad("bys"), na, nb),
                 }
             )
 
-    out = pairs.mapInPandas(dp, "e long, k long, n_a int, n_b int, frechet long")
+    out = pairs.mapInPandas(run, f"e long, k long, n_a int, n_b int, {out_col} long")
     return out.select(
-        F.col("e").alias(entity), F.col("k").alias(track), "n_a", "n_b", "frechet"
+        F.col("e").alias(entity), F.col("k").alias(track), "n_a", "n_b", out_col
     )
 
 

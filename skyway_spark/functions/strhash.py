@@ -7,7 +7,13 @@ portable integer math, so each operator keeps an exact DuckDB oracle.
 ``text_hash`` is the whole-text fold as a Column (one fold per row is
 cheaper in the JVM than an Arrow round trip); everything else is the
 numpy span fold ``fold``, which the operators' Arrow-batched UDFs call
-once per batch over every span they hash.
+over every span they hash.  ``arrow_udf`` runs each UDF over its batch
+in row slices of at most ``SLICE`` code points, so a Python worker's
+temporaries stay bounded however long the documents are.
+
+Text that is not valid UTF-8 (Spark passes string bytes through
+unchecked) is hashed as Java decodes it: each maximal invalid byte
+sequence reads as one U+FFFD.
 """
 
 from __future__ import annotations
@@ -25,6 +31,9 @@ FP_MOD = 1 << 40
 FP_MULT = 1_048_573
 GRAM_MULT = (1 << 17) - 1  # word n-gram feature hash: h*GRAM_MULT < 2^61
 _JAVA_WS = np.array([9, 10, 11, 12, 13, 32], np.uint64)  # Java regex \s
+# code points (or list values) hashed in one numpy pass; each pass makes
+# several tens of bytes of temporaries per code point
+SLICE = 1 << 20
 
 
 def text_hash(col: Column) -> Column:
@@ -56,16 +65,23 @@ def codes(strings: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(code points, row offsets, valid) of a string batch: all rows'
     code points back to back as uint64, from one UTF-32 encode; row i is
     ``cp[offs[i]:offs[i+1]]`` and a null row is empty."""
-    if isinstance(strings, pa.ChunkedArray):
-        strings = strings.combine_chunks()
     s = pc.fill_null(strings, "")
     offs = row_offsets(_np(pc.utf8_length(s)))
     if len(s) == 0:
         return np.zeros(0, np.uint64), offs, np.zeros(0, bool)
     wide = np.int64 if pa.types.is_large_string(s.type) else np.int32
-    lo, hi = np.frombuffer(s.buffers()[1], wide)[[s.offset, s.offset + len(s)]]
-    raw = str(memoryview(s.buffers()[2] or b"")[lo:hi], "utf-8").encode("utf-32-le")
-    return np.frombuffer(raw, np.uint32).astype(np.uint64), offs, _np(strings.is_valid())
+    o = np.frombuffer(s.buffers()[1], wide)[s.offset : s.offset + len(s) + 1]
+    buf = memoryview(s.buffers()[2] or b"")
+    try:
+        s.validate(full=True)  # every row on its own is valid UTF-8
+        text = str(buf[o[0] : o[-1]], "utf-8")
+    except pa.ArrowInvalid:
+        # decode row by row, so no invalid sequence spans two rows, and
+        # take the offsets from the decoded rows
+        parts = [str(buf[a:b], "utf-8", "replace") for a, b in zip(o[:-1], o[1:])]
+        offs, text = row_offsets([len(t) for t in parts]), "".join(parts)
+    cp = np.frombuffer(text.encode("utf-32-le"), np.uint32).astype(np.uint64)
+    return cp, offs, _np(strings.is_valid())
 
 
 def _powers(base: int, n: int) -> tuple[np.ndarray, np.ndarray]:
@@ -111,7 +127,9 @@ def tokens(cp, offs, valid, java_ws: bool = False):
         has, solid = first <= last, np.r_[solid, 0]
         lo = np.where(has, solid[first], lo)
         hi = np.where(has, solid[last] + 1, lo)
-        inside = np.cumsum(np.bincount(lo, minlength=len(cp) + 1) - np.bincount(hi, minlength=len(cp) + 1))
+        inside = np.cumsum(
+            np.bincount(lo, minlength=len(cp) + 1) - np.bincount(hi, minlength=len(cp) + 1)
+        )
         sep = np.isin(cp, _JAVA_WS) & (inside[:-1] > 0)
         prev, nxt = np.r_[False, sep[:-1]], np.r_[sep[1:], False]
         prev[lo[has]] = nxt[hi[has] - 1] = False  # runs stop at row edges
@@ -138,26 +156,20 @@ def token_hashes(texts: pa.Array, java_ws: bool = False):
 
 
 def distinct(values, counts, sort: bool = False) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row distinct of hashes in [0, 2^44): first occurrences in
-    order (``array_distinct``) or, with ``sort``, ascending.  Returns
+    """Per-row distinct values: first occurrences in order
+    (``array_distinct``) or, with ``sort``, ascending.  Returns
     (values, counts)."""
-    if len(counts) >= 1 << 20:  # the row index must fit the key's top 20 bits
-        h = len(counts) // 2
-        cut = int(np.sum(counts[:h]))
-        a, b = distinct(values[:cut], counts[:h], sort), distinct(values[cut:], counts[h:], sort)
-        return np.r_[a[0], b[0]], np.r_[a[1], b[1]]
     row = rows(counts)[0]
     v = np.asarray(values, np.int64)
-    _, first = np.unique((row.astype(np.uint64) << np.uint64(44)) | v.astype(np.uint64), return_index=True)
-    first = first if sort else np.sort(first)
+    order = np.lexsort((v, row))  # stable: equal values keep their order
+    new = (np.diff(row[order], prepend=-1) != 0) | (np.diff(v[order], prepend=0) != 0)
+    first = order[new] if sort else np.sort(order[new])
     return v[first], np.bincount(row[first], minlength=len(counts))
 
 
 def list_values(arr: pa.Array):
     """(values, row offsets, row valid, value valid) of a list<long>
     batch; a null row is empty and a null value reads as 0."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
     flat = arr.flatten()
     return (
         _np(pc.fill_null(flat, 0)).astype(np.int64),
@@ -170,6 +182,32 @@ def list_values(arr: pa.Array):
 def list_array(values, counts, valid=None, value_valid=None) -> pa.Array:
     """list<long> batch from flat values and per-row counts; rows with
     ``valid`` False and values with ``value_valid`` False are null."""
-    vals = pa.array(np.asarray(values, np.int64), mask=None if value_valid is None else ~np.asarray(value_valid))
+    value_mask = None if value_valid is None else ~np.asarray(value_valid)
+    vals = pa.array(np.asarray(values, np.int64), mask=value_mask)
     mask = None if valid is None else pa.array(~np.asarray(valid))
-    return pa.ListArray.from_arrays(pa.array(row_offsets(counts).astype(np.int32)), vals, mask=mask)
+    offsets = pa.array(row_offsets(counts).astype(np.int32))
+    return pa.ListArray.from_arrays(offsets, vals, mask=mask)
+
+
+def slices(arr: pa.Array):
+    """(first row, row slice) of a string or list batch, cut where the
+    running count of code points (or list values) crosses a multiple of
+    ``SLICE``: a slice holds under SLICE of them plus its last row."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    is_list = pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)
+    size = _np(pc.fill_null(pc.list_value_length(arr) if is_list else pc.utf8_length(arr), 0))
+    before = np.cumsum(size, dtype=np.int64) - size
+    cuts = np.r_[0, np.flatnonzero(np.diff(before // SLICE)) + 1, len(arr)]
+    for a, b in zip(cuts[:-1], cuts[1:]):
+        yield int(a), arr.slice(a, b - a)
+
+
+def arrow_udf(fn, return_type: str):
+    """``F.arrow_udf`` of ``fn`` (an Arrow batch to an Arrow array of the
+    same length), run slice by slice; the results are concatenated."""
+
+    def run(arr: pa.Array) -> pa.Array:
+        return pa.concat_arrays([fn(part) for _, part in slices(arr)])
+
+    return F.arrow_udf(run, return_type)

@@ -23,12 +23,14 @@ layout and probe results carry an EXACT DuckDB oracle:
   that is overflow-safe to OR/compare in every engine's signed int64).
 
 One engine: ``_window_positions`` computes a batch's (windows, k) bit
-positions in numpy, and both sides run it in Arrow-batched
-``mapInPandas``.  The build collapses positions to (word_idx, bits)
-with a map-side-combined bit_or — at most m/62 rows — and collects the
-word array; the probe gathers each batch's positions against the
-broadcast array in one shot: no join and no shuffle on the corpus
-side.  A Column probe over a literal array ran 7-20x slower at every
+positions in numpy, one code-point slice at a time, and both sides run
+it in Arrow-batched ``mapInPandas``.  The text arrives as bytes, so
+text that is not valid UTF-8 reaches the kernel, which reads each
+invalid sequence as U+FFFD.  The build collapses positions to
+(word_idx, bits) with a map-side-combined bit_or — at most m/62 rows —
+and collects the word array; the probe gathers each slice's positions
+against the broadcast array in one shot: no join and no shuffle on the
+corpus side.  A Column probe over a literal array ran 7-20x slower at every
 filter size measured (ROADMAP).
 
 No reference counterpart (skyway has no membership structures;
@@ -52,36 +54,38 @@ WORD_BITS = 62  # overflow-safe signed-int64 bit packing
 DEFAULT_M_BITS = WORD_BITS * 1024  # 63,488 bits / 1024 words (8 KB)
 
 
-def _window_positions(
-    texts: pa.Array, n: int, k: int, m_bits: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """(row, (windows, k) int64 bit positions) of the n-token windows of
-    a text batch, tokenized exactly as Spark's ``split(trim(text),
-    '\\s+')``; a window's hash is the fold of its tokens joined by one
-    U+0020."""
-    cp, offs, valid = strhash.codes(texts)
-    starts, ends, ntok = strhash.tokens(cp, offs, valid, java_ws=True)
-    # keep token code points plus the first code point of each separator
-    # run, as U+0020: every window becomes one span of the rebuilt batch
-    row, i = strhash.rows(ntok)
-    gaps = ends[i < ntok[row] - 1]
-    keep = np.cumsum(
-        np.bincount(starts, minlength=len(cp) + 1) - np.bincount(ends, minlength=len(cp) + 1)
-    )[:-1] > 0
-    keep[gaps] = True
-    joined = cp.copy()
-    joined[gaps] = 32
-    at = np.r_[0, np.cumsum(keep)]
-    toffs = strhash.row_offsets(ntok)
-    nw = np.maximum(ntok - (n - 1), 0)
-    row, i = strhash.rows(nw)
-    first = toffs[row] + i
-    g = strhash.fold(joined[keep], at[offs], at[starts[first]], at[ends[first + n - 1]])
-    r = g % PRIME
-    h1 = (r * _A1 + _B1) % PRIME
-    h2 = (r * _A2 + _B2) % PRIME
-    # values < 2^31 * k: no int64 overflow
-    return row, (h1[:, None] + np.arange(k, dtype=np.int64) * h2[:, None]) % m_bits
+def _window_positions(pdf: pd.DataFrame, n: int, k: int, m_bits: int):
+    """(batch row, (windows, k) int64 bit positions) of the n-token
+    windows of each row slice of a batch whose ``__t`` holds the text as
+    bytes, tokenized exactly as Spark's ``split(trim(text), '\\s+')``;
+    a window's hash is the fold of its tokens joined by one U+0020."""
+    texts = pa.array(pdf["__t"], pa.binary()).view(pa.string())
+    for start, part in strhash.slices(texts):
+        cp, offs, valid = strhash.codes(part)
+        starts, ends, ntok = strhash.tokens(cp, offs, valid, java_ws=True)
+        # keep token code points plus the first code point of each
+        # separator run, as U+0020: every window becomes one span of the
+        # rebuilt batch
+        row, i = strhash.rows(ntok)
+        gaps = ends[i < ntok[row] - 1]
+        size = len(cp) + 1
+        keep = np.cumsum(np.bincount(starts, minlength=size) - np.bincount(ends, minlength=size))
+        keep = keep[:-1] > 0
+        keep[gaps] = True
+        joined = cp.copy()
+        joined[gaps] = 32
+        at = np.r_[0, np.cumsum(keep)]
+        toffs = strhash.row_offsets(ntok)
+        nw = np.maximum(ntok - (n - 1), 0)
+        row, i = strhash.rows(nw)
+        first = toffs[row] + i
+        g = strhash.fold(joined[keep], at[offs], at[starts[first]], at[ends[first + n - 1]])
+        r = g % PRIME
+        h1 = (r * _A1 + _B1) % PRIME
+        h2 = (r * _A2 + _B2) % PRIME
+        # values < 2^31 * k: no int64 overflow
+        probes = h1[:, None] + np.arange(k, dtype=np.int64) * h2[:, None]
+        yield row + start, probes % m_bits
 
 
 def build_bloom(
@@ -102,12 +106,14 @@ def build_bloom(
     def positions(batches):
         for pdf in batches:
             # distinct per batch: at most m_bits rows per batch
-            pos = np.unique(_window_positions(pa.array(pdf["__t"], pa.string()), n, k, m_bits)[1])
+            pos = np.unique(
+                np.concatenate([np.unique(p) for _, p in _window_positions(pdf, n, k, m_bits)])
+            )
             yield pd.DataFrame(
                 {"w": pos // WORD_BITS, "b": np.left_shift(1, pos % WORD_BITS)}
             )
 
-    pos = bench.select(F.col(text_col).alias("__t")).mapInPandas(
+    pos = bench.select(F.col(text_col).cast("binary").alias("__t")).mapInPandas(
         positions, "w long, b long"
     )
     sparse = {
@@ -147,17 +153,17 @@ def bloom_contamination(
     def probe(batches):
         words = bc.value
         for pdf in batches:
-            row, pos = _window_positions(pa.array(pdf["__t"], pa.string()), n, k, m_bits)
-            hit = (((words[pos // WORD_BITS] >> (pos % WORD_BITS)) & 1) == 1).all(axis=1)
+            n_windows = np.zeros(len(pdf), np.int32)
+            n_flagged = np.zeros(len(pdf), np.int32)
+            for row, pos in _window_positions(pdf, n, k, m_bits):
+                hit = (((words[pos // WORD_BITS] >> (pos % WORD_BITS)) & 1) == 1).all(axis=1)
+                n_windows += np.bincount(row, minlength=len(pdf)).astype(np.int32)
+                n_flagged += np.bincount(row[hit], minlength=len(pdf)).astype(np.int32)
             yield pd.DataFrame(
-                {
-                    "doc_id": pdf["__id"],
-                    "n_windows": np.bincount(row, minlength=len(pdf)).astype(np.int32),
-                    "n_flagged": np.bincount(row[hit], minlength=len(pdf)).astype(np.int32),
-                }
+                {"doc_id": pdf["__id"], "n_windows": n_windows, "n_flagged": n_flagged}
             )
 
     flagged = docs.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
+        F.col(id_col).alias("__id"), F.col(text_col).cast("binary").alias("__t")
     ).mapInPandas(probe, "doc_id long, n_windows int, n_flagged int")
     return flagged.withColumn("contaminated", F.col("n_flagged") > 0)

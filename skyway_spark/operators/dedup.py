@@ -38,22 +38,31 @@ PRIME = 2_147_483_647  # 2^31-1 for minhash permutations
 MINHASH_PERMS = [(2 * i + 1, 7919 * (i + 1) % PRIME) for i in range(16)]
 
 
+def _char_grams(texts: pa.Array, n: int) -> pa.Array:
+    cp, offs, valid = strhash.codes(texts)
+    per_row = np.maximum(np.diff(offs) - (n - 1), 1)
+    row, i = strhash.rows(per_row)
+    starts = offs[row] + i
+    h = strhash.fold(cp, offs, starts, np.minimum(starts + n, offs[row + 1]))
+    h, per_row = strhash.distinct(h, per_row)
+    return strhash.list_array(h, per_row, value_valid=np.repeat(valid, per_row))
+
+
 def ngram_hashes(col: Column, n: int = 3) -> Column:
     """Distinct char n-gram hashes (array<long>, first-occurrence
     order): the portable fold of every n code points.  A text shorter
     than n is one gram, the empty text hashes to [0] and a null text
     gives [null]."""
+    return strhash.arrow_udf(lambda t: _char_grams(t, n), "array<bigint>")(col)
 
-    def grams(texts: pa.Array) -> pa.Array:
-        cp, offs, valid = strhash.codes(texts)
-        per_row = np.maximum(np.diff(offs) - (n - 1), 1)
-        row, i = strhash.rows(per_row)
-        starts = offs[row] + i
-        h = strhash.fold(cp, offs, starts, np.minimum(starts + n, offs[row + 1]))
-        h, per_row = strhash.distinct(h, per_row)
-        return strhash.list_array(h, per_row, value_valid=np.repeat(valid, per_row))
 
-    return F.arrow_udf(grams, "array<bigint>")(col)
+def _word_shingles(texts: pa.Array, n: int) -> pa.Array:
+    th, toffs, valid = strhash.token_hashes(texts)
+    per_row = np.where(valid, np.maximum(np.diff(toffs) - (n - 1), 1), 0)
+    row, j = strhash.rows(per_row)
+    starts = toffs[row] + j
+    h, per_row = strhash.distinct(strhash.fold(th, toffs, starts, starts + n), per_row)
+    return strhash.list_array(h, per_row, valid=valid)
 
 
 def word_shingle_hashes(col: Column, n: int = 3) -> Column:
@@ -66,16 +75,7 @@ def word_shingle_hashes(col: Column, n: int = 3) -> Column:
     base Jaccard, which defeats LSH banding (every bucket explodes);
     word shingles keep unrelated pairs near zero while same-length
     edits stay ~1."""
-
-    def shingles(texts: pa.Array) -> pa.Array:
-        th, toffs, valid = strhash.token_hashes(texts)
-        per_row = np.where(valid, np.maximum(np.diff(toffs) - (n - 1), 1), 0)
-        row, j = strhash.rows(per_row)
-        starts = toffs[row] + j
-        h, per_row = strhash.distinct(strhash.fold(th, toffs, starts, starts + n), per_row)
-        return strhash.list_array(h, per_row, valid=valid)
-
-    return F.arrow_udf(shingles, "array<bigint>")(col)
+    return strhash.arrow_udf(lambda t: _word_shingles(t, n), "array<bigint>")(col)
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -125,29 +125,30 @@ def minhash_signature(
     col: Column, n: int = 3, perms=MINHASH_PERMS, unit: str = "char"
 ) -> Column:
     """array<long> of len(perms) minhash values over n-gram hashes
-    (char n-grams or word shingles) — Arrow-batched, see
+    (char n-grams or word shingles) — one Arrow-batched UDF that hashes
+    the grams and takes their minima slice by slice, see
     minhash_from_grams."""
-    grams = ngram_hashes(col, n) if unit == "char" else word_shingle_hashes(col, n)
-    return minhash_from_grams(grams, perms)
+    grams = _char_grams if unit == "char" else _word_shingles
+    return strhash.arrow_udf(lambda t: _signature(grams(t, n), perms), "array<bigint>")(col)
+
+
+def _signature(arr: pa.Array, perms) -> pa.Array:
+    g, offs, valid, gvalid = strhash.list_values(arr)
+    counts = np.bincount(strhash.rows(np.diff(offs))[0][gvalid], minlength=len(valid))
+    g, has = g[gvalid], counts > 0
+    at = strhash.row_offsets(counts)[:-1][has]
+    sig = np.full((len(valid), len(perms)), PRIME, np.int64)
+    for j, (a, b) in enumerate(perms if len(g) else []):
+        sig[has, j] = np.minimum.reduceat((g * a + b) % PRIME, at)
+    return strhash.list_array(sig[valid].ravel(), np.where(valid, len(perms), 0), valid)
 
 
 def minhash_from_grams(grams: Column, perms=MINHASH_PERMS) -> Column:
     """Per-row minima of (g*a_i + b_i) % PRIME over the gram hashes,
-    one numpy pass per permutation over the whole Arrow batch.  Null
+    one numpy pass per permutation over each slice of the batch.  Null
     grams are skipped, so no grams gives len(perms) x PRIME; a null
     array gives null."""
-
-    def signature(arr: pa.Array) -> pa.Array:
-        g, offs, valid, gvalid = strhash.list_values(arr)
-        counts = np.bincount(strhash.rows(np.diff(offs))[0][gvalid], minlength=len(valid))
-        g, has = g[gvalid], counts > 0
-        at = strhash.row_offsets(counts)[:-1][has]
-        sig = np.full((len(valid), len(perms)), PRIME, np.int64)
-        for j, (a, b) in enumerate(perms if len(g) else []):
-            sig[has, j] = np.minimum.reduceat((g * a + b) % PRIME, at)
-        return strhash.list_array(sig[valid].ravel(), np.where(valid, len(perms), 0), valid)
-
-    return F.arrow_udf(signature, "array<bigint>")(grams)
+    return strhash.arrow_udf(lambda g: _signature(g, perms), "array<bigint>")(grams)
 
 
 def _banded(sigs: DataFrame, bands: int) -> DataFrame:
@@ -165,7 +166,7 @@ def _banded(sigs: DataFrame, bands: int) -> DataFrame:
         return strhash.list_array(h, per_row, valid)
 
     id_col, sig_col = sigs.columns
-    bh = F.arrow_udf(band, "array<bigint>")(F.col(sig_col))
+    bh = strhash.arrow_udf(band, "array<bigint>")(F.col(sig_col))
     # _outer: a plain posexplode gets an inferred size(bh) > 0 filter
     # below the Generate, which evaluates the UDF chain a second time
     out = sigs.select(F.col(id_col).alias("id"), F.posexplode_outer(bh).alias("band", "bh"))
@@ -188,18 +189,13 @@ def minhash_lsh_pairs(
     word_shingle_hashes for why char grams defeat banding)."""
     from pyspark.sql import Window
 
-    gramf = ngram_hashes if unit == "char" else word_shingle_hashes
-
-    def grams_of(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("__id"), gramf(F.col(text_col), n).alias("__grams")
-        )
-
     # band on (band, bucket-hash, id) ONLY — the gram arrays (~10^2
     # longs/doc) never enter the banding shuffle or the self-join. The
     # max_bucket window count rides the same light exchange, and the
     # two self-join sides share it (ReusedExchange).
-    sig = grams_of(docs).select("__id", minhash_from_grams(F.col("__grams")))
+    sig = docs.select(
+        F.col(id_col).alias("__id"), minhash_signature(F.col(text_col), n, unit=unit)
+    )
     w = Window.partitionBy("band", "bh")
     banded = _banded(sig, bands).withColumn("__bn", F.count(F.lit(1)).over(w))
     banded = banded.where(F.col("__bn") <= max_bucket)
@@ -226,11 +222,12 @@ def minhash_lsh_pairs(
         .union(cand.select(F.col("id_b").alias("__cid")))
         .distinct()
     )
-    gcand = grams_of(
-        docs.join(
-            cand_ids, F.col(id_col) == F.col("__cid"), "semi"
-        )
-    ).localCheckpoint(eager=True)
+    gramf = ngram_hashes if unit == "char" else word_shingle_hashes
+    gcand = (
+        docs.join(cand_ids, F.col(id_col) == F.col("__cid"), "semi")
+        .select(F.col(id_col).alias("__id"), gramf(F.col(text_col), n).alias("__grams"))
+        .localCheckpoint(eager=True)
+    )
     ga = gcand.select(F.col("__id").alias("id_a"), F.col("__grams").alias("__ga"))
     gb = gcand.select(F.col("__id").alias("id_b"), F.col("__grams").alias("__gb"))
     withg = gb.join(ga.join(cand, "id_a"), "id_b")
@@ -289,7 +286,7 @@ def simhash(col: Column, bits: int = 32) -> Column:
             sig[has] = (won << np.arange(bits, dtype=np.int64)).sum(axis=1)
         return pa.array(sig, mask=~valid)
 
-    return F.arrow_udf(sign, "bigint")(col)
+    return strhash.arrow_udf(sign, "bigint")(col)
 
 
 def simhash_near_dup_pairs(
@@ -449,7 +446,7 @@ def _winnow(docs: DataFrame, k: int, w: int, id_col: str, text_col: str) -> Data
             names=["nk", "nw", "fps", "chk"],
         )
 
-    udf = F.arrow_udf(winnow, "nk int, nw int, fps array<bigint>, chk bigint")
+    udf = strhash.arrow_udf(winnow, "nk int, nw int, fps array<bigint>, chk bigint")
     return docs.select(F.col(id_col), udf(F.lower(F.col(text_col))).alias("__w"))
 
 
@@ -496,7 +493,9 @@ def winnow_fp_table(
     fingerprint-based dedup and decontamination."""
     # _outer: a plain explode gets an inferred size(fps) > 0 filter
     # below the Generate, which evaluates the UDF a second time
-    fps = _winnow(docs, k, w, id_col, text_col).select(id_col, F.explode_outer("__w.fps").alias("fp"))
+    fps = _winnow(docs, k, w, id_col, text_col).select(
+        id_col, F.explode_outer("__w.fps").alias("fp")
+    )
     return fps.where(F.col("fp").isNotNull())
 
 
@@ -895,7 +894,11 @@ def incremental_dedup_census(
 
     def prep(df, with_text=False):
         t = F.col(text_col)
-        cols = [F.col(id_col).alias("id"), word_shingle_hashes(t, n).alias("g"), text_hash(t).alias("h")]
+        cols = [
+            F.col(id_col).alias("id"),
+            word_shingle_hashes(t, n).alias("g"),
+            text_hash(t).alias("h"),
+        ]
         return df.select(*cols, *([t.alias("txt")] if with_text else []))
 
     def banded(df):

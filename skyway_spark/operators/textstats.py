@@ -104,7 +104,7 @@ def fingerprint(col: Column) -> Column:
         h = strhash.fold(th, toffs, toffs[:-1], toffs[1:], FP_MULT, FP_MOD)
         return pa.array(h, mask=~valid)
 
-    return F.arrow_udf(fp, "bigint")(col)
+    return strhash.arrow_udf(fp, "bigint")(col)
 
 
 def ngrams(col: Column, n: int) -> Column:
@@ -569,7 +569,7 @@ def hash_feature_score(
             names=["n_grams", "score"],
         )
 
-    udf = F.arrow_udf(score, "n_grams int, score bigint")
+    udf = strhash.arrow_udf(score, "n_grams int, score bigint")
     return docs.select(F.col(id_col), udf(F.col(text_col)).alias("__s")).select(
         F.col(id_col),
         F.col("__s.n_grams").alias("n_grams"),

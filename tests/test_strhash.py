@@ -94,10 +94,25 @@ def test_list_round_trip():
     assert valid.tolist() == [False, True] and vvalid.tolist() == [True]
 
 
-def test_distinct_splits_batches_beyond_the_row_key():
-    n = (1 << 20) + 3
-    vals = np.repeat(np.arange(n, dtype=np.int64) % 7, 2)
-    vals[1::2] = 9  # each row is [r % 7, 9]
-    v, c = strhash.distinct(np.r_[vals, 9, 9], np.r_[np.full(n, 2), 2])
-    assert c.tolist() == [2] * n + [1]
-    assert v[:4].tolist() == [0, 9, 1, 9] and v[-3:].tolist() == [(n - 1) % 7, 9, 9]
+def test_invalid_utf8_reads_as_replacement_characters():
+    # the cut sequence of row 1 and the continuation byte of row 2 form a
+    # valid character only across the row boundary
+    raw = [b"ab", b"c\xe2\x82", b"\x82x", None, b"caf\xc3\xa9", b"\xff"]
+    arr = pa.array(raw, pa.binary()).view(pa.string())
+    for a, part in ((arr, raw), (arr.slice(1), raw[1:])):
+        cp, offs, valid = strhash.codes(a)
+        want = [(b or b"").decode("utf-8", "replace") for b in part]
+        assert ["".join(map(chr, cp[offs[i] : offs[i + 1]])) for i in range(len(a))] == want
+        assert valid.tolist() == [b is not None for b in part]
+
+
+def test_slices_bound_code_points_and_keep_rows(monkeypatch):
+    monkeypatch.setattr(strhash, "SLICE", 10)
+    arr = pa.array(TEXTS, pa.string())
+    parts = list(strhash.slices(arr))
+    assert len(parts) > 1 and sum((p.to_pylist() for _, p in parts), []) == TEXTS
+    for start, p in parts:
+        assert p.to_pylist() == TEXTS[start : start + len(p)]
+        assert sum(map(len, [t or "" for t in TEXTS[start : start + len(p) - 1]])) < 10
+    lists = strhash.list_array(range(12), [5, 0, 3, 4, 0])
+    assert [(s, len(p)) for s, p in strhash.slices(lists)] == [(0, 4), (4, 1)]

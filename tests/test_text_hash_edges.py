@@ -7,11 +7,14 @@ document fingerprint, winnowing, the hashed n-gram scorer and the
 Bloom window count — run over texts with every whitespace and
 code-point shape Spark's string functions treat specially: tab,
 U+000B, U+000C, NBSP, U+2028, emoji, combining marks, leading and
-trailing spaces, runs of spaces and one 10 000-character token.
+trailing spaces, runs of spaces and one 10 000-character token —
+plus text that is not valid UTF-8, and one Arrow batch longer than
+the kernel's code-point slice.
 """
 
 from __future__ import annotations
 
+import random
 import re
 
 import pytest
@@ -39,6 +42,13 @@ TEXTS = [
     "q" * 10_000 + " tail",
     "😀😀😀 😀 x",
     "The Quick brown fox jumps over the lazy dog twice over the lazy dog",
+]
+# bytes Spark passes through as a string unchecked: a stray byte, a cut
+# 3-byte sequence, a bad continuation, a cut 4-byte emoji, lone
+# continuations, and a cut sequence at the very end
+INVALID_UTF8 = [
+    b"a\xffb cd", b"ok \xe2\x82 x y", b"\xc3( z w q", b"\xf0\x9f\x98 end",
+    b"caf\xc3\xa9 \x80\x80 y", b"tail \xe2",
 ]
 
 
@@ -225,3 +235,62 @@ def test_bloom_window_counts_match_python(docs):
     # every document is in the filter, so every window is flagged
     want = {i: (max(len(java_tokens(s)) - 1, 0),) * 2 for i, s in enumerate(TEXTS)}
     assert got == want
+
+
+def test_invalid_utf8_hashes_as_replacement_characters(spark):
+    # each maximal invalid byte sequence hashes as one U+FFFD, as Java
+    # decodes it, and the rows after it keep their own code points
+    raw = spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in enumerate(INVALID_UTF8)], "doc_id long, b binary"
+    ).coalesce(1)
+    df = raw.select("doc_id", F.col("b").cast("string").alias("text"))
+    texts = [b.decode("utf-8", "replace") for b in INVALID_UTF8]
+    t = F.col("text")
+    got = _by_id(
+        df.select(
+            "doc_id",
+            dedup.ngram_hashes(t).alias("ng"),
+            dedup.word_shingle_hashes(t).alias("ws"),
+            dedup.minhash_signature(t).alias("mh"),
+            dedup.simhash(t).alias("sh"),
+            textstats.fingerprint(t).alias("fp"),
+        ),
+        "ng", "ws", "mh", "sh", "fp",
+    )
+    for i, s in enumerate(texts):
+        ng = py_ngram_hashes(s)
+        assert got[i] == (ng, py_word_shingles(s), py_minhash(ng), py_simhash(s, 32),
+                          py_fingerprint(s)), (i, s)
+    win = _by_id(
+        dedup.winnow_fingerprints(df, k=3, w=2), "n_kgrams", "n_windows", "n_fps", "fp_chk"
+    )
+    assert win == {i: py_winnow(s, 3, 2) for i, s in enumerate(texts)}
+    hfs = _by_id(textstats.hash_feature_score(df, n=1), "n_grams", "score")
+    assert hfs == {i: py_hash_score(s, 1) for i, s in enumerate(texts)}
+    words = bloom.build_bloom(df, n=1, k=2, m_bits=62 * 8)
+    blm = _by_id(bloom.bloom_contamination(df, words, n=1, k=2, m_bits=62 * 8), "n_windows")
+    assert blm == {i: (len(java_tokens(s)),) for i, s in enumerate(texts)}
+
+
+def test_batch_beyond_one_slice_matches_python(spark):
+    # one Arrow batch of more than SLICE code points runs in several
+    # slices; every row must come out as if hashed alone
+    from skyway_spark.functions.strhash import SLICE
+
+    rng = random.Random(5)
+    vocab = ["".join(rng.choice("abcdefgh😀") for _ in range(rng.randrange(1, 9)))
+             for _ in range(300)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(1800)) for _ in range(130)]
+    assert sum(map(len, texts)) > SLICE
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string").coalesce(1)
+    t = F.col("text")
+    got = _by_id(
+        df.select("doc_id", dedup.minhash_signature(t).alias("mh"), dedup.simhash(t).alias("sh")),
+        "mh", "sh",
+    )
+    assert got == {
+        i: (py_minhash(py_ngram_hashes(s)), py_simhash(s, 32)) for i, s in enumerate(texts)
+    }
+    words = bloom.build_bloom(df, n=2, k=2, m_bits=62 * 8)
+    blm = _by_id(bloom.bloom_contamination(df, words, n=2, k=2, m_bits=62 * 8), "n_windows")
+    assert blm == {i: (len(java_tokens(s)) - 1,) for i, s in enumerate(texts)}

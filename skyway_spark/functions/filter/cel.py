@@ -22,7 +22,7 @@ Two backends over one AST:
    constructs outside the Column subset — ``timestamp()/duration()``
    and their accessor methods (getFullYear/getMonth/...), ``bytes()``,
    ``dyn()``, macros over dynamically-typed receivers — evaluate via a
-   vectorized Arrow-batch ``mapInPandas`` boundary (never per-row
+   vectorized Arrow-batch ``mapInArrow`` boundary (never per-row
    ``F.udf``).  The tree-walk happens per element inside the Arrow
    batch, mirroring cel-interpreter's own per-element evaluation.
 
@@ -1191,37 +1191,10 @@ class CompiledCelFilter:
         return df.where(F.coalesce(self.predicate, F.lit(False)))
 
 
-def _pd_to_cel(v, is_map: bool):
-    """Arrow batch value -> CEL value. Maps arrive as list-of-(k, v)
-    tuples through Arrow; nullable ints may arrive as float NaN."""
-    import numpy as np
-    import pandas as pd
-
-    if v is None or (isinstance(v, float) and _math.isnan(v)):
-        return None
-    if is_map:
-        # Spark->Arrow->pandas yields dicts for MapType by default and
-        # list-of-(k, v) tuples under some Arrow configs; dict() maps
-        # both to a plain dict.
-        return dict(v)
-    if isinstance(v, np.integer):
-        return int(v)
-    if isinstance(v, np.floating):
-        f = float(v)
-        return int(f) if f.is_integer() else f
-    if isinstance(v, np.bool_):
-        return bool(v)
-    if isinstance(v, np.ndarray):
-        return [_pd_to_cel(x, False) for x in v]
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    return v
-
-
 class InterpretedCelFilter:
     """Arrow-batch fallback for programs outside the Column subset.
 
-    The predicate evaluates per element inside mapInPandas batches —
+    The predicate evaluates per element inside mapInArrow batches —
     vectorized at the transfer boundary (one Arrow batch per ~10k rows,
     no per-row Python UDF), tree-walked per element exactly like the
     reference's cel-interpreter. Eval errors drop the element with one
@@ -1233,7 +1206,7 @@ class InterpretedCelFilter:
         self.ast = ast
 
     def apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
+        import pyarrow as pa
 
         ast = self.ast
         avail = [c for c in CONTEXT_VARS if c in df.columns]
@@ -1252,15 +1225,20 @@ class InterpretedCelFilter:
         map_flags = [is_map.get(c, False) for c in avail]
 
         def run(batches):
-            for pdf in batches:
+            for batch in batches:
                 keep = []
                 errs = 0
-                cols = [pdf[c] for c in avail]
-                for i in range(len(pdf)):
-                    ctx = {
-                        name: _pd_to_cel(col.iloc[i], mf)
-                        for name, col, mf in zip(avail, cols, map_flags)
-                    }
+                # Python values straight from Arrow: int64 stays exact
+                # (pandas would carry a nullable one as float64); a map
+                # arrives as (key, value) pairs
+                cols = [
+                    [None if v is None else dict(v) for v in batch.column(c).to_pylist()]
+                    if mf
+                    else batch.column(c).to_pylist()
+                    for c, mf in zip(avail, map_flags)
+                ]
+                for i in range(batch.num_rows):
+                    ctx = {name: col[i] for name, col in zip(avail, cols)}
                     try:
                         v = _cel_eval(ast, ctx)
                     except _CelError:
@@ -1278,9 +1256,9 @@ class InterpretedCelFilter:
                         f"CEL: dropped {errs} element(s) on eval error",
                         stacklevel=2,
                     )
-                yield pdf[pd.Series(keep, index=pdf.index, dtype=bool)]
+                yield batch.filter(pa.array(keep, pa.bool_()))
 
-        return df.mapInPandas(run, df.schema)
+        return df.mapInArrow(run, df.schema)
 
 
 def compile_cel(text: str):

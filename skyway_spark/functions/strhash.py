@@ -46,6 +46,13 @@ def text_hash(col: Column) -> Column:
     return F.when(F.length(col) > 0, folded).otherwise(F.lit(0).cast("long"))
 
 
+def words(col: Column) -> Column:
+    """Whitespace tokens ``split(trim(s), '\\s+')`` as an array<string>
+    Column: the Column twin of ``tokens(..., java_ws=True)``, which
+    states the rule."""
+    return F.split(F.trim(col), r"\s+")
+
+
 def _np(arr: pa.Array) -> np.ndarray:
     return arr.to_numpy(zero_copy_only=False)
 

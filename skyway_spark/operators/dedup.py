@@ -19,7 +19,7 @@ Scale notes:
 - SimHash: 64-bit signature from token-hash bit voting; near-dups =
   identical band of high bits (hamming-adjacent candidates via 4-band
   split);
-- embedding near-dup: cosine over array<float> via zip_with/aggregate.
+- embedding near-dup: cosine over array<float>, the ``functions/vec`` fold.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from skyway_spark.functions import strhash
+from skyway_spark.functions import strhash, vec
 from skyway_spark.functions.strhash import FP_MOD, FP_MULT, HASH_MOD, text_hash  # noqa: F401
 
 PRIME = 2_147_483_647  # 2^31-1 for minhash permutations
@@ -333,13 +333,6 @@ def simhash_near_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, v: s + v * v))
-    return dot / (na * nb)
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -360,7 +353,7 @@ def embedding_near_dup_pairs(
         a.join(b, "__bk")
         .where(F.col("id_a") < F.col("id_b"))
         .select(
-            "id_a", "id_b", F.round(cosine_sim(F.col("__va"), F.col("__vb")), 6).alias("cos_sim")
+            "id_a", "id_b", F.round(vec.cosine(F.col("__va"), F.col("__vb")), 6).alias("cos_sim")
         )
         .where(F.col("cos_sim") >= threshold)
     )
@@ -793,7 +786,7 @@ def jaccard_prefix_join(
     """
     toks = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))).alias(
+        F.explode(F.array_distinct(strhash.words(F.col(text_col)))).alias(
             "tok"
         ),
     )

@@ -305,6 +305,25 @@ def _clip_stage(arr, axis: str, c: float, keep_min: bool):
     ).otherwise(empty)
 
 
+def _clip_passes(df: DataFrame, lat0, lat1, lon0, lon1) -> DataFrame:
+    """Clip the OPEN ring ``__r`` to the bbox [lat0, lat1] x [lon0,
+    lon1] in four ``_clip_stage`` passes (left, right, bottom, top) and
+    name the result ``clipped``.  Bounds are floats or per-row Columns;
+    each pass is its own select() (see clip_rings_to_bbox)."""
+    for axis, c, keep_min in (
+        ("lon", lon0, True),
+        ("lon", lon1, False),
+        ("lat", lat0, True),
+        ("lat", lat1, False),
+    ):
+        df = (
+            df.select("*", _clip_stage(F.col("__r"), axis, c, keep_min).alias("__r2"))
+            .drop("__r")
+            .withColumnRenamed("__r2", "__r")
+        )
+    return df.withColumnRenamed("__r", "clipped")
+
+
 def clip_rings_to_bbox(
     polys: DataFrame,
     lat0: float,
@@ -339,16 +358,7 @@ def clip_rings_to_bbox(
         "__r",
         F.expr(f"slice({ring_col}, 1, size({ring_col}) - 1)").cast(_RING_T),
     )
-    for axis, c, keep_min in (
-        ("lon", lon0, True),
-        ("lon", lon1, False),
-        ("lat", lat0, True),
-        ("lat", lat1, False),
-    ):
-        df = df.select(
-            "*", _clip_stage(F.col("__r"), axis, c, keep_min).alias("__r2")
-        ).drop("__r").withColumnRenamed("__r2", "__r")
-    return df.withColumnRenamed("__r", "clipped")
+    return _clip_passes(df, lat0, lat1, lon0, lon1)
 
 
 def ring_fold_area2(arr) -> F.Column:
@@ -416,18 +426,7 @@ def clip_rings_to_grid(polys: DataFrame, res: int, ring_col: str = "ring") -> Da
     lon1 = (F.col("cx") + F.lit(1)) * F.lit(sx) - F.lit(180.0)
     lat1 = F.lit(90.0) - F.col("cy") * F.lit(sy)
     lat0 = F.lit(90.0) - (F.col("cy") + F.lit(1)) * F.lit(sy)
-    for axis, c, keep_min in (
-        ("lon", lon0, True),
-        ("lon", lon1, False),
-        ("lat", lat0, True),
-        ("lat", lat1, False),
-    ):
-        df = (
-            df.select("*", _clip_stage(F.col("__r"), axis, c, keep_min).alias("__r2"))
-            .drop("__r")
-            .withColumnRenamed("__r2", "__r")
-        )
-    return df.withColumnRenamed("__r", "clipped")
+    return _clip_passes(df, lat0, lat1, lon0, lon1)
 
 
 def convex_hulls(

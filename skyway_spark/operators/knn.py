@@ -28,15 +28,14 @@ def radius_candidates(
     ring: int = 1,
     point_id: str = "id",
     query_id: str = "query_id",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Shared cell-cover candidate stage for kNN and range joins.
 
     Returns (query_id, __pid, __plat, __plon, dist_km) for every
     point falling in a ring cell of the query; ``dist_km`` is exact
     haversine but NOT yet filtered to ``radius_km`` (callers apply
-    their own bound). The join is an int64 cell equi-join: shuffle by
-    cell only, or shuffle-free when the query side broadcasts.
+    their own bound). The join is an int64 cell equi-join against the
+    broadcast query side: shuffle-free.
     """
     res = cells.res_for_radius_km(radius_km)
     # latitude rows are radius-safe by res choice (cell height >=
@@ -63,15 +62,13 @@ def radius_candidates(
             )
         ).alias("__cell"),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
     p = points.select(
         F.col(point_id).alias("__pid"),
         F.col("lat").alias("__plat"),
         F.col("lon").alias("__plon"),
         cells.cell_encode(F.col("lat"), F.col("lon"), res).alias("__cell"),
     )
-    return p.join(q, "__cell").withColumn(
+    return p.join(F.broadcast(q), "__cell").withColumn(
         "dist_km",
         haversine_km(F.col("__plat"), F.col("__plon"), F.col("__qlat"), F.col("__qlon")),
     )
@@ -85,7 +82,6 @@ def knn_join(
     ring: int = 1,
     point_id: str = "id",
     query_id: str = "query_id",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """(query_id, point id, dist_km, rank<=k) for neighbors within the
     ring-covered radius.
@@ -95,9 +91,7 @@ def knn_join(
     ``radius_km`` around the query (cell height >= radius, so the 3x3
     ring covers it).
     """
-    cand = radius_candidates(
-        points, queries, radius_km, ring, point_id, query_id, broadcast_queries
-    )
+    cand = radius_candidates(points, queries, radius_km, ring, point_id, query_id)
     w = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("__pid").asc())
     return (
         cand.where(F.col("dist_km") <= radius_km)

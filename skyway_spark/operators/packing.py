@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from skyway_spark.functions import strhash
+
 
 def pack_sequences(
     docs: DataFrame,
@@ -46,7 +48,7 @@ def pack_sequences(
     concat-and-chunk semantics (no padding, no fragmentation loss).
     All integer math: bit-exact on any engine.
     """
-    ntok = F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("long")
+    ntok = F.size(strhash.words(F.col(text_col))).cast("long")
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         ntok.alias("n_tokens"),
@@ -158,7 +160,7 @@ def chunk_windows(
     """
     if stride <= 0 or width <= 0 or stride > width:
         raise ValueError("need 0 < stride <= width")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = strhash.words(F.col(text_col))
     n = F.size(toks)
     # floor(double) is exact here: token counts sit far below 2^53
     n_chunks = F.when(n <= width, F.lit(1)).otherwise(

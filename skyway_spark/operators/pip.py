@@ -161,9 +161,9 @@ INTERIOR_MAX_RES = 18
 
 
 def _corner_verdict(geom: dict, py: np.ndarray, px: np.ndarray) -> np.ndarray:
-    """Exact polygon verdict (inside any outer, not inside any hole)
-    for driver-side sample points — the same even-odd arithmetic as
-    the runtime refine engines."""
+    """Exact polygon verdict (inside any outer, not inside any hole):
+    the pandas refine, and the cover's corner classification on the
+    driver — the same even-odd arithmetic as the jvm refine."""
     in_outer = np.zeros(len(py), dtype=bool)
     for ys, xs in geom["outer"]:
         in_outer |= _ray_cast_batch(py, px, ys, xs)
@@ -385,13 +385,7 @@ def point_in_polygon(
             gi = geom_s.to_numpy()
             for g in np.unique(gi):
                 m = gi == g
-                rings = geoms[int(g)]
-                in_outer = np.zeros(int(m.sum()), dtype=bool)
-                for ys, xs in rings["outer"]:
-                    in_outer |= _ray_cast_batch(py[m], px[m], ys, xs)
-                for ys, xs in rings["hole"]:
-                    in_outer &= ~_ray_cast_batch(py[m], px[m], ys, xs)
-                out[m] = in_outer
+                out[m] = _corner_verdict(geoms[int(g)], py[m], px[m])
             return pd.Series(out)
 
         inside_pred = F.col("__interior") | inside_udf(lat_c, lon_c, F.col("__geom"))

@@ -12,9 +12,8 @@ Scale shape (identical to kNN's candidate stage, shared code):
   * points carry exactly ONE int64 cell each (and ring cells are
     array_distinct), so each qualifying pair is produced exactly once
     — no post-join dedup shuffle,
-  * the join is an int64 equi-join: broadcast when the site side is
-    small (shuffle-free), shuffle-by-cell otherwise — never a cross
-    join,
+  * the join is an int64 equi-join against the broadcast site side
+    (shuffle-free) — never a cross join,
   * exact haversine refines candidates to the true distance band.
 """
 
@@ -32,7 +31,6 @@ def range_join(
     radius_km: float,
     point_id: str = "id",
     site_id: str = "site_id",
-    broadcast_sites: bool = True,
 ) -> DataFrame:
     """All (site_id, point_id, dist_km) pairs within ``radius_km``.
 
@@ -46,7 +44,6 @@ def range_join(
         ring=1,
         point_id=point_id,
         query_id=site_id,
-        broadcast_queries=broadcast_sites,
     )
     return cand.where(F.col("dist_km") <= radius_km).select(
         F.col(site_id),

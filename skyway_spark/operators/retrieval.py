@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from skyway_spark.functions import strhash
+
 K1 = 1.2
 B = 0.75
 
@@ -45,7 +47,7 @@ def bm25_scores(
     terms = sorted(set(query_terms))  # duplicates would double-count
     if not terms:
         raise ValueError("bm25_scores needs at least one query term")
-    tokens = F.split(F.trim(F.col(text_col)), r"\s+")
+    tokens = strhash.words(F.col(text_col))
     base = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(tokens).alias("term"),
         F.size(tokens).alias("dl"),

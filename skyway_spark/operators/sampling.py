@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from skyway_spark.functions import strhash
 from skyway_spark.plans.session import local_frame
 
 PRIME = 2_147_483_647  # 2^31 - 1 (Mersenne), same as the minhash perms
@@ -274,7 +275,7 @@ def greedy_set_cover(
     covered-term table is localCheckpoint-pinned per round (kilobyte
     state, flat lineage).
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = strhash.words(F.col(text_col))
     if ngram == 1:
         term = F.explode(toks)
     else:

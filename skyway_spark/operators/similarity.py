@@ -1,35 +1,44 @@
 """Similarity search over embedding columns (array<float>).
 
 - brute-force cosine top-k: the exact baseline — one narrow pass,
-  dot products via zip_with/aggregate (JVM-side), global top-k via
-  window (single query) or per-query window (query table);
-- LSH-bucketed ANN: random-hyperplane signs -> band buckets ->
-  equi-join candidates -> exact cosine re-rank. The scale path: at
-  10^12 rows the bucket join touches a tiny candidate slice instead
-  of everything. Hyperplanes are seeded/deterministic.
+  dot products and norms are ``functions/vec`` folds (JVM-side),
+  global top-k via one window;
+- LSH-bucketed and IVF ANN: random-hyperplane signs -> band buckets
+  (or nearest-centroid inverted lists) -> candidates. The scale path:
+  at 10^12 rows the bucket join touches a tiny candidate slice instead
+  of everything. Hyperplanes and centroids are seeded/deterministic.
+
+All three top-k operators end in the same exact cosine re-rank,
+``_rerank``.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from skyway_spark.functions import vec
+from skyway_spark.operators.kmeans import _assign, _quantize, kmeans_train
+
 
 def _dot_literal(vec_col: Column, q: list[float]) -> Column:
     """dot(vec, literal query) without a UDF."""
     qcol = F.array(*[F.lit(float(x)) for x in q])
-    return F.aggregate(
-        F.zip_with(vec_col.cast("array<double>"), qcol, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
+    return vec.dot(vec_col.cast("array<double>"), qcol)
 
 
-def _norm(vec_col: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(vec_col.cast("array<double>"), F.lit(0.0), lambda s, v: s + v * v)
-    )
+def _rerank(cand: DataFrame, query: list[float], k: int, id_col: str, vec_col: str) -> DataFrame:
+    """(id, cos_sim, rank) of the k candidates nearest ``query`` by
+    exact cosine, rounded to 6 places; ties broken by id."""
+    qn = math.sqrt(sum(float(x) * float(x) for x in query))
+    norm = vec.norm(F.col(vec_col).cast("array<double>"))
+    sim = _dot_literal(F.col(vec_col), query) / (norm * F.lit(qn))
+    scored = cand.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
+    w = Window.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def cosine_topk(
@@ -41,13 +50,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine to one literal query vector.
     (id, cos_sim, rank). Ties broken by id."""
-    import math
-
-    qn = math.sqrt(sum(float(x) * float(x) for x in query))
-    sim = _dot_literal(F.col(vec_col), query) / (_norm(F.col(vec_col)) * F.lit(qn))
-    scored = emb.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-    w = Window.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rerank(emb, query, k, id_col, vec_col)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -81,8 +84,6 @@ def ann_topk(
     """Approximate top-k: candidates = vectors sharing >=1 LSH band
     with the query, re-ranked by exact cosine. Recall rises with
     bands; candidate count falls with planes-per-band."""
-    import math
-
     dim = len(query)
     planes = _hyperplanes(dim, n_planes, seed)
     width = n_planes // bands
@@ -99,12 +100,7 @@ def ann_topk(
         cond = cond | (
             F.shiftrightunsigned("__sig", b * width).bitwiseAND(F.lit(mask)) == F.lit(qband)
         )
-    cand = banded.where(cond)
-    qn = math.sqrt(sum(float(x) * float(x) for x in query))
-    simc = _dot_literal(F.col(vec_col), query) / (_norm(F.col(vec_col)) * F.lit(qn))
-    scored = cand.select(F.col(id_col), F.round(simc, 6).alias("cos_sim"))
-    w = Window.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rerank(banded.where(cond), query, k, id_col, vec_col)
 
 
 def ivf_centroids(dim: int, n_centroids: int, seed: int = 7) -> np.ndarray:
@@ -146,8 +142,6 @@ def ivf_topk(
     scanned and exactly re-ranked by cosine. At 10^12 rows the table
     is written partitioned by list id, so a probe is a partition-pruned
     scan of nprobe/n_centroids of the data — no shuffle, no full pass."""
-    import math
-
     cents = ivf_centroids(len(query), n_centroids, seed)
     q = np.asarray(query, dtype=float)
     qdists = np.einsum("ij,ij->i", cents, cents) - 2.0 * cents @ q
@@ -156,11 +150,7 @@ def ivf_topk(
     cand = emb.withColumn("__list", ivf_assign(F.col(vec_col), cents)).where(
         F.col("__list").isin(probe)
     )
-    qn = math.sqrt(sum(float(x) * float(x) for x in query))
-    sim = _dot_literal(F.col(vec_col), query) / (_norm(F.col(vec_col)) * F.lit(qn))
-    scored = cand.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-    w = Window.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rerank(cand, query, k, id_col, vec_col)
 
 
 def semantic_dedup(
@@ -193,19 +183,13 @@ def semantic_dedup(
     The self-join is cluster-equi (no cross product); drops flow back
     as an id-only anti-join, the corpus itself is never re-shuffled.
     """
-    from skyway_spark.operators.kmeans import _assign, kmeans_train
-
     centroids, qdf = kmeans_train(vectors, k, iters, id_col, vec_col, scale_bits)
     assigned = _assign(qdf, [("q", centroids, "cluster", "dist")]).select(
         "vec_id", "cluster", "q"
     )
     qdf.unpersist()
     x, y = assigned.alias("x"), assigned.alias("y")
-    sq = F.aggregate(
-        F.zip_with(F.col("x.q"), F.col("y.q"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda s, v: s + v,
-    )
+    sq = vec.sq_dist(F.col("x.q"), F.col("y.q"), long=True)
     dropped = (
         x.join(
             y,
@@ -298,35 +282,23 @@ def matryoshka_recall(
 
     Output: (query_id, n_overlap) with n_overlap in [0, k].
     """
-    scale = 1 << scale_bits
-    qv = F.transform(
-        F.col(vec_col), lambda v: F.floor(v.cast("double") * scale).cast("long")
+    quant = emb.select(
+        F.col(id_col).alias("id"), _quantize(F.col(vec_col), scale_bits).alias("q")
     )
-    quant = emb.select(F.col(id_col).alias("id"), qv.alias("q"))
     qs = quant.where(F.col("id") % query_mod == 0).select(
         F.col("id").alias("query_id"), F.col("q").alias("qa")
     )
     cs = quant.where(F.col("id") % query_mod != 0).select(
         F.col("id").alias("cand_id"), F.col("q").alias("qb")
     )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     pairs = F.broadcast(qs).crossJoin(cs).select(
         "query_id",
         "cand_id",
-        dot(F.col("qa"), F.col("qb")).alias("d_full"),
-        dot(
-            F.slice("qa", 1, prefix_dims), F.slice("qb", 1, prefix_dims)
+        vec.dot(F.col("qa"), F.col("qb"), long=True).alias("d_full"),
+        vec.dot(
+            F.slice("qa", 1, prefix_dims), F.slice("qb", 1, prefix_dims), long=True
         ).alias("d_pre"),
     )
-    from pyspark.sql import Window
-
     wf = Window.partitionBy("query_id").orderBy(F.col("d_full").desc(), "cand_id")
     wp = Window.partitionBy("query_id").orderBy(F.col("d_pre").desc(), "cand_id")
     ranked = pairs.select(
@@ -369,8 +341,6 @@ def nearest_centroid_confusion(
 
     Output: (label, pred, n) — exact confusion matrix.
     """
-    from skyway_spark.operators.kmeans import _assign
-
     scale = 1 << scale_bits
     # q = floor(v*2^b) * 2^b: the vector on the centroids' 2^(2b) grid
     quant = emb.select(

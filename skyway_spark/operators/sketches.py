@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from skyway_spark.operators.bloom import PRIME, _A1, _A2, _B1, _B2
-from skyway_spark.functions.strhash import text_hash
+from skyway_spark.functions import strhash
 
 # inverse-power scale for the HLL harmonic sum: 2^20 is exact in int64
 # for every register value rho <= 31 (2^(20-rho) floors to 0 past 20,
@@ -176,10 +176,10 @@ def cms_sketch(
     distinct term).
     """
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term")
+        F.explode(strhash.words(F.col(text_col))).alias("term")
     ).where(F.length("term") > 0)
     return (
-        toks.select(F.explode(_cms_buckets(text_hash(F.col("term")), w)).alias("rb"))
+        toks.select(F.explode(_cms_buckets(strhash.text_hash(F.col("term")), w)).alias("rb"))
         .select(F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
         .groupBy("row", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -202,7 +202,7 @@ def cms_estimate(
     """
     probes = terms.select(
         term_col,
-        F.explode(_cms_buckets(text_hash(F.col(term_col)), w)).alias("rb"),
+        F.explode(_cms_buckets(strhash.text_hash(F.col(term_col)), w)).alias("rb"),
     ).select(
         term_col, F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket")
     )

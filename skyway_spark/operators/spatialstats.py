@@ -25,8 +25,59 @@ and the global totals ride a broadcast single-row crossJoin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _deviations(cells: DataFrame) -> DataFrame:
+    """(cx, cy, z, n): the centred deviation z = n*x - S of every cell
+    (n cells, S = sum x).  Both the cell table and z are
+    localCheckpoint-pinned: the cells feed the totals and z, z feeds
+    both rook-join sides and the denominator, and without the pins
+    Catalyst re-plans — and therefore re-aggregates the corpus — once
+    per branch (the repo's multi-reference staging discipline; measured
+    25 shuffles -> 3 in morans_i)."""
+    cells = cells.localCheckpoint(eager=True)
+    totals = cells.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
+    return (
+        cells.crossJoin(F.broadcast(totals))
+        .select("cx", "cy", (F.col("n") * F.col("x") - F.col("s")).alias("z"), "n")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _rook_pairs(cells: DataFrame, v: str) -> DataFrame:
+    """Every unordered rook-neighbour pair of cells once: (ax, ay, va,
+    bx, by, vb) with b the east (cx+1) or north (cy+1) neighbour of a —
+    two equi-joins on the shifted key, unioned."""
+    a = cells.select(F.col("cx").alias("ax"), F.col("cy").alias("ay"), F.col(v).alias(v + "a"))
+    b = cells.select(F.col("cx").alias("bx"), F.col("cy").alias("by"), F.col(v).alias(v + "b"))
+    east = a.join(b, (F.col("ax") + 1 == F.col("bx")) & (F.col("ay") == F.col("by")))
+    north = a.join(b, (F.col("ax") == F.col("bx")) & (F.col("ay") + 1 == F.col("by")))
+    return east.unionByName(north)
+
+
+def _offsets(pairs, long: bool = False) -> Column:
+    """Literal array<struct<dx, dy>> of stencil offsets, int or long."""
+    lit = (lambda d: F.lit(d).cast("long")) if long else F.lit
+    return F.array(*[F.struct(lit(dx).alias("dx"), lit(dy).alias("dy")) for dx, dy in pairs])
+
+
+def _square(k: int) -> list[tuple[int, int]]:
+    """The (2k+1)^2 offsets of a Chebyshev ball, dx-major."""
+    return [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
+
+
+def _scatter(df: DataFrame, offs: Column, keep=(), to=("tx", "ty"), extra=()) -> DataFrame:
+    """Each row of ``df`` once per offset o of ``offs``: the ``keep``
+    columns, the shifted cell (cx + o.dx, cy + o.dy) named ``to``, and
+    ``extra`` columns, which may read ``o``."""
+    return df.select("*", F.explode(offs).alias("o")).select(
+        *keep,
+        (F.col("cx") + F.col("o.dx")).alias(to[0]),
+        (F.col("cy") + F.col("o.dy")).alias(to[1]),
+        *extra,
+    )
 
 
 def cell_counts(points: DataFrame, cx: str = "cx", cy: str = "cy") -> DataFrame:
@@ -45,30 +96,11 @@ def morans_i(cells: DataFrame) -> DataFrame:
     key, counted once per unordered pair then doubled for the
     symmetric-weights convention.
 
-    The cell aggregate is localCheckpoint-pinned before the fan-out:
-    it feeds four plan branches (totals, both join sides, the
-    denominator), and without the pin Catalyst re-plans — and therefore
-    re-aggregates the corpus — once per branch (the repo's
-    multi-reference staging discipline; measured 25 shuffles -> 3).
+    The cell aggregate and the deviations are localCheckpoint-pinned
+    before the fan-out (``_deviations``).
     """
-    cells = cells.localCheckpoint(eager=True)
-    totals = cells.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
-    )
-    z = (
-        cells.crossJoin(F.broadcast(totals))
-        .select("cx", "cy", (F.col("n") * F.col("x") - F.col("s")).alias("z"), "n")
-        .localCheckpoint(eager=True)
-    )
-    a = z.select(
-        F.col("cx").alias("ax"), F.col("cy").alias("ay"), F.col("z").alias("za")
-    )
-    b = z.select(
-        F.col("cx").alias("bx"), F.col("cy").alias("by"), F.col("z").alias("zb")
-    )
-    east = a.join(b, (F.col("ax") + 1 == F.col("bx")) & (F.col("ay") == F.col("by")))
-    north = a.join(b, (F.col("ax") == F.col("bx")) & (F.col("ay") + 1 == F.col("by")))
-    half = east.unionByName(north).agg(
+    z = _deviations(cells)
+    half = _rook_pairs(z, "z").agg(
         F.count(F.lit(1)).alias("hp"),
         F.coalesce(F.sum(F.col("za") * F.col("zb")), F.lit(0)).alias("hnum"),
     )
@@ -109,23 +141,9 @@ def gearys_c(cells: DataFrame) -> DataFrame:
 
     Scale shape identical to morans_i: ONE corpus shuffle into cells
     upstream, two equi-joins on shifted keys, broadcast totals."""
-    cells = cells.localCheckpoint(eager=True)
-    totals = cells.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
-    z = (
-        cells.crossJoin(F.broadcast(totals))
-        .select("cx", "cy", (F.col("n") * F.col("x") - F.col("s")).alias("z"), "n")
-        .localCheckpoint(eager=True)
-    )
-    a = z.select(
-        F.col("cx").alias("ax"), F.col("cy").alias("ay"), F.col("z").alias("za")
-    )
-    b = z.select(
-        F.col("cx").alias("bx"), F.col("cy").alias("by"), F.col("z").alias("zb")
-    )
-    east = a.join(b, (F.col("ax") + 1 == F.col("bx")) & (F.col("ay") == F.col("by")))
-    north = a.join(b, (F.col("ax") == F.col("bx")) & (F.col("ay") + 1 == F.col("by")))
+    z = _deviations(cells)
     d2 = (F.col("za") - F.col("zb")) * (F.col("za") - F.col("zb"))
-    half = east.unionByName(north).agg(
+    half = _rook_pairs(z, "z").agg(
         F.count(F.lit(1)).alias("hp"),
         F.coalesce(F.sum(d2), F.lit(0)).alias("hd2"),
     )
@@ -191,19 +209,9 @@ def hot_spots(cells: DataFrame) -> DataFrame:
     reason as morans_i (three plan branches read it)."""
     cells = cells.localCheckpoint(eager=True)
     totals = cells.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in ((0, 0), (1, 0), (-1, 0), (0, 1), (0, -1))
-        ]
-    )
-    probes = cells.select(
-        F.col("cx").alias("ox"),
-        F.col("cy").alias("oy"),
-        F.explode(offsets).alias("o"),
-    ).select(
-        "ox", "oy", (F.col("ox") + F.col("o.dx")).alias("nx"),
-        (F.col("oy") + F.col("o.dy")).alias("ny"),
+    offsets = _offsets(((0, 0), (1, 0), (-1, 0), (0, 1), (0, -1)))
+    probes = _scatter(
+        cells, offsets, [F.col("cx").alias("ox"), F.col("cy").alias("oy")], to=("nx", "ny")
     )
     nb = (
         probes.join(
@@ -634,17 +642,7 @@ def focal_stats(cells: DataFrame) -> DataFrame:
     cost is 9x the *cell vocabulary*, the classic distributed-raster
     focal pattern (contrast hot_spots' rook+self neighbor join, which
     is the same idea specialized to G_i*)."""
-    offs = F.expr(
-        "flatten(transform(sequence(-1, 1), dx ->"
-        " transform(sequence(-1, 1), dy -> struct(dx, dy))))"
-    )
-    scat = cells.select(
-        "cx", "cy", "x", F.explode(offs).alias("o")
-    ).select(
-        (F.col("o.dx") + F.col("cx")).alias("tx"),
-        (F.col("o.dy") + F.col("cy")).alias("ty"),
-        "x",
-    )
+    scat = _scatter(cells, _offsets(_square(1)), ["x"])
     foc = scat.groupBy("tx", "ty").agg(
         F.sum("x").alias("f_sum"),
         F.max("x").alias("f_max"),
@@ -746,18 +744,8 @@ def dilate_cells(cells: DataFrame, radius: int = 2) -> DataFrame:
     of the aggregate-sized source table), then ONE map-side-combined
     groupBy takes min-distance and coverage count.  No theta join, no
     distance predicate."""
-    k = radius
-    offs = F.expr(
-        f"flatten(transform(sequence({-k}, {k}), dx ->"
-        f" transform(sequence({-k}, {k}), dy -> struct(dx, dy))))"
-    )
-    scat = cells.select(
-        "cx", "cy", F.explode(offs).alias("o")
-    ).select(
-        (F.col("cx") + F.col("o.dx")).alias("tx"),
-        (F.col("cy") + F.col("o.dy")).alias("ty"),
-        F.greatest(F.abs(F.col("o.dx")), F.abs(F.col("o.dy"))).cast("long").alias("d"),
-    )
+    d = F.greatest(F.abs(F.col("o.dx")), F.abs(F.col("o.dy"))).cast("long")
+    scat = _scatter(cells, _offsets(_square(radius)), extra=[d.alias("d")])
     return scat.groupBy(
         F.col("tx").alias("cx"), F.col("ty").alias("cy")
     ).agg(
@@ -808,20 +796,12 @@ def d8_flow_direction(cells: DataFrame) -> DataFrame:
     equi-joined back to the cell table — aggregate-sized, no theta
     join.  Shared by flow_accumulation and watershed_basins."""
     c = cells.select("cx", "cy", "elev")
-    offs = F.expr(
-        "array(" + ", ".join(
-            f"struct({dx}L as dx, {dy}L as dy)"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-            if not (dx == 0 and dy == 0)
-        ) + ")"
-    )
-    scat = c.select(
-        "cx", "cy", F.col("elev").alias("e0"), F.explode(offs).alias("o")
-    ).select(
-        "cx", "cy", "e0",
-        (F.col("cx") + F.col("o.dx")).alias("nx"),
-        (F.col("cy") + F.col("o.dy")).alias("ny"),
-        F.col("o.dx").alias("dx"), F.col("o.dy").alias("dy"),
+    scat = _scatter(
+        c,
+        _offsets([o for o in _square(1) if o != (0, 0)], long=True),
+        ["cx", "cy", F.col("elev").alias("e0")],
+        to=("nx", "ny"),
+        extra=[F.col("o.dx").alias("dx"), F.col("o.dy").alias("dy")],
     )
     nb = scat.join(
         c.select(
@@ -1164,19 +1144,11 @@ def knox_statistic(
     tot = e.agg(F.count(F.lit(1)).alias("n"))
 
     # ---- spatially-close pairs via 9-offset scatter ------------------
-    offs = F.expr(
-        "array(" + ", ".join(
-            f"struct({dx}L as dx, {dy}L as dy)"
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        ) + ")"
-    )
-    b = e.select(
-        F.col("id").alias("idb"), F.col("t").alias("tb"),
-        "cx", "cy", F.explode(offs).alias("o"),
-    ).select(
-        "idb", "tb",
-        (F.col("cx") + F.col("o.dx")).alias("cx"),
-        (F.col("cy") + F.col("o.dy")).alias("cy"),
+    b = _scatter(
+        e,
+        _offsets(_square(1), long=True),
+        [F.col("id").alias("idb"), F.col("t").alias("tb")],
+        to=("cx", "cy"),
     )
     sp = (
         e.join(b, ["cx", "cy"])
@@ -1262,13 +1234,7 @@ def join_counts(cells: DataFrame, hot_threshold: int) -> DataFrame:
     c = cells.select(
         "cx", "cy", (F.col("x") >= hot_threshold).alias("h")
     ).localCheckpoint(eager=True)
-    a = c.select(F.col("cx").alias("ax"), F.col("cy").alias("ay"),
-                 F.col("h").alias("ha"))
-    b = c.select(F.col("cx").alias("bx"), F.col("cy").alias("by"),
-                 F.col("h").alias("hb"))
-    east = a.join(b, (F.col("ax") + 1 == F.col("bx")) & (F.col("ay") == F.col("by")))
-    north = a.join(b, (F.col("ax") == F.col("bx")) & (F.col("ay") + 1 == F.col("by")))
-    pairs = east.unionByName(north).agg(
+    pairs = _rook_pairs(c, "h").agg(
         F.count(F.lit(1)).alias("w_pairs"),
         F.sum(F.when(F.col("ha") & F.col("hb"), 1).otherwise(0))
         .cast("long").alias("n_bb"),

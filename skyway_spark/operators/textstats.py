@@ -45,7 +45,9 @@ def occurrences(col: Column, needle: str) -> Column:
 
 
 def whitespace_token_count(col: Column) -> Column:
-    return F.size(F.split(F.trim(col), r"\s+"))
+    """Number of ``strhash.words`` tokens: the empty text counts one
+    empty token."""
+    return F.size(strhash.words(col))
 
 
 def bpe_token_count(col: Column) -> Column:
@@ -111,7 +113,7 @@ def ngrams(col: Column, n: int) -> Column:
     """array of word n-grams (space-joined) — pure Column exprs:
     split, sequence, transform+slice+array_join. Empty when the doc
     has fewer than n tokens."""
-    toks = F.split(F.trim(col), r"\s+")
+    toks = strhash.words(col)
     idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
     grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
     return F.when(F.size(toks) >= n, grams).otherwise(
@@ -163,7 +165,7 @@ def repetition_stats(
     Integer numerators/denominators until one final division, so the
     values are engine-exact.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = strhash.words(F.col(text_col))
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(toks).alias("n_tokens"),
@@ -210,7 +212,7 @@ def boilerplate_windows(
     counts), the heavy text never rides a join — the repeated-chunk
     set joins back to the per-doc chunk list by chunk hash only.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = strhash.words(F.col(text_col))
     n_chunks = F.floor(F.size(toks) / window).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -263,7 +265,7 @@ def contamination(
     unlike boilerplate_windows the windows are SLIDING (stride 1) —
     decontamination must catch unaligned copies.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = strhash.words(F.col(text_col))
     n_win = (F.size(toks) - (n - 1)).cast("int")
     windows = F.transform(
         F.sequence(F.lit(0), n_win - 1),
@@ -275,7 +277,7 @@ def contamination(
         .otherwise(F.array().cast("array<long>"))
         .alias("__w"),
     )
-    btoks = F.split(F.trim(F.col(bench_text_col)), r"\s+")
+    btoks = strhash.words(F.col(bench_text_col))
     bn = (F.size(btoks) - (n - 1)).cast("int")
     bwin = (
         bench.where(bn > 0)
@@ -328,7 +330,7 @@ def collocations(
     (lift, gram) tie-break — the corpus itself is scanned once per
     count table and never re-shuffled.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = strhash.words(F.col(text_col))
     pairs = F.when(
         F.size(toks) >= 2,
         F.transform(
@@ -403,7 +405,7 @@ def dedup_chunks_rewrite(
     the document text itself never shuffles (it stays in the scan
     stage, rewritten in place by array HOFs on the original row).
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = strhash.words(F.col(text_col))
     n_chunks = F.floor(F.size(toks) / window).cast("int")
     chunk_arr = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -470,7 +472,7 @@ def vocab_growth(
     """
     toks = docs.select(
         F.col(id_col).alias("did"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
+        F.explode(strhash.words(F.col(text_col))).alias("term"),
     )
     first = toks.groupBy("term").agg(F.min("did").alias("fd"))
     bounds = docs.agg(F.max(F.col(id_col)).alias("mx"))
@@ -491,6 +493,19 @@ def vocab_growth(
     return ndocs.join(vocab, ["i", "cp"], "left").select(
         "i", "cp", "n_docs", F.coalesce("vocab", F.lit(0)).alias("vocab")
     )
+
+
+def _bigram_model(bigrams: DataFrame, scale_bits: int) -> DataFrame:
+    """(bg, q) for every distinct bigram "a b" of ``bigrams.bg``:
+    q = (2^scale_bits * c(ab)) div c(a·), with c(a·) the count of a in
+    first-of-bigram position."""
+    c2 = bigrams.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
+    c1 = bigrams.groupBy(F.split("bg", " ")[0].alias("tok")).agg(
+        F.count(F.lit(1)).alias("c1")
+    )
+    return c2.withColumn("a", F.split("bg", " ")[0]).join(
+        c1, F.col("a") == F.col("tok")
+    ).select("bg", F.expr(f"({1 << scale_bits} * c2) div c1").alias("q"))
 
 
 def bigram_lm_scores(
@@ -521,14 +536,8 @@ def bigram_lm_scores(
     bg = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(ngrams(F.col(text_col), 2)).alias("bg"),
-    ).withColumn("a", F.split("bg", " ")[0])
-    c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
-    c1 = bg.groupBy(F.col("a").alias("tok")).agg(F.count(F.lit(1)).alias("c1"))
-    scored = (
-        bg.join(c2, "bg")
-        .join(c1, bg["a"] == c1["tok"])
-        .select("doc_id", F.expr(f"({1 << scale_bits} * c2) div c1").alias("q"))
     )
+    scored = bg.join(_bigram_model(bg, scale_bits), "bg").select("doc_id", "q")
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.expr("sum(q) div count(1)").alias("lm_q"),
@@ -599,7 +608,7 @@ def bpe_pair_counts(
     pair alphabet, not the corpus.  Top-n is TakeOrderedAndProject.
     """
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
+        F.explode(strhash.words(F.col(text_col))).alias("tok")
     ).where(F.length("tok") > 1)
     pairs = toks.select(
         F.explode(
@@ -644,14 +653,8 @@ def lm_cross_score(
     train corpus is scanned exactly twice (c2, c1), both map-side
     combined.
     """
-    tb = train.select(F.explode(ngrams(F.col(text_col), 2)).alias("bg")).withColumn(
-        "a", F.split("bg", " ")[0]
-    )
-    c2 = tb.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
-    c1 = tb.groupBy(F.col("a").alias("tok")).agg(F.count(F.lit(1)).alias("c1"))
-    model = c2.withColumn("a", F.split("bg", " ")[0]).join(
-        c1, F.col("a") == F.col("tok")
-    ).select("bg", F.expr(f"({1 << scale_bits} * c2) div c1").alias("q"))
+    tb = train.select(F.explode(ngrams(F.col(text_col), 2)).alias("bg"))
+    model = _bigram_model(tb, scale_bits)
     cb = candidates.select(
         F.col(id_col).alias("doc_id"),
         F.explode(ngrams(F.col(text_col), 2)).alias("bg"),
@@ -687,7 +690,7 @@ def readability(
     Scale shape: pure scan-stage Column expressions, zero shuffles,
     zero Python."""
     t = F.col(text_col)
-    w = F.size(F.split(F.trim(t), r"\s+")).cast("long")
+    w = F.size(strhash.words(t)).cast("long")
     punct = (
         F.length(t) - F.length(F.replace(t, F.lit("."), F.lit("")))
         + F.length(t) - F.length(F.replace(t, F.lit("!"), F.lit("")))
@@ -755,7 +758,7 @@ def bpe_train(
     re-derivation from text is cheaper than the cache write.
     """
     stream = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
+        F.explode(strhash.words(F.col(text_col))).alias("tok")
     ).select(_bpe_wrap(F.col("tok")).alias("s"))
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
@@ -820,7 +823,7 @@ def bpe_tokenize(
             s = F.replace(s, F.lit(pat), F.lit(rep))
         return s
 
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = strhash.words(F.col(text_col))
     enc = F.transform(words, encode)
     n_tokens = F.aggregate(
         enc,
@@ -871,7 +874,7 @@ def span_corrupt(
     ordinals, one groupBy rebuilds the strings with order-pinned
     concat — two shuffles sharing the doc key.  No Python, no UDFs.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = strhash.words(F.col(text_col))
     nblocks = F.ceil(F.size(words) / F.lit(span_len)).cast("int")
     blocks = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -1000,7 +1003,7 @@ def term_drift(
     once, never twice); totals ride a broadcast single-row crossJoin;
     top-k is TakeOrderedAndProject over the vocabulary aggregate.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = strhash.words(F.col(text_col))
     t = docs.where(F.length(F.trim(F.col(text_col))) > 0).select(
         F.col(split_col).cast("boolean").alias("a"),
         F.explode(toks).alias("term"),
@@ -1049,7 +1052,7 @@ def bitext_candidates(
     explode width is O(len/(2.5*W)) — the honest cost of the
     tolerance, linear in the tolerance window, never corpus-sized.
     """
-    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    toks = F.size(strhash.words(F.col(text_col)))
     base = docs.where(F.length(F.trim(F.col(text_col))) > 0).select(
         F.col(group_col).alias("source"),
         F.col(lang_col).alias("lang"),

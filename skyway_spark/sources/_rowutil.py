@@ -59,6 +59,20 @@ def element_struct() -> Column:
     )
 
 
+# every writer fails a node with this, after "node <id>: ": the
+# reference's Node has ``lat: f64, lon: f64``, so there is nothing to write
+BAD_XY = "lat or lon is null or NaN"
+
+
+def node_xy(e: dict) -> tuple[str, str]:
+    """(lat, lon) of a node as shortest round-trip reprs (``inf`` stays
+    ``inf``); a null or NaN coordinate raises ValueError."""
+    lat, lon = clean_value(e["lat"]), clean_value(e["lon"])
+    if lat is None or lon is None:
+        raise ValueError(f"node {e['id']}: {BAD_XY}")
+    return repr(float(lat)), repr(float(lon))
+
+
 def clean_value(v):
     if v is None:
         return None

@@ -32,6 +32,7 @@ from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
 from skyway_spark.sources._rowutil import (
     canonical_order,
     element_struct,
+    node_xy,
     records,
     seq,
     write_enveloped,
@@ -40,17 +41,14 @@ from skyway_spark.sources._rowutil import (
 _J = json.dumps  # compact string quoting, like json::stringify
 
 
-def _fmt_f(v: float) -> str:
-    return repr(float(v))
-
-
 def serialize_element_py(e: dict) -> str:
     """One element -> JSON string, exact field order of
     append_serialized_element (src/writers/json.rs:74-188)."""
     parts = ['{"type":']
     t = e["type"]
     if t == "node":
-        parts.append(f'"node","lat":{_fmt_f(e["lat"])},"lon":{_fmt_f(e["lon"])}')
+        lat, lon = node_xy(e)
+        parts.append(f'"node","lat":{lat},"lon":{lon}')
     elif t == "way":
         parts.append('"way","nodes":[' + ",".join(str(int(n)) for n in seq(e["nodes"])) + "]")
     else:

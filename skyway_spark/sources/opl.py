@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StringType
 
 from skyway_spark.schema import MEMBER_SCHEMA
-from skyway_spark.sources._rowutil import canonical_order
+from skyway_spark.sources._rowutil import BAD_XY, canonical_order
 
 # ---------------------------------------------------------------------------
 # escape / unescape (plain-Python core, reused inside the pandas UDFs)
@@ -244,6 +244,11 @@ def opl_line(df: DataFrame) -> Column:
         F.lit(" y"),
         _repr_double_udf(F.col("lat")),
     )
+    # checked as a Column: the repr UDFs run on every row, whatever
+    # wraps them, so they cannot fail nodes only
+    no_xy = F.col("lat").isNull() | F.col("lon").isNull() | F.isnan("lat") | F.isnan("lon")
+    bad_xy = F.concat(F.lit("node "), F.col("id").cast("string"), F.lit(": " + BAD_XY))
+    node_xy = F.when(no_xy, F.raise_error(bad_xy)).otherwise(node_xy)
     way_nodes = F.concat(
         F.lit(" N"),
         F.array_join(F.transform(F.col("nodes"), lambda n: F.concat(F.lit("n"), n.cast("string"))), ","),

@@ -13,7 +13,7 @@ same blob-level parallelism but distributes it across Spark executors:
 3. each task seek-reads its blob slices and decodes them with a
    minimal pure-Python protobuf wire codec (PBF is varint protobuf +
    zlib — public format: wiki.openstreetmap.org/wiki/PBF_Format),
-   yielding rows in the canonical elements schema via mapInPandas
+   yielding rows in the canonical elements schema via mapInArrow
    (Arrow-batched; the per-blob decode loop is data-parallel across
    blobs exactly like the reference's par_bridge, pbf.rs:145).
 
@@ -35,7 +35,8 @@ import datetime as dt
 import zlib
 from pathlib import Path
 
-import pandas as pd
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA
@@ -354,7 +355,7 @@ def decode_header_block(raw: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def read_pbf(spark, path: str, parallelism: int | None = None):
+def read_pbf(spark, path: str):
     """Distributed PBF -> canonical elements DataFrame.
 
     Blob slices are dealt round-robin to tasks; each task seek-reads
@@ -363,25 +364,27 @@ def read_pbf(spark, path: str, parallelism: int | None = None):
     index = [e for e in scan_blob_index(path) if e[3] == "OSMData"]
     if not index:
         return local_frame(spark, [], ELEMENTS_SCHEMA)
-    par = parallelism or min(len(index), spark.sparkContext.defaultParallelism)
+    par = min(len(index), spark.sparkContext.defaultParallelism)
     idx_df = local_frame(
         spark, index, "path string, offset long, size long, btype string"
     ).repartition(par)
 
-    def decode_slices(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path_, off, size in zip(pdf["path"], pdf["offset"], pdf["size"]):
-                with open(path_, "rb") as f:
-                    f.seek(int(off))
-                    blob = f.read(int(size))
-                rows.extend(decode_primitive_block(_blob_raw(blob)))
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in ELEMENTS_SCHEMA.fields],
-            )
+    schema = to_arrow_schema(ELEMENTS_SCHEMA)
 
-    return idx_df.mapInPandas(decode_slices, ELEMENTS_SCHEMA)
+    def decode_slices(batches):
+        for batch in batches:
+            rows: list[dict] = []
+            cols = [batch.column(c).to_pylist() for c in ("path", "offset", "size")]
+            for path_, off, size in zip(*cols):
+                with open(path_, "rb") as f:
+                    f.seek(off)
+                    blob = f.read(size)
+                rows.extend(decode_primitive_block(_blob_raw(blob)))
+            # straight to Arrow: a pandas frame would hold a nullable
+            # int64 column (changeset) as float64, rounding past 2^53
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+    return idx_df.mapInArrow(decode_slices, ELEMENTS_SCHEMA)
 
 
 def read_pbf_metadata(path: str) -> dict:

@@ -39,6 +39,7 @@ from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
 from skyway_spark.sources._rowutil import (
     canonical_order,
     element_struct,
+    node_xy,
     records,
     seq,
     write_enveloped,
@@ -62,15 +63,12 @@ def _esc(v: str) -> str:
     )
 
 
-def _fmt_f(v: float) -> str:
-    return repr(float(v))
-
-
 def serialize_element_xml_py(e: dict) -> str:
     t = e["type"]
     attrs: list[tuple[str, str]] = []
     if t == "node":
-        attrs += [("lat", _fmt_f(e["lat"])), ("lon", _fmt_f(e["lon"]))]
+        lat, lon = node_xy(e)
+        attrs += [("lat", lat), ("lon", lon)]
     # flattened XmlElementMeta order (src/writers/xml.rs:43-58)
     attrs.append(("id", str(int(e["id"]))))
     if e.get("user") is not None:

@@ -207,6 +207,27 @@ def test_backends_agree_on_shared_subset(spark, elements):
         assert col_rows == int_rows, expr
 
 
+def test_backends_read_changesets_above_2_53(spark):
+    """Both backends compare a changeset above 2^53 exactly, next to a
+    null one: the interpreter reads its context from Arrow, where
+    pandas would carry the nullable int64 column as float64."""
+    from skyway_spark.functions.filter.cel import CompiledCelFilter, InterpretedCelFilter
+
+    big = 1 << 53
+    df = spark.createDataFrame(
+        [(1, big + 1), (2, None), (3, big)], "id long, changeset long"
+    ).coalesce(1)  # one batch holds the null and the big values
+    for expr, want in (
+        (f"changeset == {big + 1}", {1}),
+        (f"dyn(changeset) == {big + 1}", {1}),
+        (f"dyn(changeset) == {big}", {3}),
+    ):
+        filt = compile_cel(expr)
+        backend = InterpretedCelFilter if "dyn" in expr else CompiledCelFilter
+        assert isinstance(filt, backend), expr
+        assert {r["id"] for r in filt.apply(df).collect()} == want, expr
+
+
 def test_cel_fallback_nonboolean_raises(spark, elements):
     """Interpreter path: non-boolean program output is a hard error at
     runtime (reference panics, cel/mod.rs:9-14)."""

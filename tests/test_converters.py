@@ -77,6 +77,29 @@ def test_opl_layout(tiny):
     assert lines[3] == "r20 v1 dV c5 Ttype=route Mn1@stop,w10@,r21@"
 
 
+def test_writers_reject_node_without_coordinates(spark, tmp_path):
+    """A node whose lat or lon is null or NaN (the OPL reader accepts
+    both) fails every writer with an error naming the node; +-inf is
+    written as today."""
+    from skyway_spark.schema import ELEMENTS_SCHEMA
+
+    def node(i, lat, lon):
+        return ("node", i, lat, lon, None, None, {}, None, None, None, None, None, None)
+
+    inf = spark.createDataFrame([node(1, float("inf"), float("-inf"))], ELEMENTS_SCHEMA)
+    assert opl.serialize_opl_string(inf) == "n1 T x-inf yinf\n"
+    for i, lat, lon in ((2, float("nan"), 2.5), (3, 1.5, None)):
+        df = spark.createDataFrame([node(1, 0.5, 2.5), node(i, lat, lon)], ELEMENTS_SCHEMA)
+        for write in (
+            opl.serialize_opl_string,
+            lambda d: opl.write_opl(d, str(tmp_path / f"out{i}.opl")),
+            jsonio.serialize_json_string,
+            xmlio.serialize_xml_string,
+        ):
+            with pytest.raises(Exception, match=f"node {i}: lat or lon is null or NaN"):
+                write(df)
+
+
 def test_json_layout(tiny):
     s = jsonio.serialize_json_string(tiny, {"generator": "g", "copyright": "c",
                                             "license": "l", "version": None,

@@ -1,5 +1,5 @@
 """PBF reader: pure-Python protobuf/zlib decode, blob-parallel via
-mapInPandas, round-tripped through the local fixture encoder.
+mapInArrow, round-tripped through the local fixture encoder.
 
 Parity: reference src/readers/pbf.rs (dense + plain nodes, ways,
 relations); unlike the reference we also decode user/timestamp
@@ -107,7 +107,7 @@ def test_round_trip_generated_elements(spark, tmp_path):
         els.append(e)
     p = str(tmp_path / "gen.osm.pbf")
     encode_pbf(p, els, block_size=64)
-    back = read_pbf(spark, p, parallelism=4)
+    back = read_pbf(spark, p)
     assert back.count() == len(els)
     got = {(r["type"], r["id"]): r for r in back.collect()}
     for e in els:
@@ -121,6 +121,20 @@ def test_round_trip_generated_elements(spark, tmp_path):
         else:
             assert [(m["type"], m["ref"], m["role"]) for m in r["members"]] == [
                 (m["type"], m["ref"], m["role"]) for m in e["members"]]
+
+
+def test_changeset_above_2_53_reads_exactly(spark, tmp_path):
+    """A changeset above 2^53 in the same batch as a missing one reads
+    back exactly: a pandas frame would hold the column as float64."""
+    big = (1 << 53) + 1
+    els = [
+        {"type": "way", "id": i, "nodes": [1, 2], "tags": {}, "changeset": c}
+        for i, c in ((1, big), (2, None), (3, 7))
+    ]
+    p = str(tmp_path / "changesets.osm.pbf")
+    encode_pbf(p, els)
+    got = {r["id"]: r["changeset"] for r in read_pbf(spark, p).collect()}
+    assert got == {1: big, 2: None, 3: 7}
 
 
 def test_decode_block_direct(pbf_path):

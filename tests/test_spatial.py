@@ -406,18 +406,6 @@ def test_cell_rollup_consistency(spark, entities):
     assert rolled == direct
 
 
-def test_knn_shuffle_path_matches_broadcast(spark, entities):
-    """broadcast_queries=False (the big-query-side shuffle join path)
-    returns identical results to the broadcast path."""
-    pts = entities.select("id", "lat", "lon").limit(2000)
-    qrows = [(i, r["lat"], r["lon"]) for i, r in enumerate(pts.limit(25).collect())]
-    queries = spark.createDataFrame(qrows, "query_id long, lat double, lon double")
-    a = knn_join(pts, queries, k=3, radius_km=80.0, broadcast_queries=True)
-    b = knn_join(pts, queries, k=3, radius_km=80.0, broadcast_queries=False)
-    key = lambda r: (r["query_id"], r["rank"], r["id"])  # noqa: E731
-    assert sorted(map(key, a.collect())) == sorted(map(key, b.collect()))
-
-
 def test_knn_high_latitude(spark):
     """Longitude cells shrink in km near the poles — the adaptive ring
     must still find neighbors ~radius away in the east-west direction."""

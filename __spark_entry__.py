@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from skyway_spark.functions import cells
+from skyway_spark.functions import cells, strhash
 from skyway_spark.functions.filter import compile_osmfilter, compile_cel
 from skyway_spark.operators import (
     cluster,
@@ -168,7 +168,7 @@ KNN_K = 5
 KNN_RADIUS = 300.0
 RANGE_RADIUS = 500.0
 ROLLUP_RES = 3
-# Spark's F.split(F.trim(text), r"\s+") in DuckDB: both trims strip
+# strhash.words (split of trim(text) on \s+) in DuckDB: both trims strip
 # U+0020 only, and Java's \s is [ \t\n\x0B\f\r], where RE2's omits \x0B
 _WS_SPLIT = r"string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')"
 
@@ -1257,7 +1257,7 @@ def q_tfidf_topterms(spark, sf):
 
     (docs,) = _tables(spark, sf, "documents")
     terms = docs.select(
-        "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("term")
+        "doc_id", F.explode(strhash.words(F.col("text"))).alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -1282,7 +1282,7 @@ def q_inverted_index(spark, sf):
     prefix."""
     (docs,) = _tables(spark, sf, "documents")
     terms = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.trim("text"), r"\s+"))).alias("term")
+        "doc_id", F.explode(F.array_distinct(strhash.words(F.col("text")))).alias("term")
     )
     idx = terms.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),
@@ -1302,7 +1302,7 @@ def q_term_search(spark, sf):
     join on doc_id."""
     (docs,) = _tables(spark, sf, "documents")
     terms = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.trim("text"), r"\s+"))).alias("term")
+        "doc_id", F.explode(F.array_distinct(strhash.words(F.col("text")))).alias("term")
     )
     has = lambda t: terms.where(F.col("term") == t).select("doc_id")  # noqa: E731
     return (
@@ -1320,7 +1320,7 @@ def q_phrase_search(spark, sf):
     match counts."""
     (docs,) = _tables(spark, sf, "documents")
     pos = docs.select(
-        "doc_id", F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "term")
+        "doc_id", F.posexplode(strhash.words(F.col("text"))).alias("pos", "term")
     )
     a = pos.where(F.col("term") == "the").select("doc_id", "pos")
     b = pos.where(F.col("term") == "table").select(
@@ -1733,7 +1733,7 @@ def q_var_stats(spark, sf):
     from skyway_spark.operators.stats import group_moments
 
     (docs,) = _tables(spark, sf, "documents")
-    ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    ntok = textstats.whitespace_token_count(F.col("text"))
     return group_moments(docs, "lang", ntok)
 
 
@@ -1760,7 +1760,7 @@ def q_curation_pipeline(spark, sf):
     from skyway_spark.operators.sampling import rebalance_sources
 
     (docs,) = _tables(spark, sf, "documents")
-    ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    ntok = textstats.whitespace_token_count(F.col("text"))
     gated = docs.where(ntok >= CURATION_MIN_TOKENS)
     surv = dedup.dedup_exact(gated)
     reb = rebalance_sources(surv, REBALANCE_TARGETS, strata_col="lang")
@@ -2268,7 +2268,7 @@ def q_cms_heavy_hitters(spark, sf):
     w = 1024
     sk = sketches.cms_sketch(docs, w=w)
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term")
+        F.explode(strhash.words(F.col("text"))).alias("term")
     ).where(F.length("term") > 0)
     top = (
         toks.groupBy("term")
@@ -6072,7 +6072,7 @@ def q_posting_sizes(spark, sf):
         docs.select(
             "doc_id",
             F.explode(
-                F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
+                F.array_distinct(strhash.words(F.col("text")))
             ).alias("term"),
         )
         .groupBy("term", "doc_id")
@@ -6225,7 +6225,7 @@ def q_data_mixture(spark, sf):
         sorted(MIX_TARGETS.items()), "source string, target_pct long"
     )
     inv = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+"))).alias("tokens")
+        F.sum(textstats.whitespace_token_count(F.col("text"))).alias("tokens")
     )
     j = inv.join(F.broadcast(tgt), "source")
     budget = j.agg(

@@ -3,8 +3,8 @@ and cosine, each one left fold ``s + term`` in array order.
 
 The op order is part of the contract: a float sum depends on it, and
 every oracle that mirrors these operators replays the same fold.  A
-float fold starts from 0.0; with ``long`` an int64 fold starts from
-long 0, so quantized vectors sum exactly.
+float fold starts from 0.0; an int64 fold starts from long 0, so
+quantized vectors sum exactly.
 """
 
 from __future__ import annotations
@@ -22,8 +22,9 @@ def dot(a: Column, b: Column, long: bool = False) -> Column:
     return _sum(F.zip_with(a, b, lambda x, y: x * y), long)
 
 
-def sq_dist(a: Column, b: Column, long: bool = False) -> Column:
-    return _sum(F.zip_with(a, b, lambda a, b: (a - b) * (a - b)), long)
+def sq_dist(a: Column, b: Column) -> Column:
+    """Squared distance of two quantized vectors: the int64 fold."""
+    return _sum(F.zip_with(a, b, lambda a, b: (a - b) * (a - b)), True)
 
 
 def norm(a: Column) -> Column:

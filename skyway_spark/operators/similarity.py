@@ -189,7 +189,7 @@ def semantic_dedup(
     )
     qdf.unpersist()
     x, y = assigned.alias("x"), assigned.alias("y")
-    sq = vec.sq_dist(F.col("x.q"), F.col("y.q"), long=True)
+    sq = vec.sq_dist(F.col("x.q"), F.col("y.q"))
     dropped = (
         x.join(
             y,
@@ -346,10 +346,7 @@ def nearest_centroid_confusion(
     quant = emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(label_col).alias("label"),
-        F.transform(
-            F.col(vec_col),
-            lambda v: F.floor(v.cast("double") * scale).cast("long") * scale,
-        ).alias("q"),
+        F.transform(_quantize(F.col(vec_col), scale_bits), lambda q: q * scale).alias("q"),
     )
     sums = (
         quant.select(

@@ -1,21 +1,24 @@
 """Each formula the operators share has one definition: the
 whitespace split, the vector folds and the clip-pass loop.  A second
 copy of a formula is a second contract that can drift from the oracle
-that mirrors it."""
+that mirrors it.  The scan covers the package and the query registry
+in ``__spark_entry__.py``."""
 
 from __future__ import annotations
 
 import re
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parents[1] / "skyway_spark"
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "skyway_spark"
+FILES = sorted(PKG.rglob("*.py")) + [ROOT / "__spark_entry__.py"]
 
 
 def _sites(pattern: str) -> list[str]:
     rx = re.compile(pattern)
     return [
-        f"{p.relative_to(PKG)}:{i}"
-        for p in sorted(PKG.rglob("*.py"))
+        f"{p.relative_to(ROOT)}:{i}"
+        for p in FILES
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if rx.search(line)
     ]
@@ -25,7 +28,7 @@ def test_whitespace_split_only_in_strhash_words():
     src = (PKG / "functions" / "strhash.py").read_text().splitlines()
     (site,) = _sites(r"split\(F\.trim\(")
     path, line = site.split(":")
-    assert path == "functions/strhash.py"
+    assert path == "skyway_spark/functions/strhash.py"
     body = src[: int(line)]
     assert [s for s in body if s.startswith("def ")][-1].startswith("def words(")
 
@@ -33,7 +36,8 @@ def test_whitespace_split_only_in_strhash_words():
 def test_vector_folds_only_in_vec():
     for pattern in (r"lambda x, y: x \* y", r"lambda a, b: \(a - b\)"):
         sites = _sites(pattern)
-        assert sites and {s.split(":")[0] for s in sites} == {"functions/vec.py"}, sites
+        files = {s.split(":")[0] for s in sites}
+        assert sites and files == {"skyway_spark/functions/vec.py"}, sites
 
 
 def test_one_clip_pass_loop():

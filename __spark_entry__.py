@@ -168,9 +168,12 @@ KNN_K = 5
 KNN_RADIUS = 300.0
 RANGE_RADIUS = 500.0
 ROLLUP_RES = 3
+# Java's \s as the body of a DuckDB (RE2) character class: RE2's \s
+# omits \x0B, which Java's [ \t\n\x0B\f\r] has
+_JAVA_WS = r" \t\n\x0B\f\r"
 # strhash.words (split of trim(text) on \s+) in DuckDB: both trims strip
-# U+0020 only, and Java's \s is [ \t\n\x0B\f\r], where RE2's omits \x0B
-_WS_SPLIT = r"string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')"
+# U+0020 only
+_WS_SPLIT = f"string_split_regex(trim(text), '[{_JAVA_WS}]+')"
 
 
 def _pip_polygons_df(spark: SparkSession) -> DataFrame:
@@ -8389,9 +8392,12 @@ def _sql_gram3_hash(i: str = "i") -> str:
     return f"((({c(0)} * 31 + {c(1)}) * 31 + {c(2)}) % {_HM})"
 
 
+# dedup.ngram_hashes: a text shorter than 3 code points is one gram, the
+# fold of the code points it has (no zero padding)
 _SQL_GRAMS = (
-    f"list_distinct(list_transform(range(1, greatest(len(text) - 2, 1) + 1), "
-    f"i -> {_sql_gram3_hash()}))"
+    f"CASE WHEN len(text) < 3 THEN [{_sql_token_hash('text')}] "
+    f"ELSE list_distinct(list_transform(range(1, len(text) - 1), "
+    f"i -> {_sql_gram3_hash()})) END"
 )
 
 _SQL_TOKEN_HASHES = (
@@ -10011,18 +10017,19 @@ def oracle_sql() -> dict[str, str]:
         "q_token_stats": f"""
             SELECT doc_id,
                    len({_WS_SPLIT})::INT AS ws_tokens,
-                   len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]'))::INT AS bpe_tokens,
+                   len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9{_JAVA_WS}]'))::INT AS bpe_tokens,
                    len(text)::INT AS n_chars_actual,
+                   CASE WHEN text IS NOT NULL THEN
                    list_reduce(list_prepend(0::BIGINT,
                        list_transform({_WS_SPLIT},
                                       tok -> {_sql_token_hash('tok')})),
-                       (a, h) -> (a * {_FX} + h) % {_FM}) AS fingerprint
+                       (a, h) -> (a * {_FX} + h) % {_FM}) END AS fingerprint
             FROM documents
         """,
         "q_quality": f"""
             WITH t AS (
                 SELECT doc_id,
-                       len(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g'))::DOUBLE / len(text)::DOUBLE AS pr,
+                       len(regexp_replace(text, '[a-zA-Z0-9{_JAVA_WS}]', '', 'g'))::DOUBLE / len(text)::DOUBLE AS pr,
                        (' ' || text || ' ') AS p,
                        len({_WS_SPLIT})::DOUBLE AS ntok
                 FROM documents)

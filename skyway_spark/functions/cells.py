@@ -287,7 +287,7 @@ def geohash(lat: Column, lon: Column, precision: int = 7) -> Column:
     return F.concat(*chars)
 
 
-def compact_cells(cells_df, res: int, levels: int = 1, cell_col: str = "cell"):
+def compact_cells(cells_df, res: int, levels: int = 1):
     """H3-compact-style sibling compaction: any parent whose 4
     children are ALL present replaces them; repeated ``levels`` times.
     Input: DataFrame with distinct cells at ``res``. Output: (cell,
@@ -298,7 +298,7 @@ def compact_cells(cells_df, res: int, levels: int = 1, cell_col: str = "cell"):
     from pyspark.sql import DataFrame  # local to avoid cycle at import
 
     assert isinstance(cells_df, DataFrame)
-    out = cells_df.select(F.col(cell_col).alias("cell")).withColumn("res", F.lit(res))
+    out = cells_df.select(F.col("cell")).withColumn("res", F.lit(res))
     for r in range(res, res - levels, -1):
         cur = out.where(F.col("res") == r)
         rest = out.where(F.col("res") != r)

@@ -142,15 +142,12 @@ class CompiledOsmFilter:
 
 def compile_osmfilter(
     program: OsmFilterProgram | str,
-    type_col: Column | str = "type",
-    tags_col: Column | str = "tags",
     size_budget: int = 700,
     prefix: str = "__sw",
 ) -> CompiledOsmFilter:
     if isinstance(program, str):
         program = parse_osmfilter(program)
-    type_col = F.col(type_col) if isinstance(type_col, str) else type_col
-    tags0 = F.col(tags_col) if isinstance(tags_col, str) else tags_col
+    type_col = F.col("type")
 
     # fold state plus a node-count estimate per expression; tags
     # doubles-to-quadruples per mutation, keep/decided grow additively
@@ -167,7 +164,7 @@ def compile_osmfilter(
     st = {
         "decided": F.lit(False),
         "keep": F.lit(True),  # default commit if statements exhaust (logic.rs:125)
-        "tags": tags0,
+        "tags": F.col("tags"),
     }
     sz = {"decided": 1, "keep": 1, "tags": 1, "dirty": False}
     # active SelectionBlock path conditions, innermost last; [col, size]

@@ -93,15 +93,7 @@ def _cube_round(qs: Column, rs: Column) -> tuple[Column, Column]:
     return q.cast("long"), r.cast("long")
 
 
-def assign_hex(
-    df,
-    x_col: str,
-    y_col: str,
-    size_u: int,
-    q_name: str = "q",
-    r_name: str = "r",
-    keep: list[str] | None = None,
-):
+def assign_hex(df, x_col: str, y_col: str, size_u: int, keep: list[str] | None = None):
     """DataFrame-level hex assignment, staged into TWO projections with
     a Generate barrier between them (plans/barrier.stage): the linear
     fractional-axial step lands as attributes, then the cube-rounding
@@ -113,7 +105,7 @@ def assign_hex(
     q_variogram — BENCH/SWEEP_r03c.log).
 
     Returns ``df`` narrowed to ``keep`` (default: all existing columns)
-    plus integer axial columns ``q_name``/``r_name``.  Row-local
+    plus integer axial columns ``q``/``r``.  Row-local
     scan-stage work: no shuffle, no materialization.
     """
     from skyway_spark.plans.barrier import stage
@@ -122,7 +114,7 @@ def assign_hex(
     qs, rs = _frac_axial(F.col(x_col), F.col(y_col), size_u)
     st = stage(df, *keep, qs.alias("__qs"), rs.alias("__rs"))
     q, r = _cube_round(F.col("__qs"), F.col("__rs"))
-    return st.select(*keep, q.alias(q_name), r.alias(r_name))
+    return st.select(*keep, q.alias("q"), r.alias("r"))
 
 
 def hex_pack(q: Column, r: Column) -> Column:

@@ -186,11 +186,10 @@ def list_values(arr: pa.Array):
     )
 
 
-def list_array(values, counts, valid=None, value_valid=None) -> pa.Array:
+def list_array(values, counts, valid=None) -> pa.Array:
     """list<long> batch from flat values and per-row counts; rows with
-    ``valid`` False and values with ``value_valid`` False are null."""
-    value_mask = None if value_valid is None else ~np.asarray(value_valid)
-    vals = pa.array(np.asarray(values, np.int64), mask=value_mask)
+    ``valid`` False are null."""
+    vals = pa.array(np.asarray(values, np.int64))
     mask = None if valid is None else pa.array(~np.asarray(valid))
     offsets = pa.array(row_offsets(counts).astype(np.int32))
     return pa.ListArray.from_arrays(offsets, vals, mask=mask)

@@ -30,33 +30,28 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     value_cols: list[str] | None = None,
-    tolerance=None,
 ) -> DataFrame:
     """Left as-of join: all left columns + each right value column
-    (null when no right row precedes). ``tolerance`` (same units as a
-    ts difference, e.g. an INTERVAL literal Column or numeric for
-    numeric ts) optionally voids matches older than left_ts - tol.
+    (null when no right row precedes), matched on ``key`` and ``ts``.
 
     Right (key, ts) pairs should be unique for deterministic output
     (pre-aggregate duplicates upstream) — matching DuckDB ASOF.
     """
     value_cols = value_cols or [
-        c for c in right.columns if c not in (key, right_ts)
+        c for c in right.columns if c not in (key, "ts")
     ]
     lcols = left.columns
     tagged_l = left.select(
         F.col(key).alias("__k"),
-        F.col(left_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(1).alias("__side"),
         F.struct(*[F.col(c) for c in lcols]).alias("__lrow"),
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"__v_{c}") for c in value_cols],
     )
     tagged_r = right.select(
         F.col(key).alias("__k"),
-        F.col(right_ts).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(0).alias("__side"),
         F.lit(None).cast(tagged_l.schema["__lrow"].dataType).alias("__lrow"),
         *[F.col(c).alias(f"__v_{c}") for c in value_cols],
@@ -72,21 +67,6 @@ def asof_join(
         for c in value_cols
     ]
     out = u.select("*", *filled).where(F.col("__side") == 1)
-    if tolerance is not None:
-        match_ts = F.last(
-            F.when(F.col("__side") == 0, F.col("__ts")), ignorenulls=True
-        ).over(w)
-        out = u.select("*", *filled, match_ts.alias("__mts")).where(
-            F.col("__side") == 1
-        )
-        stale = F.col("__mts").isNull() | (F.col("__mts") < F.col("__ts") - tolerance)
-        return out.select(
-            *[F.col("__lrow")[c].alias(c) for c in lcols],
-            *[
-                F.when(~stale, F.col(f"__f_{c}")).alias(c)
-                for c in value_cols
-            ],
-        )
     return out.select(
         *[F.col("__lrow")[c].alias(c) for c in lcols],
         *[F.col(f"__f_{c}").alias(c) for c in value_cols],

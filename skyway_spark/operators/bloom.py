@@ -93,7 +93,6 @@ def build_bloom(
     n: int = 8,
     k: int = 4,
     m_bits: int = DEFAULT_M_BITS,
-    text_col: str = "text",
 ) -> list[int]:
     """Dense word array (length m_bits/WORD_BITS, int64) with every
     benchmark n-gram window's k bits set.  Distributed build: each
@@ -113,7 +112,7 @@ def build_bloom(
                 {"w": pos // WORD_BITS, "b": np.left_shift(1, pos % WORD_BITS)}
             )
 
-    pos = bench.select(F.col(text_col).cast("binary").alias("__t")).mapInPandas(
+    pos = bench.select(F.col("text").cast("binary").alias("__t")).mapInPandas(
         positions, "w long, b long"
     )
     sparse = {
@@ -129,8 +128,6 @@ def bloom_contamination(
     n: int = 8,
     k: int = 4,
     m_bits: int = DEFAULT_M_BITS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Flag documents whose sliding n-token windows hit the filter:
     (doc_id, n_windows, n_flagged, contaminated).
@@ -164,6 +161,6 @@ def bloom_contamination(
             )
 
     flagged = docs.select(
-        F.col(id_col).alias("__id"), F.col(text_col).cast("binary").alias("__t")
+        F.col("doc_id").alias("__id"), F.col("text").cast("binary").alias("__t")
     ).mapInPandas(probe, "doc_id long, n_windows int, n_flagged int")
     return flagged.withColumn("contaminated", F.col("n_flagged") > 0)

@@ -78,12 +78,7 @@ def apply_changelog(
     return survivors.unionByName(upserts)
 
 
-def changelog_to_scd2(
-    changes: DataFrame,
-    key_cols: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-) -> DataFrame:
+def changelog_to_scd2(changes: DataFrame, key_cols: list[str]) -> DataFrame:
     """Build a type-2 slowly-changing-dimension history from a
     changelog: one row per (key, version) with its validity interval
     [valid_from, valid_to) in seq units — valid_to is the next
@@ -99,16 +94,16 @@ def changelog_to_scd2(
     changelog shuffles once on the key, payload included; history
     builds are offline compactions, not hot-path lookups.
     """
-    payload = [c for c in changes.columns if c != op_col]
-    w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).asc())
+    payload = [c for c in changes.columns if c != "op"]
+    w = Window.partitionBy(*key_cols).orderBy(F.col("seq").asc())
     with_next = changes.select(
         *payload,
-        F.col(op_col).alias("__op"),
-        F.lead(F.col(seq_col)).over(w).alias("valid_to"),
+        F.col("op").alias("__op"),
+        F.lead(F.col("seq")).over(w).alias("valid_to"),
     )
     return with_next.where(F.col("__op") == "U").select(
-        *[c for c in payload if c != seq_col],
-        F.col(seq_col).alias("valid_from"),
+        *[c for c in payload if c != "seq"],
+        F.col("seq").alias("valid_from"),
         "valid_to",
         F.col("valid_to").isNull().alias("is_current"),
     )
@@ -160,14 +155,7 @@ def snapshot_diff(
     )
 
 
-def pit_join(
-    facts: DataFrame,
-    history: DataFrame,
-    key_cols: list[str],
-    at_col: str,
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
-) -> DataFrame:
+def pit_join(facts: DataFrame, history: DataFrame, key_cols: list[str], at_col: str) -> DataFrame:
     """Point-in-time (PIT) join — the feature-store correctness
     primitive: each fact row picks the dimension VERSION whose
     [valid_from, valid_to) interval contains the fact's ``at`` value,
@@ -184,8 +172,8 @@ def pit_join(
     """
     f = facts
     cond = [f[k] == history[k] for k in key_cols]
-    cond.append(f[at_col] >= history[from_col])
-    cond.append(history[to_col].isNull() | (f[at_col] < history[to_col]))
+    cond.append(f[at_col] >= history["valid_from"])
+    cond.append(history["valid_to"].isNull() | (f[at_col] < history["valid_to"]))
     joined = f.join(history, cond, "inner")
     return joined.select(
         *[f[c] for c in facts.columns],

@@ -33,13 +33,7 @@ from skyway_spark.operators.graph import connected_components
 _OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
 
 
-def dense_cell_graph(
-    points: DataFrame,
-    res: int,
-    min_pts: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> tuple[DataFrame, DataFrame]:
+def dense_cell_graph(points: DataFrame, res: int, min_pts: int) -> tuple[DataFrame, DataFrame]:
     """(dense, edges): the dense-cell table (cell, n_points — cells
     holding >= ``min_pts`` points at resolution ``res``) and the
     DIRECTED 8-neighbor adjacency between dense cells, each undirected
@@ -52,7 +46,7 @@ def dense_cell_graph(
     nx, ny = 1 << (res + 1), 1 << res
     dense = (
         points.groupBy(
-            cells.cell_encode(F.col(lat_col), F.col(lon_col), res).alias("cell")
+            cells.cell_encode(F.col("lat"), F.col("lon"), res).alias("cell")
         )
         .agg(F.count(F.lit(1)).alias("n_points"))
         .where(F.col("n_points") >= min_pts)
@@ -93,13 +87,7 @@ def dense_cell_graph(
     return dense, edges
 
 
-def grid_dbscan(
-    points: DataFrame,
-    res: int,
-    min_pts: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def grid_dbscan(points: DataFrame, res: int, min_pts: int) -> DataFrame:
     """(cell, cluster_id, n_points) for every dense cell.
 
     A dense cell is one holding >= ``min_pts`` points at resolution
@@ -107,10 +95,10 @@ def grid_dbscan(
     8-connected dense component (an isolated dense cell is its own
     cluster).
     """
-    dense, sym = dense_cell_graph(points, res, min_pts, lat_col, lon_col)
+    dense, sym = dense_cell_graph(points, res, min_pts)
     # CC wants each undirected edge once
     edges = sym.where(F.col("src") < F.col("dst"))
-    labels = connected_components(edges, "src", "dst")
+    labels = connected_components(edges)
     return dense.join(
         labels.select(F.col("node").alias("cell"), "component"), "cell", "left"
     ).select(
@@ -120,12 +108,7 @@ def grid_dbscan(
     )
 
 
-def grid_heatmap(
-    points: DataFrame,
-    res: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def grid_heatmap(points: DataFrame, res: int) -> DataFrame:
     """Smoothed density surface: cell counts blurred with a separable
     3x3 binomial kernel ([1,2,1]/4 per axis — the standard cheap
     Gaussian approximation for heatmap tiles).
@@ -144,7 +127,7 @@ def grid_heatmap(
     """
     nx, ny = 1 << (res + 1), 1 << res
     counts = points.groupBy(
-        cells.cell_encode(F.col(lat_col), F.col(lon_col), res).alias("cell")
+        cells.cell_encode(F.col("lat"), F.col("lon"), res).alias("cell")
     ).agg(F.count(F.lit(1)).cast("double").alias("v"))
 
     def blur(df: DataFrame, axis: str) -> DataFrame:

@@ -40,20 +40,20 @@ MINHASH_PERMS = [(2 * i + 1, 7919 * (i + 1) % PRIME) for i in range(16)]
 
 def _char_grams(texts: pa.Array, n: int) -> pa.Array:
     cp, offs, valid = strhash.codes(texts)
-    per_row = np.maximum(np.diff(offs) - (n - 1), 1)
+    per_row = np.where(valid, np.maximum(np.diff(offs) - (n - 1), 1), 0)
     row, i = strhash.rows(per_row)
     starts = offs[row] + i
     h = strhash.fold(cp, offs, starts, np.minimum(starts + n, offs[row + 1]))
     h, per_row = strhash.distinct(h, per_row)
-    return strhash.list_array(h, per_row, value_valid=np.repeat(valid, per_row))
+    return strhash.list_array(h, per_row, valid=valid)
 
 
-def ngram_hashes(col: Column, n: int = 3) -> Column:
-    """Distinct char n-gram hashes (array<long>, first-occurrence
-    order): the portable fold of every n code points.  A text shorter
-    than n is one gram, the empty text hashes to [0] and a null text
-    gives [null]."""
-    return strhash.arrow_udf(lambda t: _char_grams(t, n), "array<bigint>")(col)
+def ngram_hashes(col: Column) -> Column:
+    """Distinct char 3-gram hashes (array<long>, first-occurrence
+    order): the portable fold of every 3 code points.  A text shorter
+    than 3 is one gram, the empty text hashes to [0] and a null text
+    gives null."""
+    return strhash.arrow_udf(lambda t: _char_grams(t, 3), "array<bigint>")(col)
 
 
 def _word_shingles(texts: pa.Array, n: int) -> pa.Array:
@@ -89,7 +89,7 @@ def jaccard(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """(text groups with >1 member): keep_id = min id, n_dups.
 
     groupBy on a 64-bit hash first (map-side combine on a fixed-width
@@ -98,21 +98,21 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     internal shuffle key, never an output value, so it uses the
     native xxhash64 (one JVM call per row) rather than the portable
     per-char fold — results are identical either way."""
-    h = F.xxhash64(F.col(text_col)).alias("__th")
+    h = F.xxhash64(F.col("text")).alias("__th")
     return (
-        docs.select(F.col(id_col), F.col(text_col), h)
-        .groupBy("__th", text_col)
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
+        docs.select(F.col("doc_id"), F.col("text"), h)
+        .groupBy("__th", "text")
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
         .where(F.col("n_dups") > 1)
-        .select(F.col(text_col), "keep_id", "n_dups")
+        .select(F.col("text"), "keep_id", "n_dups")
     )
 
 
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Keep exactly one row (min id) per distinct text."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(F.xxhash64(F.col(text_col)), F.col(text_col)).orderBy(F.col(id_col))
+    w = Window.partitionBy(F.xxhash64(F.col("text")), F.col("text")).orderBy(F.col("doc_id"))
     return docs.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
@@ -121,15 +121,15 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(
-    col: Column, n: int = 3, perms=MINHASH_PERMS, unit: str = "char"
-) -> Column:
-    """array<long> of len(perms) minhash values over n-gram hashes
+def minhash_signature(col: Column, unit: str = "char") -> Column:
+    """array<long> of len(MINHASH_PERMS) minhash values over n-gram hashes
     (char n-grams or word shingles) — one Arrow-batched UDF that hashes
     the grams and takes their minima slice by slice, see
     minhash_from_grams."""
     grams = _char_grams if unit == "char" else _word_shingles
-    return strhash.arrow_udf(lambda t: _signature(grams(t, n), perms), "array<bigint>")(col)
+    return strhash.arrow_udf(
+        lambda t: _signature(grams(t, 3), MINHASH_PERMS), "array<bigint>"
+    )(col)
 
 
 def _signature(arr: pa.Array, perms) -> pa.Array:
@@ -143,12 +143,12 @@ def _signature(arr: pa.Array, perms) -> pa.Array:
     return strhash.list_array(sig[valid].ravel(), np.where(valid, len(perms), 0), valid)
 
 
-def minhash_from_grams(grams: Column, perms=MINHASH_PERMS) -> Column:
+def minhash_from_grams(grams: Column) -> Column:
     """Per-row minima of (g*a_i + b_i) % PRIME over the gram hashes,
     one numpy pass per permutation over each slice of the batch.  Null
-    grams are skipped, so no grams gives len(perms) x PRIME; a null
+    grams are skipped, so no grams gives len(MINHASH_PERMS) x PRIME; a null
     array gives null."""
-    return strhash.arrow_udf(lambda g: _signature(g, perms), "array<bigint>")(grams)
+    return strhash.arrow_udf(lambda g: _signature(g, MINHASH_PERMS), "array<bigint>")(grams)
 
 
 def _banded(sigs: DataFrame, bands: int) -> DataFrame:
@@ -173,16 +173,7 @@ def _banded(sigs: DataFrame, bands: int) -> DataFrame:
     return out.where(F.col("bh").isNotNull())
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    bands: int = 4,
-    threshold: float = 0.5,
-    max_bucket: int = 1000,
-    unit: str = "word",
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5, unit: str = "word") -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding, verified with
     exact shingle Jaccard >= threshold. Output: (id_a, id_b, jaccard)
     with id_a < id_b, distinct. Default unit='word' (see
@@ -191,14 +182,15 @@ def minhash_lsh_pairs(
 
     # band on (band, bucket-hash, id) ONLY — the gram arrays (~10^2
     # longs/doc) never enter the banding shuffle or the self-join. The
-    # max_bucket window count rides the same light exchange, and the
+    # bucket-size window count (buckets over 1000 ids are dropped) rides
+    # the same light exchange, and the
     # two self-join sides share it (ReusedExchange).
     sig = docs.select(
-        F.col(id_col).alias("__id"), minhash_signature(F.col(text_col), n, unit=unit)
+        F.col("doc_id").alias("__id"), minhash_signature(F.col("text"), unit=unit)
     )
     w = Window.partitionBy("band", "bh")
-    banded = _banded(sig, bands).withColumn("__bn", F.count(F.lit(1)).over(w))
-    banded = banded.where(F.col("__bn") <= max_bucket)
+    banded = _banded(sig, 4).withColumn("__bn", F.count(F.lit(1)).over(w))
+    banded = banded.where(F.col("__bn") <= 1000)
     cand = (
         banded.select("band", "bh", F.col("id").alias("id_a"))
         .join(banded.select("band", "bh", F.col("id").alias("id_b")), ["band", "bh"])
@@ -224,8 +216,8 @@ def minhash_lsh_pairs(
     )
     gramf = ngram_hashes if unit == "char" else word_shingle_hashes
     gcand = (
-        docs.join(cand_ids, F.col(id_col) == F.col("__cid"), "semi")
-        .select(F.col(id_col).alias("__id"), gramf(F.col(text_col), n).alias("__grams"))
+        docs.join(cand_ids, F.col("doc_id") == F.col("__cid"), "semi")
+        .select(F.col("doc_id").alias("__id"), gramf(F.col("text"), 3).alias("__grams"))
         .localCheckpoint(eager=True)
     )
     ga = gcand.select(F.col("__id").alias("id_a"), F.col("__grams").alias("__ga"))
@@ -236,22 +228,15 @@ def minhash_lsh_pairs(
     ).where(F.col("jaccard") >= threshold)
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bucket_col: str = "n_chars",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Exact n-gram Jaccard pairs, restricted to a same-bucket
     self-join (e.g. equal char length) — the brute-force baseline the
     LSH path is validated against, and itself an equi-join (no cross
     product)."""
     g = docs.select(
-        F.col(id_col).alias("__id"),
-        F.col(bucket_col).alias("__bk"),
-        ngram_hashes(F.col(text_col), n).alias("__g"),
+        F.col("doc_id").alias("__id"),
+        F.col("n_chars").alias("__bk"),
+        ngram_hashes(F.col("text")).alias("__g"),
     )
     a = g.select(F.col("__bk"), F.col("__id").alias("id_a"), F.col("__g").alias("__ga"))
     b = g.select(F.col("__bk"), F.col("__id").alias("id_b"), F.col("__g").alias("__gb"))
@@ -291,8 +276,6 @@ def simhash(col: Column, bits: int = 32) -> Column:
 
 def simhash_near_dup_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bits: int = 32,
     bands: int = 4,
     max_hamming: int = 3,
@@ -302,7 +285,7 @@ def simhash_near_dup_pairs(
     by exact hamming distance <= max_hamming."""
     width = bits // bands
     mask = (1 << width) - 1
-    s = docs.select(F.col(id_col).alias("__id"), simhash(F.col(text_col), bits).alias("__sh"))
+    s = docs.select(F.col("doc_id").alias("__id"), simhash(F.col("text"), bits).alias("__sh"))
     banded = s.select(
         "__id",
         "__sh",
@@ -333,19 +316,13 @@ def simhash_near_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "label",
-    threshold: float = 0.95,
-) -> DataFrame:
+def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Cosine >= threshold pairs within a bucket (label / coarse LSH
     bucket) — equi-join, no cross product."""
     v = emb.select(
-        F.col(bucket_col).alias("__bk"),
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
+        F.col("label").alias("__bk"),
+        F.col("vec_id").alias("__id"),
+        F.col("embedding").cast("array<double>").alias("__v"),
     )
     a = v.select("__bk", F.col("__id").alias("id_a"), F.col("__v").alias("__va"))
     b = v.select("__bk", F.col("__id").alias("id_b"), F.col("__v").alias("__vb"))
@@ -361,11 +338,8 @@ def embedding_near_dup_pairs(
 
 def levenshtein_verify_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     min_sim_pct: int = 90,
-    unit: str = "word",
 ) -> DataFrame:
     """Edit-distance verification of MinHash-LSH candidate pairs — the
     RefinedWeb/SlimPajama recipe: banding prunes the O(n^2) pair space,
@@ -386,10 +360,10 @@ def levenshtein_verify_pairs(
     (whole-stage codegen'd), no Python.
     """
     cand = minhash_lsh_pairs(
-        docs, id_col=id_col, text_col=text_col, threshold=threshold, unit=unit
+        docs, threshold=threshold
     ).select("id_a", "id_b")
-    ta = docs.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta"))
-    tb = docs.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb"))
+    ta = docs.select(F.col("doc_id").alias("id_a"), F.col("text").alias("__ta"))
+    tb = docs.select(F.col("doc_id").alias("id_b"), F.col("text").alias("__tb"))
     lev = F.levenshtein(F.col("__ta"), F.col("__tb"))
     len_a, len_b = F.length("__ta"), F.length("__tb")
     return (
@@ -408,8 +382,8 @@ def levenshtein_verify_pairs(
     )
 
 
-def _winnow(docs: DataFrame, k: int, w: int, id_col: str, text_col: str) -> DataFrame:
-    """(id, __w) with __w = struct(nk, nw, fps, chk) of the lowercased
+def _winnow(docs: DataFrame, k: int, w: int) -> DataFrame:
+    """(doc_id, __w) with __w = struct(nk, nw, fps, chk) of the lowercased
     text: nk char k-gram hashes, nw windows of w consecutive hashes,
     fps = the sorted distinct window minima, chk = their portable fold.
     A null text has no k-grams."""
@@ -440,16 +414,10 @@ def _winnow(docs: DataFrame, k: int, w: int, id_col: str, text_col: str) -> Data
         )
 
     udf = strhash.arrow_udf(winnow, "nk int, nw int, fps array<bigint>, chk bigint")
-    return docs.select(F.col(id_col), udf(F.lower(F.col(text_col))).alias("__w"))
+    return docs.select("doc_id", udf(F.lower(F.col("text"))).alias("__w"))
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken
     2003, the MOSS algorithm): hash every char ``k``-gram of the
     lowercased text, slide a ``w``-hash window, keep the MINIMUM hash
@@ -465,8 +433,8 @@ def winnow_fingerprints(
     probability.  Scale shape: lowercasing in the JVM, then one
     Arrow-batched numpy pass in the scan stage — ZERO shuffles.
     """
-    return _winnow(docs, k, w, id_col, text_col).select(
-        F.col(id_col),
+    return _winnow(docs, k, w).select(
+        F.col("doc_id"),
         F.col("__w.nk").alias("n_kgrams"),
         F.col("__w.nw").alias("n_windows"),
         F.size("__w.fps").alias("n_fps"),
@@ -474,20 +442,14 @@ def winnow_fingerprints(
     )
 
 
-def winnow_fp_table(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fp_table(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Exploded fingerprint table (id, fp) — one row per distinct
     selected fingerprint per document; the join substrate for
     fingerprint-based dedup and decontamination."""
     # _outer: a plain explode gets an inferred size(fps) > 0 filter
     # below the Generate, which evaluates the UDF a second time
-    fps = _winnow(docs, k, w, id_col, text_col).select(
-        id_col, F.explode_outer("__w.fps").alias("fp")
+    fps = _winnow(docs, k, w).select(
+        "doc_id", F.explode_outer("__w.fps").alias("fp")
     )
     return fps.where(F.col("fp").isNotNull())
 
@@ -498,8 +460,6 @@ def winnow_decontaminate(
     k: int = 8,
     w: int = 4,
     share_pct: int = 60,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination by winnowing fingerprints: score
     every corpus document by how much of ITS OWN fingerprint set is
@@ -522,21 +482,21 @@ def winnow_decontaminate(
     benchmark-sized (broadcastable — left to AQE, never forced); the
     flag join is fp-equi and the joins/aggregates all carry longs.
     """
-    cf = winnow_fp_table(corpus, k, w, id_col, text_col)
-    bf = winnow_fp_table(benchmark, k, w, id_col, text_col).select(
-        F.col(id_col).alias("__bid"), "fp"
+    cf = winnow_fp_table(corpus, k, w)
+    bf = winnow_fp_table(benchmark, k, w).select(
+        F.col("doc_id").alias("__bid"), "fp"
     )
-    counts = cf.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fps"))
+    counts = cf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fps"))
     hits = (
         cf.join(bf, "fp")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count_distinct("fp").alias("n_shared_fps"),
             F.count_distinct("__bid").alias("n_bench_docs"),
         )
     )
-    return counts.join(hits, id_col, "left").select(
-        id_col,
+    return counts.join(hits, "doc_id", "left").select(
+        "doc_id",
         "n_fps",
         F.coalesce("n_shared_fps", F.lit(0)).alias("n_shared_fps"),
         F.coalesce("n_bench_docs", F.lit(0)).alias("n_bench_docs"),
@@ -547,13 +507,7 @@ def winnow_decontaminate(
     )
 
 
-def ngram_containment_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold_pct: int = 80,
-) -> DataFrame:
+def ngram_containment_pairs(docs: DataFrame, n: int = 3, threshold_pct: int = 80) -> DataFrame:
     """Asymmetric near-duplicate pairs by n-gram CONTAINMENT
     c(A,B) = |A∩B| / min(|A|,|B|) — the signal Jaccard misses when a
     short document is embedded inside a longer one (boilerplate
@@ -579,8 +533,8 @@ def ngram_containment_pairs(
     # (sizes / df counts / kept grams), so the shingle UDF runs once,
     # not per branch; the pinned table is int64 arrays only
     sh = docs.select(
-        F.col(id_col).alias("__id"),
-        word_shingle_hashes(F.col(text_col), n).alias("__g"),
+        F.col("doc_id").alias("__id"),
+        word_shingle_hashes(F.col("text"), n).alias("__g"),
     ).localCheckpoint(eager=True)
     g = sh.select("__id", F.explode("__g").alias("gram"))
     sizes = g.groupBy("__id").agg(F.count(F.lit(1)).alias("sz"))
@@ -605,12 +559,7 @@ def ngram_containment_pairs(
     )
 
 
-def fuzzy_join_lev1(
-    a: DataFrame,
-    b: DataFrame,
-    key: str = "key",
-    id_col: str = "id",
-) -> DataFrame:
+def fuzzy_join_lev1(a: DataFrame, b: DataFrame) -> DataFrame:
     """Blocked fuzzy equi-join at edit distance <= 1 (record linkage /
     title reconciliation) via the DELETION NEIGHBORHOOD: two strings
     within one edit always share a variant of {s} ∪ Del1(s) (equal →
@@ -636,7 +585,7 @@ def fuzzy_join_lev1(
             lambda i: F.concat(F.substring(k, F.lit(1), i - 1), F.substring(k, i + 1, F.length(k))),
         )
         return df.select(
-            F.col(id_col).alias(f"{side}_id"), F.col(key).alias(f"{side}_key")
+            F.col("id").alias(f"{side}_id"), F.col("key").alias(f"{side}_key")
         ).withColumn("__v", F.explode(F.concat(F.array(k), deletions)))
 
     ka, kb = F.col("a_key"), F.col("b_key")
@@ -647,13 +596,7 @@ def fuzzy_join_lev1(
     )
 
 
-def cdc_chunks(
-    docs: DataFrame,
-    window: int = 8,
-    divisor: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_chunks(docs: DataFrame, window: int = 8, divisor: int = 64) -> DataFrame:
     """Content-defined chunking (LBFS/rsync family): a chunk boundary
     falls AFTER position i whenever the polynomial rolling hash of the
     trailing ``window`` chars is divisible by ``divisor`` — so
@@ -677,9 +620,9 @@ def cdc_chunks(
     B, M = 257, (1 << 31) - 1
     pows = F.array(*[F.lit(pow(B, j, M)) for j in range(window)])
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        F.transform(F.split(F.col(text_col), ""), F.ascii).alias("a"),
+        F.col("doc_id"),
+        F.col("text"),
+        F.transform(F.split(F.col("text"), ""), F.ascii).alias("a"),
     )
     n = F.size("a")
 
@@ -718,27 +661,19 @@ def cdc_chunks(
     ).select("doc_id", "c.idx", "c.start", "c.chunk_len", "c.chunk")
 
 
-def cdc_duplicate_chunks(
-    docs: DataFrame,
-    window: int = 8,
-    divisor: int = 64,
-    min_copies: int = 2,
-    top_n: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_duplicate_chunks(docs: DataFrame, window: int = 8, divisor: int = 64) -> DataFrame:
     """Cross-corpus duplicated content by CDC chunk — the dedup view:
     chunks shared by exact AND shifted near-copies collide because
     boundaries re-sync with content (the property fixed-size chunking
-    lacks).  Output: top ``top_n`` (chunk_len, n_copies, n_docs,
-    chunk) by (n_copies desc, chunk) — deterministic.
+    lacks).  Output: the top 50 (chunk_len, n_copies, n_docs, chunk)
+    with n_copies >= 2, by (n_copies desc, chunk) — deterministic.
 
     Scale shape: one map-side-combined groupBy; at 100 TB the group
     key would be xxhash64(chunk) with text resolved only for the
     top-n survivors — here the oracle checks chunk TEXT, so the text
     key stays (fixture-scale contract, same convention as
     dedup_chunks_rewrite)."""
-    ch = cdc_chunks(docs, window, divisor, id_col, text_col)
+    ch = cdc_chunks(docs, window, divisor)
     return (
         ch.groupBy("chunk")
         .agg(
@@ -746,19 +681,14 @@ def cdc_duplicate_chunks(
             F.countDistinct("doc_id").alias("n_docs"),
             F.max("chunk_len").alias("chunk_len"),
         )
-        .where(F.col("n_copies") >= min_copies)
+        .where(F.col("n_copies") >= 2)
         .orderBy(F.col("n_copies").desc(), "chunk")
-        .limit(top_n)
+        .limit(50)
         .select("chunk_len", "n_copies", "n_docs", "chunk")
     )
 
 
-def jaccard_prefix_join(
-    docs: DataFrame,
-    threshold_pct: int = 60,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def jaccard_prefix_join(docs: DataFrame, threshold_pct: int = 60) -> DataFrame:
     """EXACT Jaccard set-similarity self-join via prefix filtering
     (PPJoin family, Xiao et al. 2008) — the deterministic counterpart
     to MinHash-LSH: no false negatives, no probability knobs.
@@ -785,8 +715,8 @@ def jaccard_prefix_join(
     J >= threshold_pct/100, id_a < id_b.
     """
     toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(strhash.words(F.col(text_col)))).alias(
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(strhash.words(F.col("text")))).alias(
             "tok"
         ),
     )
@@ -840,15 +770,7 @@ def jaccard_prefix_join(
     )
 
 
-def incremental_dedup_census(
-    corpus: DataFrame,
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
+def incremental_dedup_census(corpus: DataFrame, batch: DataFrame) -> DataFrame:
     """Incremental (daily-crawl) dedup: classify a NEW batch against
     an EXISTING corpus — the production shape of web-scale dedup,
     where re-deduplicating the full 100 TB corpus per ingest is the
@@ -860,7 +782,7 @@ def incremental_dedup_census(
                       id as survivor; the survivor itself classifies
                       by the remaining rules)
       near_corpus   — LSH band match to a corpus doc verified at
-                      shingle Jaccard >= threshold
+                      shingle Jaccard >= 0.5
       unique        — none of the above
 
     Output census: (clazz, n_docs), exact int64.
@@ -886,16 +808,16 @@ def incremental_dedup_census(
     from pyspark.sql import Window
 
     def prep(df, with_text=False):
-        t = F.col(text_col)
+        t = F.col("text")
         cols = [
-            F.col(id_col).alias("id"),
-            word_shingle_hashes(t, n).alias("g"),
+            F.col("doc_id").alias("id"),
+            word_shingle_hashes(t).alias("g"),
             text_hash(t).alias("h"),
         ]
         return df.select(*cols, *([t.alias("txt")] if with_text else []))
 
     def banded(df):
-        return _banded(df.select("id", minhash_from_grams(F.col("g"))), bands)
+        return _banded(df.select("id", minhash_from_grams(F.col("g"))), 4)
 
     b = prep(batch, with_text=True).localCheckpoint(eager=True)
     c = prep(corpus).localCheckpoint(eager=True)
@@ -905,8 +827,8 @@ def incremental_dedup_census(
     # semi-join keeps the verify side batch-sized at 100 TB corpus).
     cand_corp = (
         corpus.select(
-            text_hash(F.col(text_col)).alias("h"),
-            F.col(text_col).alias("ctxt"),
+            text_hash(F.col("text")).alias("h"),
+            F.col("text").alias("ctxt"),
         )
         .join(b.select("h").distinct(), "h", "left_semi")
         .distinct()
@@ -939,7 +861,7 @@ def incremental_dedup_census(
     ver = (
         cand.join(survivors.select("id", F.col("g").alias("ga")), "id")
         .join(c.select(F.col("id").alias("cid"), F.col("g").alias("gb")), "cid")
-        .where(jaccard(F.col("ga"), F.col("gb")) >= threshold)
+        .where(jaccard(F.col("ga"), F.col("gb")) >= 0.5)
         .select("id")
         .distinct()
     )
@@ -954,14 +876,7 @@ def incremental_dedup_census(
     return census.groupBy("clazz").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
-def minhash_error_histogram(
-    pairs: DataFrame,
-    text_a: str = "text_a",
-    text_b: str = "text_b",
-    type_col: str = "pair_type",
-    n: int = 3,
-    bucket_pp: int = 5,
-) -> DataFrame:
+def minhash_error_histogram(pairs: DataFrame) -> DataFrame:
     """MinHash estimator calibration — measure, don't guess: for
     ground-truth document pairs, compare the signature estimate
     (matching positions / 16) against the EXACT shingle Jaccard and
@@ -971,7 +886,7 @@ def minhash_error_histogram(
 
     All integer: with m matching positions (of P=16 perms), i = |A&B|,
     u = |A|+|B|-i, the error in scaled percent points is
-    |m*u - P*i| * 100 // (P*u), bucketed by ``bucket_pp``.
+    |m*u - P*i| * 100 // (P*u), in 5-point buckets.
 
     Output: (pair_type, err_bucket, n_pairs, max_err_pp).
 
@@ -981,8 +896,8 @@ def minhash_error_histogram(
     groupBy.
     """
     P = len(MINHASH_PERMS)
-    ga = word_shingle_hashes(F.col(text_a), n)
-    gb = word_shingle_hashes(F.col(text_b), n)
+    ga = word_shingle_hashes(F.col("text_a"))
+    gb = word_shingle_hashes(F.col("text_b"))
     sa = minhash_from_grams(ga)
     sb = minhash_from_grams(gb)
     m = F.aggregate(
@@ -995,8 +910,8 @@ def minhash_error_histogram(
     err_pp = F.abs(m * u - P * i) * 100 / (P * u)
     err_pp = F.floor(err_pp).cast("long")
     out = pairs.select(
-        F.col(type_col).alias("pair_type"),
-        (err_pp / F.lit(bucket_pp)).cast("long").alias("err_bucket"),
+        F.col("pair_type"),
+        (err_pp / F.lit(5)).cast("long").alias("err_bucket"),
         err_pp.alias("e"),
     )
     return out.groupBy("pair_type", "err_bucket").agg(

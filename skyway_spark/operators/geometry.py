@@ -26,9 +26,7 @@ from pyspark.sql import functions as F
 from skyway_spark.functions.geo import haversine_km
 
 
-def ring_centroid(
-    polys: DataFrame, ring_col: str = "ring", lat_field: str = "lat", lon_field: str = "lon"
-) -> DataFrame:
+def ring_centroid(polys: DataFrame) -> DataFrame:
     """Area-weighted ring centroid (the shoelace centroid), computed as
     three ordered left-folds over the vertex array so every float sum
     is bit-identical cross-engine (the q_polygon_area / q_way_lengths
@@ -46,10 +44,10 @@ def ring_centroid(
 
     Output: input rows + (area2, centroid_lon, centroid_lat).
     """
-    ring = F.col(ring_col)
+    ring = F.col("ring")
     n = F.size(ring)
-    x = lambda i: F.element_at(ring, i)[lon_field]  # noqa: E731
-    y = lambda i: F.element_at(ring, i)[lat_field]  # noqa: E731
+    x = lambda i: F.element_at(ring, i)["lon"]  # noqa: E731
+    y = lambda i: F.element_at(ring, i)["lat"]  # noqa: E731
     cross = lambda i: x(i) * y(i + 1) - x(i + 1) * y(i)  # noqa: E731
     idx = F.sequence(F.lit(1), n - 1)
     fold = lambda term: F.aggregate(  # noqa: E731
@@ -66,12 +64,7 @@ def ring_centroid(
     )
 
 
-def relation_way_rollup(
-    relations: DataFrame,
-    way_geoms: DataFrame,
-    rel_id: str = "rel_id",
-    members: str = "members",
-) -> DataFrame:
+def relation_way_rollup(relations: DataFrame, way_geoms: DataFrame) -> DataFrame:
     """Second level of geometry assembly: explode relation members,
     keep way members, equi-join the assembled way geometries, roll up
     per relation. The perimeter is folded left-to-right in member
@@ -81,15 +74,15 @@ def relation_way_rollup(
     members: array<struct<type:string, ref:long, role:string>> (the
     canonical elements schema). Non-way members are ignored here, as a
     rendering/multipolygon pass would route them elsewhere."""
-    m = relations.select(F.col(rel_id), F.posexplode(F.col(members)).alias("pos", "m"))
+    m = relations.select(F.col("rel_id"), F.posexplode(F.col("members")).alias("pos", "m"))
     wm = m.where(F.col("m.type") == "way").select(
-        F.col(rel_id),
+        F.col("rel_id"),
         "pos",
         F.col("m.ref").alias("way_id"),
         F.col("m.role").alias("role"),
     )
     j = wm.join(way_geoms, "way_id")
-    g = j.groupBy(rel_id).agg(
+    g = j.groupBy("rel_id").agg(
         F.array_sort(
             F.collect_list(F.struct("pos", "length_km", "n_points", "role"))
         ).alias("__ms")
@@ -106,7 +99,7 @@ def relation_way_rollup(
         lambda acc, v: acc + v,
     )
     return g.select(
-        F.col(rel_id),
+        F.col("rel_id"),
         F.size("__ms").alias("n_ways"),
         n_outer.alias("n_outer"),
         total_points.alias("total_points"),
@@ -114,22 +107,16 @@ def relation_way_rollup(
     )
 
 
-def assemble_way_geometry(
-    ways: DataFrame,
-    nodes: DataFrame,
-    way_id: str = "way_id",
-    refs: str = "refs",
-    node_id: str = "id",
-) -> DataFrame:
+def assemble_way_geometry(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     """(way_id, n_points, length_km): resolve each way's ordered node
     refs to coordinates and fold the haversine length over consecutive
     vertices. Missing refs simply drop out of the join (count visible
     via n_points)."""
-    exploded = ways.select(F.col(way_id), F.posexplode(F.col(refs)).alias("pos", "__ref"))
+    exploded = ways.select(F.col("way_id"), F.posexplode(F.col("refs")).alias("pos", "__ref"))
     joined = exploded.join(
-        nodes.select(F.col(node_id).alias("__ref"), "lat", "lon"), "__ref"
+        nodes.select(F.col("id").alias("__ref"), "lat", "lon"), "__ref"
     )
-    pts = joined.groupBy(way_id).agg(
+    pts = joined.groupBy("way_id").agg(
         F.array_sort(F.collect_list(F.struct("pos", "lat", "lon"))).alias("__pts")
     )
     n = F.size("__pts")
@@ -140,7 +127,7 @@ def assemble_way_geometry(
     )
     length = F.aggregate(seg, F.lit(0.0), lambda acc, s: acc + s)
     return pts.select(
-        F.col(way_id),
+        F.col("way_id"),
         n.alias("n_points"),
         F.round(F.when(n > 1, length).otherwise(F.lit(0.0)), 6).alias("length_km"),
     )
@@ -194,12 +181,7 @@ def simplify_polyline_py(pts: list[tuple[float, float]], keep: int) -> list[int]
     return [i for i in range(n) if alive[i]]
 
 
-def simplify_ways(
-    geoms: DataFrame,
-    keep: int = 8,
-    way_id: str = "way_id",
-    pts_col: str = "pts",
-) -> DataFrame:
+def simplify_ways(geoms: DataFrame, keep: int = 8) -> DataFrame:
     """Batch polyline simplification over (way_id, pts:
     array<struct<lat,lon>>) — mapInPandas, one heap per geometry, no
     shuffle; output (way_id, n_in, n_out, pts) with endpoints
@@ -239,7 +221,7 @@ def simplify_ways(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, nin, nout, outpts = [], [], [], []
-            for wid, pts in zip(pdf[way_id], pdf[pts_col]):
+            for wid, pts in zip(pdf["way_id"], pdf["pts"]):
                 pl = [(p["lat"], p["lon"]) for p in pts]
                 kept = simplify_polyline_py(pl, keep)
                 ids.append(wid)
@@ -250,7 +232,7 @@ def simplify_ways(
                 {"way_id": ids, "n_in": nin, "n_out": nout, "pts": outpts}
             )
 
-    return geoms.select(F.col(way_id).alias("way_id"), F.col(pts_col).alias(pts_col)).mapInPandas(
+    return geoms.select(F.col("way_id"), F.col("pts")).mapInPandas(
         run, out_schema
     )
 
@@ -330,7 +312,6 @@ def clip_rings_to_bbox(
     lat1: float,
     lon0: float,
     lon1: float,
-    ring_col: str = "ring",
 ) -> DataFrame:
     """Sutherland-Hodgman polygon clipping against an axis-aligned
     bbox — what a REAL vector-tile pipeline does at tile borders
@@ -356,7 +337,7 @@ def clip_rings_to_bbox(
     """
     df = polys.withColumn(
         "__r",
-        F.expr(f"slice({ring_col}, 1, size({ring_col}) - 1)").cast(_RING_T),
+        F.expr("slice(ring, 1, size(ring) - 1)").cast(_RING_T),
     )
     return _clip_passes(df, lat0, lat1, lon0, lon1)
 
@@ -378,7 +359,7 @@ def ring_fold_area2(arr) -> F.Column:
     ).otherwise(F.lit(0.0))
 
 
-def clip_rings_to_grid(polys: DataFrame, res: int, ring_col: str = "ring") -> DataFrame:
+def clip_rings_to_grid(polys: DataFrame, res: int) -> DataFrame:
     """Slice every ring into per-grid-cell pieces — the full vector-tile
     CUT: each polygon fans out to the res-``res`` lat/lon cells its
     bbox covers, and the ring is Sutherland-Hodgman-clipped against
@@ -401,8 +382,8 @@ def clip_rings_to_grid(polys: DataFrame, res: int, ring_col: str = "ring") -> Da
     """
     nx, ny = 1 << (res + 1), 1 << res
     sx, sy = 360.0 / nx, 180.0 / ny
-    lats = F.transform(F.col(ring_col), lambda v: v["lat"])
-    lons = F.transform(F.col(ring_col), lambda v: v["lon"])
+    lats = F.transform(F.col("ring"), lambda v: v["lat"])
+    lons = F.transform(F.col("ring"), lambda v: v["lon"])
     cxr = lambda lo: F.greatest(  # noqa: E731
         F.lit(0), F.least(F.lit(nx - 1), F.floor((lo + F.lit(180.0)) / F.lit(sx)))
     ).cast("long")
@@ -411,7 +392,7 @@ def clip_rings_to_grid(polys: DataFrame, res: int, ring_col: str = "ring") -> Da
     ).cast("long")
     df = (
         polys.withColumn(
-            "__r", F.expr(f"slice({ring_col}, 1, size({ring_col}) - 1)").cast(_RING_T)
+            "__r", F.expr("slice(ring, 1, size(ring) - 1)").cast(_RING_T)
         )
         .withColumn("__x0", cxr(F.array_min(lons)))
         .withColumn("__x1", cxr(F.array_max(lons)))
@@ -493,13 +474,7 @@ def convex_hulls(
     )
 
 
-def segment_crossings(
-    a_segs: DataFrame,
-    b_segs: DataFrame,
-    res: int,
-    x_range: tuple[int, int] = (-18000, 18000),
-    y_range: tuple[int, int] = (-9000, 9000),
-) -> DataFrame:
+def segment_crossings(a_segs: DataFrame, b_segs: DataFrame, res: int) -> DataFrame:
     """Proper-crossing pairs between two INTEGER-coordinate segment
     sets (roads x railways, route x geofence edge) — the spatial
     overlay primitive. A pair crosses iff the endpoints of each
@@ -508,7 +483,7 @@ def segment_crossings(
     (touching or collinear overlap is NOT a crossing).
 
     Input schema both sides: (id, x1, y1, x2, y2) — integer grid
-    units spanning ``x_range``/``y_range``.
+    units spanning x in [-18000, 18000] and y in [-9000, 9000].
 
     Scale shape: never the |A|x|B| theta join — each segment fans out
     to the res-``res`` grid cells its bbox covers (integer floor-div
@@ -522,8 +497,8 @@ def segment_crossings(
     Output: (a_id, b_id).
     """
     nx, ny = 1 << (res + 1), 1 << res
-    xmin, xmax = x_range
-    ymin, ymax = y_range
+    xmin, xmax = (-18000, 18000)
+    ymin, ymax = (-9000, 9000)
 
     def cover(df: DataFrame, tag: str) -> DataFrame:
         cx = lambda c: F.greatest(  # noqa: E731

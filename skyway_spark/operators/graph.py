@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from skyway_spark.plans.session import local_frame
 
 
-def _root_map(c: DataFrame, max_depth: int = 40) -> DataFrame:
+def _root_map(c: DataFrame) -> DataFrame:
     """Flatten the min-pointer forest of edge list ``c`` to its roots.
 
     Returns (x, m) with m = the local-min root reachable from x by
@@ -59,7 +59,7 @@ def _root_map(c: DataFrame, max_depth: int = 40) -> DataFrame:
         .select(F.col("s").alias("x"), "m")
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_depth):
+    for _ in range(40):
         j = (
             m.join(m.select(F.col("x").alias("m"), F.col("m").alias("m2")), "m", "left")
             .select("x", F.coalesce("m2", "m").alias("m"), (F.col("m2") < F.col("m")).alias("__chg"))
@@ -72,12 +72,7 @@ def _root_map(c: DataFrame, max_depth: int = 40) -> DataFrame:
     raise RuntimeError("pointer-forest flattening did not converge")
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """(node, component) for every node appearing in ``edges``;
     component = min node id reachable (deterministic canonical id)."""
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
@@ -94,7 +89,7 @@ def connected_components(
         .withColumn("label", F.col("n"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(25):
         if c.limit(1).isEmpty():
             return labels.select(
                 F.col("n").alias("node"), F.col("label").alias("component")
@@ -119,10 +114,10 @@ def connected_components(
             .select("n", F.coalesce("m", F.col("label")).alias("label"))
             .localCheckpoint(eager=True)
         )
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError("connected_components did not converge in 25 rounds")
 
 
-def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """One-row global graph stats: (n_nodes, n_edges, max_degree,
     n_triangles) — all integers, so bit-exact on any engine.
 
@@ -136,7 +131,7 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     for on the synthetic bounded-degree fixtures.
     """
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .where(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
@@ -174,16 +169,9 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     )
 
 
-def pagerank_int(
-    edges: DataFrame,
-    iters: int = 3,
-    mass: int = 10**12,
-    damp_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def pagerank_int(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Engine-exact PageRank via integer mass-passing: total rank mass
-    is ``mass`` integer units split evenly at init, and every division
+    is ``mass`` = 10^12 integer units split evenly at init, and every division
     (out-degree split, damping) is int64 floor division — so each
     iteration is bit-identical on any engine and the trained ranks
     carry an exact SQL oracle (the same quantization trick as
@@ -191,7 +179,7 @@ def pagerank_int(
     only shifts scores by ~iters units in 10^12).
 
     r_0(v)   = mass div n
-    r_t+1(v) = (100-damp) * (mass div n) div 100
+    r_t+1(v) = (100-damp) * (mass div n) div 100      (damp = 85)
                + damp * sum_{u->v}(r_t(u) div outdeg(u)) div 100
 
     Dangling-node mass is dropped (documented divergence from the
@@ -208,7 +196,8 @@ def pagerank_int(
     sum groupBy on dst.  ``iters`` is a fixed small constant; no
     driver round-trips beyond the single node count.
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+    mass, damp_pct = 10**12, 85
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("t"))
     nodes = e.select(F.col("s").alias("node")).union(
         e.select(F.col("t").alias("node"))
     ).distinct().localCheckpoint(eager=True)
@@ -248,9 +237,6 @@ def bellman_ford(
     edges: DataFrame,
     sources: list[int],
     iters: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Bounded-hop single/multi-source shortest paths by synchronous
     Bellman-Ford relaxation: (node, dist) for every node reachable
@@ -260,9 +246,8 @@ def bellman_ford(
     All-integer (int64 weights, min-combine, INF = 2^62 sentinel so no
     NULL three-valued-logic divergence between engines), so ``iters``
     rounds are bit-exact and a SQL oracle chains the same rounds as
-    CTEs.  With ``weight_col`` None each edge weighs
-    1 + ((src + dst) % 7) — a deterministic synthetic toll; pass a
-    real column for road-network costs.
+    CTEs.  Each edge weighs 1 + ((src + dst) % 7) — a deterministic
+    synthetic toll.
 
     Scale shape (identical to pagerank_int's Pregel-free loop): per
     round ONE edge-keyed shuffle (the node-sized frontier joins edges
@@ -271,12 +256,8 @@ def bellman_ford(
     round-trips at all (sources are ids, not data).  Lineage is
     truncated per round so ``iters`` stays O(1) plan depth.
     """
-    w = (
-        F.col(weight_col).cast("long")
-        if weight_col
-        else (F.lit(1) + (F.col("s") + F.col("t")) % 7).cast("long")
-    )
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"), w.alias("w"))
+    w = (F.lit(1) + (F.col("s") + F.col("t")) % 7).cast("long")
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("t"), w.alias("w"))
     nodes = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("t").alias("node")))
@@ -309,18 +290,12 @@ def bellman_ford(
     return dist.where(F.col("dist") < BF_INF)
 
 
-def hits_int(
-    edges: DataFrame,
-    iters: int = 2,
-    scale_bits: int = 20,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def hits_int(edges: DataFrame, iters: int = 2) -> DataFrame:
     """Engine-exact HITS (hubs & authorities) via integer mass with
-    per-step max-rescaling: scores start at 2^scale_bits, each
+    per-step max-rescaling: scores start at 2^20, each
     iteration computes hub(u) = sum of authority over u's out-targets
     and authority(v) = sum of hub over v's in-sources, and after each
-    half-step the vector is renormalized to peak 2^scale_bits with one
+    half-step the vector is renormalized to peak 2^20 with one
     int64 floor division by the global max — the fixed-point analogue
     of the L-inf normalization in the float formulation, so every
     iteration is bit-identical on any engine (same contract as
@@ -334,7 +309,7 @@ def hits_int(
     aggregate riding a broadcast crossJoin.  Scores localCheckpoint
     per iteration so the lineage stays flat.
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("t")).distinct()
     e = e.localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("s").alias("node"))
@@ -342,7 +317,7 @@ def hits_int(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    peak = 1 << scale_bits
+    peak = 1 << 20
     if nodes.limit(1).isEmpty():
         return nodes.select(
             "node",
@@ -464,9 +439,7 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 64) -> DataFrame:
     )
 
 
-def k_core(
-    edges: DataFrame, k: int, src: str = "src", dst: str = "dst", max_iter: int = 200
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst") -> DataFrame:
     """The k-core of an undirected simple graph: the maximal subgraph
     where every node keeps degree >= k — the standard link-spam /
     dense-community filter on a host graph (peripheral hosts peel
@@ -477,7 +450,7 @@ def k_core(
     + one semi-join filter of the CONTRACTING edge list (the corpus
     never re-enters — edges only shrink); lineage is cut per round
     with localCheckpoint. Convergence in at most |V| rounds, checked
-    by node-count fixpoint; ``max_iter`` raises rather than returning
+    by node-count fixpoint; 200 rounds without one raise rather than returning
     a non-core.
 
     Output: (node, degree) — nodes of the k-core with their in-core
@@ -495,7 +468,7 @@ def k_core(
         .localCheckpoint(eager=True)
     )
     prev_n = -1
-    for _ in range(max_iter):
+    for _ in range(200):
         deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.where(F.col("degree") >= k).select("s")
         n = keep.count()
@@ -510,16 +483,10 @@ def k_core(
             .select("s", "t")
             .localCheckpoint(eager=True)
         )
-    raise RuntimeError(f"k_core did not converge in {max_iter} rounds")
+    raise RuntimeError("k_core did not converge in 200 rounds")
 
 
-def ra_link_prediction(
-    edges: DataFrame,
-    top_n: int = 50,
-    scale: int = 1 << 20,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def ra_link_prediction(edges: DataFrame, top_n: int = 50, scale: int = 1 << 20) -> DataFrame:
     """Resource-Allocation link prediction (Zhou/Lu/Zhang 2009) over an
     undirected graph: for every non-adjacent pair (a, b) with common
     neighbors, score = sum over common z of 1/deg(z) — RA is the
@@ -538,7 +505,7 @@ def ra_link_prediction(
     TakeOrderedAndProject, never a global sort.
     """
     und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("t"))
         .where(F.col("s") != F.col("t"))
         .select(F.least("s", "t").alias("s"), F.greatest("s", "t").alias("t"))
         .distinct()
@@ -631,12 +598,7 @@ def bfs_hops(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    iters: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan et al. '07,
     deterministic variant): labels start as each node's own id; every
     round, each node adopts the most frequent label among its
@@ -657,7 +619,7 @@ def label_propagation(
     localCheckpoint per round so the lineage stays flat.
     """
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
@@ -686,11 +648,7 @@ def label_propagation(
     return lab
 
 
-def assortativity(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity (Newman 2002): the Pearson correlation of
     endpoint degrees over edges — positive on social-style graphs
     (hubs link hubs), negative on web/biological ones (hubs link
@@ -712,7 +670,7 @@ def assortativity(
     at web scale); the moments are a single-row aggregate.
     """
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
     )

@@ -176,28 +176,18 @@ def kmeans_train(
     vectors: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale_bits: int = DEFAULT_SCALE_BITS,
 ) -> tuple[list[list[int]], DataFrame]:
     """Train ``iters`` Lloyd iterations from the k lowest-id vectors
     (deterministic init).  Returns (centroids, qdf) — the trained
     quantized centroids plus the cached quantized projection, so
     callers (final assignment, IVF probing) reuse both."""
     qdf = vectors.select(
-        F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col), scale_bits).alias("q")
+        "vec_id", _quantize(F.col("embedding"), DEFAULT_SCALE_BITS).alias("q")
     ).persist()
     return _lloyd(qdf, ["q"], k, iters)[0], qdf
 
 
-def kmeans_fit_assign(
-    vectors: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale_bits: int = DEFAULT_SCALE_BITS,
-) -> DataFrame:
+def kmeans_fit_assign(vectors: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
     """Train and return the final assignment: (vec_id, cluster, dist)
     with dist the integer squared distance in quantized units.
 
@@ -207,7 +197,7 @@ def kmeans_fit_assign(
     deliberate: at 10^12 rows the training sync points are the only
     passes worth pinning in cluster storage, and re-quantizing is two
     Column ops inside the output scan."""
-    centroids, qdf = kmeans_train(vectors, k, iters, id_col, vec_col, scale_bits)
+    centroids, qdf = kmeans_train(vectors, k, iters)
     out = _assign(qdf, [("q", centroids, "cluster", "dist")]).select(
         "vec_id", "cluster", "dist"
     )
@@ -222,9 +212,6 @@ def ivf_trained_topk(
     iters: int = 2,
     nprobe: int = 2,
     topk: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale_bits: int = DEFAULT_SCALE_BITS,
 ) -> DataFrame:
     """IVF ANN with a TRAINED coarse quantizer (what
     similarity.ivf_topk's seeded-Gaussian centroids stand in for):
@@ -241,8 +228,8 @@ def ivf_trained_topk(
     cache serves training only; the returned probe re-quantizes inside
     its own scan by design.
     """
-    centroids, qdf = kmeans_train(vectors, k_lists, iters, id_col, vec_col, scale_bits)
-    qq = [math.floor(float(x) * (1 << scale_bits)) for x in query]
+    centroids, qdf = kmeans_train(vectors, k_lists, iters)
+    qq = [math.floor(float(x) * (1 << DEFAULT_SCALE_BITS)) for x in query]
     cdist = sorted(
         (sum((a - b) ** 2 for a, b in zip(qq, c)), i) for i, c in enumerate(centroids)
     )
@@ -260,20 +247,18 @@ def ivf_trained_topk(
     return out
 
 
-def _pq_blocks(
-    vectors: DataFrame, m: int, id_col: str, vec_col: str, dim: int, scale_bits: int
-) -> DataFrame:
+def _pq_blocks(vectors: DataFrame, m: int, dim: int) -> DataFrame:
     """(vec_id, __q0 .. __q{m-1}): the m quantized dim/m sub-blocks that
     PQ trains and encodes on."""
     if dim % m:
         raise ValueError("dim must divide evenly into m blocks")
     bs = dim // m
     return vectors.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         *[
-            _quantize(F.slice(F.col(vec_col), j * bs + 1, bs), scale_bits).alias(
-                f"__q{j}"
-            )
+            _quantize(
+                F.slice(F.col("embedding"), j * bs + 1, bs), DEFAULT_SCALE_BITS
+            ).alias(f"__q{j}")
             for j in range(m)
         ],
     )
@@ -284,10 +269,7 @@ def pq_train(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
-    scale_bits: int = DEFAULT_SCALE_BITS,
 ) -> list[list[list[int]]]:
     """Train all ``m`` PQ sub-codebooks JOINTLY: one corpus scan per
     Lloyd iteration instead of m (and one init collect instead of m).
@@ -307,22 +289,15 @@ def pq_train(
     size; one driver sync of k*dim longs — the cost of training m
     codebooks collapses to the cost of training one.
     """
-    staged = _pq_blocks(vectors, m, id_col, vec_col, dim, scale_bits).persist()
+    staged = _pq_blocks(vectors, m, dim).persist()
     books = _lloyd(staged, [f"__q{j}" for j in range(m)], k, iters)
     staged.unpersist()
     return books
 
 
-def _pq_encode(
-    vectors: DataFrame,
-    books: list[list[list[int]]],
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    scale_bits: int,
-) -> DataFrame:
+def _pq_encode(vectors: DataFrame, books: list[list[list[int]]], dim: int) -> DataFrame:
     m = len(books)
-    staged = _pq_blocks(vectors, m, id_col, vec_col, dim, scale_bits)
+    staged = _pq_blocks(vectors, m, dim)
     coded = _assign(
         staged,
         [(f"__q{j}", book, f"code_{j}", f"dist_{j}") for j, book in enumerate(books)],
@@ -337,10 +312,7 @@ def pq_codes(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
-    scale_bits: int = DEFAULT_SCALE_BITS,
 ) -> DataFrame:
     """Product quantization: ``m`` independent integer k-means
     codebooks, one per contiguous dim/m sub-block of the embedding —
@@ -365,8 +337,8 @@ def pq_codes(
     shuffles and zero joins — at 10^12 vectors the codes append to the
     scan like any derived column.
     """
-    books = pq_train(vectors, m, k, iters, id_col, vec_col, dim, scale_bits)
-    return _pq_encode(vectors, books, id_col, vec_col, dim, scale_bits)
+    books = pq_train(vectors, m, k, iters, dim=dim)
+    return _pq_encode(vectors, books, dim)
 
 
 def pq_topk(
@@ -376,10 +348,6 @@ def pq_topk(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale_bits: int = DEFAULT_SCALE_BITS,
 ) -> DataFrame:
     """PQ-ANN search via asymmetric distance computation (ADC): the
     query's exact squared distance to every sub-centroid forms an
@@ -396,14 +364,14 @@ def pq_topk(
     vector is one driver-side row (the only collect); no joins, no
     shuffle beyond the top-k reduction.
     """
-    qrow = vectors.where(F.col(id_col) == query_id).select(vec_col).collect()
+    qrow = vectors.where(F.col("vec_id") == query_id).select("embedding").collect()
     if not qrow:
         raise KeyError(f"query vector {query_id} not found")
-    scale = float(1 << scale_bits)
+    scale = float(1 << DEFAULT_SCALE_BITS)
     qvec = [math.floor(float(x) * scale) for x in qrow[0][0]]
 
-    books = pq_train(vectors, m, k, iters, id_col, vec_col, dim, scale_bits)
-    bs = dim // m
+    books = pq_train(vectors, m, k, iters)
+    bs = 64 // m
     approx = F.lit(0).cast("long")
     for j, book in enumerate(books):
         qsub = qvec[j * bs : (j + 1) * bs]
@@ -412,7 +380,7 @@ def pq_topk(
             F.array(*[F.lit(d).cast("long") for d in dtab]), F.col(f"code_{j}") + 1
         )
     return (
-        _pq_encode(vectors, books, id_col, vec_col, dim, scale_bits)
+        _pq_encode(vectors, books, 64)
         .select("vec_id", approx.alias("approx_dist"))
         .orderBy("approx_dist", "vec_id")
         .limit(topk)

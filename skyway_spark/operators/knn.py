@@ -25,7 +25,6 @@ def radius_candidates(
     points: DataFrame,
     queries: DataFrame,
     radius_km: float,
-    ring: int = 1,
     point_id: str = "id",
     query_id: str = "query_id",
 ) -> DataFrame:
@@ -57,8 +56,8 @@ def radius_candidates(
             cells.k_ring_xy(
                 cells.cell_encode(F.col("lat"), F.col("lon"), res),
                 res,
-                F.greatest(kx, F.lit(ring)),
-                F.lit(ring),
+                F.greatest(kx, F.lit(1)),
+                F.lit(1),
             )
         ).alias("__cell"),
     )
@@ -79,27 +78,24 @@ def knn_join(
     queries: DataFrame,
     k: int = 5,
     radius_km: float = 50.0,
-    ring: int = 1,
-    point_id: str = "id",
-    query_id: str = "query_id",
 ) -> DataFrame:
     """(query_id, point id, dist_km, rank<=k) for neighbors within the
     ring-covered radius.
 
     points needs (point_id, lat, lon); queries needs (query_id, lat,
-    lon). ``ring=1`` with res_for_radius guarantees full coverage of
+    lon). A one-cell ring at res_for_radius guarantees full coverage of
     ``radius_km`` around the query (cell height >= radius, so the 3x3
     ring covers it).
     """
-    cand = radius_candidates(points, queries, radius_km, ring, point_id, query_id)
-    w = Window.partitionBy(query_id).orderBy(F.col("dist_km").asc(), F.col("__pid").asc())
+    cand = radius_candidates(points, queries, radius_km)
+    w = Window.partitionBy("query_id").orderBy(F.col("dist_km").asc(), F.col("__pid").asc())
     return (
         cand.where(F.col("dist_km") <= radius_km)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            F.col(query_id),
-            F.col("__pid").alias(point_id),
+            F.col("query_id"),
+            F.col("__pid").alias("id"),
             F.col("dist_km"),
             F.col("rank"),
         )
@@ -173,7 +169,6 @@ def match_to_segments(
     res: int,
     ring: int = 1,
     point_id: str = "point_id",
-    seg_id: str = "seg_id",
 ) -> DataFrame:
     """Map-matching to SEGMENTS: snap every point to the nearest road
     segment among candidates whose endpoints fall in the point's
@@ -216,7 +211,7 @@ def match_to_segments(
         ).alias("__cell"),
     )
     s = segments.select(
-        F.col(seg_id).alias("__sid"),
+        F.col("seg_id").alias("__sid"),
         F.col("way_id").alias("__wid"),
         "ay_c",
         "ax_c",
@@ -260,7 +255,7 @@ def match_to_segments(
     best = cand.groupBy("__pid").agg(F.min("__c").alias("__b"))
     return best.select(
         F.col("__pid").alias(point_id),
-        F.col("__b.sid").alias(seg_id),
+        F.col("__b.sid").alias("seg_id"),
         F.col("__b.wid").alias("way_id"),
         F.col("__b.num").alias("d2_num"),
         F.col("__b.den").alias("d2_den"),
@@ -326,13 +321,7 @@ def nn_self_join(
     )
 
 
-def voronoi_assign(
-    points: DataFrame,
-    sites: list[tuple],
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    out_col: str = "site",
-) -> DataFrame:
+def voronoi_assign(points: DataFrame, sites: list[tuple]) -> DataFrame:
     """Voronoi-cell assignment against a LITERAL site list: every point
     gets the id of its nearest site (planar squared-degree distance,
     fixed multiply-then-add op order so the doubles are bit-identical
@@ -348,7 +337,7 @@ def voronoi_assign(
     depots, datacenters); for thousands of sites switch to
     snap_to_sites' cell join instead.
     """
-    la, lo = F.col(lat_col), F.col(lon_col)
+    la, lo = F.col("lat"), F.col("lon")
     arr = F.array(
         *[
             F.struct(
@@ -362,4 +351,4 @@ def voronoi_assign(
         ]
     )
     best = F.array_min(arr)
-    return points.select("*", best["s"].alias(out_col), best["d2"].alias("site_d2"))
+    return points.select("*", best["s"].alias("site"), best["d2"].alias("site_d2"))

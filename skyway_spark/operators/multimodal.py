@@ -169,23 +169,23 @@ def audio_windows(media: DataFrame, window: int = 256, hop: int = 128) -> DataFr
 AHASH_DIM = 64
 
 
-def _ahash_int(payload: bytes, dim: int = AHASH_DIM) -> int:
+def _ahash_int(payload: bytes) -> int:
     """Integer average-hash of a byte payload over the deterministic
-    fold decoder: fold bytes into ``dim`` buckets (mod-256 sums, the
+    fold decoder: fold bytes into AHASH_DIM buckets (mod-256 sums, the
     same fold as _fake_decode but kept integer), set bit k iff bucket k
-    strictly exceeds the bucket mean (dim*px > total — exact integer
+    strictly exceeds the bucket mean (AHASH_DIM*px > total — exact integer
     compare, no float mean). Returns a signed two's-complement int64."""
     arr = np.frombuffer(payload, dtype=np.uint8)
     if arr.size == 0:
         return 0
-    pad = (-arr.size) % dim
-    buckets = (np.pad(arr, (0, pad)).reshape(-1, dim).sum(axis=0) % 256).astype(
+    pad = (-arr.size) % AHASH_DIM
+    buckets = (np.pad(arr, (0, pad)).reshape(-1, AHASH_DIM).sum(axis=0) % 256).astype(
         np.int64
     )
     total = int(buckets.sum())
     h = 0
-    for k in range(dim):
-        if int(buckets[k]) * dim > total:
+    for k in range(AHASH_DIM):
+        if int(buckets[k]) * AHASH_DIM > total:
             h |= 1 << k
     return h - (1 << 64) if h >= (1 << 63) else h
 
@@ -232,12 +232,7 @@ def ahash64(media: DataFrame) -> DataFrame:
     )
 
 
-def hamming_near_dup_pairs(
-    hashes: DataFrame,
-    max_hamming: int = 2,
-    id_col: str = "media_id",
-    hash_col: str = "ahash",
-) -> DataFrame:
+def hamming_near_dup_pairs(hashes: DataFrame, max_hamming: int = 2) -> DataFrame:
     """All id pairs whose 64-bit fingerprints differ in at most
     ``max_hamming`` bits — visual near-duplicate detection over aHash
     (or any 64-bit sketch).
@@ -263,13 +258,13 @@ def hamming_near_dup_pairs(
     for b in range(nb):
         lo = 64 * b // nb
         hi = 64 * (b + 1) // nb
-        piece = F.shiftrightunsigned(F.col(hash_col), lo)
+        piece = F.shiftrightunsigned(F.col("ahash"), lo)
         if hi < 64:
             piece = piece.bitwiseAND(F.lit((1 << (hi - lo)) - 1))
         bands.append(F.struct(F.lit(b).alias("b"), piece.alias("k")))
     keyed = hashes.select(
-        F.col(id_col).alias("id"),
-        F.col(hash_col).alias("h"),
+        F.col("media_id").alias("id"),
+        F.col("ahash").alias("h"),
         F.explode(F.array(*bands)).alias("band"),
     )
     a = keyed.select(

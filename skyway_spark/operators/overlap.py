@@ -40,17 +40,17 @@ def _cover(res: int):
     )
 
 
-def bbox_overlap_join(rects: DataFrame, res: int, id_col: str = "rect_id") -> DataFrame:
+def bbox_overlap_join(rects: DataFrame, res: int) -> DataFrame:
     """All (id_a, id_b) pairs (id_a < id_b) of strictly intersecting
     extents, with the overlap box dimensions.
 
-    ``rects`` needs (id_col, lat0, lon0, lat1, lon1) with
+    ``rects`` needs (rect_id, lat0, lon0, lat1, lon1) with
     lat0 < lat1 and lon0 < lon1.  Touching edges (zero-area
     intersection) do NOT pair — the predicate is strict, so the
     result is insensitive to floating-point boundary ties.
     """
     cov = rects.select(
-        F.col(id_col).alias("id"),
+        F.col("rect_id").alias("id"),
         "lat0",
         "lon0",
         "lat1",

@@ -32,13 +32,7 @@ from pyspark.sql import functions as F
 from skyway_spark.functions import strhash
 
 
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_size: int = 1024,
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int, block_size: int = 1024) -> DataFrame:
     """(doc_id, n_tokens, start_offset, seq_id, seq_offset) per doc.
 
     ``start_offset`` is the document's first token position in the
@@ -48,11 +42,11 @@ def pack_sequences(
     concat-and-chunk semantics (no padding, no fragmentation loss).
     All integer math: bit-exact on any engine.
     """
-    ntok = F.size(strhash.words(F.col(text_col))).cast("long")
+    ntok = F.size(strhash.words(F.col("text"))).cast("long")
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         ntok.alias("n_tokens"),
-        F.floor(F.col(id_col) / block_size).alias("__blk"),
+        F.floor(F.col("doc_id") / block_size).alias("__blk"),
     )
     w_in = (
         Window.partitionBy("__blk")
@@ -94,7 +88,6 @@ def pack_sequences(
 def next_fit_bins(
     items: DataFrame,
     capacity: int,
-    size_col: str = "n_points",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Write planning: assign items (tiles, file splits, doc groups) to
@@ -115,27 +108,21 @@ def next_fit_bins(
     ids must be globally consecutive."""
     from pyspark.sql import Window
 
-    order_cols = order_cols or [size_col]
+    order_cols = order_cols or ["n_points"]
     w = (
         Window.orderBy(*[F.col(c) for c in order_cols])
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return items.select(
         "*",
-        F.coalesce(F.sum(size_col).over(w), F.lit(0)).alias("running_start"),
+        F.coalesce(F.sum("n_points").over(w), F.lit(0)).alias("running_start"),
     ).withColumn(
         "bin",
         F.expr(f"running_start div {int(capacity)}").cast("long"),
     )
 
 
-def chunk_windows(
-    docs: DataFrame,
-    width: int,
-    stride: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_windows(docs: DataFrame, width: int, stride: int) -> DataFrame:
     """RAG-style overlapping window chunking: cut each document's
     token stream into windows of ``width`` tokens every ``stride``
     tokens (stride < width = overlapping context windows, the standard
@@ -160,16 +147,16 @@ def chunk_windows(
     """
     if stride <= 0 or width <= 0 or stride > width:
         raise ValueError("need 0 < stride <= width")
-    toks = strhash.words(F.col(text_col))
+    toks = strhash.words(F.col("text"))
     n = F.size(toks)
     # floor(double) is exact here: token counts sit far below 2^53
     n_chunks = F.when(n <= width, F.lit(1)).otherwise(
         F.floor((n - width + stride - 1) / F.lit(stride)) + 1
     ).cast("int")
     out = (
-        docs.where(F.length(F.trim(F.col(text_col))) > 0)
+        docs.where(F.length(F.trim(F.col("text"))) > 0)
         .select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             toks.alias("t"),
             n.alias("n"),
             F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),

@@ -157,25 +157,20 @@ def str_pack(
     )
 
 
-def str_tile_stats(packed: DataFrame, x_col: str = "x", y_col: str = "y") -> DataFrame:
+def str_tile_stats(packed: DataFrame) -> DataFrame:
     """Per-tile summary of an STR layout: row count and bounding box —
     the manifest a spatial reader would prune against.  One map-side-
     combined groupBy over the packed table."""
     return packed.groupBy("tx", "ty").agg(
         F.count(F.lit(1)).alias("n_points"),
-        F.min(x_col).alias("x_min"),
-        F.max(x_col).alias("x_max"),
-        F.min(y_col).alias("y_min"),
-        F.max(y_col).alias("y_max"),
+        F.min("x").alias("x_min"),
+        F.max("x").alias("x_max"),
+        F.min("y").alias("y_min"),
+        F.max("y").alias("y_max"),
     )
 
 
-def rendezvous_shards(
-    ids: DataFrame,
-    n_before: int,
-    n_after: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def rendezvous_shards(ids: DataFrame, n_before: int, n_after: int) -> DataFrame:
     """Rendezvous (highest-random-weight) hashing shard assignment —
     the consistent-placement scheme behind cache/shard topologies
     (Thaler & Ravishankar '98): every id scores each shard with a
@@ -202,7 +197,7 @@ def rendezvous_shards(
     """
     if not (0 < n_before <= n_after):
         raise ValueError("need 0 < n_before <= n_after")
-    i = F.col(id_col).cast("long")
+    i = F.col("doc_id").cast("long")
 
     P = 2147483647
 

@@ -41,16 +41,14 @@ PII_PATTERNS = (
 )
 
 
-def redact_pii(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Per-doc PII counts + the redacted text.
 
-    Returns (id_col, n_emails, n_phones, n_ips, redacted).  Counts
+    Returns (doc_id, n_emails, n_phones, n_ips, redacted).  Counts
     are per-category occurrences in the original text; ``redacted``
     is the text with every match replaced by its category token.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     red = c
     counts = []
     for name, pat, tok in PII_PATTERNS:
@@ -58,7 +56,7 @@ def redact_pii(
         red = F.regexp_replace(red, pat, tok)
     n_email, n_phone, n_ip = counts
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_email.alias("n_emails"),
         n_phone.alias("n_phones"),
         n_ip.alias("n_ips"),
@@ -66,19 +64,12 @@ def redact_pii(
     )
 
 
-def k_anonymity_census(
-    df: DataFrame,
-    k: int,
-    cat_cols: tuple[str, str] = ("lang", "source"),
-    num_col: str = "n_chars",
-    fine: int = 100,
-    coarse: int = 500,
-) -> DataFrame:
+def k_anonymity_census(df: DataFrame, k: int) -> DataFrame:
     """k-anonymity publishing census with a generalization ladder —
     the governance primitive behind quasi-identifier release: rows
     publish at the FINEST generalization whose group reaches size
-    ``k``.  Ladder: level 0 = (cats, num div fine), level 1 = (cats,
-    num div coarse; fine must divide coarse so the hierarchy nests),
+    ``k``.  Ladder: level 0 = (cats, num div 100), level 1 = (cats,
+    num div 500; 100 divides 500 so the hierarchy nests),
     level 2 = cats only, level 3 = suppressed.  Rows already published
     at a finer level never re-enter a coarser group (the standard
     bottom-up DGH walk).
@@ -91,12 +82,10 @@ def k_anonymity_census(
     on GROUP COUNTS, not rows — three nested aggregates over an
     ever-smaller key space; the corpus shuffles once.
     """
-    assert coarse % fine == 0, "fine must divide coarse (nested hierarchy)"
-    c1, c2 = cat_cols
     base = df.groupBy(
-        F.col(c1).alias("c1"),
-        F.col(c2).alias("c2"),
-        F.expr(f"cast({num_col} as bigint) div {fine}").alias("b1"),
+        F.col("lang").alias("c1"),
+        F.col("source").alias("c2"),
+        F.expr("cast(n_chars as bigint) div 100").alias("b1"),
     ).agg(F.count(F.lit(1)).alias("n"))
     lvl0 = base.where(F.col("n") >= k).select(
         "c1", "c2", F.col("b1").alias("bucket"),
@@ -104,7 +93,7 @@ def k_anonymity_census(
     )
     rest1 = (
         base.where(F.col("n") < k)
-        .groupBy("c1", "c2", F.expr(f"b1 div {coarse // fine}").alias("b2"))
+        .groupBy("c1", "c2", F.expr("b1 div 5").alias("b2"))
         .agg(F.sum("n").alias("n"))
     )
     lvl1 = rest1.where(F.col("n") >= k).select(

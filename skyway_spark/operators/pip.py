@@ -255,8 +255,6 @@ def point_in_polygon(
     polygons: DataFrame,
     res: int = 7,
     point_id: str = "id",
-    lat: str = "lat",
-    lon: str = "lon",
 ) -> DataFrame:
     """Rows of ``points`` (all columns preserved) paired with every
     ``polygon_id`` containing them.
@@ -322,7 +320,7 @@ def point_in_polygon(
         )
     )
 
-    lat_c, lon_c = F.col(lat), F.col(lon)
+    lat_c, lon_c = F.col("lat"), F.col("lon")
     total_edges = sum(len(ys) - 1 for g in geoms for ys, _xs in g["outer"] + g["hole"])
     if total_edges <= JVM_REFINE_MAX_EDGES:
         outer_by_geom = F.expr(_array_sql(_rings_sql(g["outer"]) for g in geoms))

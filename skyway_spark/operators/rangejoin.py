@@ -41,7 +41,6 @@ def range_join(
         points,
         sites,
         radius_km,
-        ring=1,
         point_id=point_id,
         query_id=site_id,
     )

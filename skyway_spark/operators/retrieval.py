@@ -32,12 +32,7 @@ K1 = 1.2
 B = 0.75
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: tuple[str, ...],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: tuple[str, ...]) -> DataFrame:
     """(doc_id, score) for every document matching >= 1 query term.
 
     The per-term partial scores are summed in FIXED term order (an
@@ -47,9 +42,9 @@ def bm25_scores(
     terms = sorted(set(query_terms))  # duplicates would double-count
     if not terms:
         raise ValueError("bm25_scores needs at least one query term")
-    tokens = strhash.words(F.col(text_col))
+    tokens = strhash.words(F.col("text"))
     base = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens).alias("term"),
+        F.col("doc_id"), F.explode(tokens).alias("term"),
         F.size(tokens).alias("dl"),
     )
     # corpus stats: N and avgdl (integer sums -> one exact division)
@@ -92,8 +87,6 @@ def rank_biased_overlap(
     score_a: str,
     score_b: str,
     k: int = 10,
-    p_num: int = 9,
-    p_den: int = 10,
 ) -> DataFrame:
     """Truncated Rank-Biased Overlap (Webber et al. 2010) between two
     rankings of the same key set — the top-weighted ranking-agreement
@@ -101,7 +94,7 @@ def rank_biased_overlap(
 
         RBO@k = (1-p) * sum_{d=1..k} p^(d-1) * |A_:d  ∩ B_:d| / d
 
-    computed EXACTLY in integers: with p = p_num/p_den every
+    computed EXACTLY in integers: with p = p_num/p_den = 9/10 every
     coefficient scales to an int64 by S = p_den^k * lcm(1..k), and the
     per-depth overlap sum inverts to a per-ITEM closed form — an item
     at ranks (ra, rb) contributes suffix[max(ra, rb)], the tail sum of
@@ -118,6 +111,7 @@ def rank_biased_overlap(
 
     from pyspark.sql import Window
 
+    p_num, p_den = 9, 10
     L = math.lcm(*range(1, k + 1))
     coeff = [
         (p_den - p_num) * p_num ** (d - 1) * p_den ** (k - d) * (L // d)

@@ -86,7 +86,6 @@ def salted_equi_join(
     n_salt: int = 8,
     cell_col: str = "cell",
     fact_id: str = "id",
-    how: str = "inner",
     hot: DataFrame | None = None,
 ) -> DataFrame:
     """Skew-safe fact-dim equi-join on ``cell_col``."""
@@ -94,4 +93,4 @@ def salted_equi_join(
         hot = hot_cells(fact, cell_col)
     f = salt_fact(fact, hot, n_salt, cell_col, fact_id)
     d = salt_dim(dim, hot, n_salt, cell_col)
-    return f.join(d, on=[cell_col, "__salt"], how=how).drop("__salt")
+    return f.join(d, on=[cell_col, "__salt"]).drop("__salt")

@@ -40,28 +40,27 @@ def hash_bucket(id_col: Column) -> Column:
 
 
 def stratified_sample(
-    df: DataFrame, fractions: dict[str, float], strata_col: str = "lang",
-    id_col: str = "doc_id", default: float = 0.0,
+    df: DataFrame,
+    fractions: dict[str, float],
+    strata_col: str = "lang",
+    default: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic rates (e.g. downsample dominant
     languages): strata not listed keep ``default``."""
     thresh = F.lit(int(default * BUCKETS))
     for k, v in sorted(fractions.items()):
         thresh = F.when(F.col(strata_col) == k, int(v * BUCKETS)).otherwise(thresh)
-    return df.where(hash_bucket(F.col(id_col)) < thresh)
+    return df.where(hash_bucket(F.col("doc_id")) < thresh)
 
 
-def hash_split(
-    df: DataFrame, weights: dict[str, float], id_col: str = "doc_id",
-    split_col: str = "split",
-) -> DataFrame:
+def hash_split(df: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Disjoint, exhaustive train/val/test assignment: cumulative
     bucket ranges in sorted-name order. Every row gets exactly one
     split; assignment survives repartitioning and incremental loads."""
     total = sum(weights.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"weights must sum to 1, got {total}")
-    b = hash_bucket(F.col(id_col))
+    b = hash_bucket(F.col("doc_id"))
     expr = None
     acc = 0.0
     for name, w in sorted(weights.items()):
@@ -70,14 +69,13 @@ def hash_split(
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     # float-rounding guard: the last range always closes at BUCKETS
     last = sorted(weights)[-1]
-    return df.withColumn(split_col, expr.otherwise(last))
+    return df.withColumn("split", expr.otherwise(last))
 
 
 def rebalance_sources(
     df: DataFrame,
     targets: dict[str, float],
     strata_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Downsample-only domain mixing: keep a deterministic subset so
     the surviving corpus approaches the ``targets`` mix (shares
@@ -132,14 +130,12 @@ def rebalance_sources(
     )
     return (
         df.join(F.broadcast(thresh), strata_col)
-        .where(hash_bucket(F.col(id_col)) < F.col("__cut"))
+        .where(hash_bucket(F.col("doc_id")) < F.col("__cut"))
         .drop("__cut")
     )
 
 
-def bottom_k_sample(
-    df: DataFrame, k: int, id_col: str = "doc_id"
-) -> DataFrame:
+def bottom_k_sample(df: DataFrame, k: int) -> DataFrame:
     """EXACTLY-k deterministic sample: the k rows with the smallest
     content hash (ties broken by id).  Rate-based sampling can't
     promise a fixed output size; bottom-k-by-hash is the standard
@@ -155,27 +151,22 @@ def bottom_k_sample(
     """
     from pyspark.sql import Window
 
-    b = hash_bucket(F.col(id_col))
+    b = hash_bucket(F.col("doc_id"))
     # rank assigned AFTER the top-k cut would renumber nondeterministic
     # subsets; assigning over the full ordering then cutting keeps the
     # (hash, id) order total, so the k rows and ranks are unique
     return (
         df.withColumn("__b", b)
-        .orderBy(F.col("__b").asc(), F.col(id_col).asc())
+        .orderBy(F.col("__b").asc(), F.col("doc_id").asc())
         .limit(k)
         .withColumn("sample_rank", F.row_number().over(
-            Window.orderBy(F.col("__b").asc(), F.col(id_col).asc())
+            Window.orderBy(F.col("__b").asc(), F.col("doc_id").asc())
         ))
         .drop("__b")
     )
 
 
-def weighted_bottom_k(
-    df: DataFrame,
-    k: int,
-    weight_col: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def weighted_bottom_k(df: DataFrame, k: int, weight_col: str) -> DataFrame:
     """EXACTLY-k deterministic WEIGHTED sample: priority-sampling with
     integer priorities prio = hash(id) div weight, keeping the k rows
     with the SMALLEST priority (ties by id).  A row with twice the
@@ -198,29 +189,24 @@ def weighted_bottom_k(
     # hash div weight: both operands non-negative, so Spark `div` and
     # DuckDB // agree (floor == truncate on non-negatives)
     prio = F.expr(
-        f"pmod(pmod(cast({id_col} as bigint), {PRIME}) * {_A} + {_B}, {PRIME})"
+        f"pmod(pmod(cast(doc_id as bigint), {PRIME}) * {_A} + {_B}, {PRIME})"
         f" div cast({weight_col} as bigint)"
     )
     ordered = (
         df.where(F.col(weight_col) > 0)
         .withColumn("priority", prio)
-        .orderBy(F.col("priority").asc(), F.col(id_col).asc())
+        .orderBy(F.col("priority").asc(), F.col("doc_id").asc())
         .limit(k)
     )
     return ordered.withColumn(
         "sample_rank",
         F.row_number().over(
-            Window.orderBy(F.col("priority").asc(), F.col(id_col).asc())
+            Window.orderBy(F.col("priority").asc(), F.col("doc_id").asc())
         ),
     )
 
 
-def group_bottom_k(
-    df: DataFrame,
-    k: int,
-    group_col: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def group_bottom_k(df: DataFrame, k: int, group_col: str) -> DataFrame:
     """EXACTLY min(k, group size) rows PER GROUP, deterministically:
     bottom-k by the LCG hash of the id within each group (ties by id)
     — per-language / per-source caps for curation mixes, where a
@@ -238,9 +224,9 @@ def group_bottom_k(
     from pyspark.sql import Window
 
     prio = F.pmod(
-        F.pmod(F.col(id_col).cast("long"), F.lit(PRIME)) * _A + _B, F.lit(PRIME)
+        F.pmod(F.col("doc_id").cast("long"), F.lit(PRIME)) * _A + _B, F.lit(PRIME)
     )
-    w = Window.partitionBy(group_col).orderBy("priority", id_col)
+    w = Window.partitionBy(group_col).orderBy("priority", "doc_id")
     return (
         df.withColumn("priority", prio)
         .withColumn("sample_rank", F.row_number().over(w))
@@ -248,13 +234,7 @@ def group_bottom_k(
     )
 
 
-def greedy_set_cover(
-    docs: DataFrame,
-    k: int = 12,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 1,
-) -> DataFrame:
+def greedy_set_cover(docs: DataFrame, k: int = 12, ngram: int = 1) -> DataFrame:
     """Coverage-maximizing corpus selection: the greedy set-cover /
     facility-location heuristic behind "pick the k docs that together
     cover the most vocabulary" (instruction-data dedup, eval-suite
@@ -275,7 +255,7 @@ def greedy_set_cover(
     covered-term table is localCheckpoint-pinned per round (kilobyte
     state, flat lineage).
     """
-    toks = strhash.words(F.col(text_col))
+    toks = strhash.words(F.col("text"))
     if ngram == 1:
         term = F.explode(toks)
     else:
@@ -290,7 +270,7 @@ def greedy_set_cover(
         )
     dt = (
         docs.where(F.size(toks) >= ngram)
-        .select(F.col(id_col).alias("doc"), term.alias("term"))
+        .select(F.col("doc_id").alias("doc"), term.alias("term"))
         .distinct()
         .localCheckpoint(eager=True)
     )

@@ -30,27 +30,21 @@ def _dot_literal(vec_col: Column, q: list[float]) -> Column:
     return vec.dot(vec_col.cast("array<double>"), qcol)
 
 
-def _rerank(cand: DataFrame, query: list[float], k: int, id_col: str, vec_col: str) -> DataFrame:
-    """(id, cos_sim, rank) of the k candidates nearest ``query`` by
+def _rerank(cand: DataFrame, query: list[float], k: int) -> DataFrame:
+    """(vec_id, cos_sim, rank) of the k candidates nearest ``query`` by
     exact cosine, rounded to 6 places; ties broken by id."""
     qn = math.sqrt(sum(float(x) * float(x) for x in query))
-    norm = vec.norm(F.col(vec_col).cast("array<double>"))
-    sim = _dot_literal(F.col(vec_col), query) / (norm * F.lit(qn))
-    scored = cand.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-    w = Window.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
+    norm = vec.norm(F.col("embedding").cast("array<double>"))
+    sim = _dot_literal(F.col("embedding"), query) / (norm * F.lit(qn))
+    scored = cand.select("vec_id", F.round(sim, 6).alias("cos_sim"))
+    w = Window.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, query: list[float], k: int = 10) -> DataFrame:
     """Exact top-k by cosine to one literal query vector.
     (id, cos_sim, rank). Ties broken by id."""
-    return _rerank(emb, query, k, id_col, vec_col)
+    return _rerank(emb, query, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -75,24 +69,21 @@ def ann_topk(
     emb: DataFrame,
     query: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 12,
     bands: int = 3,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: candidates = vectors sharing >=1 LSH band
     with the query, re-ranked by exact cosine. Recall rises with
     bands; candidate count falls with planes-per-band."""
     dim = len(query)
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     width = n_planes // bands
     mask = (1 << width) - 1
     qsig = 0
     for i, plane in enumerate(planes):
         if float(np.dot(plane, np.asarray(query, dtype=float))) > 0:
             qsig |= 1 << i
-    sig = lsh_signature(F.col(vec_col), planes)
+    sig = lsh_signature(F.col("embedding"), planes)
     banded = emb.withColumn("__sig", sig)
     cond = F.lit(False)
     for b in range(bands):
@@ -100,7 +91,7 @@ def ann_topk(
         cond = cond | (
             F.shiftrightunsigned("__sig", b * width).bitwiseAND(F.lit(mask)) == F.lit(qband)
         )
-    return _rerank(banded.where(cond), query, k, id_col, vec_col)
+    return _rerank(banded.where(cond), query, k)
 
 
 def ivf_centroids(dim: int, n_centroids: int, seed: int = 7) -> np.ndarray:
@@ -131,41 +122,30 @@ def ivf_topk(
     emb: DataFrame,
     query: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 8,
     nprobe: int = 2,
-    seed: int = 7,
 ) -> DataFrame:
     """IVF approximate top-k: rows are bucketed into inverted lists by
     nearest centroid; only the query's `nprobe` closest lists are
     scanned and exactly re-ranked by cosine. At 10^12 rows the table
     is written partitioned by list id, so a probe is a partition-pruned
     scan of nprobe/n_centroids of the data — no shuffle, no full pass."""
-    cents = ivf_centroids(len(query), n_centroids, seed)
+    cents = ivf_centroids(len(query), n_centroids)
     q = np.asarray(query, dtype=float)
     qdists = np.einsum("ij,ij->i", cents, cents) - 2.0 * cents @ q
     probe = [int(i) + 1 for i in np.argsort(qdists, kind="stable")[:nprobe]]
 
-    cand = emb.withColumn("__list", ivf_assign(F.col(vec_col), cents)).where(
+    cand = emb.withColumn("__list", ivf_assign(F.col("embedding"), cents)).where(
         F.col("__list").isin(probe)
     )
-    return _rerank(cand, query, k, id_col, vec_col)
+    return _rerank(cand, query, k)
 
 
-def semantic_dedup(
-    vectors: DataFrame,
-    tau: int,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale_bits: int = 20,
-) -> DataFrame:
+def semantic_dedup(vectors: DataFrame, tau: int, k: int = 8, iters: int = 2) -> DataFrame:
     """SemDeDup-style semantic near-duplicate marking: (vec_id,
     cluster, keep) for EVERY input vector, keep = false iff a
     LOWER-id vector in the same k-means cluster lies within integer
-    squared distance ``tau`` (quantized 2^scale_bits units).
+    squared distance ``tau`` (quantized 2^20 units).
 
     The public recipe (Abbas et al. 2023, "SemDeDup"): cluster the
     embedding space, then compare pairs only WITHIN a cluster — the
@@ -183,7 +163,7 @@ def semantic_dedup(
     The self-join is cluster-equi (no cross product); drops flow back
     as an id-only anti-join, the corpus itself is never re-shuffled.
     """
-    centroids, qdf = kmeans_train(vectors, k, iters, id_col, vec_col, scale_bits)
+    centroids, qdf = kmeans_train(vectors, k, iters)
     assigned = _assign(qdf, [("q", centroids, "cluster", "dist")]).select(
         "vec_id", "cluster", "q"
     )
@@ -208,9 +188,7 @@ def semantic_dedup(
         )
 
 
-def int8_quantize_error(
-    embs: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def int8_quantize_error(embs: DataFrame) -> DataFrame:
     """Per-vector worst-case reconstruction error of int8 scalar
     quantization (per-dimension affine min/max codebook) — the
     go/no-go check before shipping a quantized ANN index: if
@@ -232,8 +210,8 @@ def int8_quantize_error(
     the dim table is still 64 rows — the join is always broadcast.
     """
     ex = embs.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("dim", "vf"),
+        F.col("vec_id").alias("vid"),
+        F.posexplode(F.col("embedding")).alias("dim", "vf"),
     ).select("vid", "dim", F.col("vf").cast("double").alias("v"))
     stats = ex.groupBy("dim").agg(
         F.min("v").alias("mn"), F.max("v").alias("mx")
@@ -251,27 +229,19 @@ def int8_quantize_error(
         j.select("vid", err.alias("err"))
         .groupBy("vid")
         .agg(F.max("err").alias("max_abs_err"))
-        .select(F.col("vid").alias(id_col), "max_abs_err")
+        .select(F.col("vid").alias("vec_id"), "max_abs_err")
     )
 
 
-def matryoshka_recall(
-    emb: DataFrame,
-    prefix_dims: int = 16,
-    k: int = 10,
-    query_mod: int = 50,
-    scale_bits: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def matryoshka_recall(emb: DataFrame, prefix_dims: int = 16, k: int = 10) -> DataFrame:
     """Prefix-dimension retrieval quality (the Matryoshka/MRL
     question): if the index keeps only the first ``prefix_dims`` of
     each embedding, how much of the FULL-vector top-k survives?  Per
-    query (every ``query_mod``-th vector): rank the corpus by exact
+    query (every vector whose id is a multiple of 50): rank the corpus by exact
     integer dot product under full dims and under the prefix, count
     the candidates in BOTH top-k sets.
 
-    Engine-exact: dims quantize to floor(v * 2^scale_bits) int64 once;
+    Engine-exact: dims quantize to floor(v * 2^20) int64 once;
     dot products are integer sums; ranks break ties by candidate id —
     a total order, so recall is deterministic (no float argsort).
 
@@ -283,12 +253,12 @@ def matryoshka_recall(
     Output: (query_id, n_overlap) with n_overlap in [0, k].
     """
     quant = emb.select(
-        F.col(id_col).alias("id"), _quantize(F.col(vec_col), scale_bits).alias("q")
+        F.col("vec_id").alias("id"), _quantize(F.col("embedding"), 20).alias("q")
     )
-    qs = quant.where(F.col("id") % query_mod == 0).select(
+    qs = quant.where(F.col("id") % 50 == 0).select(
         F.col("id").alias("query_id"), F.col("q").alias("qa")
     )
-    cs = quant.where(F.col("id") % query_mod != 0).select(
+    cs = quant.where(F.col("id") % 50 != 0).select(
         F.col("id").alias("cand_id"), F.col("q").alias("qb")
     )
     pairs = F.broadcast(qs).crossJoin(cs).select(
@@ -313,13 +283,7 @@ def matryoshka_recall(
     )
 
 
-def nearest_centroid_confusion(
-    emb: DataFrame,
-    scale_bits: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def nearest_centroid_confusion(emb: DataFrame, scale_bits: int = 10) -> DataFrame:
     """Nearest-centroid classifier train + eval in one pass — the
     embedding-space sanity check (are the labels linearly separated by
     their means?): per-label centroids from integer-quantized sums,
@@ -344,9 +308,9 @@ def nearest_centroid_confusion(
     scale = 1 << scale_bits
     # q = floor(v*2^b) * 2^b: the vector on the centroids' 2^(2b) grid
     quant = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).alias("label"),
-        F.transform(_quantize(F.col(vec_col), scale_bits), lambda q: q * scale).alias("q"),
+        F.col("vec_id"),
+        F.col("label"),
+        F.transform(_quantize(F.col("embedding"), scale_bits), lambda q: q * scale).alias("q"),
     )
     sums = (
         quant.select(

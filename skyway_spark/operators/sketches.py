@@ -97,7 +97,7 @@ def hll_sketch(
     )
 
 
-def hll_estimate(sketch: DataFrame, m: int = 64, alpha_milli: int | None = None) -> DataFrame:
+def hll_estimate(sketch: DataFrame, m: int = 64) -> DataFrame:
     """Distinct-count estimates from a register table:
     (grp, n_buckets, n_zero, inv_sum, est).
 
@@ -112,8 +112,7 @@ def hll_estimate(sketch: DataFrame, m: int = 64, alpha_milli: int | None = None)
 
     Scale shape: one groupBy over the (groups * m)-row register table.
     """
-    if alpha_milli is None:
-        alpha_milli = {16: 673, 32: 697, 64: 709}.get(m, 721)
+    alpha_milli = {16: 673, 32: 697, 64: 709}.get(m, 721)
     agg = sketch.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum(F.expr("shiftright(cast(1048576 as bigint), rho)")).alias("present_sum"),
@@ -159,11 +158,7 @@ def _cms_buckets(g: Column, w: int) -> Column:
     )
 
 
-def cms_sketch(
-    docs: DataFrame,
-    text_col: str = "text",
-    w: int = 1024,
-) -> DataFrame:
+def cms_sketch(docs: DataFrame, w: int = 1024) -> DataFrame:
     """Count-Min sketch of whitespace-token frequencies:
     (row, bucket, n) with d = len(CMS_ROWS) = 4 rows of ``w`` counters.
     Mergeable across shards by summing counters on (row, bucket).
@@ -176,7 +171,7 @@ def cms_sketch(
     distinct term).
     """
     toks = docs.select(
-        F.explode(strhash.words(F.col(text_col))).alias("term")
+        F.explode(strhash.words(F.col("text"))).alias("term")
     ).where(F.length("term") > 0)
     return (
         toks.select(F.explode(_cms_buckets(strhash.text_hash(F.col("term")), w)).alias("rb"))
@@ -186,12 +181,7 @@ def cms_sketch(
     )
 
 
-def cms_estimate(
-    terms: DataFrame,
-    sketch: DataFrame,
-    w: int = 1024,
-    term_col: str = "term",
-) -> DataFrame:
+def cms_estimate(terms: DataFrame, sketch: DataFrame, w: int = 1024) -> DataFrame:
     """Point-query the sketch for each term: + (cms_n) — the min over
     the d row counters, the classic CMS upper-bound estimate
     (cms_n >= true count always; equality unless collisions).
@@ -201,14 +191,14 @@ def cms_estimate(
     on the term.  No corpus access at query time.
     """
     probes = terms.select(
-        term_col,
-        F.explode(_cms_buckets(strhash.text_hash(F.col(term_col)), w)).alias("rb"),
+        "term",
+        F.explode(_cms_buckets(strhash.text_hash(F.col("term")), w)).alias("rb"),
     ).select(
-        term_col, F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket")
+        "term", F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket")
     )
     return (
         probes.join(F.broadcast(sketch), ["row", "bucket"])
-        .groupBy(term_col)
+        .groupBy("term")
         .agg(F.min("n").alias("cms_n"))
     )
 

@@ -80,10 +80,10 @@ def _scatter(df: DataFrame, offs: Column, keep=(), to=("tx", "ty"), extra=()) ->
     )
 
 
-def cell_counts(points: DataFrame, cx: str = "cx", cy: str = "cy") -> DataFrame:
+def cell_counts(points: DataFrame) -> DataFrame:
     """(cx, cy, x) — events per integer grid cell; the single
     corpus-sized shuffle of every statistic below."""
-    return points.groupBy(cx, cy).agg(F.count(F.lit(1)).alias("x"))
+    return points.groupBy("cx", "cy").agg(F.count(F.lit(1)).alias("x"))
 
 
 def morans_i(cells: DataFrame) -> DataFrame:
@@ -237,7 +237,7 @@ def hot_spots(cells: DataFrame) -> DataFrame:
     )
 
 
-def cell_trends(points: DataFrame, ts_col: str = "ts", min_hours: int = 2) -> DataFrame:
+def cell_trends(points: DataFrame) -> DataFrame:
     """Spatio-temporal trend detection: per cell, the ordinary-least-
     squares slope of hourly event counts over OBSERVED hours, kept as
     the exact integer rational
@@ -250,13 +250,13 @@ def cell_trends(points: DataFrame, ts_col: str = "ts", min_hours: int = 2) -> Da
     formulation would join the hour spine first.
 
     Input: (cx, cy, ts).  Output: (cx, cy, n_hours, slope_num,
-    slope_den, rising) for cells with >= min_hours observed hours.
+    slope_den, rising) for cells with >= 2 observed hours.
 
     Scale shape: one corpus-sized (cell, hour) aggregate (map-side
     combined), then a cell-keyed rollup of the aggregate — the moment
     sums ride the same shuffle.  Hour derivation uses integer ``div``
     (no float boundary risk)."""
-    h = F.expr(f"unix_micros(cast({ts_col} as timestamp)) div 3600000000")
+    h = F.expr("unix_micros(cast(ts as timestamp)) div 3600000000")
     hourly = points.groupBy("cx", "cy", h.alias("h")).agg(
         F.count(F.lit(1)).alias("y")
     )
@@ -269,7 +269,7 @@ def cell_trends(points: DataFrame, ts_col: str = "ts", min_hours: int = 2) -> Da
     )
     num = per["n_hours"] * per["sxy"] - per["sx"] * per["sy"]
     den = per["n_hours"] * per["sxx"] - per["sx"] * per["sx"]
-    return per.where(F.col("n_hours") >= min_hours).select(
+    return per.where(F.col("n_hours") >= 2).select(
         "cx",
         "cy",
         "n_hours",
@@ -279,12 +279,7 @@ def cell_trends(points: DataFrame, ts_col: str = "ts", min_hours: int = 2) -> Da
     )
 
 
-def simpson_diversity(
-    points: DataFrame,
-    entity_col: str = "user_id",
-    cx: str = "cx",
-    cy: str = "cy",
-) -> DataFrame:
+def simpson_diversity(points: DataFrame) -> DataFrame:
     """Per-cell entity diversity as the Gini-Simpson index, kept as an
     exact integer rational (entropy needs a log; Gini-Simpson doesn't):
 
@@ -306,28 +301,21 @@ def simpson_diversity(
     (sqrt(2^63)) before the rational overflows.  At 100 TB that bound
     is about per-CELL hot-spot density, not corpus size; cells hotter
     than 3e9 events should be bucketed to a finer res first."""
-    per = points.groupBy(cx, cy, entity_col).agg(F.count(F.lit(1)).alias("n"))
-    roll = per.groupBy(cx, cy).agg(
+    per = points.groupBy("cx", "cy", "user_id").agg(F.count(F.lit(1)).alias("n"))
+    roll = per.groupBy("cx", "cy").agg(
         F.sum("n").alias("n_events"),
         F.count(F.lit(1)).alias("n_entities"),
         F.sum(F.col("n") * F.col("n")).alias("sum_sq"),
     )
     n2 = F.col("n_events") * F.col("n_events")
     return roll.select(
-        cx, cy, "n_events", "n_entities", "sum_sq",
+        "cx", "cy", "n_events", "n_entities", "sum_sq",
         (n2 - F.col("sum_sq")).alias("div_num"),
         n2.alias("div_den"),
     )
 
 
-def ripley_k(
-    points: DataFrame,
-    radii: list[float],
-    res: int,
-    lat: str = "lat",
-    lon: str = "lon",
-    id_col: str = "id",
-) -> DataFrame:
+def ripley_k(points: DataFrame, radii: list[float], res: int, id_col: str = "id") -> DataFrame:
     """Ripley's K point-pattern statistic at multiple radii — the
     standard test of whether web mentions / events CLUSTER in space
     beyond what uniform density explains (K̂(r) above A·πr²/… means
@@ -361,9 +349,9 @@ def ripley_k(
         )
     pts = points.select(
         F.col(id_col).alias("id"),
-        F.col(lat).alias("lat"),
-        F.col(lon).alias("lon"),
-        C.cell_encode(F.col(lat), F.col(lon), res).alias("cell"),
+        F.col("lat"),
+        F.col("lon"),
+        C.cell_encode(F.col("lat"), F.col("lon"), res).alias("cell"),
     )
     lhs = pts.select(
         F.col("id").alias("a"), F.col("lat").alias("alat"),
@@ -407,14 +395,7 @@ def ripley_k(
     return out
 
 
-def idw_cells(
-    points: DataFrame,
-    res: int,
-    value: str = "value",
-    lat: str = "lat",
-    lon: str = "lon",
-    id_col: str = "id",
-) -> DataFrame:
+def idw_cells(points: DataFrame, res: int, value: str = "value", id_col: str = "id") -> DataFrame:
     """Inverse-distance-weighted interpolation of a station value at
     every occupied cell's CENTER from the stations in its Chebyshev-1
     neighborhood — the classic sensor/measurement surface (IDW,
@@ -442,10 +423,10 @@ def idw_cells(
     sx, sy = 360.0 / nx, 180.0 / ny
     st = points.select(
         F.col(id_col).alias("sid"),
-        F.col(lat).alias("slat"),
-        F.col(lon).alias("slon"),
+        F.col("lat").alias("slat"),
+        F.col("lon").alias("slon"),
         F.col(value).alias("v"),
-        C.cell_encode(F.col(lat), F.col(lon), res).alias("scell"),
+        C.cell_encode(F.col("lat"), F.col("lon"), res).alias("scell"),
     )
     targets = st.select(F.col("scell").alias("cell")).distinct()
     contrib = st.select(
@@ -477,14 +458,7 @@ def idw_cells(
     )
 
 
-def variogram_hex(
-    points: DataFrame,
-    size_u: int,
-    max_band: int = 3,
-    x_col: str = "x",
-    y_col: str = "y",
-    value_col: str = "v_q",
-) -> DataFrame:
+def variogram_hex(points: DataFrame, size_u: int, max_band: int = 3) -> DataFrame:
     """Empirical semivariogram by hex-distance band — the spatial-
     correlation-range diagnostic (how far does the signal stay
     correlated?), computed at corpus scale WITHOUT point pairs: per
@@ -510,9 +484,9 @@ def variogram_hex(
     # staged hex assignment (Generate barrier) — the cube-rounding
     # cascade as grouping keys fused with the upstream join blew the
     # codegen 64 KB method limit in round 3 (BENCH/SWEEP_r03c.log)
-    assigned = hx.assign_hex(points, x_col, y_col, size_u, keep=[value_col])
+    assigned = hx.assign_hex(points, "x", "y", size_u, keep=["v_q"])
     cells_df = (
-        assigned.select("q", "r", F.col(value_col).alias("v"))
+        assigned.select("q", "r", F.col("v_q").alias("v"))
         .groupBy("q", "r")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -570,15 +544,7 @@ def variogram_hex(
     return d0.unionByName(cross)
 
 
-def line_of_sight(
-    pairs: DataFrame,
-    height,
-    tower: int = 50,
-    ax: str = "ax",
-    ay: str = "ay",
-    bx: str = "bx",
-    by: str = "by",
-) -> DataFrame:
+def line_of_sight(pairs: DataFrame, height, tower: int = 50) -> DataFrame:
     """Integer viewshed between cell pairs: walk the same round-to-
     nearest DDA as rasterize_segments from observer to target and
     count intermediate cells whose terrain rises above the sightline.
@@ -597,7 +563,7 @@ def line_of_sight(
 
     Output: input pair columns + (steps, n_blockers, visible).
     """
-    d_x, d_y = F.col(bx) - F.col(ax), F.col(by) - F.col(ay)
+    d_x, d_y = F.col("bx") - F.col("ax"), F.col("by") - F.col("ay")
     adx, ady = F.abs(d_x), F.abs(d_y)
     steps = F.greatest(adx, ady)
     s1 = F.greatest(steps, F.lit(1))
@@ -606,11 +572,11 @@ def line_of_sight(
     def off(k, ad):
         return F.floor((2 * k * ad + s1) / (2 * s1)).cast("long")
 
-    h_a, h_b = height(F.col(ax), F.col(ay)), height(F.col(bx), F.col(by))
+    h_a, h_b = height(F.col("ax"), F.col("ay")), height(F.col("bx"), F.col("by"))
 
     def blocks(k):
-        xk = F.col(ax) + sx * off(k, adx)
-        yk = F.col(ay) + sy * off(k, ady)
+        xk = F.col("ax") + sx * off(k, adx)
+        yk = F.col("ay") + sy * off(k, ady)
         lhs = height(xk, yk) * s1
         rhs = (h_a + F.lit(int(tower))) * (s1 - k) + h_b * k
         return lhs > rhs
@@ -1032,7 +998,7 @@ def slope_aspect(cells: DataFrame) -> DataFrame:
     )
 
 
-def colocation_pairs(points: DataFrame, type_col: str = "t") -> DataFrame:
+def colocation_pairs(points: DataFrame) -> DataFrame:
     """Spatial colocation pattern mining (Shekhar & Huang '01), pair
     order: which categories occur in the SAME grid cells more than
     their own footprints explain — the participation index screen
@@ -1053,7 +1019,7 @@ def colocation_pairs(points: DataFrame, type_col: str = "t") -> DataFrame:
     are one groupBy of the same table.
     """
     pres = points.select(
-        F.col(type_col).alias("t"), "cx", "cy"
+        F.col("t"), "cx", "cy"
     ).distinct().localCheckpoint(eager=True)
     foot = pres.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     a = pres.select(F.col("t").alias("type_a"), "cx", "cy")
@@ -1079,12 +1045,7 @@ def colocation_pairs(points: DataFrame, type_col: str = "t") -> DataFrame:
     )
 
 
-def knox_statistic(
-    events: DataFrame,
-    tau_us: int,
-    t_col: str = "t_us",
-    id_col: str = "event_id",
-) -> DataFrame:
+def knox_statistic(events: DataFrame, tau_us: int) -> DataFrame:
     """Knox space-time interaction test statistic (Knox '64, the
     epidemiology classic): among all event pairs, count those close in
     space (Chebyshev <= 1 cell), close in time (|dt| <= tau), and
@@ -1107,7 +1068,7 @@ def knox_statistic(
     population is tau-bounded.
     """
     e = events.select(
-        F.col(id_col).alias("id"), F.col(t_col).alias("t"), "cx", "cy"
+        F.col("event_id").alias("id"), F.col("t_us").alias("t"), "cx", "cy"
     ).localCheckpoint(eager=True)
 
     # ---- time-close pair count via tau-buckets -----------------------

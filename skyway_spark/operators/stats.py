@@ -23,18 +23,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def group_moments(
-    df: DataFrame,
-    group_col: str,
-    value: Column,
-    mean_scale: int = 1000,
-    var_scale: int = 1_000_000,
-) -> DataFrame:
+def group_moments(df: DataFrame, group_col: str, value: Column) -> DataFrame:
     """(group, n, sum_x, sum_x2, mean_milli, var_micro) with ``value``
     an integer-valued Column (cast to long inside).
 
-    mean_milli = floor(sum_x / n * mean_scale);
-    var_micro  = floor((sum_x2/n - (sum_x/n)^2) * var_scale);
+    mean_milli = floor(sum_x / n * 1000);
+    var_micro  = floor((sum_x2/n - (sum_x/n)^2) * 1000000);
     both via the pinned double op order mirrored by the SQL oracle
     (floor, not a cast: DuckDB's DOUBLE->BIGINT cast ROUNDS while
     Spark's truncates — floor agrees everywhere).
@@ -52,18 +46,12 @@ def group_moments(
         "n",
         "sum_x",
         "sum_x2",
-        F.floor(m * float(mean_scale)).alias("mean_milli"),
-        F.floor(var * float(var_scale)).alias("var_micro"),
+        F.floor(m * 1000.0).alias("mean_milli"),
+        F.floor(var * 1_000_000.0).alias("var_micro"),
     )
 
 
-def group_quantiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    id_col: str,
-    ps: tuple[int, ...] = (50, 90, 99),
-) -> DataFrame:
+def group_quantiles(df: DataFrame, group_col: str, value_col: str, id_col: str) -> DataFrame:
     """EXACT per-group percentiles (type-1 / lower discontinuous
     definition): for percentile p the result is the value at sorted
     rank ceil(n*p/100) = (n*p + 99) div 100, ordering by
@@ -71,7 +59,7 @@ def group_quantiles(
     quantile builtins disagree on interpolation rules, the explicit
     rank formula is bit-exact everywhere.
 
-    Output: (grp, p, n, value) — one row per (group, percentile).
+    Output: (grp, p, n, value) — one row per group and p in (50, 90, 99).
 
     Scale shape: ONE keyed sort-shuffle (window partitioned by group)
     computes rank + group count together; the percentile fan-out and
@@ -89,7 +77,7 @@ def group_quantiles(
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy(group_col)).alias("n"),
     )
-    pcol = F.explode(F.array(*[F.lit(int(p)) for p in ps])).alias("p")
+    pcol = F.explode(F.array(*[F.lit(p) for p in (50, 90, 99)])).alias("p")
     return (
         ranked.select("grp", "v", "rn", "n", pcol)
         .where(F.col("rn") == F.expr("(n * p + 99) div 100"))
@@ -129,14 +117,7 @@ def histogram_int(
     )
 
 
-def mad_outliers(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    id_col: str,
-    num: int = 7000,
-    den: int = 1349,
-) -> DataFrame:
+def mad_outliers(df: DataFrame, group_col: str, value_col: str, id_col: str) -> DataFrame:
     """Robust per-group outlier flags via Median Absolute Deviation —
     the outlier detector that survives the outliers themselves (mean/
     stddev z-scores explode under heavy tails; web-scale length and
@@ -144,8 +125,8 @@ def mad_outliers(
 
     Integer-exact: med = exact lower median (rank ceil(n/2) ordered by
     (value, id)), mad = lower median of |x - med| (ties by id), and
-    the modified-z threshold |x - med| * den > num * mad is pure int64
-    cross-multiplication (den/num defaults approximate the textbook
+    the modified-z threshold |x - med| * 1349 > 7000 * mad is pure int64
+    cross-multiplication (7000/1349 approximates the textbook
     0.6745*z > 3.5 rule).  mad = 0 (constant group) flags any
     deviation, matching the convention.
 
@@ -187,7 +168,7 @@ def mad_outliers(
         "v",
         "med",
         "mad",
-        (F.col("ad") * F.lit(den) > F.lit(num) * F.col("mad")).alias("is_outlier"),
+        (F.col("ad") * F.lit(1349) > F.lit(7000) * F.col("mad")).alias("is_outlier"),
     )
 
 
@@ -275,26 +256,17 @@ def auc_exact(
     )
 
 
-def running_zscore_flags(
-    df: DataFrame,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    scale: int = 100,
-    min_n: int = 5,
-    z2: int = 9,
-) -> DataFrame:
+def running_zscore_flags(df: DataFrame) -> DataFrame:
     """Online anomaly detection, the detect-at-arrival convention:
     each point is judged against the moments of its entity's PRIOR
     points only (never itself — self-inclusion shrinks the z of the
     very outlier being tested).
 
     Engine-exact integer arithmetic: values quantize to int64 units
-    v = floor(value * scale); with prior-window sums (n, s, ssq) the
-    z^2 > ``z2`` test cross-multiplies to
+    v = floor(value * 100); with prior-window sums (n, s, ssq) the
+    z^2 > 9 test cross-multiplies to
 
-        (v*n - s)^2  >  z2 * (n*ssq - s^2)
+        (v*n - s)^2  >  9 * (n*ssq - s^2)
 
     — no division, no sqrt, no float variance.  Output: the flagged
     rows (entity, ts, point_id, v_q, n_prior).
@@ -305,16 +277,16 @@ def running_zscore_flags(
     """
     from pyspark.sql import Window
 
-    v = F.floor(F.col(value_col) * scale).cast("long")
+    v = F.floor(F.col("value") * 100).cast("long")
     pw = (
         Window.partitionBy("entity")
         .orderBy(F.col("ts"), F.col("point_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w = df.select(
-        F.col(entity_col).alias("entity"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("point_id"),
+        F.col("user_id").alias("entity"),
+        F.col("ts"),
+        F.col("event_id").alias("point_id"),
         v.alias("v_q"),
     ).select(
         "*",
@@ -327,25 +299,15 @@ def running_zscore_flags(
     dev = F.col("v_q") * F.col("n") - F.col("s")
     var_n2 = F.col("n") * F.col("ssq") - F.col("s") * F.col("s")
     return (
-        w.where((F.col("n") >= min_n) & (dev * dev > F.lit(z2) * var_n2))
+        w.where((F.col("n") >= 5) & (dev * dev > F.lit(9) * var_n2))
         .select("entity", "ts", "point_id", "v_q", F.col("n").alias("n_prior"))
     )
 
 
-def cusum_changepoints(
-    df: DataFrame,
-    mu_q: int,
-    k_q: int,
-    h_q: int,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    scale: int = 100,
-) -> DataFrame:
+def cusum_changepoints(df: DataFrame, mu_q: int, k_q: int, h_q: int) -> DataFrame:
     """Two-sided CUSUM drift detection (Page 1954) per entity — the
     classic sequential changepoint test: quantized values v = floor(
-    value*scale) accumulate upper/lower statistics around the target
+    value*100) accumulate upper/lower statistics around the target
     ``mu_q`` with allowance ``k_q`` and alarm threshold ``h_q`` (all
     in quantized units)
 
@@ -369,16 +331,16 @@ def cusum_changepoints(
     """
     from pyspark.sql import Window
 
-    v = F.floor(F.col(value_col) * scale).cast("long")
+    v = F.floor(F.col("value") * 100).cast("long")
     w = (
         Window.partitionBy("entity")
         .orderBy(F.col("ts"), F.col("point_id"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     pref = df.select(
-        F.col(entity_col).alias("entity"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("point_id"),
+        F.col("user_id").alias("entity"),
+        F.col("ts"),
+        F.col("event_id").alias("point_id"),
         v.alias("v_q"),
     ).select(
         "*",

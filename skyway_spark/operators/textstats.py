@@ -121,15 +121,13 @@ def ngrams(col: Column, n: int) -> Column:
     )
 
 
-def top_ngrams(
-    docs: DataFrame, n: int = 2, k: int = 100, text_col: str = "text"
-) -> DataFrame:
+def top_ngrams(docs: DataFrame, n: int = 2, k: int = 100) -> DataFrame:
     """Corpus-wide top-k word n-grams: explode is JVM-side, the count
     is a partial-aggregated groupBy (map-side combine), and top-k is a
     global sort of only the distinct-ngram aggregate — never of the
     exploded rows. Ties broken by ngram text for determinism."""
     return (
-        docs.select(F.explode(ngrams(F.col(text_col), n)).alias("ngram"))
+        docs.select(F.explode(ngrams(F.col("text"), n)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.col("n_occurrences").desc(), F.col("ngram"))
@@ -137,10 +135,10 @@ def top_ngrams(
     )
 
 
-def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
+def text_stats(docs: DataFrame) -> DataFrame:
+    c = F.col("text")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         whitespace_token_count(c).alias("ws_tokens"),
         bpe_token_count(c).alias("bpe_tokens"),
         F.length(c).alias("n_chars_actual"),
@@ -152,9 +150,7 @@ def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     )
 
 
-def repetition_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document (published
     MassiveText filtering rules): duplicate-token fraction and the
     fraction of the document covered by its most frequent bigram.
@@ -165,12 +161,12 @@ def repetition_stats(
     Integer numerators/denominators until one final division, so the
     values are engine-exact.
     """
-    toks = strhash.words(F.col(text_col))
+    toks = strhash.words(F.col("text"))
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct"),
-        ngrams(F.col(text_col), 2).alias("__bi"),
+        ngrams(F.col("text"), 2).alias("__bi"),
     )
     top_bi = (
         base.select("doc_id", F.explode("__bi").alias("bigram"))
@@ -195,13 +191,7 @@ def repetition_stats(
     )
 
 
-def boilerplate_windows(
-    docs: DataFrame,
-    window: int = 8,
-    min_repeat: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def boilerplate_windows(docs: DataFrame, window: int = 8, min_repeat: int = 10) -> DataFrame:
     """CCNet-style cross-document boilerplate detection: chop each doc
     into consecutive ``window``-token chunks, count each chunk across
     the CORPUS, and report per doc how many of its chunks occur at
@@ -212,14 +202,14 @@ def boilerplate_windows(
     counts), the heavy text never rides a join — the repeated-chunk
     set joins back to the per-doc chunk list by chunk hash only.
     """
-    toks = strhash.words(F.col(text_col))
+    toks = strhash.words(F.col("text"))
     n_chunks = F.floor(F.size(toks) / window).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.xxhash64(F.array_join(F.slice(toks, i * window + 1, window), " ")),
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.when(n_chunks > 0, chunks).otherwise(F.array().cast("array<long>")).alias("__ch"),
     )
     exploded = base.select("doc_id", F.explode("__ch").alias("h"))
@@ -244,14 +234,7 @@ def boilerplate_windows(
     )
 
 
-def contamination(
-    docs: DataFrame,
-    bench: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-) -> DataFrame:
+def contamination(docs: DataFrame, bench: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark-contamination check (the published GPT-3/Llama
     decontamination recipe): slide an ``n``-token window over every
     document and flag windows that occur verbatim anywhere in the
@@ -265,19 +248,19 @@ def contamination(
     unlike boilerplate_windows the windows are SLIDING (stride 1) —
     decontamination must catch unaligned copies.
     """
-    toks = strhash.words(F.col(text_col))
+    toks = strhash.words(F.col("text"))
     n_win = (F.size(toks) - (n - 1)).cast("int")
     windows = F.transform(
         F.sequence(F.lit(0), n_win - 1),
         lambda i: F.xxhash64(F.array_join(F.slice(toks, i + 1, n), " ")),
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.when(n_win > 0, windows)
         .otherwise(F.array().cast("array<long>"))
         .alias("__w"),
     )
-    btoks = strhash.words(F.col(bench_text_col))
+    btoks = strhash.words(F.col("text"))
     bn = (F.size(btoks) - (n - 1)).cast("int")
     bwin = (
         bench.where(bn > 0)
@@ -309,12 +292,7 @@ def contamination(
     )
 
 
-def collocations(
-    docs: DataFrame,
-    top_k: int = 50,
-    min_count: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+def collocations(docs: DataFrame, top_k: int = 50, min_count: int = 3) -> DataFrame:
     """Corpus collocations: top-k adjacent word pairs by LIFT
     (= P(xy) / (P(x)P(y)) — the exp of PMI, so the same ranking
     without a log).  Returns (gram, c_xy, lift_micro) with
@@ -330,7 +308,7 @@ def collocations(
     (lift, gram) tie-break — the corpus itself is scanned once per
     count table and never re-shuffled.
     """
-    toks = strhash.words(F.col(text_col))
+    toks = strhash.words(F.col("text"))
     pairs = F.when(
         F.size(toks) >= 2,
         F.transform(
@@ -381,13 +359,7 @@ def collocations(
     )
 
 
-def dedup_chunks_rewrite(
-    docs: DataFrame,
-    window: int = 8,
-    min_repeat: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_chunks_rewrite(docs: DataFrame, window: int = 8, min_repeat: int = 2) -> DataFrame:
     """Intra-corpus duplicated-chunk REMOVAL with byte-exact rebuilt
     text (the RefinedWeb/CCNet line-dedup step, on token chunks): chop
     each doc into consecutive ``window``-token chunks, drop every
@@ -405,14 +377,14 @@ def dedup_chunks_rewrite(
     the document text itself never shuffles (it stays in the scan
     stage, rewritten in place by array HOFs on the original row).
     """
-    toks = strhash.words(F.col(text_col))
+    toks = strhash.words(F.col("text"))
     n_chunks = F.floor(F.size(toks) / window).cast("int")
     chunk_arr = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.array_join(F.slice(toks, i * window + 1, window), " "),
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         toks.alias("__toks"),
         F.when(n_chunks > 0, chunk_arr)
         .otherwise(F.array().cast("array<string>"))
@@ -450,12 +422,7 @@ def dedup_chunks_rewrite(
     )
 
 
-def vocab_growth(
-    docs: DataFrame,
-    n_checkpoints: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_growth(docs: DataFrame, n_checkpoints: int = 10) -> DataFrame:
     """Heaps-law vocabulary-growth curve: cumulative distinct-type
     count after processing docs in id order, sampled at
     ``n_checkpoints`` evenly spaced doc-id thresholds
@@ -471,11 +438,11 @@ def vocab_growth(
     the corpus is scanned once.
     """
     toks = docs.select(
-        F.col(id_col).alias("did"),
-        F.explode(strhash.words(F.col(text_col))).alias("term"),
+        F.col("doc_id").alias("did"),
+        F.explode(strhash.words(F.col("text"))).alias("term"),
     )
     first = toks.groupBy("term").agg(F.min("did").alias("fd"))
-    bounds = docs.agg(F.max(F.col(id_col)).alias("mx"))
+    bounds = docs.agg(F.max(F.col("doc_id")).alias("mx"))
     cps = bounds.select(
         F.explode(F.sequence(F.lit(1), F.lit(n_checkpoints))).alias("i"), "mx"
     ).select("i", F.expr(f"mx * i div {n_checkpoints}").alias("cp"))
@@ -485,7 +452,7 @@ def vocab_growth(
         .groupBy("i", "cp")
         .agg(F.count(F.lit(1)).alias("vocab"))
     )
-    ndocs = docs.select(F.col(id_col).alias("did")).crossJoin(
+    ndocs = docs.select(F.col("doc_id").alias("did")).crossJoin(
         F.broadcast(cps)
     ).where(F.col("did") <= F.col("cp")).groupBy("i", "cp").agg(
         F.count(F.lit(1)).alias("n_docs")
@@ -495,9 +462,9 @@ def vocab_growth(
     )
 
 
-def _bigram_model(bigrams: DataFrame, scale_bits: int) -> DataFrame:
+def _bigram_model(bigrams: DataFrame) -> DataFrame:
     """(bg, q) for every distinct bigram "a b" of ``bigrams.bg``:
-    q = (2^scale_bits * c(ab)) div c(a·), with c(a·) the count of a in
+    q = (2^20 * c(ab)) div c(a·), with c(a·) the count of a in
     first-of-bigram position."""
     c2 = bigrams.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     c1 = bigrams.groupBy(F.split("bg", " ")[0].alias("tok")).agg(
@@ -505,20 +472,15 @@ def _bigram_model(bigrams: DataFrame, scale_bits: int) -> DataFrame:
     )
     return c2.withColumn("a", F.split("bg", " ")[0]).join(
         c1, F.col("a") == F.col("tok")
-    ).select("bg", F.expr(f"({1 << scale_bits} * c2) div c1").alias("q"))
+    ).select("bg", F.expr(f"({1 << 20} * c2) div c1").alias("q"))
 
 
-def bigram_lm_scores(
-    docs: DataFrame,
-    scale_bits: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     """Corpus-bigram language-model quality score per document — the
     cheap stand-in for perplexity filtering (CCNet uses a KenLM; the
     shape is identical): P(b|a) is estimated from corpus counts as
     c(ab)/c(a·), each conditional quantized to
-    q = (2^scale_bits * c(ab)) div c(a·)  (integer division — no
+    q = (2^20 * c(ab)) div c(a·)  (integer division — no
     float log/division, so the score is bit-exact on any engine),
     and the doc score is the integer mean of its bigram q values.
 
@@ -534,27 +496,22 @@ def bigram_lm_scores(
     short strings, the heavy doc body stays in the scan.
     """
     bg = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(ngrams(F.col(text_col), 2)).alias("bg"),
+        F.col("doc_id"),
+        F.explode(ngrams(F.col("text"), 2)).alias("bg"),
     )
-    scored = bg.join(_bigram_model(bg, scale_bits), "bg").select("doc_id", "q")
+    scored = bg.join(_bigram_model(bg), "bg").select("doc_id", "q")
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.expr("sum(q) div count(1)").alias("lm_q"),
     )
 
 
-def hash_feature_score(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 2,
-) -> DataFrame:
-    """FastText-shaped hashed n-gram linear scorer: (id, n_grams,
+def hash_feature_score(docs: DataFrame) -> DataFrame:
+    """FastText-shaped hashed bigram linear scorer: (doc_id, n_grams,
     score, quality) — the quality-classifier primitive every public
     curation recipe (CCNet, Gopher, DSIR) applies corpus-wide.
 
-    A gram's hash folds its n token hashes (acc*GRAM_MULT + h) % 2^44,
+    A gram's hash folds its 2 token hashes (acc*GRAM_MULT + h) % 2^44,
     an LCG maps it to a weight in [-1000, 1000], the score is the int64
     SUM of the weights and quality = score > 0.  A real deployment
     would learn the weights offline and broadcast them as bloom.py
@@ -566,10 +523,10 @@ def hash_feature_score(
 
     def score(texts: pa.Array) -> pa.Array:
         th, toffs, _ = strhash.token_hashes(texts, java_ws=True)
-        n_grams = np.maximum(np.diff(toffs) - (n - 1), 0)
+        n_grams = np.maximum(np.diff(toffs) - 1, 0)
         row, i = strhash.rows(n_grams)
         starts = toffs[row] + i
-        g = strhash.fold(th, toffs, starts, starts + n, GRAM_MULT, HASH_MOD)
+        g = strhash.fold(th, toffs, starts, starts + 2, GRAM_MULT, HASH_MOD)
         weight = (g % PRIME * _A1 + _B1) % PRIME % 2001 - 1000
         total = np.r_[0, np.cumsum(weight)]
         goffs = strhash.row_offsets(n_grams)
@@ -579,19 +536,15 @@ def hash_feature_score(
         )
 
     udf = strhash.arrow_udf(score, "n_grams int, score bigint")
-    return docs.select(F.col(id_col), udf(F.col(text_col)).alias("__s")).select(
-        F.col(id_col),
+    return docs.select(F.col("doc_id"), udf(F.col("text")).alias("__s")).select(
+        F.col("doc_id"),
         F.col("__s.n_grams").alias("n_grams"),
         F.col("__s.score").alias("score"),
         (F.col("__s.score") > 0).alias("quality"),
     )
 
 
-def bpe_pair_counts(
-    docs: DataFrame,
-    top_n: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_pair_counts(docs: DataFrame, top_n: int = 20) -> DataFrame:
     """Corpus-wide adjacent character-pair counts within whitespace
     tokens — the candidate-scoring scan of ONE BPE merge step (the
     tokenizer-training primitive: each merge iteration re-runs this
@@ -608,7 +561,7 @@ def bpe_pair_counts(
     pair alphabet, not the corpus.  Top-n is TakeOrderedAndProject.
     """
     toks = docs.select(
-        F.explode(strhash.words(F.col(text_col))).alias("tok")
+        F.explode(strhash.words(F.col("text"))).alias("tok")
     ).where(F.length("tok") > 1)
     pairs = toks.select(
         F.explode(
@@ -626,13 +579,7 @@ def bpe_pair_counts(
     )
 
 
-def lm_cross_score(
-    train: DataFrame,
-    candidates: DataFrame,
-    scale_bits: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def lm_cross_score(train: DataFrame, candidates: DataFrame) -> DataFrame:
     """Cross-corpus bigram-LM scoring — the CCNet workflow shape: the
     model is estimated on a REFERENCE corpus (``train``), candidate
     documents are scored against it, and out-of-vocabulary bigrams are
@@ -641,7 +588,7 @@ def lm_cross_score(
     novel or garbage, and the pair (lm_q, n_oov) separates the two).
 
     Same integer quantization as ``bigram_lm_scores``: in-vocab bigram
-    ab scores q = (2^scale_bits * c(ab)) div c(a·) from TRAIN counts,
+    ab scores q = (2^20 * c(ab)) div c(a·) from TRAIN counts,
     OOV bigrams score 0 and increment n_oov.
 
     Output: (doc_id, n_bigrams, n_oov, lm_q) for candidates with >= 1
@@ -653,11 +600,11 @@ def lm_cross_score(
     train corpus is scanned exactly twice (c2, c1), both map-side
     combined.
     """
-    tb = train.select(F.explode(ngrams(F.col(text_col), 2)).alias("bg"))
-    model = _bigram_model(tb, scale_bits)
+    tb = train.select(F.explode(ngrams(F.col("text"), 2)).alias("bg"))
+    model = _bigram_model(tb)
     cb = candidates.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(ngrams(F.col(text_col), 2)).alias("bg"),
+        F.col("doc_id"),
+        F.explode(ngrams(F.col("text"), 2)).alias("bg"),
     )
     scored = cb.join(model, "bg", "left")
     return scored.groupBy("doc_id").agg(
@@ -667,9 +614,7 @@ def lm_cross_score(
     )
 
 
-def readability(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def readability(docs: DataFrame) -> DataFrame:
     """Flesch-Kincaid-shaped readability, engine-exact: word count =
     whitespace tokens, sentence count = terminal-punctuation chars
     (length-difference trick — no regex dialect risk), syllable proxy
@@ -689,7 +634,7 @@ def readability(
 
     Scale shape: pure scan-stage Column expressions, zero shuffles,
     zero Python."""
-    t = F.col(text_col)
+    t = F.col("text")
     w = F.size(strhash.words(t)).cast("long")
     punct = (
         F.length(t) - F.length(F.replace(t, F.lit("."), F.lit("")))
@@ -699,11 +644,11 @@ def readability(
     # unpunctuated text (ASR transcripts, scraped fragments) still gets
     # a sentence-shaped denominator: 25-token segments as the fallback
     nsent = F.greatest(punct, F.call_function("div", w + 24, F.lit(25).cast("long")))
-    v = F.size(F.expr(f"regexp_extract_all(lower({text_col}), '[aeiou]+', 0)")).cast(
+    v = F.size(F.expr("regexp_extract_all(lower(text), '[aeiou]+', 0)")).cast(
         "long"
     )
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         w.alias("n_words"),
         nsent.alias("n_sents"),
         v.alias("n_vowel_runs"),
@@ -738,9 +683,7 @@ def _bpe_merge_pat(a: str, b: str) -> tuple[str, str]:
     return (BPE_L + a + BPE_R + BPE_L + b + BPE_R, BPE_L + a + b + BPE_R)
 
 
-def bpe_train(
-    docs: DataFrame, n_merges: int = 4, text_col: str = "text"
-) -> list[tuple[str, str, int]]:
+def bpe_train(docs: DataFrame, n_merges: int = 4) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges (Sennrich et al. 2016) over the
     corpus: start from characters within whitespace words, repeatedly
     count adjacent symbol pairs and merge the most frequent (ties by
@@ -758,7 +701,7 @@ def bpe_train(
     re-derivation from text is cheaper than the cache write.
     """
     stream = docs.select(
-        F.explode(strhash.words(F.col(text_col))).alias("tok")
+        F.explode(strhash.words(F.col("text"))).alias("tok")
     ).select(_bpe_wrap(F.col("tok")).alias("s"))
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
@@ -797,8 +740,6 @@ def bpe_train(
 def bpe_tokenize(
     docs: DataFrame,
     merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Apply a learned merge list to every document: per whitespace
     word, wrap to the symbol stream, run the merges in order (each one
@@ -823,7 +764,7 @@ def bpe_tokenize(
             s = F.replace(s, F.lit(pat), F.lit(rep))
         return s
 
-    words = strhash.words(F.col(text_col))
+    words = strhash.words(F.col("text"))
     enc = F.transform(words, encode)
     n_tokens = F.aggregate(
         enc,
@@ -846,20 +787,14 @@ def bpe_tokenize(
         ),
     )
     return docs.select(
-        F.col(id_col), n_tokens.alias("n_tokens"), seg.alias("seg")
+        F.col("doc_id"), n_tokens.alias("n_tokens"), seg.alias("seg")
     )
 
 
 SPAN_P = 2147483647
 
 
-def span_corrupt(
-    docs: DataFrame,
-    span_len: int = 3,
-    mask_mod: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def span_corrupt(docs: DataFrame, span_len: int = 3, mask_mod: int = 5) -> DataFrame:
     """T5-style span corruption: whitespace tokens group into fixed
     ``span_len`` blocks; a deterministic hash of (doc_id, block) marks
     ~1/``mask_mod`` of blocks as masked.  The input side replaces each
@@ -874,10 +809,10 @@ def span_corrupt(
     ordinals, one groupBy rebuilds the strings with order-pinned
     concat — two shuffles sharing the doc key.  No Python, no UDFs.
     """
-    words = strhash.words(F.col(text_col))
+    words = strhash.words(F.col("text"))
     nblocks = F.ceil(F.size(words) / F.lit(span_len)).cast("int")
     blocks = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         words.alias("ws"),
         F.explode(F.sequence(F.lit(0), nblocks - 1)).alias("b"),
     ).select(
@@ -935,13 +870,7 @@ def span_corrupt(
     )
 
 
-def concordance(
-    docs: DataFrame,
-    term: str,
-    ctx: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def concordance(docs: DataFrame, term: str, ctx: int = 2) -> DataFrame:
     """KWIC (keyword-in-context) concordance: every occurrence of
     ``term`` as a whitespace token, with up to ``ctx`` tokens of left
     and right context — the corpus-linguistics view of a query term,
@@ -955,7 +884,7 @@ def concordance(
     single computed array, not three re-computations (the repo's
     HOF-staging discipline)."""
     toks = docs.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("t")
+        F.col("doc_id").alias("id"), F.split(F.col("text"), " ").alias("t")
     )
     hits = toks.select(
         "id", "t", F.posexplode("t").alias("p0", "tok")
@@ -979,12 +908,7 @@ def concordance(
     )
 
 
-def term_drift(
-    docs: DataFrame,
-    split_col: str = "split_a",
-    text_col: str = "text",
-    top_k: int = 100,
-) -> DataFrame:
+def term_drift(docs: DataFrame, top_k: int = 100) -> DataFrame:
     """Term-distribution drift between two corpus splits — the
     distribution-shift monitor for ingestion pipelines (did this
     crawl's vocabulary move?).  For every term with counts c1/c2 in
@@ -994,7 +918,7 @@ def term_drift(
     int64, no division, no logs.  Top-k terms by absolute skew with
     (|skew| DESC, term ASC) deterministic order.
 
-    Input: docs with a boolean ``split_col``.  Output:
+    Input: docs with a boolean ``split_a``.  Output:
     (term, c1, c2, skew) — the drift direction reads off the sign.
 
     Scale shape: tokenize + explode in the scan stage; ONE
@@ -1003,9 +927,9 @@ def term_drift(
     once, never twice); totals ride a broadcast single-row crossJoin;
     top-k is TakeOrderedAndProject over the vocabulary aggregate.
     """
-    toks = strhash.words(F.col(text_col))
-    t = docs.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(split_col).cast("boolean").alias("a"),
+    toks = strhash.words(F.col("text"))
+    t = docs.where(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("split_a").cast("boolean").alias("a"),
         F.explode(toks).alias("term"),
     )
     per = t.groupBy("term").agg(
@@ -1024,14 +948,7 @@ def term_drift(
     )
 
 
-def bitext_candidates(
-    docs: DataFrame,
-    bucket_tokens: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    group_col: str = "source",
-) -> DataFrame:
+def bitext_candidates(docs: DataFrame, bucket_tokens: int = 32) -> DataFrame:
     """Bitext-mining candidate pairs (the blocking stage of parallel-
     corpus construction a la WikiMatrix/CCAligned): documents from the
     SAME group (site/source) in DIFFERENT languages whose token
@@ -1052,11 +969,11 @@ def bitext_candidates(
     explode width is O(len/(2.5*W)) — the honest cost of the
     tolerance, linear in the tolerance window, never corpus-sized.
     """
-    toks = F.size(strhash.words(F.col(text_col)))
-    base = docs.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(group_col).alias("source"),
-        F.col(lang_col).alias("lang"),
-        F.col(id_col).alias("doc"),
+    toks = F.size(strhash.words(F.col("text")))
+    base = docs.where(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("source"),
+        F.col("lang"),
+        F.col("doc_id").alias("doc"),
         toks.cast("long").alias("len"),
         (toks.cast("long") / F.lit(bucket_tokens)).cast("long").alias("bk"),
     )

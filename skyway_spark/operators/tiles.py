@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from skyway_spark.functions import cells
 
 
-def assign_tiles(points: DataFrame, z: int, lat: str = "lat", lon: str = "lon") -> DataFrame:
-    tx, ty = cells.tile_xy(F.col(lat), F.col(lon), z)
+def assign_tiles(points: DataFrame, z: int) -> DataFrame:
+    tx, ty = cells.tile_xy(F.col("lat"), F.col("lon"), z)
     return points.withColumns(
         {"tile_z": F.lit(z), "tile_x": tx, "tile_y": ty}
     )
@@ -33,16 +33,14 @@ def vector_tiles(
     z: int,
     feature_cols: list[str] | None = None,
     max_features: int = 10_000,
-    lat: str = "lat",
-    lon: str = "lon",
 ) -> DataFrame:
     """(tile_z, tile_x, tile_y, n_points, features[<=max_features]).
 
     Deterministic feature cap: rank by (id) inside the tile before
     collect_list, so output is stable under any parallelism.
     """
-    feature_cols = feature_cols or ["id", lat, lon]
-    t = assign_tiles(points, z, lat, lon)
+    feature_cols = feature_cols or ["id", "lat", "lon"]
+    t = assign_tiles(points, z)
     w = Window.partitionBy("tile_z", "tile_x", "tile_y").orderBy(*feature_cols)
     ranked = t.withColumn("__rk", F.row_number().over(w))
     return (
@@ -58,9 +56,7 @@ def vector_tiles(
     )
 
 
-def raster_tiles(
-    points: DataFrame, z: int, lat: str = "lat", lon: str = "lon", pixel_zoom_delta: int = 8
-) -> DataFrame:
+def raster_tiles(points: DataFrame, z: int, pixel_zoom_delta: int = 8) -> DataFrame:
     """Sparse per-tile raster: (tile, pixels array<struct<px,py,cnt>>).
 
     Pixel index = position of the point's (z + delta) subtile inside
@@ -69,8 +65,8 @@ def raster_tiles(
     combined.
     """
     n = 1 << pixel_zoom_delta
-    t = assign_tiles(points, z, lat, lon)
-    sx, sy = cells.tile_xy(F.col(lat), F.col(lon), z + pixel_zoom_delta)
+    t = assign_tiles(points, z)
+    sx, sy = cells.tile_xy(F.col("lat"), F.col("lon"), z + pixel_zoom_delta)
     px = sx - F.col("tile_x") * n
     py = sy - F.col("tile_y") * n
     pixel_counts = (
@@ -87,11 +83,11 @@ def raster_tiles(
     )
 
 
-def tile_stats(points: DataFrame, z: int, lat: str = "lat", lon: str = "lon") -> DataFrame:
+def tile_stats(points: DataFrame, z: int) -> DataFrame:
     """Lightweight per-tile aggregate: point count and approximate
     distinct ids."""
     return (
-        assign_tiles(points, z, lat, lon)
+        assign_tiles(points, z)
         .groupBy("tile_z", "tile_x", "tile_y")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
@@ -100,13 +96,7 @@ def tile_stats(points: DataFrame, z: int, lat: str = "lat", lon: str = "lon") ->
     )
 
 
-def tile_pyramid(
-    points: DataFrame,
-    finest_res: int,
-    levels: int,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
+def tile_pyramid(points: DataFrame, finest_res: int, levels: int) -> DataFrame:
     """Multi-resolution rollup: per-cell point counts at ``levels``
     consecutive resolutions (finest_res down to finest_res-levels+1)
     in ONE pass over the data — the hypertable-rollup / tile-pyramid
@@ -128,7 +118,7 @@ def tile_pyramid(
     if levels < 1 or levels > finest_res + 1:
         raise ValueError("levels must be in [1, finest_res+1]")
     base = points.groupBy(
-        cells.cell_encode(F.col(lat), F.col(lon), finest_res).alias("cell")
+        cells.cell_encode(F.col("lat"), F.col("lon"), finest_res).alias("cell")
     ).agg(F.count(F.lit(1)).alias("n"))
     chain = F.array(
         *[
@@ -143,13 +133,7 @@ def tile_pyramid(
     )
 
 
-def vectorize_raster(
-    points: DataFrame,
-    res: int,
-    min_count: int,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
+def vectorize_raster(points: DataFrame, res: int, min_count: int) -> DataFrame:
     """Raster -> vector: polygonize the thresholded density grid into
     horizontal run-length segments (the gaps-and-islands pattern) —
     the inverse direction of raster_tiles, closing the north rule's
@@ -164,7 +148,7 @@ def vectorize_raster(
     """
     from pyspark.sql import Window
 
-    x, y = cells.cell_xy(F.col(lat), F.col(lon), res)
+    x, y = cells.cell_xy(F.col("lat"), F.col("lon"), res)
     hot = (
         points.groupBy(x.alias("x"), y.alias("y"))
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -184,14 +168,7 @@ def vectorize_raster(
     )
 
 
-def adaptive_tiles(
-    points: DataFrame,
-    base_z: int,
-    max_z: int,
-    threshold: int,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
+def adaptive_tiles(points: DataFrame, base_z: int, max_z: int, threshold: int) -> DataFrame:
     """Adaptive quadtree tiling: start from ``base_z``; any tile whose
     point count exceeds ``threshold`` is replaced by its four children,
     recursively until ``max_z``.  The result is the variable-depth
@@ -210,7 +187,7 @@ def adaptive_tiles(
     """
     if not base_z <= max_z:
         raise ValueError("need base_z <= max_z")
-    finest = assign_tiles(points, max_z, lat, lon).groupBy("tile_x", "tile_y").agg(
+    finest = assign_tiles(points, max_z).groupBy("tile_x", "tile_y").agg(
         F.count(F.lit(1)).alias("n_points")
     )
     # every level feeds three plan branches (keep, overflow, child
@@ -311,17 +288,10 @@ def rasterize_segments(
     )
 
 
-def marker_thinning(
-    points: DataFrame,
-    zooms: tuple[int, ...] = (3, 5, 7),
-    id_col: str = "id",
-    weight_col: str = "w",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def marker_thinning(points: DataFrame, zooms: tuple[int, ...] = (3, 5, 7)) -> DataFrame:
     """Zoom-pyramid marker thinning — what a map front-end renders
     instead of 10^12 points: per (zoom, tile), keep ONE representative
-    marker (the heaviest by ``weight_col``, event id breaking ties —
+    marker (the heaviest by ``w``, ``id`` breaking ties —
     a total order, so the survivor is engine-deterministic) plus the
     cluster count.
 
@@ -335,9 +305,9 @@ def marker_thinning(
 
     outs = []
     for z in zooms:
-        tx, ty = cells.tile_xy(F.col(lat_col), F.col(lon_col), z)
+        tx, ty = cells.tile_xy(F.col("lat"), F.col("lon"), z)
         rep = F.max(
-            F.struct(F.col(weight_col).alias("w"), F.col(id_col).alias("i"))
+            F.struct(F.col("w"), F.col("id").alias("i"))
         )
         outs.append(
             points.groupBy(tx.alias("tile_x"), ty.alias("tile_y"))

@@ -18,21 +18,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def hourly_gap_fill(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    cents_col=None,
-) -> DataFrame:
+def hourly_gap_fill(events: DataFrame, key: str = "user_id") -> DataFrame:
     """Dense hourly series per key between that key's first and last
     event hour: n_events (0 on gap hours) and ffill_cents (the last
     seen hour-sum of integer cents, carried forward across gaps).
 
-    cents_col defaults to floor(value*100) — integer money so sums
-    are cross-engine exact.
+    Cents are floor(value*100) — integer money so sums are
+    cross-engine exact.
     """
-    cents = cents_col if cents_col is not None else F.floor(F.col("value") * 100)
-    hour = F.date_trunc("hour", F.col(ts_col))
+    cents = F.floor(F.col("value") * 100)
+    hour = F.date_trunc("hour", F.col("ts"))
     agg = events.groupBy(F.col(key), hour.alias("hour")).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(cents.cast("long")).alias("cents"),
@@ -97,12 +92,7 @@ def ewma(
     return per_key.select(key_col, "n_events", folded.alias("ewma"))
 
 
-def transition_counts(
-    df: DataFrame,
-    key_col: str = "user_id",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-    state_col: str = "event_type",
-) -> DataFrame:
+def transition_counts(df: DataFrame) -> DataFrame:
     """Corpus-wide Markov transition matrix over per-key ordered
     event streams: count every consecutive (prev_state -> next_state)
     pair and its conditional probability P(next | prev).
@@ -112,13 +102,13 @@ def transition_counts(
     map-side combine, and the probability normalization is a window
     over that kilobyte-sized matrix — nothing after the first
     exchange scales with the corpus.  Order must be total per key
-    (``order_cols`` ends in a unique id) or lag() is nondeterministic.
+    ((ts, event_id) ends in a unique id) or lag() is nondeterministic.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key_col).orderBy(*[F.col(c) for c in order_cols])
-    prev = F.lag(state_col).over(w)
-    pairs = df.select(prev.alias("prev_type"), F.col(state_col).alias("next_type"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev = F.lag("event_type").over(w)
+    pairs = df.select(prev.alias("prev_type"), F.col("event_type").alias("next_type"))
     counts = (
         pairs.where(F.col("prev_type").isNotNull())
         .groupBy("prev_type", "next_type")
@@ -163,13 +153,7 @@ def rolling_distinct_active(
     )
 
 
-def interval_union(
-    df: DataFrame,
-    key: str = "user_id",
-    start: str = "s",
-    end: str = "e",
-    id_col: str | None = None,
-) -> DataFrame:
+def interval_union(df: DataFrame, key: str = "user_id", id_col: str | None = None) -> DataFrame:
     """Per-key union length of possibly-overlapping intervals — the
     sweep-line primitive behind session coverage, geofence dwell time,
     machine-utilization and SLA-uptime rollups.  Intervals that touch
@@ -191,7 +175,7 @@ def interval_union(
     Output: (key, n_intervals, n_islands, covered) — covered in the
     caller's units.
     """
-    order = [F.col(start), F.col(end)] + ([F.col(id_col)] if id_col else [])
+    order = [F.col("s"), F.col("e")] + ([F.col(id_col)] if id_col else [])
     w_prev = (
         Window.partitionBy(key)
         .orderBy(*order)
@@ -202,18 +186,18 @@ def interval_union(
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    base = [F.col(key), F.col(start), F.col(end)] + (
+    base = [F.col(key), F.col("s"), F.col("e")] + (
         [F.col(id_col)] if id_col else []
     )
     flagged = df.select(
         *base,
-        F.when(F.col(start) > F.max(end).over(w_prev), F.lit(1))
+        F.when(F.col("s") > F.max("e").over(w_prev), F.lit(1))
         .otherwise(F.lit(0))
         .alias("new_island"),
     ).select(
         F.col(key).alias("k"),
-        F.col(start).alias("s"),
-        F.col(end).alias("e"),
+        F.col("s"),
+        F.col("e"),
         F.sum("new_island").over(w_run).alias("island"),
     )
     islands = flagged.groupBy("k", "island").agg(
@@ -231,12 +215,7 @@ def interval_union(
     )
 
 
-def acf_counts(
-    counts: DataFrame,
-    max_lag: int = 24,
-    key: str = "h",
-    val: str = "x",
-) -> DataFrame:
+def acf_counts(counts: DataFrame, max_lag: int = 24) -> DataFrame:
     """Integer autocorrelation raw moments of a regularly-keyed count
     series at lags 1..max_lag: for each lag the number of aligned
     pairs and the exact int64 sums (sum x_t*x_{t+lag}, sum x_t,
@@ -252,10 +231,10 @@ def acf_counts(
     lags = F.explode(
         F.sequence(F.lit(1).cast("long"), F.lit(max_lag).cast("long"))
     ).alias("lag")
-    a = counts.select(F.col(key).alias("ha"), F.col(val).alias("xa")).crossJoin(
+    a = counts.select(F.col("h").alias("ha"), F.col("x").alias("xa")).crossJoin(
         counts.sparkSession.range(1).select(lags)
     )
-    b = counts.select(F.col(key).alias("hb"), F.col(val).alias("xb"))
+    b = counts.select(F.col("h").alias("hb"), F.col("x").alias("xb"))
     j = a.join(b, F.col("hb") == F.col("ha") + F.col("lag"))
     return j.groupBy("lag").agg(
         F.count(F.lit(1)).alias("n_pairs"),

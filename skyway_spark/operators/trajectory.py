@@ -37,37 +37,28 @@ from pyspark.sql import functions as F
 from skyway_spark.functions.geo import haversine_km
 
 
-def segment_trips(
-    points: DataFrame,
-    jump_km: float,
-    gap_us: int,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def segment_trips(points: DataFrame, jump_km: float, gap_us: int) -> DataFrame:
     """(entity, seg_id, n_points, first_id, last_id, path_cm) per trip.
 
     ``path_cm`` sums floor(step_km * 1e5) over within-segment steps
     (the step INTO each point, excluding the segment-opening jump).
     """
-    w = Window.partitionBy(entity_col).orderBy(ts_col, id_col)
-    plat, plon = F.lag(lat_col).over(w), F.lag(lon_col).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    plat, plon = F.lag("lat").over(w), F.lag("lon").over(w)
     # parquet timestamps may load as TIMESTAMP_NTZ; unix_micros requires
     # TIMESTAMP — the cast is identity under the session's UTC timezone
-    pts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    pts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev_us = F.lag(pts_us).over(w)
-    step = haversine_km(plat, plon, F.col(lat_col), F.col(lon_col))
+    step = haversine_km(plat, plon, F.col("lat"), F.col("lon"))
     brk = (
         plat.isNull()
         | (step > F.lit(float(jump_km)))
         | ((pts_us - prev_us) > F.lit(int(gap_us)))
     )
     flagged = points.select(
-        F.col(entity_col).alias("entity"),
-        F.col(ts_col).alias("__ts"),
-        F.col(id_col).alias("pid"),
+        F.col("user_id").alias("entity"),
+        F.col("ts").alias("__ts"),
+        F.col("event_id").alias("pid"),
         brk.cast("int").alias("brk"),
         F.when(brk, F.lit(0)).otherwise(F.floor(step * 1e5)).alias("step_cm"),
     ).withColumn(
@@ -91,16 +82,7 @@ def segment_trips(
     )
 
 
-def stay_points(
-    points: DataFrame,
-    res: int,
-    min_pts: int = 2,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
+def stay_points(points: DataFrame, res: int, min_pts: int = 2) -> DataFrame:
     """Stay-point (dwell) detection, the companion primitive to
     segment_trips: within each entity's time-ordered stream, a STAY is
     a maximal run of >= ``min_pts`` consecutive points falling in the
@@ -123,10 +105,10 @@ def stay_points(
 
     w = Window.partitionBy("entity").orderBy("__ts", "pid")
     flagged = points.select(
-        F.col(entity_col).alias("entity"),
-        F.col(ts_col).alias("__ts"),
-        F.col(id_col).alias("pid"),
-        cells.cell_encode(F.col(lat_col), F.col(lon_col), res).alias("cell"),
+        F.col("user_id").alias("entity"),
+        F.col("ts").alias("__ts"),
+        F.col("event_id").alias("pid"),
+        cells.cell_encode(F.col("lat"), F.col("lon"), res).alias("cell"),
     ).withColumn(
         "brk",
         (
@@ -148,14 +130,7 @@ def stay_points(
     )
 
 
-def geofence_transitions(
-    points: DataFrame,
-    polygons: DataFrame,
-    res: int = 5,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def geofence_transitions(points: DataFrame, polygons: DataFrame, res: int = 5) -> DataFrame:
     """Geofence ENTER/EXIT/SWITCH event stream — the alerting primitive
     on top of the spatial join: per entity, time-ordered, emit a row
     whenever the containing region changes.  Region per point is the
@@ -178,21 +153,21 @@ def geofence_transitions(
     from skyway_spark.operators.pip import point_in_polygon
 
     hits = (
-        point_in_polygon(points, polygons, res=res, point_id=id_col)
-        .groupBy(id_col)
+        point_in_polygon(points, polygons, res=res, point_id="event_id")
+        .groupBy("event_id")
         .agg(F.min("polygon_id").alias("__r"))
     )
-    regioned = points.join(hits, id_col, "left").withColumn(
+    regioned = points.join(hits, "event_id", "left").withColumn(
         "region", F.coalesce(F.col("__r"), F.lit(-1)).cast("long")
     )
-    w = Window.partitionBy(entity_col).orderBy(F.col(ts_col), F.col(id_col))
+    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     out = regioned.withColumn(
         "from_region", F.coalesce(F.lag("region").over(w), F.lit(-1)).cast("long")
     ).where(F.col("from_region") != F.col("region"))
     return out.select(
-        F.col(entity_col).alias("entity"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("point_id"),
+        F.col("user_id").alias("entity"),
+        F.col("ts"),
+        F.col("event_id").alias("point_id"),
         "from_region",
         F.col("region").alias("to_region"),
         F.when(F.col("region") == -1, "exit")
@@ -202,14 +177,7 @@ def geofence_transitions(
     )
 
 
-def event_paths(
-    events: DataFrame,
-    k: int = 4,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def event_paths(events: DataFrame, k: int = 4) -> DataFrame:
     """Top clickstream paths: each user's first ``k`` events (ordered
     by (ts, id) — a total order, so the path string is deterministic)
     joined into a ``>``-separated path, counted across users.  The
@@ -225,18 +193,18 @@ def event_paths(
     sized output."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     first_k = (
-        events.select(user_col, ts_col, id_col, type_col)
+        events.select("user_id", "ts", "event_id", "event_type")
         .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)
     )
-    per_user = first_k.groupBy(user_col).agg(
+    per_user = first_k.groupBy("user_id").agg(
         F.concat_ws(
             ">",
             F.transform(
-                F.sort_array(F.collect_list(F.struct("__rn", type_col))),
-                lambda s: s[type_col],
+                F.sort_array(F.collect_list(F.struct("__rn", "event_type"))),
+                lambda s: s["event_type"],
             ),
         ).alias("path"),
         F.count(F.lit(1)).alias("__len"),
@@ -246,13 +214,7 @@ def event_paths(
     )
 
 
-def track_hausdorff(
-    points: DataFrame,
-    entity: str = "entity",
-    track: str = "track",
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
+def track_hausdorff(points: DataFrame, entity: str = "entity", track: str = "track") -> DataFrame:
     """Discrete Hausdorff distance between an entity's CONSECUTIVE
     tracks (track id k vs k+1) — the route-regularity primitive: a
     small H means the entity retraced the same path next
@@ -280,11 +242,11 @@ def track_hausdorff(
     """
     a = points.select(
         F.col(entity).alias("e"), F.col(track).alias("k"),
-        F.col(lat).alias("alat"), F.col(lon).alias("alon"),
+        F.col("lat").alias("alat"), F.col("lon").alias("alon"),
     )
     b = points.select(
         F.col(entity).alias("e"), (F.col(track) - 1).alias("k"),
-        F.col(lat).alias("blat"), F.col(lon).alias("blon"),
+        F.col("lat").alias("blat"), F.col("lon").alias("blon"),
     )
     d2 = (
         (F.col("alat") - F.col("blat")) * (F.col("alat") - F.col("blat"))
@@ -318,8 +280,6 @@ def lcss_tracks(
     eps_y: int,
     entity: str = "entity",
     track: str = "track",
-    x: str = "x",
-    y: str = "y",
     order_cols: tuple[str, ...] = ("ts",),
     max_pts: int = 8,
 ) -> DataFrame:
@@ -364,7 +324,7 @@ def lcss_tracks(
 
     # padding sentinel 2^60: can never match within eps
     return _consecutive_track_dp(
-        points, entity, track, x, y, order_cols, K, 1 << 60, dp, "lcss"
+        points, entity, track, "x", "y", order_cols, K, 1 << 60, dp, "lcss"
     )
 
 
@@ -372,8 +332,6 @@ def frechet_tracks(
     points: DataFrame,
     entity: str = "entity",
     track: str = "track",
-    x: str = "x",
-    y: str = "y",
     order_cols: tuple[str, ...] = ("ts",),
     max_pts: int = 8,
 ) -> DataFrame:
@@ -419,7 +377,7 @@ def frechet_tracks(
     # padded coords sit at 0: harmless, because the DP is only read at
     # (n_a, n_b), inside the real region
     return _consecutive_track_dp(
-        points, entity, track, x, y, order_cols, K, 0, dp, "frechet"
+        points, entity, track, "x", "y", order_cols, K, 0, dp, "frechet"
     )
 
 
@@ -509,13 +467,7 @@ def _consecutive_track_dp(
     )
 
 
-def heading_octants(
-    points: DataFrame,
-    entity_col: str = "user_id",
-    order_cols: tuple[str, ...] = ("ts",),
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def heading_octants(points: DataFrame, order_cols: tuple[str, ...] = ("ts",)) -> DataFrame:
     """Per-entity movement-heading histogram over the 8 compass
     octants — the direction-of-travel fingerprint (commute corridors
     read E/W, delivery loops read flat) used for trajectory profiling
@@ -538,11 +490,11 @@ def heading_octants(
     Output: (entity, octant, heading, n_moves) with octant in 0..7 and
     heading in E NE N NW W SW S SE.
     """
-    w = Window.partitionBy(entity_col).orderBy(*[F.col(c) for c in order_cols])
-    dx = (F.col(x_col) - F.lag(x_col).over(w)).alias("dx")
-    dy = (F.col(y_col) - F.lag(y_col).over(w)).alias("dy")
+    w = Window.partitionBy("user_id").orderBy(*[F.col(c) for c in order_cols])
+    dx = (F.col("x") - F.lag("x").over(w)).alias("dx")
+    dy = (F.col("y") - F.lag("y").over(w)).alias("dy")
     moves = (
-        points.select(F.col(entity_col).alias("entity"), dx, dy)
+        points.select(F.col("user_id").alias("entity"), dx, dy)
         .where(F.col("dx").isNotNull())
         .where((F.col("dx") != 0) | (F.col("dy") != 0))
     )
@@ -579,14 +531,7 @@ def heading_octants(
     )
 
 
-def resample_tracks(
-    pts,
-    step: int,
-    user: str = "user_id",
-    t: str = "t",
-    x: str = "x",
-    y: str = "y",
-):
+def resample_tracks(pts, step: int):
     """Resample irregular integer tracks onto a fixed time grid by
     linear interpolation — the align-before-compare primitive behind
     track distance measures, OD matrices and map matching.
@@ -611,13 +556,13 @@ def resample_tracks(
     grid x track join blowup."""
     from pyspark.sql import Window
 
-    b = pts.groupBy(user).agg(F.min(t).alias("ta"), F.max(t).alias("tb"))
+    b = pts.groupBy("user_id").agg(F.min("t").alias("ta"), F.max("t").alias("tb"))
     gs = F.expr(f"((ta + {step - 1}) div {step}) * {step}")
     grid = (
-        b.select(F.col(user), gs.alias("gs"), "tb")
+        b.select(F.col("user_id"), gs.alias("gs"), "tb")
         .where(F.col("gs") < F.col("tb"))
         .select(
-            user,
+            "user_id",
             F.explode(
                 F.sequence(
                     F.col("gs"), F.col("tb") - 1, F.lit(step).cast("long")
@@ -626,15 +571,15 @@ def resample_tracks(
         )
     )
     p = pts.select(
-        user, F.col(t).alias("tt"), F.col(x).alias("_x"), F.col(y).alias("_y"),
+        "user_id", F.col("t").alias("tt"), F.col("x").alias("_x"), F.col("y").alias("_y"),
         F.lit(1).alias("is_pt"),
     )
     g = grid.select(
-        user, "tt", F.lit(None).cast("long").alias("_x"),
+        "user_id", "tt", F.lit(None).cast("long").alias("_x"),
         F.lit(None).cast("long").alias("_y"), F.lit(0).alias("is_pt"),
     )
     u = p.unionByName(g)
-    w = Window.partitionBy(user).orderBy("tt", F.col("is_pt").desc())
+    w = Window.partitionBy("user_id").orderBy("tt", F.col("is_pt").desc())
     wb = w.rowsBetween(Window.unboundedPreceding, 0)
     wf = w.rowsBetween(0, Window.unboundedFollowing)
     pt = F.when(
@@ -642,14 +587,14 @@ def resample_tracks(
         F.struct(F.col("tt").alias("t"), F.col("_x").alias("x"), F.col("_y").alias("y")),
     )
     ann = u.select(
-        user, "tt", "is_pt",
+        "user_id", "tt", "is_pt",
         F.last(pt, ignorenulls=True).over(wb).alias("p0"),
         F.first(pt, ignorenulls=True).over(wf).alias("p1"),
     ).where(
         (F.col("is_pt") == 0) & F.col("p0").isNotNull() & F.col("p1").isNotNull()
     )
     staged = ann.select(
-        F.col(user).alias("u"),
+        F.col("user_id").alias("u"),
         F.col("tt").alias("g"),
         (F.col("p1.t") - F.col("p0.t")).alias("dt"),
         F.col("p0.x").alias("x0"),
@@ -658,7 +603,7 @@ def resample_tracks(
         ((F.col("p1.y") - F.col("p0.y")) * (F.col("tt") - F.col("p0.t"))).alias("ny"),
     )
     return staged.select(
-        F.col("u").alias(user),
+        F.col("u").alias("user_id"),
         "g",
         (F.col("x0") + F.expr("(nx - pmod(nx, dt)) div dt")).alias("xi"),
         (F.col("y0") + F.expr("(ny - pmod(ny, dt)) div dt")).alias("yi"),

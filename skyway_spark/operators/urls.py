@@ -74,13 +74,13 @@ def canonicalize_url(url: Column) -> Column:
     )
 
 
-def url_host_stats(docs: DataFrame, url_col: str = "url") -> DataFrame:
+def url_host_stats(docs: DataFrame) -> DataFrame:
     """Per-host corpus stats over canonical urls: page count, distinct
     canonical urls (dup collapse visible as n_docs > n_canonical), and
     the lexicographic min canonical url as a stable exemplar."""
     canon = docs.select(
-        host_of(F.col(url_col)).alias("host"),
-        canonicalize_url(F.col(url_col)).alias("canon"),
+        host_of(F.col("url")).alias("host"),
+        canonicalize_url(F.col("url")).alias("canon"),
     )
     return canon.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -89,26 +89,22 @@ def url_host_stats(docs: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def host_suffixes(host: Column, max_labels: int = 6) -> Column:
+def host_suffixes(host: Column) -> Column:
     """array of the host's dot-suffixes, most-specific first:
     ``a.b.example.com`` -> [a.b.example.com, b.example.com,
-    example.com, com] (capped at ``max_labels`` labels).  The standard
+    example.com, com] (capped at 6 labels).  The standard
     key expansion for suffix-set membership (public-suffix lists,
     domain blocklists) — turns "host ends with .d OR equals d" into a
     plain equi-join."""
     labels = F.split(host, r"\.")
     n = F.size(labels)
-    idx = F.sequence(F.least(n, F.lit(max_labels)), F.lit(1), F.lit(-1))
+    idx = F.sequence(F.least(n, F.lit(6)), F.lit(1), F.lit(-1))
     return F.transform(
         idx, lambda i: F.array_join(F.slice(labels, n - i + 1, i), ".")
     )
 
 
-def filter_blocklist(
-    docs: DataFrame,
-    blocklist: list[str],
-    url_col: str = "url",
-) -> DataFrame:
+def filter_blocklist(docs: DataFrame, blocklist: list[str]) -> DataFrame:
     """Drop documents whose url host falls under any blocklisted
     domain SUFFIX (host == d or host ends with ``.d`` — the standard
     domain-blocklist semantics).  Returns the kept rows unchanged.
@@ -125,15 +121,13 @@ def filter_blocklist(
     bl = local_frame(docs.sparkSession, [(d.lower(),) for d in blocklist], "sfx string")
     keyed = docs.withColumn("__rk", F.monotonically_increasing_id())
     sfx = keyed.select(
-        "__rk", F.explode(host_suffixes(host_of(F.col(url_col)))).alias("sfx")
+        "__rk", F.explode(host_suffixes(host_of(F.col("url")))).alias("sfx")
     )
     blocked = sfx.join(F.broadcast(bl), "sfx").select("__rk").distinct()
     return keyed.join(blocked, "__rk", "left_anti").drop("__rk")
 
 
-def robots_apply(
-    pages: DataFrame, rules: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def robots_apply(pages: DataFrame, rules: DataFrame) -> DataFrame:
     """Apply robots.txt-style path rules to URLs with longest-match
     precedence (the public robots exclusion protocol, RFC 9309 §2.2.2:
     the most specific — longest — matching rule wins; on a length tie
@@ -151,10 +145,10 @@ def robots_apply(
     shuffles (broadcast join + map-side-combinable groupBy keyed by
     url).  At 10^12 pages this is a pure scan + one aggregate.
     """
-    host = host_of(F.col(url_col))
-    rest = F.regexp_replace(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", "")
+    host = host_of(F.col("url"))
+    rest = F.regexp_replace(F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", "")
     path = F.when(rest == "", F.lit("/")).otherwise(rest)
-    u = pages.select(F.col(url_col).alias("url"), host.alias("host"), path.alias("path"))
+    u = pages.select(F.col("url"), host.alias("host"), path.alias("path"))
     r = rules.select(
         F.col("host"), F.col("prefix"), F.col("allow").cast("boolean").alias("allow")
     )
@@ -181,7 +175,7 @@ def robots_apply(
     )
 
 
-def url_templates(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_templates(pages: DataFrame) -> DataFrame:
     """URL pattern mining: collapse every URL path to its TEMPLATE
     (digit runs -> ``{d}``, query/fragment stripped) and count per
     host — the crawl-side structure discovery that feeds dedup
@@ -193,13 +187,13 @@ def url_templates(pages: DataFrame, url_col: str = "url") -> DataFrame:
     Scale shape: host/path/template are scan-stage regex Columns; the
     only shuffle is the map-side-combined groupBy on (host, template)
     — output is template-space-sized, not corpus-sized."""
-    host = host_of(F.col(url_col))
-    rest = F.regexp_replace(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", "")
+    host = host_of(F.col("url"))
+    rest = F.regexp_replace(F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", "")
     path = F.regexp_replace(rest, r"[?#].*$", "")
     template = F.regexp_replace(path, "[0-9]+", "{d}")
     return (
         pages.select(host.alias("host"), template.alias("template"),
-                     F.col(url_col).alias("u"))
+                     F.col("url").alias("u"))
         .groupBy("host", "template")
         .agg(
             F.count(F.lit(1)).alias("n_urls"),

@@ -167,9 +167,7 @@ def cocitation(links: DataFrame, min_count: int = 2) -> DataFrame:
     )
 
 
-def bibliographic_coupling(
-    links: DataFrame, min_count: int = 2, max_citers: int | None = None
-) -> DataFrame:
+def bibliographic_coupling(links: DataFrame, min_count: int = 2) -> DataFrame:
     """Bibliographic-coupling host similarity: hosts are similar when
     they link to the SAME targets (Kessler 1963 on the web graph) —
     the out-link dual of [[cocitation]], and the signal that works for
@@ -181,23 +179,12 @@ def bibliographic_coupling(
 
     Scale shape: fan-out per target is C(citers, 2) — quadratic in a
     target's citing-host count, so universally-cited hub targets
-    (the web's "stop hosts") dominate; ``max_citers`` drops targets
-    cited by more than that many hosts BEFORE the self-join (the
-    standard stop-host cut — such targets carry no similarity signal
-    anyway), bounding the blowup; AQE handles the residual skew.
+    (the web's "stop hosts") dominate; AQE handles the skew.
     Page text/html never enters the shuffle.
 
     Output: (host_a, host_b, n_shared) with n_shared >= min_count.
     """
     e = links.select("src_host", "dst_host").distinct()
-    if max_citers is not None:
-        small = (
-            e.groupBy("dst_host")
-            .agg(F.count(F.lit(1)).alias("__nc"))
-            .where(F.col("__nc") <= max_citers)
-            .select("dst_host")
-        )
-        e = e.join(small, "dst_host", "left_semi")
     a = e.select("dst_host", F.col("src_host").alias("host_a"))
     b = e.select("dst_host", F.col("src_host").alias("host_b"))
     return (
@@ -257,9 +244,7 @@ def link_reciprocity(links: DataFrame) -> DataFrame:
     )
 
 
-def extract_tables(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def extract_tables(pages: DataFrame) -> DataFrame:
     """HTML table extraction — the WDC-web-tables primitive: pull
     every <table> from every page and emit one row per CELL with its
     (table, row, col) position, so downstream relational ops can treat
@@ -277,10 +262,10 @@ def extract_tables(
 
     Output: (url, table_idx, row_idx, col_idx, cell) — 0-based indices.
     """
-    h = F.decode(F.col(html_col), "utf-8") if dict(pages.dtypes)[html_col] == "binary" \
-        else F.col(html_col)
+    h = F.decode(F.col("html"), "utf-8") if dict(pages.dtypes)["html"] == "binary" \
+        else F.col("html")
     tables = pages.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         F.posexplode(
             F.regexp_extract_all(h, F.lit(r"<table[^>]*>(.*?)</table>"), 1)
         ).alias("table_idx", "tbl"),

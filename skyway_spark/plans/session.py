@@ -19,8 +19,10 @@ from pyspark.sql.types import DataType, StructType
 # caller for local runs:
 #  - AQE on: runtime coalescing of shuffle partitions + skew-join
 #    splitting is the backstop behind our explicit hot-cell salting.
-#  - Arrow on + large batches: every Python-side op is a vectorized
-#    pandas UDF; batch size amortizes the Arrow transfer.
+#  - Arrow on + large batches: every Python-side op crosses on Arrow
+#    batches — pandas UDFs / mapInPandas, and ``arrow_udf`` /
+#    ``mapInArrow`` for the text hashes, CEL, PBF and k-means; batch
+#    size amortizes the transfer.
 #  - shuffle.partitions: callers override per cluster size; the value
 #    here targets local[32] on sf0.1.
 _BASE_CONF = {
@@ -43,7 +45,7 @@ _BASE_CONF = {
 }
 
 
-def spread(df, target: int | None = None):
+def spread(df):
     """Rebalance a parallelism-starved scan before expression-heavy
     narrow stages.
 
@@ -54,7 +56,7 @@ def spread(df, target: int | None = None):
     shuffle of the (small) input fixes that. Only fires when the scan
     has fewer partitions than the session's parallelism."""
     spark = df.sparkSession
-    target = target or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -69,7 +69,7 @@ def serialize_string(
     if fmt == "opl":
         return opl.serialize_opl_string(df)
     if fmt == "json":
-        return jsonio.serialize_json_string(df, metadata, overpass=False)
+        return jsonio.serialize_json_string(df, metadata)
     if fmt == "overpass":
         return jsonio.serialize_json_string(df, metadata, overpass=True)
     if fmt == "xml":
@@ -85,7 +85,7 @@ def write_elements(
     if fmt == "opl":
         opl.write_opl(df, path)
     elif fmt == "json":
-        jsonio.write_json(df, path, metadata, overpass=False)
+        jsonio.write_json(df, path, metadata)
     elif fmt == "overpass":
         jsonio.write_json(df, path, metadata, overpass=True)
     elif fmt == "xml":

@@ -77,8 +77,8 @@ def element_rows(n_nodes=150, n_ways=100, n_rels=50, seed=42) -> list[tuple]:
     return rows
 
 
-def generate_elements(spark: SparkSession, n_nodes=150, n_ways=100, n_rels=50, seed=42) -> DataFrame:
-    return local_frame(spark, element_rows(n_nodes, n_ways, n_rels, seed), ELEMENTS_SCHEMA)
+def generate_elements(spark: SparkSession) -> DataFrame:
+    return local_frame(spark, element_rows(), ELEMENTS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -258,14 +258,13 @@ def generate_pages(spark: SparkSession, n_rows: int, partitions: int | None = No
 # ---------------------------------------------------------------------------
 
 
-def _regular_ring(lat0, lon0, r_deg, n, rot=0.0, rng=None, jitter=0.0):
+def _regular_ring(lat0, lon0, r_deg, n):
     import math
 
     pts = []
     for k in range(n):
-        a = rot + 2 * math.pi * k / n
-        rr = r_deg * (1.0 + (rng.uniform(-jitter, jitter) if rng and jitter else 0.0))
-        pts.append((lat0 + rr * math.sin(a), lon0 + rr * math.cos(a)))
+        a = 2 * math.pi * k / n
+        pts.append((lat0 + r_deg * math.sin(a), lon0 + r_deg * math.cos(a)))
     pts.append(pts[0])  # closed ring
     return pts
 
@@ -278,14 +277,14 @@ def polygon_rows(n_scatter=35, seed=42) -> list[tuple]:
     rows = []
     pid = 0
     for lat0, lon0 in HOT_CITIES:
-        rows.append((pid, f"hot-{pid}", _regular_ring(lat0, lon0, 0.15, 12, rng=rng), "outer"))
+        rows.append((pid, f"hot-{pid}", _regular_ring(lat0, lon0, 0.15, 12), "outer"))
         pid += 1
     for s in range(n_scatter):
         lat0 = rng.uniform(-60.0, 60.0)
         lon0 = rng.uniform(-170.0, 170.0)
         shape = s % 3
         if shape == 0:  # convex
-            ring = _regular_ring(lat0, lon0, rng.uniform(0.5, 3.0), rng.randrange(4, 10), rng=rng)
+            ring = _regular_ring(lat0, lon0, rng.uniform(0.5, 3.0), rng.randrange(4, 10))
         elif shape == 1:  # concave (jittered star)
             import math
 
@@ -299,10 +298,10 @@ def polygon_rows(n_scatter=35, seed=42) -> list[tuple]:
             pts.append(pts[0])
             ring = pts
         else:  # with hole: outer + hole row sharing polygon_id
-            ring = _regular_ring(lat0, lon0, rng.uniform(1.0, 3.0), 8, rng=rng)
+            ring = _regular_ring(lat0, lon0, rng.uniform(1.0, 3.0), 8)
             rows.append((pid, f"poly-{pid}", ring, "outer"))
             rows.append(
-                (pid, f"poly-{pid}", _regular_ring(lat0, lon0, 0.3, 6, rng=rng), "hole")
+                (pid, f"poly-{pid}", _regular_ring(lat0, lon0, 0.3, 6), "hole")
             )
             pid += 1
             continue
@@ -328,7 +327,7 @@ LINK_HOSTS = 40
 _LINK_WORDS = ("visit", "see", "map", "guide", "info")
 
 
-def generate_linked_pages(spark: SparkSession, n_rows: int, partitions: int | None = None) -> DataFrame:
+def generate_linked_pages(spark: SparkSession, n_rows: int) -> DataFrame:
     """Common-Crawl-style pages whose ``html`` carries 0-3 deterministic
     ``<a href>`` anchors to other pages in the same corpus — the
     substrate for the web link-graph operators (href extraction, host
@@ -344,7 +343,7 @@ def generate_linked_pages(spark: SparkSession, n_rows: int, partitions: int | No
     ``"{word} place {t}"``.  Schema matches the BASELINE.json pages
     input_hint: (url, warc_ts, html:binary, text, lang).
     """
-    df = spark.range(0, n_rows, 1, partitions or spark.sparkContext.defaultParallelism)
+    df = spark.range(0, n_rows, 1, spark.sparkContext.defaultParallelism)
     i = F.col("id")
     src_host = F.concat(F.lit("h"), F.pmod(i, F.lit(LINK_HOSTS)).cast("string"), F.lit(".example"))
 

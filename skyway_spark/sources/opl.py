@@ -304,9 +304,7 @@ def _field(fields: Column, prefix: str) -> Column:
     return F.substring(tok, len(prefix) + 1, 1 << 20)
 
 
-def parse_opl_lines(
-    lines: DataFrame, column: str = "value", corrupt_col: str | None = None
-) -> DataFrame:
+def parse_opl_lines(lines: DataFrame) -> DataFrame:
     """DataFrame of raw OPL lines -> elements DataFrame.
 
     Scalar fields are extracted with pure Column ops over the token
@@ -314,15 +312,14 @@ def parse_opl_lines(
     unescaping (src/readers/opl.rs:93-207 semantics).
 
     The reference PANICS on malformed lines (src/readers/opl.rs:112,
-    204); we diverge by design (SURVEY §7.5): with ``corrupt_col``
-    set, unparseable lines (bad type char / non-numeric id / malformed
-    member ref) surface PERMISSIVE-style — null element fields plus
-    the raw line in the corrupt column — so one bad row in 100 TB is
-    quarantined, not a job abort.  Without ``corrupt_col`` a malformed
-    member list yields null ``members`` (never an exception: Python
-    UDFs evaluate eagerly, so a raise could not be guarded anyway).
+    204); we diverge by design (SURVEY §7.5): a field that does not
+    parse reads null — a bad type char gives null ``type``, a
+    non-numeric id null ``id``, a malformed member list null
+    ``members`` — so one bad row in 100 TB is not a job abort (never
+    an exception: Python UDFs evaluate eagerly, so a raise could not
+    be guarded anyway).
     """
-    fields = F.split(F.col(column), " ")
+    fields = F.split(F.col("value"), " ")
     head = F.element_at(fields, 1)
     tchar = F.substring(head, 1, 1)
     etype = (
@@ -330,8 +327,6 @@ def parse_opl_lines(
     )
     d_field = _field(fields, "d")
     nodes_raw = _field(fields, "N")
-    m_raw = _field(fields, "M")
-    members = _opl_members_parse_udf(m_raw)
     cols = [
         ("type", etype),
         ("id", F.substring(head, 2, 1 << 20).try_cast("long")),
@@ -351,7 +346,7 @@ def parse_opl_lines(
                 ),
             ),
         ),
-        ("members", members),
+        ("members", _opl_members_parse_udf(_field(fields, "M"))),
         (
             "tags",
             F.coalesce(
@@ -366,19 +361,7 @@ def parse_opl_lines(
         ("timestamp", _field(fields, "t")),
         ("visible", F.when(d_field == "V", True).when(d_field == "D", False)),
     ]
-    if corrupt_col is None:
-        return lines.select(*[c.alias(n) for n, c in cols])
-    # a present M field parsed to null is malformed; Spark evaluates the
-    # UDF once for both uses
-    bad = (
-        etype.isNull()
-        | F.substring(head, 2, 1 << 20).try_cast("long").isNull()
-        | (m_raw.isNotNull() & members.isNull())
-    )
-    return lines.select(
-        *[F.when(~bad, c).alias(n) for n, c in cols],
-        F.when(bad, F.col(column)).alias(corrupt_col),
-    )
+    return lines.select(*[c.alias(n) for n, c in cols])
 
 
 def read_opl(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:

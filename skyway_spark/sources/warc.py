@@ -67,11 +67,11 @@ def warc_date_str(ts: Column) -> Column:
     return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")
 
 
-def http_response_payload(html: Column, status: int = 200, reason: str = "OK") -> Column:
+def http_response_payload(html: Column) -> Column:
     """Column: HTML string -> the HTTP response message a WARC
     `response` record carries as payload."""
     return F.concat(
-        F.lit(f"HTTP/1.1 {status} {reason}{CRLF}Content-Type: text/html{CRLF}{CRLF}"),
+        F.lit(f"HTTP/1.1 200 OK{CRLF}Content-Type: text/html{CRLF}{CRLF}"),
         html,
     )
 
@@ -217,7 +217,7 @@ def parse_warc_bytes(data: bytes) -> Iterator[tuple]:
         rec += 1
 
 
-def read_warc(files: DataFrame, id_col: str = "file_id", data_col: str = "data") -> DataFrame:
+def read_warc(files: DataFrame) -> DataFrame:
     """Parse WARC blobs into one row per record.
 
     Scale shape: a single mapInPandas scan — no shuffle; each Arrow
@@ -229,9 +229,9 @@ def read_warc(files: DataFrame, id_col: str = "file_id", data_col: str = "data")
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for fid, blob in zip(pdf[id_col], pdf[data_col]):
+            for fid, blob in zip(pdf["file_id"], pdf["data"]):
                 for tup in parse_warc_bytes(bytes(blob)):
                     rows.append((int(fid),) + tup)
             yield pd.DataFrame(rows, columns=[f.name for f in WARC_SCHEMA.fields])
 
-    return files.select(id_col, data_col).mapInPandas(parse, WARC_SCHEMA)
+    return files.select("file_id", "data").mapInPandas(parse, WARC_SCHEMA)

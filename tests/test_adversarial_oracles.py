@@ -20,15 +20,12 @@ from tools.check_oracle import TABLES, compare, strict_dtype_problems
 # Known program/oracle disagreements, each a FOUND line in CHANGES.md
 NULL_SIMHASH = "simhash(null) is null in Spark but 0 in the oracle (FOUND: simhash null)"
 KNOWN = {
-    "q_minhash": "a null text's signature is 16 x PRIME in Spark but null in the "
-    "oracle (FOUND: ngram_hashes(null) = [null])",
     "q_simhash": NULL_SIMHASH,
     "q_simhash_pairs": NULL_SIMHASH,
     "q_simhash_clusters": NULL_SIMHASH,
     "q_dedup_eval": NULL_SIMHASH,
-    "q_token_stats": "the oracle's bpe regex uses RE2's \\s, which lacks U+000B "
-    "(FOUND: q_token_stats bpe_tokens), and Spark's length counts invalid UTF-8 by "
-    "lead bytes (FOUND: length of invalid UTF-8)",
+    "q_token_stats": "Spark's length counts invalid UTF-8 by lead bytes "
+    "(FOUND: length of invalid UTF-8)",
 }
 QUERIES = [
     pytest.param(q, marks=pytest.mark.xfail(strict=True, reason=KNOWN[q])) if q in KNOWN else q

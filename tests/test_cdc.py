@@ -50,6 +50,5 @@ def test_duplicate_chunks_find_shifted_copy(spark):
         _docs(spark, [BASE, "XYZ" + BASE, "unrelated text entirely here"]),
         window=8,
         divisor=32,
-        min_copies=2,
     ).collect()
     assert out and all(r.n_copies >= 2 and r.n_docs >= 2 for r in out)

@@ -321,27 +321,30 @@ def test_cross_format_consistency(spark, elements, tmp_path):
 
 
 def test_opl_permissive_corrupt_records(spark):
-    """Malformed OPL lines are quarantined per-row (PERMISSIVE-style),
-    not a job abort — reference panics instead (opl.rs:112,204)."""
+    """Malformed OPL lines read PERMISSIVE-style, their unparseable
+    fields null, not a job abort — reference panics instead
+    (opl.rs:112,204)."""
+    from skyway_spark.schema import ELEMENTS_SCHEMA
+
     lines = spark.createDataFrame(
         [("n7 Ta=b x1.0 y2.0",), ("garbage line",), ("zzz9 T",), ("w8 T Nn1,n2",)],
         "value string",
     )
-    out = opl.parse_opl_lines(lines, corrupt_col="_corrupt").collect()
-    good = {r["id"]: r for r in out if r["_corrupt"] is None}
-    bad = [r for r in out if r["_corrupt"] is not None]
+    parsed = opl.parse_opl_lines(lines)
+    out = parsed.collect()
+    good = {r["id"]: r for r in out if r["id"] is not None}
+    bad = [r for r in out if r["id"] is None]
     assert set(good) == {7, 8}
     assert good[7]["type"] == "node" and good[7]["lat"] == 2.0
-    assert {r["_corrupt"] for r in bad} == {"garbage line", "zzz9 T"}
-    assert all(r["type"] is None and r["id"] is None for r in bad)
-    # default (no corrupt_col): schema unchanged, malformed -> nulls
-    assert "_corrupt" not in opl.parse_opl_lines(lines).columns
+    assert len(bad) == 2 and all(r["type"] is None for r in bad)
+    assert parsed.columns == ELEMENTS_SCHEMA.fieldNames()
 
 
 def test_opl_permissive_bad_member_ref(spark):
-    """Non-numeric member refs ('Mn@role', 'Mnx@role') must be quarantined,
-    not abort the job: pandas UDFs are evaluated eagerly, so the member
-    parser itself has to tolerate them (cannot hide behind F.when)."""
+    """Non-numeric member refs ('Mn@role', 'Mnx@role') must read as null
+    members, not abort the job: pandas UDFs are evaluated eagerly, so
+    the member parser itself has to tolerate them (cannot hide behind
+    F.when)."""
     lines = spark.createDataFrame(
         [
             ("r5 v1 Mnx@outer Ta=b",),   # non-numeric ref -> corrupt
@@ -350,15 +353,12 @@ def test_opl_permissive_bad_member_ref(spark):
         ],
         "value string",
     )
-    out = opl.parse_opl_lines(lines, corrupt_col="_corrupt").collect()
-    good = {r["id"]: r for r in out if r["_corrupt"] is None}
-    bad = {r["_corrupt"] for r in out if r["_corrupt"] is not None}
-    assert set(good) == {7}
-    assert [m["ref"] for m in good[7]["members"]] == [1, 2]
-    assert bad == {"r5 v1 Mnx@outer Ta=b", "r6 v1 Mn@outer"}
-    # strict mode: no exception either; members null, rest parsed
-    strict = {r["id"]: r for r in opl.parse_opl_lines(lines).collect()}
-    assert strict[5]["members"] is None and strict[5]["type"] == "relation"
+    out = {r["id"]: r for r in opl.parse_opl_lines(lines).collect()}
+    assert [m["ref"] for m in out[7]["members"]] == [1, 2]
+    # members null, the rest of the line parsed
+    assert out[5]["members"] is None and out[5]["type"] == "relation"
+    assert out[5]["tags"] == {"a": "b"}
+    assert out[6]["members"] is None and out[6]["version"] == 1
 
 
 def test_opl_escaped_surrogate_is_dropped(spark):
@@ -369,11 +369,11 @@ def test_opl_escaped_surrogate_is_dropped(spark):
 
 
 def test_opl_member_ref_grammar_is_try_cast(spark):
-    """Member refs follow ``try_cast(... as bigint)``: strict ``members``
-    is null exactly on the lines PERMISSIVE mode quarantines, and every
-    parsed ref equals ``try_cast`` of its text. So a ref past int64
-    does not abort the job (Python's ``int`` would overflow int64), and
-    ``1_0`` and ``٥`` are malformed in both modes (``int`` reads 10, 5)."""
+    """Member refs follow ``try_cast(... as bigint)``: ``members`` is
+    null exactly on the lines whose ref ``try_cast`` reads as null, and
+    every parsed ref equals ``try_cast`` of its text. So a ref past
+    int64 does not abort the job (Python's ``int`` would overflow
+    int64), and ``1_0`` and ``٥`` are malformed (``int`` reads 10, 5)."""
     import random
 
     rng = random.Random(6)
@@ -395,15 +395,10 @@ def test_opl_member_ref_grammar_is_try_cast(spark):
         .select("i", F.col("s").try_cast("long").alias("ref"))
         .collect()
     }
-    strict = {r["id"]: r["members"] for r in opl.parse_opl_lines(lines).collect()}
-    flagged = {
-        int(r["_corrupt"].split(" ")[0][1:])
-        for r in opl.parse_opl_lines(lines, corrupt_col="_corrupt").collect()
-        if r["_corrupt"] is not None
-    }
-    assert flagged == {i for i, ref in want.items() if ref is None}
-    for i, members in strict.items():
-        assert (members is None) == (i in flagged), refs[i]
+    got = {r["id"]: r["members"] for r in opl.parse_opl_lines(lines).collect()}
+    assert set(got) == set(want)
+    for i, members in got.items():
+        assert (members is None) == (want[i] is None), refs[i]
         if members is not None:
             assert [(m["type"], m["ref"]) for m in members] == [
                 ("node", want[i]), ("way", 2)

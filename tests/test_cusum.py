@@ -22,12 +22,13 @@ def _ref(values, mu, k, h):
 
 
 def _run(spark, values, mu, k, h):
-    # scale=1 keeps the test about the recurrence identity, not about
-    # double round-tripping of v/100
+    # whole-number values quantize exactly (floor(v * 100) == 100 * v),
+    # so the test stays about the recurrence identity, not about double
+    # round-tripping; every quantized figure is 100x the _ref one
     rows = [(1, t, t, float(v)) for t, v in enumerate(values)]
     df = spark.createDataFrame(rows, "user_id long, ts long, event_id long, value double")
-    got = cusum_changepoints(df, mu_q=mu, k_q=k, h_q=h, scale=1).collect()
-    return sorted((r.point_id, r.s_hi, r.s_lo) for r in got)
+    got = cusum_changepoints(df, mu_q=100 * mu, k_q=100 * k, h_q=100 * h).collect()
+    return sorted((r.point_id, r.s_hi // 100, r.s_lo // 100) for r in got)
 
 
 def test_cusum_upward_shift(spark):

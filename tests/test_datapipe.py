@@ -394,7 +394,7 @@ def test_hourly_gap_fill(spark):
 
 def test_asof_join_bruteforce(spark):
     """Backward-inclusive as-of vs a python mirror: equal-ts match,
-    no-preceding-row nulls, interleaved keys, tolerance cutoff."""
+    no-preceding-row nulls, interleaved keys."""
     import random
 
     from skyway_spark.operators.asof import asof_join
@@ -410,23 +410,12 @@ def test_asof_join_bruteforce(spark):
         for r in asof_join(left, right, key="k", value_cols=["val"]).collect()
     }
 
-    def mirror(tol=None):
-        want = {}
-        for lid, k, t in lrows:
-            cand = [(rt, v) for rk, rt, v in rrows if rk == k and rt <= t]
-            if tol is not None:
-                cand = [(rt, v) for rt, v in cand if rt >= t - tol]
-            want[lid] = max(cand)[1] if cand else None
-        return want
+    want = {}
+    for lid, k, t in lrows:
+        cand = [(rt, v) for rk, rt, v in rrows if rk == k and rt <= t]
+        want[lid] = max(cand)[1] if cand else None
 
-    assert got == mirror()
-    got_tol = {
-        r["lid"]: r["val"]
-        for r in asof_join(
-            left, right, key="k", value_cols=["val"], tolerance=F.lit(10)
-        ).collect()
-    }
-    assert got_tol == mirror(10)
+    assert got == want
     # row multiplicity: exactly one output row per left row
     assert len(got) == len(lrows)
 
@@ -569,7 +558,7 @@ def test_connected_components_adversarial(spark):
     got = {
         r["node"]: r["component"]
         for r in connected_components(
-            spark.createDataFrame(edges, "src long, dst long"), max_iter=8
+            spark.createDataFrame(edges, "src long, dst long")
         ).collect()
     }
 

@@ -38,10 +38,10 @@ def test_assign_hex_matches_hex_qr(spark):
     )
     q, r = hx.hex_qr(F.col("x"), F.col("y"), SIZE_U)
     direct = df.select("i", q.alias("q1"), r.alias("r1"))
-    staged = hx.assign_hex(df, "x", "y", SIZE_U, q_name="q2", r_name="r2", keep=["i"])
+    staged = hx.assign_hex(df, "x", "y", SIZE_U, keep=["i"])
     joined = direct.join(staged, "i")
     bad = joined.where(
-        (F.col("q1") != F.col("q2")) | (F.col("r1") != F.col("r2"))
+        (F.col("q1") != F.col("q")) | (F.col("r1") != F.col("r"))
     ).count()
     assert bad == 0
 

@@ -19,7 +19,7 @@ def test_ladder_semantics_and_conservation(spark):
     # group D: 1 row alone -> suppressed (level 3)
     rows += [("fr", "s9", 100)]
     df = spark.createDataFrame(rows, "lang string, source string, n_chars long")
-    out = k_anonymity_census(df, k=5, fine=100, coarse=500).collect()
+    out = k_anonymity_census(df, k=5).collect()
     got = {(r.c1, r.c2, r.bucket, r.level): r.n for r in out}
     assert got == {
         ("en", "s1", 1, 0): 10,

@@ -18,7 +18,7 @@ def test_prefix_carries_signal(spark):
     vecs = [[(i * 7 + d) % 5 * 0.125 for d in range(4)] + [0.25] * 4 for i in range(40)]
     vecs[0] = [0.5] * 8  # query (vec_id 0 % 50 == 0)
     out = matryoshka_recall(
-        _emb(spark, vecs), prefix_dims=4, k=5, query_mod=50
+        _emb(spark, vecs), prefix_dims=4, k=5
     ).collect()
     assert [(r.query_id, r.n_overlap) for r in out] == [(0, 5)]
 
@@ -31,7 +31,7 @@ def test_tail_signal_breaks_prefix(spark):
     vecs = [[0.25] * 4 + [i * 0.03125 % 1 for _ in range(4)] for i in range(n)]
     vecs[0] = [0.25] * 4 + [1.0] * 4
     out = matryoshka_recall(
-        _emb(spark, vecs), prefix_dims=4, k=5, query_mod=50
+        _emb(spark, vecs), prefix_dims=4, k=5
     ).collect()
     (r,) = out
     # full top-5 = ids 25..29 (largest tails); prefix top-5 = ids 1..5

@@ -209,6 +209,6 @@ def test_transition_counts_hand_computed(spark):
     df = spark.createDataFrame(rows, "event_id long, user_id long, ts long, event_type string")
     got = {
         (r["prev_type"], r["next_type"]): (r["n"], r["p"])
-        for r in transition_counts(df, order_cols=("ts", "event_id")).collect()
+        for r in transition_counts(df).collect()
     }
     assert got == {("a", "b"): (3, 1.0), ("b", "a"): (1, 1.0)}

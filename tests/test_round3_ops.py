@@ -154,8 +154,8 @@ def test_group_quantiles_ties_break_by_id(spark):
     df = spark.createDataFrame(
         [("g", 5, 2), ("g", 5, 1)], "src string, v long, id long"
     )
-    out = group_quantiles(df, "src", "v", "id", ps=(50,)).collect()
-    assert len(out) == 1 and out[0]["value"] == 5
+    out = group_quantiles(df, "src", "v", "id").collect()
+    assert {r["p"]: r["value"] for r in out} == {50: 5, 90: 5, 99: 5}
 
 
 def test_histogram_int_exact_ppm(spark):

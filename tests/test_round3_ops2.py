@@ -129,33 +129,23 @@ def test_hash_classifier_matches_python_mirror(spark):
 
 
 def test_bellman_ford_hand_graph(spark):
-    # 1 -2-> 2 -3-> 3 ; 1 -10-> 3 ; 3 -1-> 4 ; 5 isolated via edge to 6
+    # tolls 1 + (src + dst) % 7: 1 -1-> 6 -1-> 8 ; 1 -3-> 8 ; 8 -6-> 4 ;
+    # 5 isolated via edge to 9
     edges = spark.createDataFrame(
-        [(1, 2, 2), (2, 3, 3), (1, 3, 10), (3, 4, 1), (5, 6, 1)],
-        "src long, dst long, w long",
+        [(1, 6), (6, 8), (1, 8), (8, 4), (5, 9)], "src long, dst long"
     )
-    got = {
-        r.node: r.dist
-        for r in bellman_ford(edges, [1], iters=3, weight_col="w").collect()
-    }
-    # 3 rounds: 1->2 (2), 1->2->3 (5) beats direct 10, 1->2->3->4 (6)
-    assert got == {1: 0, 2: 2, 3: 5, 4: 6}
+    got = {r.node: r.dist for r in bellman_ford(edges, [1], iters=3).collect()}
+    # 3 rounds: 1->6 (1), 1->6->8 (2) beats direct 3, 1->6->8->4 (8)
+    assert got == {1: 0, 6: 1, 8: 2, 4: 8}
 
 
 def test_bellman_ford_iteration_bound(spark):
-    edges = spark.createDataFrame(
-        [(1, 2, 1), (2, 3, 1), (3, 4, 1)], "src long, dst long, w long"
-    )
-    got1 = {
-        r.node: r.dist
-        for r in bellman_ford(edges, [1], iters=1, weight_col="w").collect()
-    }
-    assert got1 == {1: 0, 2: 1}  # nodes 3,4 unreached in one round
-    got3 = {
-        r.node: r.dist
-        for r in bellman_ford(edges, [1], iters=3, weight_col="w").collect()
-    }
-    assert got3 == {1: 0, 2: 1, 3: 2, 4: 3}
+    # tolls: 1->2 is 4, 2->3 is 6, 3->4 is 1
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src long, dst long")
+    got1 = {r.node: r.dist for r in bellman_ford(edges, [1], iters=1).collect()}
+    assert got1 == {1: 0, 2: 4}  # nodes 3,4 unreached in one round
+    got3 = {r.node: r.dist for r in bellman_ford(edges, [1], iters=3).collect()}
+    assert got3 == {1: 0, 2: 4, 3: 10, 4: 11}
 
 
 def test_bellman_ford_default_toll_and_multi_source(spark):

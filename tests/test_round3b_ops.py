@@ -101,7 +101,7 @@ def test_containment_jaccard_would_miss_it(spark):
     )
     pairs = dedup.ngram_containment_pairs(docs, threshold_pct=80).collect()
     assert len(pairs) == 1
-    jac = dedup.ngram_jaccard_pairs(docs, bucket_col="n_chars", threshold=0.0).collect()
+    jac = dedup.ngram_jaccard_pairs(docs, threshold=0.0).collect()
     assert jac == []  # different n_chars buckets -> jaccard path pairs nothing
 
 

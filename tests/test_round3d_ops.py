@@ -418,7 +418,7 @@ def test_segment_crossings_matches_brute(spark):
         "id long, x1 long, y1 long, x2 long, y2 long",
     )
     got = {(r.a_id, r.b_id) for r in segment_crossings(
-        mk(A), mk(B), res=4, x_range=(-100, 100), y_range=(-100, 100)).collect()}
+        mk(A), mk(B), res=10).collect()}
     want = _cross_brute(A, B)
     assert got == want and len(want) > 0
 
@@ -433,7 +433,7 @@ def test_segment_crossings_touch_is_not_crossing(spark):
         "id long, x1 long, y1 long, x2 long, y2 long",
     )
     got = {(r.a_id, r.b_id) for r in segment_crossings(
-        a, b, res=3, x_range=(-16, 16), y_range=(-16, 16)).collect()}
+        a, b, res=11).collect()}
     assert got == {(1, 3)}
 
 

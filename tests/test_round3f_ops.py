@@ -36,20 +36,6 @@ def test_bib_coupling_counts_shared_targets(spark):
     assert got == {("a", "b"): 2, ("a", "c"): 1, ("b", "c"): 1}
 
 
-def test_bib_coupling_max_citers_drops_hub_targets(spark):
-    from skyway_spark.operators.weblinks import bibliographic_coupling
-
-    # 'hub' is cited by 3 hosts, 'nich' by 2 — max_citers=2 keeps nich only
-    rows = [("a", "hub"), ("b", "hub"), ("c", "hub"), ("a", "nich"), ("b", "nich")]
-    got = {
-        (r.host_a, r.host_b): r.n_shared
-        for r in bibliographic_coupling(
-            _links_df(spark, rows), min_count=1, max_citers=2
-        ).collect()
-    }
-    assert got == {("a", "b"): 1}
-
-
 # --------------------------------------------------------------- reciprocity
 
 

@@ -69,7 +69,7 @@ def distinct(xs):
 
 def py_ngram_hashes(s, n=3):
     if s is None:
-        return [None]
+        return None
     return distinct(fold_str(s[i : i + n]) for i in range(max(len(s) - n + 1, 1)))
 
 
@@ -146,7 +146,7 @@ def test_degenerate_inputs_pinned(spark):
         ),
         "ng", "ws", "mh", "sh", "fp",
     )
-    assert got[0] == ([None], None, [PRIME] * 16, None, None)
+    assert got[0] == (None, None, None, None, None)
     assert got[1][:2] == ([0], [0])
     assert got[2][0] == [32]
     assert got[3][:2] == ([3105], [2983905])  # missing tokens fold as 0
@@ -185,7 +185,6 @@ def test_gram_and_signature_ops_match_python(docs):
         docs.select(
             "doc_id",
             dedup.ngram_hashes(t).alias("ng3"),
-            dedup.ngram_hashes(t, 1).alias("ng1"),
             dedup.word_shingle_hashes(t).alias("ws3"),
             dedup.word_shingle_hashes(t, 2).alias("ws2"),
             dedup.minhash_signature(t).alias("mhc"),
@@ -194,12 +193,11 @@ def test_gram_and_signature_ops_match_python(docs):
             dedup.simhash(t, bits=44).alias("s44"),
             textstats.fingerprint(t).alias("fp"),
         ),
-        "ng3", "ng1", "ws3", "ws2", "mhc", "mhw", "s32", "s44", "fp",
+        "ng3", "ws3", "ws2", "mhc", "mhw", "s32", "s44", "fp",
     )
     for i, s in enumerate(TEXTS):
         want = (
             py_ngram_hashes(s),
-            py_ngram_hashes(s, 1),
             py_word_shingles(s),
             py_word_shingles(s, 2),
             py_minhash(py_ngram_hashes(s)),
@@ -220,10 +218,9 @@ def test_winnow_matches_python(docs, k, w):
     assert got == {i: py_winnow(s, k, w) for i, s in enumerate(TEXTS)}
 
 
-@pytest.mark.parametrize("n", [1, 2, 3])
-def test_hash_feature_score_matches_python(docs, n):
-    got = _by_id(textstats.hash_feature_score(docs, n=n), "n_grams", "score")
-    assert got == {i: py_hash_score(s, n) for i, s in enumerate(TEXTS)}
+def test_hash_feature_score_matches_python(docs):
+    got = _by_id(textstats.hash_feature_score(docs), "n_grams", "score")
+    assert got == {i: py_hash_score(s, 2) for i, s in enumerate(TEXTS)}
 
 
 def test_bloom_window_counts_match_python(docs):
@@ -265,8 +262,8 @@ def test_invalid_utf8_hashes_as_replacement_characters(spark):
         dedup.winnow_fingerprints(df, k=3, w=2), "n_kgrams", "n_windows", "n_fps", "fp_chk"
     )
     assert win == {i: py_winnow(s, 3, 2) for i, s in enumerate(texts)}
-    hfs = _by_id(textstats.hash_feature_score(df, n=1), "n_grams", "score")
-    assert hfs == {i: py_hash_score(s, 1) for i, s in enumerate(texts)}
+    hfs = _by_id(textstats.hash_feature_score(df), "n_grams", "score")
+    assert hfs == {i: py_hash_score(s, 2) for i, s in enumerate(texts)}
     words = bloom.build_bloom(df, n=1, k=2, m_bits=62 * 8)
     blm = _by_id(bloom.bloom_contamination(df, words, n=1, k=2, m_bits=62 * 8), "n_windows")
     assert blm == {i: (len(java_tokens(s)),) for i, s in enumerate(texts)}

@@ -127,20 +127,18 @@ def minhash_signature(col: Column, unit: str = "char") -> Column:
     the grams and takes their minima slice by slice, see
     minhash_from_grams."""
     grams = _char_grams if unit == "char" else _word_shingles
-    return strhash.arrow_udf(
-        lambda t: _signature(grams(t, 3), MINHASH_PERMS), "array<bigint>"
-    )(col)
+    return strhash.arrow_udf(lambda t: _signature(grams(t, 3)), "array<bigint>")(col)
 
 
-def _signature(arr: pa.Array, perms) -> pa.Array:
+def _signature(arr: pa.Array) -> pa.Array:
     g, offs, valid, gvalid = strhash.list_values(arr)
     counts = np.bincount(strhash.rows(np.diff(offs))[0][gvalid], minlength=len(valid))
     g, has = g[gvalid], counts > 0
     at = strhash.row_offsets(counts)[:-1][has]
-    sig = np.full((len(valid), len(perms)), PRIME, np.int64)
-    for j, (a, b) in enumerate(perms if len(g) else []):
+    sig = np.full((len(valid), len(MINHASH_PERMS)), PRIME, np.int64)
+    for j, (a, b) in enumerate(MINHASH_PERMS if len(g) else []):
         sig[has, j] = np.minimum.reduceat((g * a + b) % PRIME, at)
-    return strhash.list_array(sig[valid].ravel(), np.where(valid, len(perms), 0), valid)
+    return strhash.list_array(sig[valid].ravel(), np.where(valid, len(MINHASH_PERMS), 0), valid)
 
 
 def minhash_from_grams(grams: Column) -> Column:
@@ -148,7 +146,7 @@ def minhash_from_grams(grams: Column) -> Column:
     one numpy pass per permutation over each slice of the batch.  Null
     grams are skipped, so no grams gives len(MINHASH_PERMS) x PRIME; a null
     array gives null."""
-    return strhash.arrow_udf(lambda g: _signature(g, MINHASH_PERMS), "array<bigint>")(grams)
+    return strhash.arrow_udf(_signature, "array<bigint>")(grams)
 
 
 def _banded(sigs: DataFrame, bands: int) -> DataFrame:

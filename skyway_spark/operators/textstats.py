@@ -506,6 +506,26 @@ def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     )
 
 
+def _gram_scores(texts: pa.Array, n: int) -> pa.Array:
+    """The Arrow kernel of hash_feature_score over ``n``-token grams:
+    a struct (n_grams, score) per text.  The operator fixes n = 2; the
+    width stays an argument so the gram window is checked at others."""
+    from skyway_spark.operators.bloom import _A1, _B1, PRIME
+
+    th, toffs, _ = strhash.token_hashes(texts, java_ws=True)
+    n_grams = np.maximum(np.diff(toffs) - (n - 1), 0)
+    row, i = strhash.rows(n_grams)
+    starts = toffs[row] + i
+    g = strhash.fold(th, toffs, starts, starts + n, GRAM_MULT, HASH_MOD)
+    weight = (g % PRIME * _A1 + _B1) % PRIME % 2001 - 1000
+    total = np.r_[0, np.cumsum(weight)]
+    goffs = strhash.row_offsets(n_grams)
+    return pa.StructArray.from_arrays(
+        [pa.array(n_grams.astype(np.int32)), pa.array(total[goffs[1:]] - total[goffs[:-1]])],
+        names=["n_grams", "score"],
+    )
+
+
 def hash_feature_score(docs: DataFrame) -> DataFrame:
     """FastText-shaped hashed bigram linear scorer: (doc_id, n_grams,
     score, quality) — the quality-classifier primitive every public
@@ -519,23 +539,7 @@ def hash_feature_score(docs: DataFrame) -> DataFrame:
     engine-exact.  Scale shape: one Arrow-batched numpy pass in the
     scan stage — ZERO shuffles, a pure map over the corpus.
     """
-    from skyway_spark.operators.bloom import _A1, _B1, PRIME
-
-    def score(texts: pa.Array) -> pa.Array:
-        th, toffs, _ = strhash.token_hashes(texts, java_ws=True)
-        n_grams = np.maximum(np.diff(toffs) - 1, 0)
-        row, i = strhash.rows(n_grams)
-        starts = toffs[row] + i
-        g = strhash.fold(th, toffs, starts, starts + 2, GRAM_MULT, HASH_MOD)
-        weight = (g % PRIME * _A1 + _B1) % PRIME % 2001 - 1000
-        total = np.r_[0, np.cumsum(weight)]
-        goffs = strhash.row_offsets(n_grams)
-        return pa.StructArray.from_arrays(
-            [pa.array(n_grams.astype(np.int32)), pa.array(total[goffs[1:]] - total[goffs[:-1]])],
-            names=["n_grams", "score"],
-        )
-
-    udf = strhash.arrow_udf(score, "n_grams int, score bigint")
+    udf = strhash.arrow_udf(lambda texts: _gram_scores(texts, 2), "n_grams int, score bigint")
     return docs.select(F.col("doc_id"), udf(F.col("text")).alias("__s")).select(
         F.col("doc_id"),
         F.col("__s.n_grams").alias("n_grams"),

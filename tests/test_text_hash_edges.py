@@ -17,6 +17,7 @@ from __future__ import annotations
 import random
 import re
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -218,7 +219,13 @@ def test_winnow_matches_python(docs, k, w):
     assert got == {i: py_winnow(s, k, w) for i, s in enumerate(TEXTS)}
 
 
-def test_hash_feature_score_matches_python(docs):
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_hash_feature_score_matches_python(n):
+    got = textstats._gram_scores(pa.array(TEXTS, pa.string()), n).to_pylist()
+    assert [(r["n_grams"], r["score"]) for r in got] == [py_hash_score(s, n) for s in TEXTS]
+
+
+def test_hash_feature_score_operator_matches_python(docs):
     got = _by_id(textstats.hash_feature_score(docs), "n_grams", "score")
     assert got == {i: py_hash_score(s, 2) for i, s in enumerate(TEXTS)}
 

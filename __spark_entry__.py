@@ -2425,11 +2425,8 @@ def q_cdc_merge(spark, sf):
     (docs,) = _tables(spark, sf, "documents")
     snapshot = docs.select("doc_id", "lang", "source", "n_chars")
     # a day's changelog collapses to <= keyspace rows after the
-    # latest-wins window — broadcast the key set, snapshot moves 0 B
-    return apply_changelog(
-        snapshot, _cdc_changes(spark, sf), ["doc_id"], "seq", "op",
-        changelog_hint="broadcast",
-    )
+    # latest-wins window, whose key set apply_changelog broadcasts
+    return apply_changelog(snapshot, _cdc_changes(spark, sf), ["doc_id"], "seq", "op")
 
 
 def q_group_sample(spark, sf):
@@ -4996,12 +4993,12 @@ def _cdc_chunks_ctes() -> str:
         d2 AS MATERIALIZED ({_DOCS2_SQL}),
         pos AS (
             SELECT doc_id, i
-            FROM d2, unnest(range({CDC_W}, strlen(text) + 1)) r(i)
+            FROM d2, unnest(range({CDC_W}, length(text) + 1)) r(i)
             WHERE (({terms}) % {M}) % {CDC_D} = 0),
         bounds AS (
             SELECT doc_id, 0 AS b FROM d2
             UNION SELECT doc_id, i FROM pos
-            UNION SELECT doc_id, strlen(text) FROM d2),
+            UNION SELECT doc_id, length(text) FROM d2),
         ch AS (
             SELECT doc_id, b AS st,
                    LEAD(b) OVER (PARTITION BY doc_id ORDER BY b) AS nb,

@@ -442,42 +442,6 @@ def _free_vars(node, bound: frozenset = frozenset()) -> set:
     return out
 
 
-def _check_scope(node, bound: frozenset) -> None:
-    """Unknown free identifiers are compile errors (typo detection),
-    matching the round-1 behavior and the reference's compile panic."""
-    if isinstance(node, Var):
-        if node.name not in CONTEXT_VARS and node.name not in bound:
-            raise CelCompileError(f"unknown identifier {node.name!r}")
-    elif isinstance(node, ListLit):
-        for i in node.items:
-            _check_scope(i, bound)
-    elif isinstance(node, Index):
-        _check_scope(node.recv, bound)
-        _check_scope(node.idx, bound)
-    elif isinstance(node, Field):
-        _check_scope(node.recv, bound)
-    elif isinstance(node, Call):
-        for a in node.args:
-            _check_scope(a, bound)
-    elif isinstance(node, Method):
-        _check_scope(node.recv, bound)
-        for a in node.args:
-            _check_scope(a, bound)
-    elif isinstance(node, Macro):
-        _check_scope(node.recv, bound)
-        for a in node.args:
-            _check_scope(a, bound | {node.var})
-    elif isinstance(node, Unary):
-        _check_scope(node.e, bound)
-    elif isinstance(node, Binary):
-        _check_scope(node.l, bound)
-        _check_scope(node.r, bound)
-    elif isinstance(node, Ternary):
-        _check_scope(node.c, bound)
-        _check_scope(node.a, bound)
-        _check_scope(node.b, bound)
-
-
 # ------------------------------ Column backend ------------------------------
 # Typed compile result: (Column, type_tag) with type_tag in {"bool",
 # "int", "double", "num", "str", "map", "list", "null", "any"} — used
@@ -1265,7 +1229,11 @@ def compile_cel(text: str):
     """Parse + scope-check, then pick a backend: Column exprs when the
     program fits the compiled subset, Arrow-batch interpreter otherwise."""
     ast = _Parser(_lex(text)).parse()
-    _check_scope(ast, frozenset())
+    # unknown free identifiers are compile errors (typo detection), as
+    # the reference panics at compile time
+    unknown = sorted(_free_vars(ast) - set(CONTEXT_VARS))
+    if unknown:
+        raise CelCompileError(f"unknown identifier {unknown[0]!r}")
     try:
         typed = _ColumnBackend().compile(ast, {})
         if typed.t not in ("bool", "any"):

@@ -15,11 +15,11 @@ a user of the reference gets the missing half of the workflow here.
 Scale shape: ONE key-shuffle of the changelog (window per key keeps
 only the max-seq row — map-side nothing, but the changelog is the
 small side by construction), then one key anti-join against the
-snapshot (AQE broadcasts the surviving change keys when small) and a
-union.  The snapshot is never window-sorted and its payload never
-shuffles — at 100 TB the big table moves zero bytes except through
-the anti-join's key comparison, which bucketing/partition-pruning on
-the key column turns into a local probe.
+snapshot (the surviving change keys are broadcast) and a union.  The
+snapshot is never window-sorted and its payload never shuffles — at
+100 TB the big table moves zero bytes except through the anti-join's
+key comparison, which bucketing/partition-pruning on the key column
+turns into a local probe.
 """
 
 from __future__ import annotations
@@ -34,7 +34,6 @@ def apply_changelog(
     key_cols: list[str],
     seq_col: str = "seq",
     op_col: str = "op",
-    changelog_hint: str = "auto",
 ) -> DataFrame:
     """Return the post-changelog table state.
 
@@ -46,17 +45,10 @@ def apply_changelog(
 
     The latest-per-key slice is localCheckpoint'ed (lazy): it feeds
     BOTH the anti-join keys and the upsert payload, and without the
-    pin Spark plans the key-window twice.  ``changelog_hint``:
-
-    - ``'broadcast'`` — hint the anti-join keys to broadcast: the big
-      snapshot moves ZERO bytes (right whenever the changelog batch
-      fits an executor, the overwhelmingly common case);
-    - ``'auto'`` — no hint; AQE/planner decides, degrading to a
-      co-partitioned join for pathological TB-scale changelogs.
-      (Never force-broadcast by default — the round-1 minhash lesson.)
+    pin Spark plans the key-window twice.  The anti-join keys are
+    broadcast, so the big snapshot moves zero bytes: a changelog batch
+    collapses to at most one row per key.
     """
-    if changelog_hint not in ("auto", "broadcast"):
-        raise ValueError(f"changelog_hint must be auto|broadcast, got {changelog_hint!r}")
     payload = snapshot.columns
     missing = [c for c in payload + [seq_col, op_col] if c not in changes.columns]
     if missing:
@@ -70,9 +62,7 @@ def apply_changelog(
         .drop("__rn")
         .localCheckpoint(eager=False)
     )
-    keys = latest.select(*key_cols)
-    if changelog_hint == "broadcast":
-        keys = F.broadcast(keys)
+    keys = F.broadcast(latest.select(*key_cols))
     survivors = snapshot.join(keys, list(key_cols), "left_anti")
     upserts = latest.where(F.col(op_col) == "U").select(*payload)
     return survivors.unionByName(upserts)

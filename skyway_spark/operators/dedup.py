@@ -594,6 +594,37 @@ def fuzzy_join_lev1(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
+CDC_BASE = 257  # rolling-hash base of cdc_chunks, mod PRIME
+
+
+def _cdc_chunks(texts: pa.Array, window: int, divisor: int) -> pa.Array:
+    cp, offs, _ = strhash.codes(texts)
+    # h at every code point p: Horner over cp[p-window+1 .. p], oldest
+    # first, reduced after each add (acc*257 + code < 2^40 in int64)
+    h = np.zeros(max(len(cp) - window + 1, 0), np.int64)
+    for t in range(window):
+        h = (h * CDC_BASE + cp[t : t + len(h)].astype(np.int64)) % PRIME
+    cut = np.flatnonzero(h % divisor == 0) + window  # after code point cut-1
+    row_lo = offs[np.searchsorted(offs, cut - 1, "right") - 1]
+    # the chunks tile the batch's code points: each ends at a cut whose
+    # window lies inside its row, or at the end of a non-empty row
+    bounds = np.r_[0, np.union1d(cut[cut - row_lo >= window], offs[1:][np.diff(offs) > 0])]
+    starts = bounds[:-1]
+    row = np.searchsorted(offs, starts, "right") - 1
+    # chunk text: the decoded batch as UTF-8, cut at each bound's byte offset
+    utf8 = cp.astype(np.uint32).tobytes().decode("utf-32-le").encode("utf-8")
+    at_byte = strhash.row_offsets(1 + (cp >= 0x80) + (cp >= 0x800) + (cp >= 0x10000))
+    chunk = pa.StringArray.from_buffers(
+        len(starts), pa.py_buffer(at_byte[bounds].astype(np.int32)), pa.py_buffer(utf8)
+    )
+    spans = pa.StructArray.from_arrays(
+        [pa.array(starts - offs[row], pa.int32()), pa.array(np.diff(bounds), pa.int32()), chunk],
+        ["start", "chunk_len", "chunk"],
+    )
+    per_row = np.bincount(row, minlength=len(offs) - 1)
+    return pa.ListArray.from_arrays(pa.array(strhash.row_offsets(per_row), pa.int32()), spans)
+
+
 def cdc_chunks(docs: DataFrame, window: int = 8, divisor: int = 64) -> DataFrame:
     """Content-defined chunking (LBFS/rsync family): a chunk boundary
     falls AFTER position i whenever the polynomial rolling hash of the
@@ -603,60 +634,30 @@ def cdc_chunks(docs: DataFrame, window: int = 8, divisor: int = 64) -> DataFrame
     one insertion shifts every later chunk).  Expected chunk length is
     ``divisor`` chars.
 
-    The hash is h(i) = sum_j code(i-j) * B^j mod M (B=257, M=2^31-1),
-    evaluated INDEPENDENTLY per position (window is constant-size, so
-    no sequential fold is needed) — all integer, engine-exact.
+    The hash is h(i) = sum_{j<window} code(i-j) * B^j mod M (B=257,
+    M=2^31-1) over code points, at every i >= ``window``: integer and
+    engine-exact.  A null or empty text has no chunk; a text shorter
+    than ``window`` is one chunk.
 
-    Scale shape: pure scan-stage Column HOFs over a staged char-code
-    array (staged once as a real column — nested-HOF re-evaluation of
-    inline array expressions is the known 1000x trap), then one
-    row-local explode.  Zero shuffles; zero Python.
+    Scale shape: one Arrow-batched pass over ``strhash.codes`` computes
+    every row's chunks (``window`` vectorised multiply-adds over the
+    batch's code points), then one row-local explode.  Zero shuffles.
+
+    Offsets and chunk text follow ``strhash.codes``: in a text that is
+    not valid UTF-8 each maximal invalid byte sequence is one U+FFFD
+    (as Java decodes it), so the chunks of every text concatenate to
+    its decoded text and chunk_len is the chunk's length.
 
     Output: (doc_id, idx, start, chunk_len, chunk) — idx 1-based,
     start 0-based char offset.
     """
-    B, M = 257, (1 << 31) - 1
-    pows = F.array(*[F.lit(pow(B, j, M)) for j in range(window)])
-    staged = docs.select(
-        F.col("doc_id"),
-        F.col("text"),
-        F.transform(F.split(F.col("text"), ""), F.ascii).alias("a"),
+    chunks = strhash.arrow_udf(
+        lambda t: _cdc_chunks(t, window, divisor),
+        "array<struct<start:int,chunk_len:int,chunk:string>>",
     )
-    n = F.size("a")
-
-    def h(i):
-        return F.aggregate(
-            F.sequence(F.lit(0), F.lit(window - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, j: acc
-            + F.element_at("a", i - j).cast("long") * F.element_at(pows, j + 1),
-        ) % M
-
-    pos = F.filter(F.sequence(F.lit(window), n), lambda i: h(i) % divisor == 0)
-    bounds = F.array_distinct(
-        F.concat(F.array(F.lit(0)), pos, F.array(n))
-    )
-    # stage the bounds array as a real column: its elements are read
-    # 3x per chunk inside the transform lambda below, and an inline
-    # array expression would re-evaluate per reference
-    staged = staged.select("doc_id", "text", bounds.alias("b"))
-    chunks = F.transform(
-        F.sequence(F.lit(1), F.size("b") - 1),
-        lambda k: F.struct(
-            k.cast("int").alias("idx"),
-            F.element_at("b", k).alias("start"),
-            (F.element_at("b", k + 1) - F.element_at("b", k)).alias("chunk_len"),
-            F.col("text")
-            .substr(
-                F.element_at("b", k) + 1,
-                F.element_at("b", k + 1) - F.element_at("b", k),
-            )
-            .alias("chunk"),
-        ),
-    )
-    return staged.select(
-        "doc_id", F.explode(chunks).alias("c")
-    ).select("doc_id", "c.idx", "c.start", "c.chunk_len", "c.chunk")
+    return docs.select(
+        "doc_id", F.posexplode(chunks(F.col("text"))).alias("k", "c")
+    ).select("doc_id", (F.col("k") + 1).alias("idx"), "c.start", "c.chunk_len", "c.chunk")
 
 
 def cdc_duplicate_chunks(docs: DataFrame, window: int = 8, divisor: int = 64) -> DataFrame:

@@ -34,7 +34,7 @@ QUERIES = [
         "q_simhash", "q_simhash_pairs", "q_simhash_clusters", "q_token_stats",
         "q_winnow", "q_winnow_decontam", "q_hash_classifier", "q_dsir_resample",
         "q_classifier_auc", "q_bloom_contamination", "q_dedup_eval", "q_dedup_best",
-        "q_minhash_error", "q_incremental_dedup",
+        "q_minhash_error", "q_incremental_dedup", "q_cdc_chunks", "q_cdc_dedup",
     ]
 ]
 

@@ -34,10 +34,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from skyway_spark.functions.filter.cel import (
+    CONTEXT_VARS,
     _CelError,
     _cel_eval,
-    _check_scope,
     _ColumnBackend,
+    _free_vars,
     _lex,
     _Parser,
 )
@@ -275,7 +276,7 @@ def test_fuzz_macros_match_interpreter_exactly(spark):
     while len(progs) < 200:
         text = MacroGen(rng).program(2)
         ast = _Parser(_lex(text)).parse()
-        _check_scope(ast, frozenset())
+        assert _free_vars(ast) <= set(CONTEXT_VARS), text
         typed = _ColumnBackend().compile(ast, {})
         assert typed.t in ("bool", "any"), f"non-bool macro program: {text}"
         progs.append((text, ast, typed.col))
@@ -311,7 +312,7 @@ def _programs():
     while len(progs) < N_PROGRAMS:
         text = Gen(rng).bool_expr(4)
         ast = _Parser(_lex(text)).parse()
-        _check_scope(ast, frozenset())
+        assert _free_vars(ast) <= set(CONTEXT_VARS), text
         typed = _ColumnBackend().compile(ast, {})
         assert typed.t in ("bool", "any"), f"non-bool program generated: {text}"
         progs.append((text, ast, typed.col))

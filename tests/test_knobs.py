@@ -18,9 +18,8 @@ from __future__ import annotations
 
 import ast
 from collections import defaultdict
-from pathlib import Path
 
-from tests.test_reachability import ENTRY_DIRS, ENTRY_FILES, PKG, ROOT
+from tests.test_reachability import PKG, ROOT, caller_files
 
 # (function, parameter) -> the test that needs it, and why
 TEST_KNOBS = {
@@ -54,13 +53,6 @@ TEST_KNOBS = {
 }
 
 
-def _caller_files() -> list[Path]:
-    files = [ROOT / f for f in ENTRY_FILES]
-    for d in [*ENTRY_DIRS, PKG]:
-        files += sorted((ROOT / d).rglob("*.py"))
-    return files
-
-
 def _defaulted_params() -> list[tuple[str, str, str, int | None]]:
     """(module path, function, parameter, position or None if
     keyword-only) for every defaulted parameter of a top-level package
@@ -90,7 +82,7 @@ def _calls() -> tuple[dict[str, set[str]], dict[str, int], set[str]]:
     keywords: dict[str, set[str]] = defaultdict(set)
     positional: dict[str, int] = defaultdict(int)
     starred: set[str] = set()
-    for path in _caller_files():
+    for path in caller_files():
         tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):

@@ -1,8 +1,8 @@
 """Each formula the operators share has one definition: the
-whitespace split, the vector folds and the clip-pass loop.  A second
-copy of a formula is a second contract that can drift from the oracle
-that mirrors it.  The scan covers the package and the query registry
-in ``__spark_entry__.py``."""
+whitespace split, the Column code-point array, the vector folds and
+the clip-pass loop.  A second copy of a formula is a second contract
+that can drift from the oracle that mirrors it.  The scan covers the
+package and the query registry in ``__spark_entry__.py``."""
 
 from __future__ import annotations
 
@@ -31,6 +31,19 @@ def test_whitespace_split_only_in_strhash_words():
     assert path == "skyway_spark/functions/strhash.py"
     body = src[: int(line)]
     assert [s for s in body if s.startswith("def ")][-1].startswith("def words(")
+
+
+def test_column_code_point_array_only_in_strhash_text_hash():
+    # split(s, "") + ascii is a per-character interpreted fold: the
+    # numpy kernel (strhash.codes) does every other code-point pass
+    src = (PKG / "functions" / "strhash.py").read_text().splitlines()
+    for pattern in (r"split\(.*,\s*(\"\"|'')\s*\)", r"\bF\.ascii\b"):
+        sites = _sites(pattern)
+        assert len(sites) == 1, sites
+        path, line = sites[0].split(":")
+        assert path == "skyway_spark/functions/strhash.py", sites
+        body = src[: int(line)]
+        assert [s for s in body if s.startswith("def ")][-1].startswith("def text_hash("), sites
 
 
 def test_vector_folds_only_in_vec():

@@ -442,12 +442,7 @@ def test_cdc_merge_snapshot_never_shuffles(spark, tmp_path_factory):
         [(i, i, "U", "nv") for i in range(0, 50)],
         "k long, seq long, op string, v string",
     ).write.mode("overwrite").parquet(ch_p)
-    out = apply_changelog(
-        spark.read.parquet(snap_p),
-        spark.read.parquet(ch_p),
-        ["k"],
-        changelog_hint="broadcast",
-    )
+    out = apply_changelog(spark.read.parquet(snap_p), spark.read.parquet(ch_p), ["k"])
     plan = _executed_plan(out)
     assert "BroadcastHashJoin" in plan, plan
     # the ONLY non-broadcast exchange is the changelog key-window

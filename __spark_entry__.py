@@ -4267,7 +4267,9 @@ def _fuzzy_sides(spark, sf):
     (docs,) = _tables(spark, sf, "documents")
     key = F.array_join(F.slice(F.split(F.col("text"), " "), 1, 3), " ")
     base = docs.select(F.col("doc_id").alias("id"), key.alias("key"))
-    pos = (F.col("id") % F.length("key")) + 1
+    # try_mod: an empty key gives a null position, as DuckDB's `% 0`
+    # does, not a REMAINDER_BY_ZERO abort
+    pos = F.try_mod(F.col("id"), F.length("key")) + 1
     mut = F.concat(
         F.substring(F.col("key"), F.lit(1), pos - 1),
         F.lit("#"),
@@ -4293,8 +4295,8 @@ def q_fuzzy_join(spark, sf):
 
 def _fuzzy_join_sql() -> str:
     var = (
-        "[{k}] || list_transform(range(1, length({k}) + 1),"
-        " i -> substr({k}, 1, (i - 1)::INT) || substr({k}, (i + 1)::INT))"
+        "list_distinct([{k}] || list_transform(range(1, length({k}) + 1),"
+        " i -> substr({k}, 1, (i - 1)::INT) || substr({k}, (i + 1)::INT)))"
     )
     return f"""
         WITH base AS (

@@ -16,7 +16,7 @@ Two backends over one AST:
    macros ``exists/all/exists_one/filter/map`` (compiled to Spark
    higher-order functions — still JVM-side), and the type conversions
    ``int()/uint()/double()/string()/bool()`` (compiled to try_cast so a
-   failed conversion drops the row like a CEL error, ANSI-safe).
+   failed conversion is a CEL error, not an ANSI job abort).
 
 2. **Interpreter backend** (automatic fallback): programs using
    constructs outside the Column subset — ``timestamp()/duration()``
@@ -27,44 +27,19 @@ Two backends over one AST:
    batch, mirroring cel-interpreter's own per-element evaluation.
 
 Error semantics (both backends): the reference drops an element when
-evaluation errors (missing map key etc.) with a warning
-(cel/mod.rs:51-54), and panics when the program yields a non-boolean
-(cel/mod.rs:9-14).  In the Column backend a missing key yields NULL,
-which propagates to NULL and is dropped by ``where`` — CEL's
-short-circuit absorption (``true || error == true``, ``false && error
-== false``) coincides with SQL three-valued logic, and the same holds
-inside ``exists``/``all`` (Spark's EXISTS/FORALL are three-valued over
-NULL lambda results).  Arithmetic uses try_add/try_divide/... so
-overflow and division by zero also degrade to drop-the-row instead of
-an ANSI job abort.  The interpreter backend raises an internal error
-per element and drops it with an aggregated warning.
-
-Null METADATA (absent user/uid/changeset/timestamp/visible) is a
-first-class ``Value::Null`` in the reference's context — not an eval
-error — so cel-interpreter compares it structurally (``null == null``
-is true, ``null != "x"`` is true, ``null in [..]`` is false). The
-Column backend models this with a static purity flag: subtrees with no
-error source (literals, context vars, ``has``, and ``==``/``in`` over
-those) compile ``==``/``!=`` to null-safe equality and ``in`` to
-coalesced membership, while any impure side keeps NULL-propagation so
-eval errors still drop the row. Fuzz-verified against the interpreter
-(tests/test_cel_fuzz.py).
-
-Known, documented divergences from cel-interpreter in the Column
-backend (the interpreter backend matches the reference): ``/`` on two
-doubles follows SQL (same), but mixed int expressions are typed
-structurally, and the ``filter``/``map`` macros treat a lambda eval
-error as element-not-matched rather than poisoning the whole row.
-Two null-metadata corners remain conflated with eval errors: (1) a
-null VALUE that reaches the top of the program (e.g. the bare program
-``visible`` on an element without the flag) PANICS the reference and
-raises in the interpreter backend, but the Column backend drops the
-element — at 100 TB, dropping beats aborting the job, and the drop is
-the same observable the reference produces for every *error* null;
-(2) a null value transported through an impure node (a ternary
-branch, arithmetic) and then compared with ``==``/``!=``/``in`` is
-treated as an error (drop) rather than a value, because the merged
-NULL channel cannot distinguish them downstream of the impure node.
+evaluation errors (missing map key, division by zero, int64 overflow,
+...) with a warning (cel/mod.rs:51-54), and panics when the program
+yields a non-boolean, null included (cel/mod.rs:9-14). Null METADATA
+(absent user/uid/changeset/timestamp/visible) is a first-class
+``Value::Null`` in the reference's context, not an eval error, so
+``null == null`` is true, ``null != "x"`` true and ``null in [..]``
+false. The Column backend compiles each node to a (value, error) pair
+of Columns, so a CEL null and an eval error stay apart through every
+node; the error rule is local to each node (see ``Typed``). The
+interpreter backend raises an internal error per element and drops it
+with an aggregated warning. Both backends keep the same elements as
+cel-interpreter and raise where it panics (fuzzed against each other in
+tests/test_cel_fuzz.py).
 
 Compile errors (bad syntax, unknown identifier, statically non-boolean
 program) raise ``CelCompileError`` — the reference panics on compile
@@ -74,7 +49,9 @@ failure too (cel/mod.rs:59-67).
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import math as _math
+import operator
 import re
 import warnings
 from dataclasses import dataclass
@@ -443,37 +420,48 @@ def _free_vars(node, bound: frozenset = frozenset()) -> set:
 
 
 # ------------------------------ Column backend ------------------------------
-# Typed compile result: (Column, type_tag) with type_tag in {"bool",
-# "int", "double", "num", "str", "map", "list", "null", "any"} — used
-# for the "result must be boolean" check (cel/mod.rs:9-14), to pick
-# size()/'+'/'/' behavior, and to type macro receivers.
-#
-# ``pure`` is a STATIC no-error-source flag: a pure subtree can never
-# raise a CEL eval error at runtime, so a NULL it produces is a
-# first-class null VALUE (absent metadata: cel-interpreter converts
-# Option::None context vars to Value::Null), not an error. Impure
-# subtrees (map index, arithmetic, conversions, logic, ...) use NULL to
-# carry "eval error" per the module-docstring convention. `==`/`!=`
-# and `in` branch on this flag: cel-interpreter compares null values
-# structurally (null == null -> true, null != "x" -> true, null in
-# [..] -> false) while errors must keep propagating-to-drop.
+# Each node compiles to Typed(col, t, err). ``col`` is the CEL value: a
+# NULL in it is CEL null (absent metadata, Value::Null in the
+# reference's context) unless ``err`` holds. ``t`` is a type tag in
+# {"bool", "int", "double", "num", "str", "map", "list", "null", "any"}
+# (``elem`` a list's element tag): it enforces the boolean program result
+# (cel/mod.rs:9-14) and picks size()/'+'/'/'/macro behavior. ``err`` is a
+# non-null boolean Column, true where cel-interpreter raises; True when
+# that Column is ``col IS NULL``; None when the node cannot err. Every
+# node keeps ``col`` NULL where it errs, so a null-intolerant Spark op
+# errs exactly where its value is NULL (``_strict``), and a null-safe op
+# masks its never-NULL value with its operands' errors (``_masked``).
 
 
 @dataclass
 class Typed:
     col: Column
     t: str
-    pure: bool = False  # no error source in the subtree
-    nn: bool = False  # statically never NULL
+    err: Column | bool | None = None
+    elem: str = "any"
 
-    @property
-    def maybe_null_value(self) -> bool:
-        """True when a runtime NULL from this subtree is a first-class
-        null VALUE (absent metadata) rather than an eval error — the
-        only case where ==/!=/in need value-null handling. Impure
-        sides' NULLs are errors and plain SQL null-propagation is
-        already crate-exact for them."""
-        return self.pure and not self.nn
+
+def _or(*errs) -> Column | None:
+    """The OR of the error Columns that exist; None when none can fire."""
+    errs = [e for e in errs if e is not None]
+    return functools.reduce(operator.or_, errs) if errs else None
+
+
+def _err(x: Typed, none: Column | None = None) -> Column | None:
+    """``x``'s error as a Column, ``none`` when it cannot err."""
+    if x.err is True:
+        return x.col.isNull()
+    return none if x.err is None else x.err
+
+
+def _strict(col: Column, t: str, elem: str = "any") -> Typed:
+    """A node that errs exactly where its value is NULL."""
+    return Typed(col, t, True, elem)
+
+
+def _masked(col: Column, t: str, err: Column | None, elem: str = "any") -> Typed:
+    """A null-safe op's never-NULL value, NULL where ``err`` holds."""
+    return _strict(col if err is None else F.when(~err, col), t, elem)
 
 
 _VAR_TYPES = {
@@ -487,7 +475,42 @@ _VAR_TYPES = {
     "type": "str",
 }
 
-_NUMERIC = ("int", "double", "num")
+_I64_MIN = -(1 << 63)
+# the CEL kind of each statically known type tag
+_KIND = {"int": "num", "double": "num", "num": "num", "str": "str", "bool": "bool", "map": "map", "list": "list", "null": "null"}
+_CMP = {"<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge}
+_ARITH = {"+": F.try_add, "-": F.try_subtract, "*": F.try_multiply, "%": F.try_mod}
+_STR_METHODS = {
+    "contains": Column.contains,
+    "startsWith": Column.startswith,
+    "endsWith": Column.endswith,
+    "matches": F.regexp_like,
+}
+
+
+def _mixed(a: str, b: str) -> bool:
+    """Both tags known and of two CEL kinds, which never compare."""
+    return a in _KIND and b in _KIND and _KIND[a] != _KIND[b]
+
+
+def _of(x: Typed, *kinds: str) -> Typed:
+    """``x``, or an always-erring node when its known kind is none of
+    ``kinds`` (Spark would cast it or fail the plan)."""
+    return _error("bool" if "bool" in kinds else "null") if _KIND.get(x.t, kinds[0]) not in kinds else x
+
+
+def _error(t: str) -> Typed:
+    """A node that errs on every element."""
+    col = F.lit(None)
+    return _strict(col.cast("boolean") if t == "bool" else col, t)
+
+
+def _size(x: Typed) -> Typed:
+    if x.t in ("map", "list"):
+        return _strict(F.size(x.col), "int")
+    if x.t == "str":
+        return _strict(F.length(x.col), "int")
+    raise _Fallback("size() on dynamically-typed value")
 
 
 def _num_result(a: str, b: str) -> str:
@@ -504,31 +527,39 @@ class _ColumnBackend:
 
     def compile(self, node, env: dict[str, Typed]) -> Typed:
         if isinstance(node, Lit):
-            return Typed(F.lit(node.value), node.t, pure=True, nn=node.value is not None)
+            # CEL ints are int64; a small Python int would be a Spark
+            # INT, whose try_* arithmetic overflows at 2^31
+            col = F.lit(node.value)
+            return Typed(col.cast("long") if node.t == "int" else col, node.t, True if node.value is not None else None)
         if isinstance(node, ListLit):
             items = [self.compile(i, env) for i in node.items]
-            return Typed(
-                F.array(*[i.col for i in items]),
-                "list",
-                pure=all(i.pure for i in items),
-                nn=True,
-            )
+            ts = {i.t for i in items} - {"null"}
+            if len(ts) > 1:  # Spark would cast the items to one type
+                raise _Fallback("list literal of mixed types")
+            col = F.array(*[i.col for i in items])
+            return _masked(col, "list", _or(*[_err(i) for i in items]), ts.pop() if ts else "any")
         if isinstance(node, Var):
             if node.name in env:
                 return env[node.name]
-            # a NULL here is absent metadata = a null VALUE (the
-            # reference context maps Option::None to Value::Null)
-            return Typed(F.col(node.name), _VAR_TYPES.get(node.name, "any"), pure=True)
+            t = _VAR_TYPES.get(node.name, "any")
+            col = F.col(node.name)
+            return Typed(col.cast("long") if t == "int" else col, t)
         if isinstance(node, Index):
             recv = self.compile(node.recv, env)
             idx = self.compile(node.idx, env)
-            val_t = "str" if recv.t == "map" else "any"
-            return Typed(recv.col[idx.col], val_t)
+            if recv.t in ("map", "list"):  # a map key is a string, a list index an int
+                idx = _of(idx, "str" if recv.t == "map" else "num")
+            if recv.t == "list":
+                ok = (idx.col >= 0) & (idx.col < F.size(recv.col))
+                return Typed(F.get(recv.col, idx.col), recv.elem, F.coalesce(~ok, F.lit(True)))
+            # map values are never null (schema.ELEMENTS_SCHEMA), so a
+            # NULL lookup is exactly the missing-key (or null map) error
+            return _strict(recv.col[idx.col], "str" if recv.t == "map" else "any")
         if isinstance(node, Field):
             recv = self.compile(node.recv, env)
             if recv.t != "map":
                 raise _Fallback(f"field access .{node.name} on non-map")
-            return Typed(recv.col[F.lit(node.name)], "str")
+            return _strict(recv.col[F.lit(node.name)], "str")
         if isinstance(node, Call):
             return self._call(node, env)
         if isinstance(node, Method):
@@ -536,156 +567,116 @@ class _ColumnBackend:
         if isinstance(node, Macro):
             return self._macro(node, env)
         if isinstance(node, Unary):
-            e = self.compile(node.e, env)
+            e = _of(self.compile(node.e, env), "bool" if node.op == "!" else "num")
             if node.op == "!":
-                return Typed(~e.col, "bool")
-            return Typed(-e.col, e.t if e.t in _NUMERIC else "num")
+                return _strict(~e.col, "bool")
+            # 0 - x: negating -2^63 is an int64 overflow, a CEL error
+            return _strict(F.try_subtract(F.lit(0), e.col), "num" if e.t == "any" else e.t)
         if isinstance(node, Binary):
             return self._binary(node, env)
         if isinstance(node, Ternary):
-            c = self.compile(node.c, env)
+            c = _of(self.compile(node.c, env), "bool")
             a = self.compile(node.a, env)
             b = self.compile(node.b, env)
-            t = a.t if a.t == b.t else "any"
-            # NO .otherwise(): a NULL condition (eval error, or a null
-            # bool value — both are errors for a ternary condition in
-            # cel-interpreter) must produce NULL = error, not silently
-            # take the else branch as CASE WHEN would.
-            return Typed(F.when(c.col, a.col).when(~c.col, b.col), t)
+            ts = {a.t, b.t} - {"null"}
+            if len(ts) > 1:  # Spark would cast one branch to the other's type
+                raise _Fallback("ternary of mixed types")
+            # NO .otherwise(): a NULL condition (an error, or a null
+            # bool value, both errors for a condition) must yield NULL,
+            # not silently take the else branch as CASE WHEN would
+            col = F.when(c.col, a.col).when(~c.col, b.col)
+            err = c.col.isNull() | F.when(c.col, _err(a, F.lit(False))).otherwise(_err(b, F.lit(False)))
+            return Typed(col, ts.pop() if ts else "null", err, a.elem if a.elem == b.elem else "any")
         raise _Fallback(f"unsupported node {type(node).__name__}")
 
     def _binary(self, node: Binary, env) -> Typed:
         op = node.op
-        if op in ("&&", "||"):
-            l = self.compile(node.l, env)
-            r = self.compile(node.r, env)
-            return Typed(l.col & r.col if op == "&&" else l.col | r.col, "bool")
-        if op == "in":
-            l = self.compile(node.l, env)
-            r = self.compile(node.r, env)
-            if r.t == "map":
-                if l.maybe_null_value:
-                    # a null probe VALUE: None in {..} -> false in
-                    # cel-interpreter; a null MAP stays an eval error.
-                    core = F.coalesce(F.map_contains_key(r.col, l.col), F.lit(False))
-                    return Typed(
-                        F.when(
-                            r.col.isNull(), F.lit(None).cast("boolean")
-                        ).otherwise(core),
-                        "bool",
-                    )
-                # impure/never-null probe: plain NULL propagation is
-                # crate-exact (probe error -> drop, null map -> drop)
-                return Typed(F.map_contains_key(r.col, l.col), "bool")
-            if r.t == "list":
-                if l.maybe_null_value:
-                    return Typed(
-                        F.coalesce(F.array_contains(r.col, l.col), F.lit(False)),
-                        "bool",
-                        pure=r.pure,
-                        nn=r.pure,
-                    )
-                return Typed(
-                    F.array_contains(r.col, l.col),
-                    "bool",
-                    pure=l.pure and r.pure and l.nn,
-                    nn=l.pure and r.pure and l.nn,
-                )
-            raise _Fallback("'in' on dynamically-typed right operand")
         l = self.compile(node.l, env)
         r = self.compile(node.r, env)
+        if op in ("&&", "||"):
+            # each side is NULL where it errs or is a non-bool null, so
+            # SQL three-valued logic is CEL's absorption (true || error
+            # == true, false && error == false)
+            l, r = _of(l, "bool"), _of(r, "bool")
+            return _strict(l.col & r.col if op == "&&" else l.col | r.col, "bool")
+        if op == "in":
+            if r.t == "map":
+                # a null probe, or one that is no string, is in no map; a
+                # null map is an error
+                hit = F.lit(False) if _mixed(l.t, "str") else r.col[l.col].isNotNull()
+                return _masked(hit, "bool", _or(_err(l), r.col.isNull()))
+            if r.t == "list":
+                # None in [None]; a non-null probe matches no null
+                # element, nor one of another kind
+                has_null = F.size(F.array_compact(r.col)) < F.size(r.col)
+                found = F.lit(False)
+                if l.t != "null" and not _mixed(l.t, r.elem):
+                    found = F.coalesce(F.array_contains(r.col, l.col), found)
+                hit = F.when(l.col.isNull(), has_null).otherwise(found)
+                return _masked(hit, "bool", _or(_err(l), _err(r)))
+            raise _Fallback("'in' on dynamically-typed right operand")
         if op in ("==", "!="):
-            # value semantics on null (cel-interpreter): null == null
-            # -> true, null == x -> false, null != x -> true. Only a
-            # PURE NULLABLE side (a context var: absent metadata) can
-            # produce a null VALUE; an impure side's null carries an
-            # eval error and must propagate to drop. When no side can
-            # hold a value-null, the plain operator's NULL propagation
-            # is already crate-exact — keep that fast path (it is the
-            # flagship predicate's shape).
-            if l.maybe_null_value or r.maybe_null_value:
-                core = l.col.eqNullSafe(r.col)
-                if op == "!=":
-                    core = ~core
-                guards = [s.col.isNull() for s in (l, r) if not s.pure]
-                if guards:
-                    g = guards[0] if len(guards) == 1 else (guards[0] | guards[1])
-                    core = F.when(g, F.lit(None).cast("boolean")).otherwise(core)
-                return Typed(core, "bool", pure=not guards, nn=not guards)
-            c = l.col == r.col if op == "==" else l.col != r.col
-            return Typed(c, "bool", pure=l.pure and r.pure, nn=l.pure and r.pure)
-        if op in ("<", "<=", ">", ">="):
-            # a null VALUE in an order comparison is an eval error in
-            # cel-interpreter (_comparable rejects it), which NULL
-            # propagation already models — no purity split needed.
-            c = {
-                "<": l.col < r.col,
-                "<=": l.col <= r.col,
-                ">": l.col > r.col,
-                ">=": l.col >= r.col,
-            }[op]
-            return Typed(c, "bool")
-        if op == "+" and ("str" in (l.t, r.t)):
-            return Typed(F.concat(l.col, r.col), "str")
-        if op == "+" and ("list" in (l.t, r.t)):
-            return Typed(F.concat(l.col, r.col), "list")
-        # try_* arithmetic: overflow / div-by-zero degrade to NULL (row
-        # dropped, like a CEL eval error) instead of an ANSI job abort.
-        if op == "+":
-            return Typed(F.try_add(l.col, r.col), _num_result(l.t, r.t))
-        if op == "-":
-            return Typed(F.try_subtract(l.col, r.col), _num_result(l.t, r.t))
-        if op == "*":
-            return Typed(F.try_multiply(l.col, r.col), _num_result(l.t, r.t))
-        if op == "/":
-            q = F.try_divide(l.col, r.col)
-            if l.t == "int" and r.t == "int":
-                # CEL int division truncates toward zero; cast from
-                # double truncates toward zero too.
-                return Typed(q.try_cast("long"), "int")
-            return Typed(q, "double")
-        if op == "%":
-            return Typed(F.try_mod(l.col, r.col), "int")
-        raise _Fallback(f"operator {op!r}")
+            # values of two kinds are never equal (Spark would cast one)
+            if l.err is True and r.err is True and not _mixed(l.t, r.t):
+                # every NULL operand is an error: SQL's = is exact
+                return _strict(l.col == r.col if op == "==" else l.col != r.col, "bool")
+            # null == null is true and null == x false (cel-interpreter)
+            eq = l.col.isNull() & r.col.isNull() if _mixed(l.t, r.t) else l.col.eqNullSafe(r.col)
+            return _masked(eq if op == "==" else ~eq, "bool", _or(_err(l), _err(r)))
+        kinds = {_KIND.get(l.t), _KIND.get(r.t)} - {None}
+        if op in _CMP:
+            # an order comparison with null is an error; only two numbers
+            # or two strings are ordered
+            if kinds not in (set(), {"num"}, {"str"}):
+                return _error("bool")
+            return _strict(_CMP[op](l.col, r.col), "bool")
+        if op == "+" and kinds in ({"str"}, {"list"}):
+            return _strict(F.concat(l.col, r.col), kinds.pop(), l.elem if l.elem == r.elem else "any")
+        if kinds - {"num"} or (op == "%" and "double" in (l.t, r.t)):
+            return _error("null")  # no arithmetic overload takes these operands
+        # try_* arithmetic: int64 overflow and division by zero are CEL
+        # errors (NULL) instead of an ANSI job abort
+        if op in _ARITH:
+            return _strict(_ARITH[op](l.col, r.col), _num_result(l.t, r.t))
+        if l.t == "int" and r.t == "int":  # op is "/"
+            # `div` truncates toward zero like CEL; its two ANSI aborts,
+            # x / 0 and -2^63 / -1, are CEL errors instead
+            ok = (r.col != 0) & ((r.col != -1) | (l.col != _I64_MIN))
+            return _strict(F.when(ok, F.call_function("div", l.col, r.col)), "int")
+        return _strict(F.try_divide(l.col, r.col), "double")
 
     def _call(self, node: Call, env) -> Typed:
         name, args = node.name, node.args
-        if name == "has" and len(args) == 1:
-            inner = self.compile(args[0], env)
-            # never-null output (isNotNull of anything is true/false),
-            # and has() absorbs the missing-key error by definition
-            return Typed(inner.col.isNotNull(), "bool", pure=True, nn=True)
+        if name == "has" and len(args) == 1 and isinstance(args[0], (Field, Index)):
+            # the selection's col is NULL where it errs: has() is false
+            # there and never errs itself
+            return Typed(self.compile(args[0], env).col.isNotNull(), "bool")
         if name == "size" and len(args) == 1:
-            inner = self.compile(args[0], env)
-            if inner.t in ("map", "list"):
-                return Typed(F.size(inner.col), "int")
-            if inner.t == "str":
-                return Typed(F.length(inner.col), "int")
-            raise _Fallback("size() on dynamically-typed value")
-        # type conversions -> try_cast: failed conversion = NULL = row
-        # dropped, mirroring CEL's conversion error -> drop (mod.rs:51-54)
+            return _size(self.compile(args[0], env))
+        # type conversions -> try_cast: a failed conversion is NULL, a
+        # CEL error (the element drops, mod.rs:51-54)
         if name in ("int", "uint") and len(args) == 1:
-            return Typed(self.compile(args[0], env).col.try_cast("long"), "int")
+            return _strict(_of(self.compile(args[0], env), "num", "str").col.try_cast("long"), "int")
         if name == "double" and len(args) == 1:
-            return Typed(self.compile(args[0], env).col.try_cast("double"), "double")
+            return _strict(_of(self.compile(args[0], env), "num", "str").col.try_cast("double"), "double")
         if name == "string" and len(args) == 1:
             inner = self.compile(args[0], env)
             if inner.t in ("double", "num", "any"):
                 # Spark casts 5.0 -> '5.0' but Rust's fmt gives '5':
                 # keep exactness by refusing, interpreter matches ref.
                 raise _Fallback("string() of a double")
-            return Typed(inner.col.try_cast("string"), "str")
+            return _strict(_of(inner, "num", "str", "bool").col.try_cast("string"), "str")
         if name == "bool" and len(args) == 1:
             inner = self.compile(args[0], env)
             if inner.t == "bool":
-                return inner
+                return _strict(inner.col, "bool")
             if inner.t == "str":
                 # CEL accepts exactly these spellings; Spark's
                 # string->boolean cast is laxer ('yes','y', ints) and
                 # would keep rows the reference drops
                 true_lits = ("true", "1", "t", "TRUE", "True")
                 false_lits = ("false", "0", "f", "FALSE", "False")
-                return Typed(
+                return _strict(
                     F.when(inner.col.isin(*true_lits), F.lit(True))
                     .when(inner.col.isin(*false_lits), F.lit(False)),
                     "bool",
@@ -697,19 +688,10 @@ class _ColumnBackend:
         recv = self.compile(node.recv, env)
         args = [self.compile(a, env) for a in node.args]
         name = node.name
-        if name == "contains" and len(args) == 1:
-            return Typed(recv.col.contains(args[0].col), "bool")
-        if name == "startsWith" and len(args) == 1:
-            return Typed(recv.col.startswith(args[0].col), "bool")
-        if name == "endsWith" and len(args) == 1:
-            return Typed(recv.col.endswith(args[0].col), "bool")
-        if name == "matches" and len(args) == 1:
-            return Typed(F.regexp_like(recv.col, args[0].col), "bool")
+        if name in _STR_METHODS and len(args) == 1:
+            return _strict(_STR_METHODS[name](_of(recv, "str").col, _of(args[0], "str").col), "bool")
         if name == "size" and not args:  # method-style size: "s".size()
-            if recv.t in ("map", "list"):
-                return Typed(F.size(recv.col), "int")
-            if recv.t == "str":
-                return Typed(F.length(recv.col), "int")
+            return _size(recv)
         raise _Fallback(f"method .{name}/{len(args)}")
 
     def _macro(self, node: Macro, env) -> Typed:
@@ -717,29 +699,35 @@ class _ColumnBackend:
         if recv.t == "map":
             arr, elem_t = F.map_keys(recv.col), "str"  # CEL iterates map keys
         elif recv.t == "list":
-            arr, elem_t = recv.col, "any"
+            arr, elem_t = recv.col, recv.elem
         else:
             raise _Fallback(f"macro .{node.name} over dynamically-typed receiver")
 
-        def lam(body):
-            return lambda c: self.compile(body, {**env, node.var: Typed(c, elem_t)}).col
+        def lam(i, part=lambda x: x.col):
+            # argument i as a Spark lambda; ``part`` picks what it returns
+            return lambda c: part(self.compile(node.args[i], {**env, node.var: Typed(c, elem_t)}))
 
+        pred = lam(0, lambda p: _of(p, "bool").col)
+        # a NULL array (an erring or null receiver) is NULL through
+        # every higher-order function: the macro errs
         if node.name == "exists":
-            return Typed(F.exists(arr, lam(node.args[0])), "bool")
+            return _strict(F.exists(arr, pred), "bool")
         if node.name == "all":
-            return Typed(F.forall(arr, lam(node.args[0])), "bool")
+            return _strict(F.forall(arr, pred), "bool")
+        # exists_one, filter and map absorb no error: the node errs where
+        # any element's lambda errs or a predicate is not a boolean
+        bad = lam(0, lambda p: _of(p, "bool").col.isNull())
         if node.name == "exists_one":
-            return Typed(F.size(F.filter(arr, lam(node.args[0]))) == F.lit(1), "bool")
-        if node.name == "filter":
-            return Typed(F.filter(arr, lam(node.args[0])), "list")
-        if node.name == "map":
-            if len(node.args) == 2:  # map(x, pred, transform)
-                return Typed(
-                    F.transform(F.filter(arr, lam(node.args[0])), lam(node.args[1])),
-                    "list",
-                )
-            return Typed(F.transform(arr, lam(node.args[0])), "list")
-        raise _Fallback(f"macro {node.name}")
+            col, t = F.size(F.filter(arr, pred)) == 1, "bool"
+        elif node.name == "filter":
+            col, t = F.filter(arr, pred), "list"
+        elif node.name == "map" and len(node.args) == 2:  # map(x, pred, transform)
+            col, t = F.transform(F.filter(arr, pred), lam(1)), "list"
+            pred_bad, tr_err = bad, lam(1, lambda x: _err(x, F.lit(False)))
+            bad = lambda c: pred_bad(c) | (pred(c) & tr_err(c))
+        else:  # map(x, transform)
+            col, t, bad = F.transform(arr, lam(0)), "list", lam(0, lambda x: _err(x, F.lit(False)))
+        return _strict(F.when(~F.exists(arr, bad), col), t, elem_t if node.name == "filter" else "any")
 
 
 # ------------------------------ interpreter backend ------------------------------
@@ -788,6 +776,12 @@ def _num(v) -> None:
     _need(isinstance(v, (int, float)) and not isinstance(v, bool), f"not a number: {v!r}")
 
 
+def _int64(v):
+    """An int result outside int64 is an overflow error (CEL spec)."""
+    _need(not isinstance(v, int) or -(1 << 63) <= v < 1 << 63, f"int64 overflow: {v}")
+    return v
+
+
 def _trunc_div(a: int, b: int) -> int:
     _need(b != 0, "division by zero")
     q = abs(a) // abs(b)
@@ -833,9 +827,9 @@ def _cel_eval(node, ctx: dict) -> Any:
             _need(isinstance(v, bool), "! needs a boolean")
             return not v
         _num(v)
-        return -v
+        return _int64(-v)
     if isinstance(node, Binary):
-        return _eval_binary(node, ctx)
+        return _int64(_eval_binary(node, ctx))
     if isinstance(node, Ternary):
         c = _cel_eval(node.c, ctx)
         _need(isinstance(c, bool), "ternary condition must be boolean")
@@ -967,10 +961,10 @@ def _eval_call(node: Call, ctx) -> Any:
         if isinstance(v, int):
             return v
         if isinstance(v, float):
-            return _math.trunc(v)
+            return _int64(_math.trunc(v))
         if isinstance(v, str):
             try:
-                return int(v)
+                return _int64(int(v))
             except ValueError as e:
                 raise _CelError(f"int({v!r})") from e
         if isinstance(v, _dt.datetime):
@@ -1145,14 +1139,16 @@ def _eval_macro(node: Macro, ctx) -> Any:
 
 
 class CompiledCelFilter:
-    """Column-backed filter: runs entirely JVM-side."""
+    """Column-backed filter: runs entirely JVM-side. ``predicate`` is
+    false where the program errs (the element drops, cel/mod.rs:51-54)
+    and raises where it yields null without an error (the reference
+    panics, cel/mod.rs:9-14)."""
 
     def __init__(self, predicate: Column):
         self.predicate = predicate
 
     def apply(self, df: DataFrame) -> DataFrame:
-        # eval "error" (null) -> drop, matching cel/mod.rs:51-54
-        return df.where(F.coalesce(self.predicate, F.lit(False)))
+        return df.where(self.predicate)
 
 
 class InterpretedCelFilter:
@@ -1239,7 +1235,11 @@ def compile_cel(text: str):
         if typed.t not in ("bool", "any"):
             # reference panics on non-boolean filter output (cel/mod.rs:9-14)
             raise CelCompileError(f"CEL filter must return a boolean, got {typed.t}")
-        return CompiledCelFilter(typed.col)
+        # a NULL col is false where the program errs, else it raises
+        null = F.lit(False) if typed.err is True else F.raise_error(F.lit("CEL filter returned non-boolean: None"))
+        if isinstance(typed.err, Column):
+            null = F.when(typed.err, F.lit(False)).otherwise(null)
+        return CompiledCelFilter(F.coalesce(typed.col, null))
     except _Fallback:
         return InterpretedCelFilter(ast)
 

@@ -564,14 +564,14 @@ def fuzzy_join_lev1(a: DataFrame, b: DataFrame) -> DataFrame:
     s itself; substitution at i → both delete i; insertion → the
     longer side deletes the inserted char), so candidates come from an
     exact equi-join on generated variants — never a theta join, never
-    a length-bucketed cross join. Candidates are verified with the
-    exact levenshtein() (same integer on any engine).
+    a length-bucketed cross join. Candidates are verified with Spark's
+    exact levenshtein(), which counts code points.
 
-    Scale shape: the variant explode is len(key)+1 per row (a
-    short-key constant); the join is keyed by variant string (AQE
-    handles popular variants); DISTINCT pair collapse runs on the
-    already-small candidate set. At 100 TB both sides shuffle once,
-    by variant.
+    Scale shape: at most len(key)+1 DISTINCT variants per row (a run
+    of one character deletes to one variant, not len(key) equal ones);
+    the join is keyed by variant string (AQE handles popular variants);
+    DISTINCT pair collapse runs on the already-small candidate set. At
+    100 TB both sides shuffle once, by variant.
 
     Output: (a_id, b_id, dist) with dist <= 1.
     """
@@ -584,7 +584,7 @@ def fuzzy_join_lev1(a: DataFrame, b: DataFrame) -> DataFrame:
         )
         return df.select(
             F.col("id").alias(f"{side}_id"), F.col("key").alias(f"{side}_key")
-        ).withColumn("__v", F.explode(F.concat(F.array(k), deletions)))
+        ).withColumn("__v", F.explode(F.array_distinct(F.concat(F.array(k), deletions))))
 
     ka, kb = F.col("a_key"), F.col("b_key")
     av, bv = variants(a, "a"), variants(b, "b")

@@ -228,6 +228,101 @@ def test_backends_read_changesets_above_2_53(spark):
         assert {r["id"] for r in filt.apply(df).collect()} == want, expr
 
 
+def _kept_by_both_backends(df, expr):
+    """Sorted kept ids from the Column backend, then from the
+    interpreter backend forced on the same program."""
+    from skyway_spark.functions.filter.cel import (
+        CompiledCelFilter,
+        InterpretedCelFilter,
+        _lex,
+        _Parser,
+    )
+
+    filt = compile_cel(expr)
+    assert isinstance(filt, CompiledCelFilter), expr
+    interp = InterpretedCelFilter(_Parser(_lex(expr)).parse())
+    return [sorted(r["id"] for r in f.apply(df).select("id").collect()) for f in (filt, interp)]
+
+
+EXACT_CASES = [
+    # a lambda error errs the whole filter/map/exists_one (no
+    # absorption), so every element drops
+    ("size([1, 0].filter(x, 10 / x > 0)) == 1", []),
+    ("size([0, 1].map(x, 10 / x)) == 2", []),
+    ("[1, 0].exists_one(x, 10 / x > 0)", []),
+    # absent metadata carried through a ternary stays a null value:
+    # the two ways without a user keep
+    ('(id > 0 ? user : "z") == null', [1500, 2000]),
+    # None in [None]: the element without a changeset keeps
+    ("changeset in [null]", [2000]),
+    ("!(changeset in [null, 11])", [1, 1500, 3000]),
+    ("[10, 20, 30][id] == 20", [1]),  # an index out of range errs
+    # int literals and the INT uid column compute in int64, not int32
+    ("3 * 1000000000 > id", [1, 2, 1500, 2000, 3000]),
+    ("uid * 2147483647 > 0", [1, 2, 1500, 3000]),
+    # values of two kinds: never equal, never ordered (an error), and
+    # never cast into each other, which could abort the job
+    ("user == 1", []),
+    ("user != uid", [1, 2, 1500, 3000]),  # null != null is false
+    ("!(visible == 1)", [1, 2, 1500, 2000, 3000]),
+    ('tags["highway"] > 2', []),
+    ("visible < true", []),
+    ("user < 1", []),
+    ('user + 1 == "a1"', []),
+    ('!(uid in ["42"])', [1, 2, 1500, 2000, 3000]),
+    ("!(1 in tags)", [1, 2, 1500, 2000, 3000]),
+    ("!(null in [1, 2])", [1, 2, 1500, 2000, 3000]),
+    ("!(null in tags)", [1, 2, 1500, 2000, 3000]),
+    # an operand of a kind no overload takes errs, where Spark would
+    # cast it (id to a string, a bool to 1) or fail the plan
+    ('id.contains("1")', []),
+    ("int(visible) == 1", []),
+    ('string(tags) == "x"', []),
+    ("1 || true", [1, 2, 1500, 2000, 3000]),  # error || true is true
+    ("!(id == 1) || !1", [2, 1500, 2000, 3000]),
+    ("!tags.exists(k, 1)", [2000]),  # no key, so no erring element
+    ("(1 ? true : false)", []),
+    ('[10, 20]["1"] == 20', []),  # a list index is an int, not a cast string
+]
+
+
+@pytest.mark.parametrize("expr,want", EXACT_CASES, ids=[c[0][:40] for c in EXACT_CASES])
+def test_backends_keep_the_same_rows(elements, expr, want):
+    assert _kept_by_both_backends(elements, expr) == [want, want]
+
+
+def test_top_level_null_raises_in_both_backends(elements):
+    """A program whose value is null without an error (`visible` on an
+    element without the flag) panics the reference (cel/mod.rs:9-14):
+    both backends raise instead of dropping the element."""
+    from skyway_spark.functions.filter.cel import InterpretedCelFilter, _lex, _Parser
+
+    for filt in (compile_cel("visible"), InterpretedCelFilter(_Parser(_lex("visible")).parse())):
+        with pytest.raises(Exception, match="non-boolean"):
+            filt.apply(elements).collect()
+    # where every element has the flag, both keep the visible ones
+    flagged = elements.where("visible IS NOT NULL")
+    assert _kept_by_both_backends(flagged, "visible") == [[1, 2, 3000]] * 2
+
+
+def test_int64_overflow_is_an_error_in_both_backends(spark):
+    """CEL ints are int64 and overflow is an eval error: the element
+    drops in both backends, and the Column job never aborts with
+    ARITHMETIC_OVERFLOW."""
+    i64_min = -(1 << 63)
+    df = spark.createDataFrame([(i64_min,), (-5,), (3,)], "id long").coalesce(1)
+    for expr, want in (
+        ("-id > 0", [-5]),  # -(-2^63) overflows
+        ("id - 1 < 0", [-5]),  # -2^63 - 1 overflows
+        ("id * 9223372036854775807 > 0", []),  # 3 * (2^63 - 1) overflows
+        ("id * 3074457345618258602 > 0", [3]),  # 2^63 - 2 fits
+        ("id / -1 > 0", [-5]),  # -2^63 / -1 overflows
+        ("id % -1 == 0", [i64_min, -5, 3]),  # the remainder is 0
+        ("id + 9223372036854775807 >= -1", [i64_min, -5]),  # 3 + (2^63 - 1) overflows
+    ):
+        assert _kept_by_both_backends(df, expr) == [want, want], expr
+
+
 def test_cel_fallback_nonboolean_raises(spark, elements):
     """Interpreter path: non-boolean program output is a hard error at
     runtime (reference panics, cel/mod.rs:9-14)."""

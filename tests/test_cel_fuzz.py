@@ -5,24 +5,27 @@ The existing parity test (`test_cel.py::test_backends_agree_on_shared_subset`)
 replays the hand-written CASES through both backends; this file
 generates SEEDED-random programs from a typed grammar restricted to the
 Column subset (comparisons, logic, ternary, arithmetic with CEL
-truncating division/remainder, map index, `has`, `size`, `in`, string
-methods) and asserts the kept-row set matches between:
+truncating division/remainder and int64 overflow, map index, `has`,
+`size`, `in` over lists that hold `null`, string methods, null metadata
+carried through ternaries and arithmetic, comparisons across kinds, and
+the comprehension macros with erroring lambdas) and asserts that every (program, row) cell gets
+the same verdict from:
 
-- the Column compilation (`_ColumnBackend` -> `coalesce(pred, false)`,
-  exactly `CompiledCelFilter.apply`'s predicate), evaluated in batched
-  Spark selects (~60 predicates per job so the fuzz is a handful of
-  jobs, not hundreds); and
+- the Column compilation (`_ColumnBackend`'s (value, error) pair: drop
+  where the error holds, panic where the value is null without one,
+  else the value), evaluated in batched Spark selects (~60 programs per
+  job so the fuzz is a handful of jobs, not hundreds); and
 - the pure-Python tree-walk evaluator (`_cel_eval`) that the Arrow
-  interpreter backend applies per element, with `_CelError` -> dropped
-  (cel/mod.rs:51-54 drop-with-warning).
+  interpreter backend applies per element: `_CelError` -> dropped
+  (cel/mod.rs:51-54 drop-with-warning), a non-boolean (null) result ->
+  panic (cel/mod.rs:9-14).
 
-Known documented divergences (`cel.py` module docstring) are excluded
-from the grammar: the `filter`/`map` macros' lambda-error handling.
-Division/remainder BY ZERO and missing-map-key errors are deliberately
-IN grammar — error-absorption parity (`true || error`, `false &&
-error`) is the subtle part of the contract.
+Division/remainder BY ZERO, int64 overflow and missing-map-key errors
+are deliberately IN grammar: error-absorption parity (`true || error`,
+`false && error`, `exists`/`all`) against no absorption (`filter`,
+`map`, `exists_one`, `==`, `in`) is the subtle part of the contract.
 
-The seed is fixed, so the ~400 programs are deterministic: a failure
+The seed is fixed, so the programs are deterministic: a failure
 reproduces by name and prints the offending program.
 """
 
@@ -31,6 +34,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from skyway_spark.functions.filter.cel import (
@@ -38,6 +42,7 @@ from skyway_spark.functions.filter.cel import (
     _CelError,
     _cel_eval,
     _ColumnBackend,
+    _err,
     _free_vars,
     _lex,
     _Parser,
@@ -59,6 +64,11 @@ ROWS = [
     ("relation", 3000, {"type": "route"}, 13, 9, "carol", None, True),
     ("relation", 9, {"type": "multipolygon", "name": ""}, 1, 42, "dave", "2024-06-01T12:00:00Z", False),
 ]
+# the fuzz adds an int64-extreme row: every arithmetic node can overflow
+I64_MAX = (1 << 63) - 1
+FUZZ_ROWS = ROWS + [
+    ("node", -I64_MAX - 1, {"amenity": "bench"}, I64_MAX, I64_MAX, "eve", None, True),
+]
 SCHEMA = (
     "type string, id long, tags map<string,string>, changeset long, "
     "uid long, user string, timestamp string, visible boolean"
@@ -69,12 +79,15 @@ CTXS = [
         ["type", "id", "tags", "changeset", "uid", "user", "timestamp", "visible"],
         row,
     ))
-    for row in ROWS
+    for row in FUZZ_ROWS
 ]
 
 STR_LITS = ['"cafe"', '"tertiary"', '"node"', '"a"', '""', '"route"', '"René"', '"er"']
 TAG_KEYS = ["amenity", "highway", "missing", "name", "type"]
 INT_VARS = ["id", "changeset", "uid"]
+# int64 bounds; -2^63 is written as a difference, since the literal
+# 9223372036854775808 does not fit a Spark bigint
+INT_EXTREMES = ["9223372036854775807", "-9223372036854775807", "(-9223372036854775807 - 1)"]
 STR_VARS = ["type", "user", "timestamp"]
 
 
@@ -86,14 +99,16 @@ class Gen:
 
     # ---- atoms ----
     def int_atom(self) -> str:
-        c = self.r.randrange(8)
+        c = self.r.randrange(9)
         if c < 3:
             return self.r.choice(INT_VARS)
         if c < 6:
             return str(self.r.choice([0, 1, 2, 3, 7, 42, 1500, -5]))
         if c == 6:
             return "size(tags)"
-        return f"size({self.r.choice(STR_VARS + STR_LITS)})"
+        if c == 7:
+            return f"size({self.r.choice(STR_VARS + STR_LITS)})"
+        return self.r.choice(INT_EXTREMES)
 
     def str_atom(self) -> str:
         c = self.r.randrange(6)
@@ -103,8 +118,15 @@ class Gen:
             return f'tags["{self.r.choice(TAG_KEYS)}"]'
         return self.r.choice(STR_LITS)
 
+    def list_items(self, atoms: list) -> str:
+        """1-3 of ``atoms``, sometimes with a null among them."""
+        items = self.r.sample(atoms, self.r.randrange(1, 4))
+        if self.r.random() < 0.3:
+            items.insert(self.r.randrange(len(items) + 1), "null")
+        return ", ".join(items)
+
     def bool_atom(self) -> str:
-        c = self.r.randrange(6)
+        c = self.r.randrange(7)
         if c == 0:
             return "visible"
         if c == 1:
@@ -116,18 +138,38 @@ class Gen:
         if c == 3:
             return f'("{self.r.choice(TAG_KEYS)}" in tags)'
         if c == 4:
-            lst = ", ".join(self.r.sample(STR_LITS, self.r.randrange(1, 4)))
-            return f"({self.str_atom()} in [{lst}])"
-        return f"({self.int_atom()} in [{self.r.randrange(4)}, {self.r.randrange(4, 50)}])"
+            return f"({self.str_atom()} in [{self.list_items(STR_LITS)}])"
+        if c == 5:
+            ints = [str(i) for i in (0, 1, 2, 3, 7, 42)]
+            return f"({self.int_atom()} in [{self.list_items(ints)}])"
+        # a null metadata value compared with null
+        var = self.r.choice(INT_VARS + STR_VARS + ["visible"])
+        return f"({var} {self.r.choice(['==', '!='])} null)"
 
     # ---- composites ----
     def int_expr(self, d: int) -> str:
         if d <= 0 or self.r.random() < 0.4:
             return self.int_atom()
-        if self.r.random() < 0.15:
+        c = self.r.random()
+        if c < 0.15:
             return f"({self.bool_expr(d - 1)} ? {self.int_expr(d - 1)} : {self.int_expr(d - 1)})"
+        if c < 0.22:
+            # a null carried through a ternary into arithmetic or ==
+            a, b = self.int_expr(d - 1), "null"
+            if self.r.random() < 0.5:
+                a, b = b, a
+            return f"({self.bool_expr(d - 1)} ? {a} : {b})"
+        if c < 0.27:
+            return f"-{self.int_expr(d - 1)}"
         op = self.r.choice(["+", "-", "*", "%", "/"])
         return f"({self.int_expr(d - 1)} {op} {self.int_expr(d - 1)})"
+
+    def str_expr(self, d: int) -> str:
+        if d > 0 and self.r.random() < 0.25:
+            a = self.str_atom()
+            b = self.str_atom() if self.r.random() < 0.6 else "null"
+            return f"({self.bool_expr(d - 1)} ? {a} : {b})"
+        return self.str_atom()
 
     def str_method(self, d: int) -> str:
         m = self.r.choice(["contains", "startsWith", "endsWith"])
@@ -136,7 +178,7 @@ class Gen:
     def bool_expr(self, d: int) -> str:
         if d <= 0:
             return self.bool_atom()
-        c = self.r.randrange(10)
+        c = self.r.randrange(11)
         if c == 0:
             return f"({self.bool_expr(d - 1)} && {self.bool_expr(d - 1)})"
         if c == 1:
@@ -153,46 +195,39 @@ class Gen:
             return f"({self.int_expr(d - 1)} {op} {self.int_expr(d - 1)})"
         if c == 6:
             op = self.r.choice(["==", "!="])
-            return f"({self.str_atom()} {op} {self.str_atom()})"
+            return f"({self.str_expr(d - 1)} {op} {self.str_expr(d - 1)})"
         if c == 7:
             return self.str_method(d)
         if c == 8:
             op = self.r.choice(["==", "!="])
             return f"({self.bool_expr(d - 1)} {op} {self.bool_expr(d - 1)})"
+        if c == 9:
+            return self.ill_kinded(d)
         return self.bool_atom()
 
+    def ill_kinded(self, d: int) -> str:
+        """Operands of another kind than the operator takes: == across
+        kinds is false, everything else errs (no Spark cast)."""
+        a, b = self.r.sample([self.int_expr(d - 1), self.str_expr(d - 1), self.bool_atom()], 2)
+        c = self.r.randrange(4)
+        if c == 0:
+            return f"({a} {self.r.choice(['==', '!=', '<', '>='])} {b})"
+        if c == 1:
+            return f"({self.int_atom()} {self.r.choice(['||', '&&'])} {self.bool_expr(d - 1)})"
+        if c == 2:
+            return self.r.choice([f"!{self.int_atom()}", f"({self.int_atom()} ? true : false)"])
+        return self.r.choice([f'({self.int_atom()}).contains("1")', "(int(visible) == 1)"])
 
-class _StrictCtx(dict):
-    """Context where referencing a null variable is an eval error —
-    the 'strict-null' model (SQL conflation of absent metadata with
-    errors)."""
 
-    def __getitem__(self, k):
-        v = super().__getitem__(k)
-        if v is None:
-            raise _CelError(f"null variable {k}")
-        return v
-
-
-def _kept(ast, strict: bool) -> list:
-    """Evaluate under one of the two reference models.
-
-    crate model (strict=False): exact cel-interpreter semantics —
-    _CelError -> dropped; a null program result -> 'panic' (the
-    reference aborts, cel/mod.rs:9-14; InterpretedCelFilter raises).
-
-    strict model (strict=True): null variable reference = eval error.
-
-    The Column backend's contract: crate semantics everywhere except
-    the two documented null-metadata corners (cel.py docstring), which
-    coincide with the strict model. So every (program, row) cell must
-    match the crate model OR the strict model, and must match the
-    crate model exactly whenever the two models agree.
-    """
+def _interpreted(ast) -> list:
+    """cel-interpreter's verdict on each fixture row: kept (True),
+    dropped on an eval error (False), or 'panic' for a non-boolean
+    result (the reference aborts, cel/mod.rs:9-14;
+    InterpretedCelFilter raises)."""
     out = []
     for ctx in CTXS:
         try:
-            v = _cel_eval(ast, _StrictCtx(ctx) if strict else dict(ctx))
+            v = _cel_eval(ast, dict(ctx))
         except _CelError:
             out.append(False)
             continue
@@ -200,23 +235,68 @@ def _kept(ast, strict: bool) -> list:
     return out
 
 
+def _verdict(typed) -> Column:
+    """The Column backend's verdict from its (value, error) pair, as
+    0 = drop, 1 = keep, 2 = panic, without raising inside the batch."""
+    err = _err(typed, F.lit(False))
+    return F.when(err, 0).when(typed.col.isNull(), 2).when(typed.col, 1).otherwise(0)
+
+
 N_PROGRAMS = 400
 BATCH = 60
 
 
+def _compiled(texts) -> list:
+    progs = []
+    for text in texts:
+        ast = _Parser(_lex(text)).parse()
+        assert _free_vars(ast) <= set(CONTEXT_VARS), text
+        typed = _ColumnBackend().compile(ast, {})
+        assert typed.t in ("bool", "any"), f"non-bool program generated: {text}"
+        progs.append((text, ast, _verdict(typed)))
+    return progs
+
+
+def _assert_backends_agree(spark, progs) -> int:
+    """Every (program, row) cell gets the interpreter's verdict from the
+    Column backend; returns the number of panic cells."""
+    df = spark.createDataFrame(FUZZ_ROWS, SCHEMA).coalesce(1)
+    mismatches = []
+    panics = 0
+    for start in range(0, len(progs), BATCH):
+        chunk = progs[start : start + BATCH]
+        got = df.select(
+            F.col("id"), *[v.alias(f"k{i}") for i, (_, _, v) in enumerate(chunk)]
+        ).collect()
+        # createDataFrame on one partition preserves row order; keep a
+        # belt-and-braces order key anyway
+        assert [r["id"] for r in got] == [r[1] for r in FUZZ_ROWS]
+        for i, (text, ast, _) in enumerate(chunk):
+            want = _interpreted(ast)
+            have = [(False, True, "panic")[r[f"k{i}"]] for r in got]
+            panics += want.count("panic")
+            mismatches += [
+                (text, j, want[j], have[j]) for j in range(len(CTXS)) if have[j] != want[j]
+            ]
+    assert not mismatches, "\n".join(
+        f"program: {t}\n  row {j}: interpreter={w} column={h}"
+        for t, j, w, h in mismatches[:12]
+    )
+    return panics
+
+
 class MacroGen:
-    """Comprehension-macro programs over the `tags` map with ERROR-FREE
-    lambdas (the bound key is always a present, non-null string and the
-    bodies touch only it and literals), so the documented lambda-error
-    divergence is out of scope and the two backends must agree EXACTLY
-    — this fuzzes the Spark-HOF compilation path (`exists`/`forall`/
-    `filter`/`transform`) against the tree-walk interpreter."""
+    """Comprehension-macro programs over the `tags` map and over int
+    lists, with lambdas that err (a missing tag, a null `user`, a
+    division by a zero or null element) as well as error-free ones: the
+    Spark-HOF compilation (`exists`/`forall`/`filter`/`transform`) must
+    absorb a lambda error exactly where the tree-walk does."""
 
     def __init__(self, rng: random.Random):
         self.r = rng
 
     def body(self, d: int) -> str:
-        c = self.r.randrange(8 if d > 0 else 5)
+        c = self.r.randrange(10 if d > 0 else 7)
         if c == 0:
             return f"(k == {self.r.choice(STR_LITS)})"
         if c == 1:
@@ -231,14 +311,43 @@ class MacroGen:
             return f"(k in [{lst}])"
         if c == 4:
             return f"(size(k) {self.r.choice(['<', '<=', '>', '>=', '==', '!='])} {self.r.randrange(9)})"
-        if c == 5:
+        if c == 5:  # errs where the tag is missing
+            return f'(tags["{self.r.choice(TAG_KEYS)}"] {self.r.choice(["==", "!="])} k)'
+        if c == 6:  # a null user: == is a value, size() an error
+            return self.r.choice(["(user == k)", "(user != k)", "(size(user) > size(k))"])
+        if c == 7:
             return f"({self.body(d - 1)} && {self.body(d - 1)})"
-        if c == 6:
+        if c == 8:
             return f"({self.body(d - 1)} || {self.body(d - 1)})"
         return f"!({self.body(d - 1)})"
 
-    def macro_atom(self) -> str:
+    def int_list(self) -> str:
+        items = self.r.sample(["0", "1", "2", "-3", "id", "changeset", "uid"], self.r.randrange(1, 4))
+        return f"[{', '.join(items)}]"
+
+    def int_body(self) -> str:
+        """A predicate on x that errs where x is 0 or null."""
+        op = self.r.choice(["/", "%"])
+        cmp = self.r.choice(["==", "!=", "<", ">"])
+        return f"({self.r.choice(['10', '7', 'id'])} {op} x {cmp} {self.r.randrange(-2, 6)})"
+
+    def list_macro(self) -> str:
+        lst, body = self.int_list(), self.int_body()
         c = self.r.randrange(6)
+        if c == 0:
+            return f"{lst}.exists(x, {body})"
+        if c == 1:
+            return f"{lst}.all(x, {body})"
+        if c == 2:
+            return f"{lst}.exists_one(x, {body})"
+        if c == 3:
+            return f"(size({lst}.filter(x, {body})) == {self.r.randrange(3)})"
+        if c == 4:
+            return f"({self.r.randrange(-1, 6)} in {lst}.map(x, 10 / x))"
+        return f"(size({lst}.map(x, {body}, x * x)) >= {self.r.randrange(3)})"
+
+    def macro_atom(self) -> str:
+        c = self.r.randrange(7)
         if c == 0:
             return f"tags.exists(k, {self.body(2)})"
         if c == 1:
@@ -250,6 +359,8 @@ class MacroGen:
             return f"(size(tags.filter(k, {self.body(2)})) {op} {self.r.randrange(4)})"
         if c == 4:
             return f'("{self.r.choice(TAG_KEYS)}" in tags.map(k, k))'
+        if c == 5:
+            return self.list_macro()
         return (
             f"(size(tags.map(k, {self.body(2)}, k)) "
             f"{self.r.choice(['==', '>='])} {self.r.randrange(3)})"
@@ -272,90 +383,15 @@ class MacroGen:
 
 def test_fuzz_macros_match_interpreter_exactly(spark):
     rng = random.Random(0x3AC20)
-    progs = []
-    while len(progs) < 200:
-        text = MacroGen(rng).program(2)
-        ast = _Parser(_lex(text)).parse()
-        assert _free_vars(ast) <= set(CONTEXT_VARS), text
-        typed = _ColumnBackend().compile(ast, {})
-        assert typed.t in ("bool", "any"), f"non-bool macro program: {text}"
-        progs.append((text, ast, typed.col))
-    df = spark.createDataFrame(ROWS, SCHEMA).coalesce(1)
-    mismatches = []
-    for start in range(0, len(progs), BATCH):
-        chunk = progs[start : start + BATCH]
-        sel = df.select(
-            F.col("id"),
-            *[
-                F.coalesce(col, F.lit(False)).alias(f"k{i}")
-                for i, (_, _, col) in enumerate(chunk)
-            ],
-        )
-        got = sel.collect()
-        assert [r["id"] for r in got] == [r[1] for r in ROWS]
-        for i, (text, ast, _) in enumerate(chunk):
-            want = _kept(ast, strict=False)
-            have = [bool(r[f"k{i}"]) for r in got]
-            for j in range(len(CTXS)):
-                assert want[j] != "panic", f"macro grammar produced a panic: {text}"
-                if have[j] != want[j]:
-                    mismatches.append((text, j, want[j], have[j]))
-    assert not mismatches, "\n".join(
-        f"program: {t}\n  row {j}: interpreter={w} column={h}"
-        for t, j, w, h in mismatches[:12]
-    )
-
-
-def _programs():
-    rng = random.Random(0xCE1F)
-    progs = []
-    while len(progs) < N_PROGRAMS:
-        text = Gen(rng).bool_expr(4)
-        ast = _Parser(_lex(text)).parse()
-        assert _free_vars(ast) <= set(CONTEXT_VARS), text
-        typed = _ColumnBackend().compile(ast, {})
-        assert typed.t in ("bool", "any"), f"non-bool program generated: {text}"
-        progs.append((text, ast, typed.col))
-    return progs
+    progs = _compiled(MacroGen(rng).program(2) for _ in range(200))
+    _assert_backends_agree(spark, progs)
 
 
 def test_fuzz_column_backend_matches_interpreter(spark):
-    progs = _programs()
-    df = spark.createDataFrame(ROWS, SCHEMA).coalesce(1)
-    mismatches = []
-    envelope_cells = 0  # cells where the two models disagree
-    for start in range(0, len(progs), BATCH):
-        chunk = progs[start : start + BATCH]
-        sel = df.select(
-            F.col("id"),
-            *[
-                F.coalesce(col, F.lit(False)).alias(f"k{i}")
-                for i, (_, _, col) in enumerate(chunk)
-            ],
-        )
-        got = sel.collect()
-        # createDataFrame on one partition preserves row order; keep a
-        # belt-and-braces order key anyway
-        assert [r["id"] for r in got] == [r[1] for r in ROWS]
-        for i, (text, ast, _) in enumerate(chunk):
-            crate = _kept(ast, strict=False)
-            strict = _kept(ast, strict=True)
-            have = [bool(r[f"k{i}"]) for r in got]
-            for j in range(len(CTXS)):
-                c = crate[j] if crate[j] != "panic" else False  # drop beats abort
-                if c != strict[j]:
-                    envelope_cells += 1
-                    ok = have[j] in (c, strict[j])
-                else:
-                    ok = have[j] == c
-                if not ok:
-                    mismatches.append((text, j, crate[j], strict[j], have[j]))
-    assert not mismatches, "\n".join(
-        f"program: {t}\n  row {j}: crate={c} strict={s} column={h}"
-        for t, j, c, s, h in mismatches[:12]
-    )
-    # the corpus must actually exercise the null-metadata corner
-    assert envelope_cells > 50, envelope_cells
+    rng = random.Random(0xCE1F)
+    progs = _compiled(Gen(rng).bool_expr(4) for _ in range(N_PROGRAMS))
+    # the corpus must reach the top-level-null panic
+    assert _assert_backends_agree(spark, progs) > 0
 
 
 # --------------- deterministic pins for the fixed classes ---------------

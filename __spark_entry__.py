@@ -2787,8 +2787,9 @@ def q_polygon_fill(spark, sf):
     trio (raster_tiles fills POINTS, rasterize_segments LINES, this
     AREAS).  Candidate cells enumerate from each polygon's bbox via a
     JVM sequence explode (dimension-sized); the center test is the
-    literal-edge ray cast with the batch PIP's exact arithmetic."""
-    from skyway_spark.operators.pip import _odd_crossings, _rings_lit
+    batch PIP's even-odd ray cast (``pip.inside_sql``) over the
+    polygon's edges, carried as columns of its bbox row."""
+    from skyway_spark.operators.pip import EDGE_LISTS_DDL, inside_sql
 
     nx, ny = 1 << (FILL_RES + 1), 1 << FILL_RES
 
@@ -2798,46 +2799,39 @@ def q_polygon_fill(spark, sf):
     def grid_y(lat):
         return max(0, min(ny - 1, int(math.floor((90.0 - lat) / 180.0 * float(ny)))))
 
+    def edges(rings, role):
+        return [
+            [(a[0], a[1], b[0], b[1]) for a, b in zip(ring[:-1], ring[1:])]
+            for r, ring in rings
+            if r == role
+        ]
+
     rows = []
     for pid, rings in PIP_POLYGONS.items():
         lats = [p[0] for _, ring in rings for p in ring]
         lons = [p[1] for _, ring in rings for p in ring]
         rows.append(
             (pid, grid_x(min(lons)), grid_x(max(lons)),
-             grid_y(max(lats)), grid_y(min(lats)))
+             grid_y(max(lats)), grid_y(min(lats)),
+             edges(rings, "outer"), edges(rings, "hole"))
         )
     bbox = spark.createDataFrame(
-        rows, "polygon_id long, x0 long, x1 long, y0 long, y1 long"
+        rows,
+        "polygon_id long, x0 long, x1 long, y0 long, y1 long, "
+        f"outer {EDGE_LISTS_DDL}, hole {EDGE_LISTS_DDL}",
     )
     g = bbox.select(
         "polygon_id",
         F.explode(F.sequence("x0", "x1")).alias("x"),
         "y0",
         "y1",
-    ).select("polygon_id", "x", F.explode(F.sequence("y0", "y1")).alias("y"))
+        "outer",
+        "hole",
+    ).select("polygon_id", "x", F.explode(F.sequence("y0", "y1")).alias("y"), "outer", "hole")
     lon_c = (F.col("x") + 0.5) / float(nx) * 360.0 - 180.0
     lat_c = 90.0 - (F.col("y") + 0.5) / float(ny) * 180.0
-    c = g.select("polygon_id", "x", "y", lat_c.alias("clat"), lon_c.alias("clon"))
-
-    inside = F.lit(False)
-    for pid, rings in PIP_POLYGONS.items():
-        in_pid = F.lit(False)
-        for role, ring in rings:
-            if role != "outer":
-                continue
-            in_pid = in_pid | _odd_crossings(
-                F.element_at(_rings_lit([([p[0] for p in ring], [p[1] for p in ring])]), 1),
-                F.col("clat"), F.col("clon"),
-            )
-        for role, ring in rings:
-            if role != "hole":
-                continue
-            in_pid = in_pid & ~_odd_crossings(
-                F.element_at(_rings_lit([([p[0] for p in ring], [p[1] for p in ring])]), 1),
-                F.col("clat"), F.col("clon"),
-            )
-        inside = F.when(F.col("polygon_id") == pid, in_pid).otherwise(inside)
-    return c.where(inside).select("polygon_id", "x", "y")
+    c = g.select("polygon_id", "x", "y", lat_c.alias("clat"), lon_c.alias("clon"), "outer", "hole")
+    return c.where(F.expr(inside_sql("outer", "hole", "clat", "clon"))).select("polygon_id", "x", "y")
 
 
 def _polygon_fill_sql() -> str:

@@ -84,6 +84,15 @@ def cell_encode(lat: Column, lon: Column, res: int) -> Column:
     return pack_cell(x, y, res)
 
 
+def cell_encode_sql(lat: str, lon: str, res: int) -> str:
+    """``cell_encode`` as SQL text (one py4j call, not one per operator)
+    over two SQL expressions; BIGINT clamp bounds, so analysis adds no casts."""
+    nx, ny = 1 << (res + 1), 1 << res
+    x = f"greatest(0L, least({nx - 1}L, floor(({lon} + 180.0D) / 360.0D * {float(nx)!r}D)))"
+    y = f"greatest(0L, least({ny - 1}L, floor((90.0D - {lat}) / 180.0D * {float(ny)!r}D)))"
+    return f"({res << _R_SHIFT}L | shiftleft({x}, {_X_SHIFT}) | {y})"
+
+
 def cell_x(cell: Column) -> Column:
     return F.shiftrightunsigned(cell, _X_SHIFT).bitwiseAND(F.lit(_XY_MASK))
 

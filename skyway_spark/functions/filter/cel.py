@@ -354,7 +354,10 @@ class _Parser:
             self.expect("]")
             return ListLit(items)
         if t.kind == "int":
-            return Lit(int(t.text.rstrip("uU")), "int")
+            v = int(t.text.rstrip("uU"))
+            if v >= 1 << 63:  # no int64 holds it; the Column backend's F.lit cannot either
+                raise CelCompileError(f"int literal {t.text} is out of the int64 range")
+            return Lit(v, "int")
         if t.kind == "float":
             return Lit(float(t.text), "double")
         if t.kind == "string":

@@ -8,6 +8,7 @@ multi-executor cluster; in this sandbox it runs on local[N].
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pyarrow as pa
@@ -62,6 +63,11 @@ def spread(df):
     return df
 
 
+# DDL text -> StructType, parsed once per process: a parse is a JVM round
+# trip, and callers pass the same constants on every plan build
+_parse_ddl = functools.lru_cache(maxsize=256)(DataType.fromDDL)
+
+
 def local_frame(
     spark: SparkSession, data: list | pa.Table, schema: StructType | str
 ) -> DataFrame:
@@ -84,7 +90,7 @@ def local_frame(
     integer column, so a caller taking integers from outside input
     checks them first (as the JSON reader does)."""
     if isinstance(schema, str):
-        schema = DataType.fromDDL(schema)
+        schema = _parse_ddl(schema)
     if not isinstance(data, pa.Table):
         arrow_schema = to_arrow_schema(schema)
         columns = list(zip(*data, strict=True)) or [()] * len(arrow_schema)

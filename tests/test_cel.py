@@ -323,6 +323,23 @@ def test_int64_overflow_is_an_error_in_both_backends(spark):
         assert _kept_by_both_backends(df, expr) == [want, want], expr
 
 
+def test_int_literal_out_of_int64_is_a_compile_error(spark):
+    """An int literal above 2^63 - 1 is a CelCompileError that names it,
+    from the Column backend and from the parse the interpreter backend
+    runs on; the largest int64 literal still compiles and runs."""
+    from skyway_spark.functions.filter.cel import InterpretedCelFilter, _lex, _Parser
+
+    for lit in ("9223372036854775808", "9223372036854775808u", "99999999999999999999"):
+        expr = f"id < {lit}"
+        with pytest.raises(CelCompileError, match=lit):
+            compile_cel(expr)
+        with pytest.raises(CelCompileError, match=lit):
+            InterpretedCelFilter(_Parser(_lex(expr)).parse())
+    df = spark.createDataFrame([(-(1 << 63),), (3,)], "id long")
+    for expr in ("id < 9223372036854775807", "id >= -9223372036854775807 - 1"):
+        assert _kept_by_both_backends(df, expr) == [[-(1 << 63), 3]] * 2, expr
+
+
 def test_cel_fallback_nonboolean_raises(spark, elements):
     """Interpreter path: non-boolean program output is a hard error at
     runtime (reference panics, cel/mod.rs:9-14)."""

@@ -35,6 +35,23 @@ def test_cell_encode_matches_numpy(points, res):
     assert (got == want).all()
 
 
+def test_cell_encode_sql_matches_column(spark, points):
+    """The SQL-text key equals the Column one everywhere, including the
+    values that clamp (|lat| > 90, |lon| > 180, NaN, +-inf, null) and
+    cell boundaries."""
+    _df, lat, lon = points
+    special = [None, float("nan"), float("inf"), float("-inf"), -0.0, 90.0, -90.0, 95.0, 180.0, -200.0, 5e-324]
+    rows = [(float(a), float(b)) for a, b in zip(lat, lon)]
+    rows += [(a, b) for a in special for b in special]
+    rows += [(90.0 - k * 180.0 / 64, k * 360.0 / 128 - 180.0) for k in range(65)]
+    df = spark.createDataFrame(rows, "lat double, lon double")
+    for res in (0, 3, 8, 15, 26):
+        col = cells.cell_encode(F.col("lat"), F.col("lon"), res)
+        sql = F.expr(cells.cell_encode_sql("lat", "lon", res))
+        diff = df.where(~col.eqNullSafe(sql))
+        assert diff.count() == 0, (res, diff.take(3))
+
+
 def test_cell_decode_roundtrip(points):
     df, lat, lon = points
     res = 9

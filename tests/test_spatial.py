@@ -4,6 +4,7 @@ hole), bounded kNN, tiles, salting, extraction invariants."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -205,54 +206,113 @@ def test_pip_empty_polygon_table(spark, refine, monkeypatch):
     assert {(r["id"], r["polygon_id"]) for r in mixed.collect()} == {(1, 1)}
 
 
-def test_rings_lit_doubles_exact(spark):
-    """Seeded fuzz of the double -> SQL literal rendering behind the jvm
-    refine: every finite double comes back bit-for-bit, and NaN/+-inf
-    evaluate exactly as F.lit does."""
+def test_edge_columns_carry_vertices_bit_exact(spark):
+    """The broadcast edge columns of the jvm refine carry every ring
+    vertex bit for bit through Arrow and Spark: -0.0, subnormals,
+    +-inf, NaN and a seeded fuzz of random bit patterns; a row that
+    keeps no edge (an interior cell) is null."""
     import struct
 
-    from skyway_spark.operators.pip import _rings_lit
+    from skyway_spark.operators.pip import EDGE_LISTS_DDL, _edge_lists, _ring_edges
+    from skyway_spark.plans.session import local_frame
 
     def bits(v):
         return struct.pack("<d", v)
 
     special = [-0.0, 5e-324, 2.2250738585072014e-308, 1.7976931348623157e308, 1e-05, 0.1 + 0.2]
+    special += [-v for v in special] + [float("inf"), float("-inf"), float("nan")]
     rng = np.random.default_rng(20240611)
     rand = rng.integers(0, 2**64, size=1000, dtype=np.uint64).view(np.float64)
-    vals = special + [-v for v in special] + rand[np.isfinite(rand)].tolist()
-    ys, xs = vals, vals[::-1]
-    edges = spark.range(1).select(_rings_lit([(ys, xs)])).first()[0][0]
-    assert len(edges) == len(vals) - 1
-    for k, e in enumerate(edges):
-        want = (ys[k], xs[k], ys[k + 1], xs[k + 1])
-        assert [bits(v) for v in e] == [bits(v) for v in want], (k, e, want)
+    vals = np.array(special + rand.tolist())
+    rings = [(vals, vals[::-1].copy()), (vals[:5], vals[3:8])]
+    edges, ring_of = _ring_edges(rings)
+    keep = np.ones((2, edges.shape[1]), dtype=bool)
+    keep[1] = False
+    col = _edge_lists([(edges, ring_of, keep)], np.array([False, True]))
+    got = local_frame(spark, pa.table({"e": col}), f"e {EDGE_LISTS_DDL}").collect()
+    assert got[1]["e"] is None
+    assert len(got[0]["e"]) == 2
+    for (ys, xs), ring in zip(rings, got[0]["e"]):
+        assert len(ring) == len(ys) - 1
+        for k, e in enumerate(ring):
+            want = (ys[k], xs[k], ys[k + 1], xs[k + 1])
+            assert [bits(v) for v in e] == [bits(v) for v in want], (k, e, want)
 
-    ys = [float("nan"), float("inf"), float("-inf"), 1.0]
-    xs = ys[::-1]
-    got = spark.range(1).select(_rings_lit([(ys, xs)])).first()[0][0]
-    ref = spark.range(1).select(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(ys[k]).alias("y1"),
-                    F.lit(xs[k]).alias("x1"),
-                    F.lit(ys[k + 1]).alias("y2"),
-                    F.lit(xs[k + 1]).alias("x2"),
-                )
-                for k in range(len(ys) - 1)
-            ]
-        )
-    ).first()[0]
-    assert [[bits(v) for v in e] for e in got] == [[bits(v) for v in e] for e in ref]
+
+def test_clipped_edges_never_cross(entities):
+    """An edge a boundary cell drops never crosses the +lon ray of a
+    point that cell_encode puts in that cell: cell corners one ulp
+    either way, points on the cell sides, uniform points and the
+    extracted entities, over the generated polygons plus a star with a
+    hole, at two cover resolutions."""
+    from skyway_spark.operators.pip import (
+        _bbox,
+        _cell_rects,
+        _classify_cover,
+        _clip_edges,
+        _pick_cover_res,
+        _ring_arrays,
+        _ring_edges,
+    )
+    from skyway_spark.sources.generate import polygon_rows
+
+    geoms = {}
+    for pid, _name, ring, role in polygon_rows(n_scatter=12, seed=3):
+        ys = np.array([p[0] for p in ring])
+        xs = np.array([p[1] for p in ring])
+        geoms.setdefault(pid, {"outer": [], "hole": []})[role].append((ys, xs))
+    t = np.linspace(0, 2 * np.pi, 19)
+    r = np.where(np.arange(19) % 2 == 0, 2.0, 0.8)
+    geoms[99] = {
+        "outer": [(-30 + r * np.sin(t), 60 + r * np.cos(t))],
+        "hole": [_ring_arrays([{"lat": -30 + 0.4 * np.sin(a), "lon": 60 + 0.4 * np.cos(a)} for a in t[::3]])],
+    }
+    ents = entities.select("lat", "lon").toPandas()
+    rng = np.random.default_rng(7)
+    checked = dropped = 0
+    for g in geoms.values():
+        edges, _ring_of = _ring_edges(g["outer"] + g["hole"])
+        y1, x1, y2, x2 = (v[None, :] for v in edges)
+        for res in (4, 6):
+            f = _pick_cover_res(*_bbox(g["outer"] + g["hole"]), res)
+            ids, _inter = _classify_cover(g, f)
+            keep = _clip_edges(edges, ids, f)
+            _b, xlo, xhi, ylo, yhi = _cell_rects(ids, f)
+            py, px = [ents["lat"].to_numpy()], [ents["lon"].to_numpy()]
+            for cy in (ylo, yhi):
+                for cx in (xlo, xhi):
+                    for dy in (np.inf, -np.inf):
+                        for dx in (np.inf, -np.inf):
+                            py.append(np.nextafter(cy, dy))
+                            px.append(np.nextafter(cx, dx))
+            u = rng.random((2, 8, len(ids)))
+            py += [ylo + u[0, k] * (yhi - ylo) for k in range(8)] + [ylo + u[0, 0] * (yhi - ylo)] * 2
+            px += [xlo + u[1, k] * (xhi - xlo) for k in range(8)] + [xlo, xhi]
+            py, px = np.concatenate(py), np.concatenate(px)
+            cell = cells.cell_encode_np(py, px, f)
+            order = np.argsort(ids)
+            pos = np.clip(np.searchsorted(ids[order], cell), 0, len(ids) - 1)
+            hit = ids[order][pos] == cell
+            row = order[pos[hit]]
+            py, px = py[hit][:, None], px[hit][:, None]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                crosses = ((y1 > py) != (y2 > py)) & (px < (x2 - x1) * (py - y1) / (y2 - y1) + x1)
+            assert not (crosses & ~keep[row]).any(), f
+            checked += len(row)
+            dropped += int((~keep).sum())
+    assert checked > 100_000 and dropped > 10_000, (checked, dropped)
 
 
 def test_pip_jvm_build_py4j_calls_flat_in_edges(spark, monkeypatch):
-    """The jvm-refine plan build sends the ring constants through py4j
-    as one SQL string: a 1 024-edge ring must cost about as many
-    gateway commands as a 16-edge one (it used to cost ~80 per edge).
+    """The jvm-refine plan holds no geometry: the ring edges ride in
+    the broadcast cell table, so a 1 024-edge ring costs about as many
+    gateway commands as a 16-edge one (it used to cost ~80 per edge),
+    and the optimized plan's join condition, where the refine predicate
+    lands, reads the same for both once expression ids are masked.
     Memory (``m``) commands are not counted: they detach proxies that
     Python's garbage collector frees, whenever it happens to run."""
     import math
+    import re
 
     def ring_table(k):
         ring = [
@@ -266,7 +326,7 @@ def test_pip_jvm_build_py4j_calls_flat_in_edges(spark, monkeypatch):
     pts = spark.createDataFrame([(1, 10.0, 20.0)], "id long, lat double, lon double")
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
-    counts = {}
+    counts, conds = {}, {}
     for k in (16, 1024):
         polys = ring_table(k)
         n = 0
@@ -278,11 +338,17 @@ def test_pip_jvm_build_py4j_calls_flat_in_edges(spark, monkeypatch):
 
         client.send_command = counting
         try:
-            point_in_polygon(pts, polys, res=4)
+            out = point_in_polygon(pts, polys, res=4)
         finally:
             client.send_command = send
         counts[k] = n
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        (join,) = [ln for ln in plan.splitlines() if "Join Inner" in ln]
+        conds[k] = re.sub(r"#\d+L?", "#", join)
+        assert out.collect()[0]["polygon_id"] == 1
     assert counts[1024] < 1.2 * counts[16], counts
+    assert conds[16] == conds[1024]
+    assert "exists(" in conds[16] and "__outer" in conds[16]
 
 
 # ------------------------------ kNN ------------------------------

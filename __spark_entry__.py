@@ -39,6 +39,7 @@ from skyway_spark.operators.extract import extract_geo_entities
 from skyway_spark.operators.knn import knn_join
 from skyway_spark.operators.pip import point_in_polygon
 from skyway_spark.operators.rangejoin import range_join
+from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, POLYGONS_SCHEMA
 from skyway_spark.sources import opl as oplio
 from skyway_spark.sources.generate import generate_pages, generate_polygons
@@ -181,7 +182,7 @@ def _pip_polygons_df(spark: SparkSession) -> DataFrame:
     for pid, rings in PIP_POLYGONS.items():
         for role, ring in rings:
             rows.append((pid, f"p{pid}", [{"lat": a, "lon": b} for a, b in ring], role))
-    return spark.createDataFrame(rows, POLYGONS_SCHEMA)
+    return local_frame(spark, rows, POLYGONS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -8671,7 +8672,7 @@ def _pip_pairs_sql() -> str:
                                 THEN 1 ELSE 0 END) % 2 = 1 AS inside
                 FROM pts p CROSS JOIN edges e
                 GROUP BY p.event_id, e.polygon_id, e.role)
-            SELECT event_id, polygon_id
+            SELECT event_id, polygon_id::BIGINT AS polygon_id
             FROM ring_hits
             GROUP BY event_id, polygon_id
             HAVING bool_or(role = 'outer' AND inside)
@@ -8964,7 +8965,7 @@ def _pages_pipeline_sql(n_rows: int = 2000) -> str:
             GROUP BY i, j, polygon_id
             HAVING bool_or(role = 'outer' AND inside)
                AND NOT bool_or(role = 'hole' AND inside))
-        SELECT p.polygon_id, {tx8} AS tile_x, {ty8} AS tile_y,
+        SELECT p.polygon_id::BIGINT AS polygon_id, {tx8} AS tile_x, {ty8} AS tile_y,
                COUNT(*) AS n_points
         FROM pip p JOIN kept k USING (i, j)
         GROUP BY 1, 2, 3
@@ -9022,7 +9023,7 @@ def _pipeline_exact_sql() -> str:
             GROUP BY doc_id, j, polygon_id
             HAVING bool_or(role = 'outer' AND inside)
                AND NOT bool_or(role = 'hole' AND inside))
-        SELECT p.polygon_id, {tx8} AS tile_x, {ty8} AS tile_y,
+        SELECT p.polygon_id::BIGINT AS polygon_id, {tx8} AS tile_x, {ty8} AS tile_y,
                COUNT(*) AS n_points
         FROM pip p JOIN kept k USING (doc_id, j)
         GROUP BY 1, 2, 3

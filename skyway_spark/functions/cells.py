@@ -60,13 +60,17 @@ def cell_y_py(cell: int) -> int:
 
 
 def cell_xy(lat: Column, lon: Column, res: int) -> tuple[Column, Column]:
-    """Grid coordinates at resolution ``res`` (pure Column math)."""
+    """Grid coordinates at resolution ``res`` (pure Column math).  An
+    out-of-range, NaN or infinite coordinate clamps into the grid; a
+    null one gives a null grid coordinate (``greatest``/``least`` skip
+    nulls, so the clamp alone would put it in the last row or column)."""
     nx = 1 << (res + 1)
     ny = 1 << res
-    x = F.floor((_as_col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nx)))
-    y = F.floor((F.lit(90.0) - _as_col(lat)) / F.lit(180.0) * F.lit(float(ny)))
-    x = F.greatest(F.lit(0), F.least(F.lit(nx - 1), x)).cast("long")
-    y = F.greatest(F.lit(0), F.least(F.lit(ny - 1), y)).cast("long")
+    lat, lon = _as_col(lat), _as_col(lon)
+    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nx)))
+    y = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(float(ny)))
+    x = F.when(lon.isNotNull(), F.greatest(F.lit(0), F.least(F.lit(nx - 1), x))).cast("long")
+    y = F.when(lat.isNotNull(), F.greatest(F.lit(0), F.least(F.lit(ny - 1), y))).cast("long")
     return x, y
 
 
@@ -86,10 +90,12 @@ def cell_encode(lat: Column, lon: Column, res: int) -> Column:
 
 def cell_encode_sql(lat: str, lon: str, res: int) -> str:
     """``cell_encode`` as SQL text (one py4j call, not one per operator)
-    over two SQL expressions; BIGINT clamp bounds, so analysis adds no casts."""
+    over two SQL expressions, null in, null out like it; BIGINT clamp
+    bounds, so analysis adds no casts."""
     nx, ny = 1 << (res + 1), 1 << res
     x = f"greatest(0L, least({nx - 1}L, floor(({lon} + 180.0D) / 360.0D * {float(nx)!r}D)))"
     y = f"greatest(0L, least({ny - 1}L, floor((90.0D - {lat}) / 180.0D * {float(ny)!r}D)))"
+    x, y = f"CASE WHEN {lon} IS NOT NULL THEN {x} END", f"CASE WHEN {lat} IS NOT NULL THEN {y} END"
     return f"({res << _R_SHIFT}L | shiftleft({x}, {_X_SHIFT}) | {y})"
 
 

@@ -22,17 +22,11 @@ table, planned as a ``LocalRelation``) carries the cell key, the
 boundary row the ring edges that can reach its cell (``_clip_edges``).
 The join predicate and the point cell keys are fixed SQL strings, so
 the plan, its py4j traffic and its analysis are the same size for any
-edge count. Two refine engines, picked by total edge count:
-
-- jvm (up to ``JVM_REFINE_MAX_EDGES``): the even-odd ray cast
-  (``inside_sql``) is a higher-order-function expression over the row's
-  clipped edges — zero Python processes in the hot path.
-- pandas (above it): ships rings to Python workers inside a pandas
-  UDF closure and ray-casts each Arrow batch as one numpy
-  (points x edges) broadcast over whole rings.
-
-Both give bit-identical verdicts (same op order; a clipped edge adds no
-crossing), pinned by tests/test_pip_differential.py.
+edge count. The refine, the even-odd ray cast (``inside_sql``), is a
+higher-order-function expression over the row's clipped edges, so the
+hot path starts no Python process; ``_corner_verdict`` applies the same
+arithmetic on the driver to classify the cover, and
+tests/test_pip_differential.py pins both to ``ray_cast_py``.
 
 Geometry is planar in (lat, lon) — fine for city-scale polygons away
 from the antimeridian (the generator guarantees this; a production
@@ -42,11 +36,9 @@ build would split rings at the antimeridian first).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from skyway_spark.functions import cells
 from skyway_spark.plans.session import local_frame
@@ -72,9 +64,9 @@ def _ray_cast_batch(py: np.ndarray, px: np.ndarray, ys: np.ndarray, xs: np.ndarr
 
 
 # A ring as SQL data: an array of edge structs.  _odd_crossings_sql is
-# the one SQL definition of the even-odd ray cast (the jvm refine and
+# the one SQL definition of the even-odd ray cast (the refine and
 # q_polygon_fill), with _ray_cast_batch's arithmetic op for op, so the
-# jvm and pandas refines agree bit for bit.
+# refine and the driver's cover classification agree bit for bit.
 EDGE_LISTS_DDL = "array<array<struct<y1:double,x1:double,y2:double,x2:double>>>"
 
 
@@ -92,14 +84,6 @@ def inside_sql(outer: str, hole: str, lat: str, lon: str) -> str:
     return f"(exists({outer}, r -> {odd}) AND NOT exists({hole}, r -> {odd}))"
 
 
-# The jvm plan does not grow with the edge count, but the driver's cover
-# classification and clip cost cells x edges numpy work per polygon, and
-# the HOF refine is interpreted, not codegen'd.  Above this edge budget
-# point_in_polygon switches to the pandas refine.  No benchmark leg
-# crosses it, so it stays at 10 000.  Read at call time, so a test can
-# force either engine by moving it.
-JVM_REFINE_MAX_EDGES = 10_000
-
 # Adaptive interior covering (round 4): per polygon, the finest cell
 # resolution whose bbox cover stays under this budget.  Rows per
 # polygon in the broadcast candidate table are bounded by it; 64 cells
@@ -115,9 +99,9 @@ CLIP_MARGIN = 1e-9
 
 
 def _corner_verdict(geom: dict, py: np.ndarray, px: np.ndarray) -> np.ndarray:
-    """Exact polygon verdict (inside any outer, not inside any hole):
-    the pandas refine, and the cover's corner classification on the
-    driver — the same even-odd arithmetic as the jvm refine."""
+    """Exact polygon verdict (inside any outer, not inside any hole) for
+    the cover's corner classification on the driver — the same even-odd
+    arithmetic as the refine."""
     in_outer = np.zeros(len(py), dtype=bool)
     for ys, xs in geom["outer"]:
         in_outer |= _ray_cast_batch(py, px, ys, xs)
@@ -286,20 +270,19 @@ def _edge_lists(parts: list, null: np.ndarray) -> pa.Array:
     return pa.ListArray.from_arrays(offsets(row_lens), rings, mask=pa.array(null))
 
 
-_CELL_DDL = "__cell long, polygon_id {} NOT NULL, __interior boolean"
-_REFINE_DDL = (
-    ", __ymin double, __ymax double, __xmin double, __xmax double, "
+_CELL_DDL = (
+    "__cell long, polygon_id long NOT NULL, __interior boolean, "
+    "__ymin double, __ymax double, __xmin double, __xmax double, "
     f"__outer {EDGE_LISTS_DDL}, __hole {EDGE_LISTS_DDL}"
 )
 
 
-def _cell_table(pids: list, geoms: list, res: int, edges: bool) -> pa.Table:
+def _cell_table(pids: list, geoms: list, res: int) -> pa.Table:
     """The broadcast cell table: one row per kept cover cell of each
-    polygon (``__cell``, ``polygon_id``, ``__interior``).  With
-    ``edges`` (the jvm refine) each row also carries its polygon's
-    outer-ring bbox, and each boundary row the ``outer`` and ``hole``
-    ring edges ``_clip_edges`` keeps for its cell (null on interior
-    rows, which never reach the ray cast)."""
+    polygon (``__cell``, ``polygon_id``, ``__interior``, its polygon's
+    outer-ring bbox), and on each boundary row the ``outer`` and
+    ``hole`` ring edges ``_clip_edges`` keeps for its cell (null on
+    interior rows, which never reach the ray cast)."""
     cols = {k: [] for k in ("__cell", "polygon_id", "__interior", "bbox", "outer", "hole")}
     for pid, g in zip(pids, geoms):
         f = _pick_cover_res(*_bbox(g["outer"] + g["hole"]), res)
@@ -307,16 +290,14 @@ def _cell_table(pids: list, geoms: list, res: int, edges: bool) -> pa.Table:
         cols["__cell"].append(ids)
         cols["polygon_id"].append(np.full(len(ids), pid, dtype=np.int64))
         cols["__interior"].append(inter)
-        if edges:
-            cols["bbox"].append(np.tile(_bbox(g["outer"]), (len(ids), 1)))
-            for role in ("outer", "hole"):
-                e, ring_of = _ring_edges(g[role])
-                cols[role].append((e, ring_of, _clip_edges(e, ids, f) & ~inter[:, None]))
-    table = {k: np.concatenate(cols[k]) for k in ("__cell", "polygon_id", "__interior")}
-    if edges:
-        table.update(zip(("__ymin", "__ymax", "__xmin", "__xmax"), np.concatenate(cols["bbox"]).T))
+        cols["bbox"].append(np.tile(_bbox(g["outer"]), (len(ids), 1)))
         for role in ("outer", "hole"):
-            table[f"__{role}"] = _edge_lists(cols[role], table["__interior"])
+            e, ring_of = _ring_edges(g[role])
+            cols[role].append((e, ring_of, _clip_edges(e, ids, f) & ~inter[:, None]))
+    table = {k: np.concatenate(cols[k]) for k in ("__cell", "polygon_id", "__interior")}
+    table.update(zip(("__ymin", "__ymax", "__xmin", "__xmax"), np.concatenate(cols["bbox"]).T))
+    for role in ("outer", "hole"):
+        table[f"__{role}"] = _edge_lists(cols[role], table["__interior"])
     return pa.table(table)
 
 
@@ -327,11 +308,7 @@ def point_in_polygon(
     point_id: str = "id",
 ) -> DataFrame:
     """Rows of ``points`` (all columns preserved) paired with every
-    ``polygon_id`` containing them.
-
-    The jvm HOF refine runs while the total edge count fits
-    JVM_REFINE_MAX_EDGES, the Arrow pandas refine beyond it.
-    """
+    ``polygon_id`` (a non-null long) containing them."""
     # driver-side: geometry grouped per POLYGON (all its outer + hole
     # rings together) so one verdict = outer-minus-holes in a single
     # pass. The polygon table is dimension-sized by contract —
@@ -343,52 +320,30 @@ def point_in_polygon(
     pids = sorted(p for p, g in by_pid.items() if g["outer"])
     geoms = [by_pid[p] for p in pids]
     passthrough = [c for c in points.columns if c != point_id]
-    if not pids:  # same schema as below: polygon_id is a non-null int
+    if not pids:  # same schema as below
         return points.where(F.lit(False)).select(
-            point_id, *passthrough, F.lit(0).alias("polygon_id")
+            point_id, *passthrough, F.lit(0).cast("long").alias("polygon_id")
         )
-    # polygon_id is an int when every id fits one, else a long, as
-    # Spark types an integer literal
-    pid_t = "int" if -(1 << 31) <= pids[0] and pids[-1] < 1 << 31 else "long"
 
-    total_edges = sum(len(ys) - 1 for g in geoms for ys, _xs in g["outer"] + g["hole"])
-    jvm = total_edges <= JVM_REFINE_MAX_EDGES
-    cell_table = _cell_table(pids, geoms, res, edges=jvm)
-    ddl = _CELL_DDL.format(pid_t) + (_REFINE_DDL if jvm else "")
-    pcells = F.broadcast(local_frame(points.sparkSession, cell_table, ddl))
+    cell_table = _cell_table(pids, geoms, res)
+    pcells = F.broadcast(local_frame(points.sparkSession, cell_table, _CELL_DDL))
 
-    if jvm:
-        # A term that names lat/lon only inside lambda bodies can be
-        # mis-read by Catalyst's pushdown as right-side-only and pushed
-        # below the broadcast exchange, an invalid `!Filter` that fails
-        # at runtime (tests/test_spatial.py::test_pip_after_foreign_latlon_df).
-        # So each edge array is anchored on plain lat/lon; a null
-        # lat/lon already makes the bbox test null and drops the row.
-        def anchored(col):
-            return f"CASE WHEN lat IS NOT NULL AND lon IS NOT NULL THEN {col} END"
+    # A term that names lat/lon only inside lambda bodies can be
+    # mis-read by Catalyst's pushdown as right-side-only and pushed
+    # below the broadcast exchange, an invalid `!Filter` that fails
+    # at runtime (tests/test_spatial.py::test_pip_after_foreign_latlon_df).
+    # So each edge array is anchored on plain lat/lon; a null
+    # lat/lon already makes the bbox test null and drops the row.
+    def anchored(col):
+        return f"CASE WHEN lat IS NOT NULL AND lon IS NOT NULL THEN {col} END"
 
-        # interior cells short-circuit; a boundary candidate pays four
-        # double compares, and only inside the outer-ring bbox the ray
-        # cast over its row's clipped edges
-        inside_pred = F.expr(
-            "__interior OR (lat >= __ymin AND lat <= __ymax AND lon >= __xmin"
-            f" AND lon <= __xmax AND {inside_sql(anchored('__outer'), anchored('__hole'), 'lat', 'lon')})"
-        )
-    else:
-        geom_of = dict(zip(pids, geoms))
-
-        @F.pandas_udf(BooleanType())
-        def inside_udf(lat_s: pd.Series, lon_s: pd.Series, pid_s: pd.Series) -> pd.Series:
-            out = np.zeros(len(lat_s), dtype=bool)
-            py = lat_s.to_numpy(dtype=np.float64)
-            px = lon_s.to_numpy(dtype=np.float64)
-            pi = pid_s.to_numpy()
-            for p in np.unique(pi):
-                m = pi == p
-                out[m] = _corner_verdict(geom_of[int(p)], py[m], px[m])
-            return pd.Series(out)
-
-        inside_pred = F.col("__interior") | inside_udf("lat", "lon", pcells["polygon_id"])
+    # interior cells short-circuit; a boundary candidate pays four
+    # double compares, and only inside the outer-ring bbox the ray
+    # cast over its row's clipped edges
+    inside_pred = F.expr(
+        "__interior OR (lat >= __ymin AND lat <= __ymax AND lon >= __xmin"
+        f" AND lon <= __xmax AND {inside_sql(anchored('__outer'), anchored('__hole'), 'lat', 'lon')})"
+    )
 
     # one cell per point per USED resolution (usually 1-2 distinct
     # levels across the polygon set); a polygon's cells all live at

@@ -89,11 +89,8 @@ def test_readers_and_generators_are_local_relations(spark):
     assert frames["generate_polygons"].schema == POLYGONS_SCHEMA
 
 
-def test_pip_build_over_generated_polygons_runs_no_job(spark):
-    """Collecting the polygon rings of a ``LocalRelation`` needs no
-    Spark job; an RDD of pickled rows needed one per build."""
+def _pip_build_jobs(spark, polygons) -> list:
     points = local_frame(spark, [(1, 40.7, -74.0)], "id long, lat double, lon double")
-    polygons = generate_polygons(spark, n_scatter=4)
     sc = spark.sparkContext
     group = "test-pip-build-jobs"
     sc.setJobGroup(group, group)
@@ -101,7 +98,23 @@ def test_pip_build_over_generated_polygons_runs_no_job(spark):
         point_in_polygon(points, polygons, res=6)
     finally:
         sc.setJobGroup(None, None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pip_build_over_generated_polygons_runs_no_job(spark):
+    """Collecting the polygon rings of a ``LocalRelation`` needs no
+    Spark job; an RDD of pickled rows needed one per build."""
+    assert _pip_build_jobs(spark, generate_polygons(spark, n_scatter=4)) == []
+
+
+def test_pip_build_over_registry_polygons_runs_no_job(spark):
+    """The query registry's literal polygons (``q_pip``, ``q_pip_agg``,
+    ``q_pipeline_exact``, ``entry``) are a ``LocalRelation`` too."""
+    import __spark_entry__ as se
+
+    polygons = se._pip_polygons_df(spark)
+    assert _relation(polygons) == "LocalRelation"
+    assert _pip_build_jobs(spark, polygons) == []
 
 
 def test_create_data_frame_only_inside_local_frame():

@@ -1,12 +1,12 @@
-"""Differential test of the two PIP refines against the plain-Python
-ray cast, on the points where a clipped or mis-bucketed edge would
-show: ring vertices and cell corners one ulp either way, points on
-edges, coordinates that clamp into the border cells, and NaN, +-inf
-and null.
+"""Differential test of the PIP refine against the plain-Python ray
+cast, on the points where a clipped or mis-bucketed edge would show:
+ring vertices and cell corners one ulp either way, points on edges,
+coordinates that clamp into the border cells, and NaN, +-inf and null.
 
-The jvm refine ray-casts over the edges each cell keeps
-(``pip._clip_edges``), the pandas refine over whole rings; both must
-return exactly the (point, polygon) pairs ``ray_cast_py`` finds.
+The refine ray-casts over the edges each cell keeps
+(``pip._clip_edges``); it must return exactly the (point, polygon)
+pairs ``ray_cast_py`` finds over whole rings, for a handful of
+polygons and for a set of more than 10 000 edges.
 """
 
 from __future__ import annotations
@@ -113,10 +113,20 @@ def _oracle(points, polys):
     return want
 
 
-@pytest.fixture(scope="module")
-def case(spark):
-    polys = _polygons()
-    points = _points(polys, np.random.default_rng(20261020))
+def _big_polygons() -> dict[int, list]:
+    """25 concave 400-vertex stars with a 100-vertex hole each, 12 500
+    edges, in lat bands that do not overlap (so the oracle stays
+    cheap)."""
+    return {
+        200 + k: [
+            ("outer", _star(-60.0 + 5 * k, -170.0 + 13.7 * k, 2.0, n=200)),
+            ("hole", _circle(-60.0 + 5 * k, -170.0 + 13.7 * k, 0.6, 100)),
+        ]
+        for k in range(25)
+    }
+
+
+def _frames(spark, polys, points):
     poly_df = local_frame(
         spark,
         [(pid, f"p{pid}", [{"lat": a, "lon": b} for a, b in ring], role)
@@ -124,17 +134,41 @@ def case(spark):
         POLYGONS_SCHEMA,
     )
     pts_df = local_frame(spark, points, "id long, lat double, lon double").cache()
-    return pts_df, poly_df, _oracle(points, polys), len(points)
+    return pts_df, poly_df
+
+
+def _pairs(pts, polys, res):
+    out = point_in_polygon(pts, polys, res=res).select("id", "polygon_id")
+    return {(r["id"], r["polygon_id"]) for r in out.collect()}
+
+
+@pytest.fixture(scope="module")
+def case(spark):
+    polys = _polygons()
+    points = _points(polys, np.random.default_rng(20261020))
+    return (*_frames(spark, polys, points), _oracle(points, polys), len(points))
 
 
 @pytest.mark.parametrize("res", [5, 6])
-def test_jvm_and_pandas_refines_match_ray_cast(case, res, monkeypatch):
+def test_refine_matches_ray_cast(case, res):
     pts, polys, want, n = case
     assert n > 10_000 and len(want) > 1_000
-    got = {}
-    for refine, budget in (("jvm", 10**18), ("pandas", -1)):
-        monkeypatch.setattr(pip_mod, "JVM_REFINE_MAX_EDGES", budget)
-        out = point_in_polygon(pts, polys, res=res).select("id", "polygon_id")
-        got[refine] = {(r["id"], r["polygon_id"]) for r in out.collect()}
-    assert got["jvm"] == want, (len(got["jvm"] - want), len(want - got["jvm"]))
-    assert got["pandas"] == want, (len(got["pandas"] - want), len(want - got["pandas"]))
+    got = _pairs(pts, polys, res)
+    assert got == want, (len(got - want), len(want - got))
+
+
+def test_refine_matches_ray_cast_above_10k_edges(spark):
+    """The edge count once switched refine engines at 10 000; above it
+    the one refine must agree with the ray cast too.  A random sample
+    of the adversarial points keeps the Python oracle short."""
+    polys = _big_polygons()
+    assert sum(len(ring) - 1 for rings in polys.values() for _r, ring in rings) > 10_000
+    rng = np.random.default_rng(20261021)
+    points = _points(polys, rng)
+    special = points[-36:]  # the NaN / +-inf / null cross product
+    points = [points[i] for i in sorted(rng.choice(len(points) - 36, 6_000, replace=False))]
+    points += special
+    want = _oracle(points, polys)
+    assert len(want) > 500
+    got = _pairs(*_frames(spark, polys, points), res=5)
+    assert got == want, (len(got - want), len(want - got))

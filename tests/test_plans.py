@@ -100,7 +100,7 @@ def test_flagship_single_shuffle(spark):
 
 
 def test_pip_jvm_refine_has_no_python_eval(spark):
-    """Default PIP refine stays JVM-side: no BatchEvalPython /
+    """The PIP refine stays JVM-side: no BatchEvalPython /
     ArrowEvalPython node in the plan (input_hint: no per-row Python;
     hot path: no Python at all)."""
     pts = extract_geo_entities(generate_pages(spark, 200, partitions=2)).select(

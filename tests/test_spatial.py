@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from skyway_spark.functions import cells
 from skyway_spark.functions.geo import haversine_km_np
-from skyway_spark.operators import pip as pip_mod
 from skyway_spark.operators import salt, tiles
 from skyway_spark.operators.extract import extract_geo_entities, pages_to_elements
 from skyway_spark.operators.knn import knn_join
@@ -124,20 +123,8 @@ def _pip_oracle(points_rows, poly_rows):
     return expected
 
 
-# point_in_polygon picks its refine engine by total edge count; a test
-# forces one by moving the edge budget
-_REFINE_BUDGET = {"jvm": 10**18, "pandas": -1}
-
-
-def _force_refine(monkeypatch, refine):
-    if refine in _REFINE_BUDGET:
-        monkeypatch.setattr(pip_mod, "JVM_REFINE_MAX_EDGES", _REFINE_BUDGET[refine])
-
-
 @pytest.mark.parametrize("res", [5, 7])
-@pytest.mark.parametrize("refine", ["jvm", "pandas"], ids=["bcast-jvm", "bcast-pandas"])
-def test_pip_matches_oracle(spark, entities, res, refine, monkeypatch):
-    _force_refine(monkeypatch, refine)
+def test_pip_matches_oracle(spark, entities, res):
     polys = generate_polygons(spark)
     pts = entities.select("id", "lat", "lon").limit(3000).cache()
     got = {
@@ -183,13 +170,11 @@ def test_pip_hole_and_concave(spark):
     assert got == {(1, 1), (3, 2), (5, 2)}
 
 
-@pytest.mark.parametrize("refine", ["auto", "jvm", "pandas"])
-def test_pip_empty_polygon_table(spark, refine, monkeypatch):
+def test_pip_empty_polygon_table(spark):
     """A 0-row polygon table yields 0 rows with the usual output schema
     (it used to fail analysis on a VOID-typed cell column). So does a
-    polygon with only ``hole`` rings: it contains no point (the jvm
-    refine used to abort on it while building its bbox)."""
-    _force_refine(monkeypatch, refine)
+    polygon with only ``hole`` rings: it contains no point (the refine
+    used to abort on it while building its bbox)."""
     pts = spark.createDataFrame(
         [(1, 1.0, 1.0), (2, 9.0, 9.0)], "id long, lat double, lon double"
     )
@@ -207,7 +192,7 @@ def test_pip_empty_polygon_table(spark, refine, monkeypatch):
 
 
 def test_edge_columns_carry_vertices_bit_exact(spark):
-    """The broadcast edge columns of the jvm refine carry every ring
+    """The broadcast edge columns of the refine carry every ring
     vertex bit for bit through Arrow and Spark: -0.0, subnormals,
     +-inf, NaN and a seeded fuzz of random bit patterns; a row that
     keeps no edge (an interior cell) is null."""
@@ -303,8 +288,8 @@ def test_clipped_edges_never_cross(entities):
     assert checked > 100_000 and dropped > 10_000, (checked, dropped)
 
 
-def test_pip_jvm_build_py4j_calls_flat_in_edges(spark, monkeypatch):
-    """The jvm-refine plan holds no geometry: the ring edges ride in
+def test_pip_jvm_build_py4j_calls_flat_in_edges(spark):
+    """The PIP plan holds no geometry: the ring edges ride in
     the broadcast cell table, so a 1 024-edge ring costs about as many
     gateway commands as a 16-edge one (it used to cost ~80 per edge),
     and the optimized plan's join condition, where the refine predicate
@@ -322,7 +307,6 @@ def test_pip_jvm_build_py4j_calls_flat_in_edges(spark, monkeypatch):
         ring.append(ring[0])
         return spark.createDataFrame([(1, "r", ring, "outer")], POLYGONS_SCHEMA)
 
-    _force_refine(monkeypatch, "jvm")
     pts = spark.createDataFrame([(1, 10.0, 20.0)], "id long, lat double, lon double")
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
@@ -600,26 +584,30 @@ def test_relation_way_rollup(spark):
     assert got[2]["perimeter_km"] == pytest.approx(2.25)
 
 
+def _join_refine(out) -> str:
+    """The optimized plan's ``Join Inner`` condition after its cell-key
+    equality, with expression ids masked: the refine predicate."""
+    import re
+
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    (join,) = [ln for ln in plan.splitlines() if "Join Inner" in ln]
+    return re.sub(r"#\d+L?", "#", join).split(" = __cell#)", 1)[1]
+
+
 def test_pip_auto_refine_guardrail(spark):
-    """point_in_polygon must (a) stay on the jvm HOF path for
-    dimension-sized polygon tables and (b) switch to the pandas refine
-    when polygons x vertices would blow up the literal plan — 2,000
-    polygons x 200 vertices = 400k edges completes with a plan whose
-    size is independent of the geometry (no 64KB-codegen fallback)."""
+    """One refine for every edge count: 2,000 polygons x 200 vertices =
+    400k edges plans no Python evaluation, finds the hits the ray cast
+    finds, and joins on the same refine predicate as the flagship
+    polygons (the cell key differs with the cover levels, the refine
+    does not)."""
     import math
 
-    # (a) small table -> jvm path: no Python evaluation in the plan
-    small = generate_polygons(spark)
-    pts = spark.createDataFrame(
-        [(1, 40.7128, -74.0060), (2, 0.0, 0.0)], "id long, lat double, lon double"
+    probe = spark.createDataFrame(
+        [(1, -12.0, -10.0), (2, -11.75, -10.0), (3, 55.0, 120.0)],
+        "id long, lat double, lon double",
     )
-    plan_small = (
-        point_in_polygon(pts, small, res=6)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ArrowEvalPython" not in plan_small and "BatchEvalPython" not in plan_small
+    flagship = point_in_polygon(probe, generate_polygons(spark), res=4)
 
-    # (b) 2,000 x 200-vertex rings -> switches to the pandas refine
     rows = []
     for pid in range(2000):
         lat0 = (pid % 50) * 0.5 - 12.0
@@ -634,17 +622,12 @@ def test_pip_auto_refine_guardrail(spark):
         ring.append(ring[0])
         rows.append((pid, f"p{pid}", ring, "outer"))
     big = spark.createDataFrame(rows, POLYGONS_SCHEMA)
-    probe = spark.createDataFrame(
-        [(1, -12.0, -10.0), (2, -11.75, -10.0), (3, 55.0, 120.0)],
-        "id long, lat double, lon double",
-    )
     out = point_in_polygon(probe, big, res=4)
-    plan_big = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan_big or "BatchEvalPython" in plan_big
-    got = {(r["id"], r["polygon_id"]) for r in out.collect()}
+    assert "EvalPython" not in out._jdf.queryExecution().executedPlan().toString()
     # point 1 sits at ring-0's center, point 2 between rings, point 3 far away
-    assert (1, 0) in got
-    assert all(i != 3 for i, _ in got)
+    assert {(r["id"], r["polygon_id"]) for r in out.collect()} == {(1, 0)}
+    assert _join_refine(out) == _join_refine(flagship)
+    assert "exists(" in _join_refine(out)
 
 
 def test_pip_after_foreign_latlon_df(spark):

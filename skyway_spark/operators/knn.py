@@ -332,10 +332,9 @@ def voronoi_assign(points: DataFrame, sites: list[tuple]) -> DataFrame:
     the site list defines a total partition of the plane) and runs
     entirely in the scan stage: the sites ride as plan literals, the
     argmin is one array_min over a per-row struct array — zero
-    shuffles, zero Python.  Literal-budget doctrine (as operators/pip.py
-    picks its refine by edge count): fine for dimension-scale site lists (cities,
-    depots, datacenters); for thousands of sites switch to
-    snap_to_sites' cell join instead.
+    shuffles, zero Python.  Literal-budget doctrine: plan literals are
+    fine for dimension-scale site lists (cities, depots, datacenters);
+    for thousands of sites switch to snap_to_sites' cell join instead.
     """
     la, lo = F.col("lat"), F.col("lon")
     arr = F.array(

@@ -87,9 +87,9 @@ def inside_sql(outer: str, hole: str, lat: str, lon: str) -> str:
 # Adaptive interior covering (round 4): per polygon, the finest cell
 # resolution whose bbox cover stays under this budget.  Rows per
 # polygon in the broadcast candidate table are bounded by it; 64 cells
-# per axis keeps the driver-side classification (cells x edges numpy)
-# trivially cheap while making each cell ~1/60 of the polygon extent,
-# so the boundary band is a small fraction of the cover.
+# per axis makes each cell ~1/60 of the polygon extent.  The driver
+# classification builds dense (cells x edges) numpy matrices, so 10^5
+# polygon edges take seconds to a minute (ROADMAP direction 3).
 INTERIOR_CELL_BUDGET = 4096
 INTERIOR_MAX_RES = 18
 

@@ -1,8 +1,9 @@
 """Helpers shared by the element writers.
 
 ``canonical_order`` is the one element order every writer emits, and
-``write_enveloped`` the distributed text write with driver-written
-header/footer side files of the JSON and XML writers.
+``write_enveloped`` the distributed directory layout of
+``convert.write_elements`` (header, parts, footer side files); the CLI
+writes one file or stdout instead (``convert.write_document``).
 
 The rest serve the struct-input scalar pandas UDFs of the JSON and XML
 writers. A struct column arrives in a pandas UDF as a pd.DataFrame;
@@ -32,16 +33,16 @@ def canonical_order(df: DataFrame) -> DataFrame:
 def write_enveloped(values: DataFrame, path: str, ext: str, header: str, footer: str) -> None:
     """Distributed text write of the single-column ``values`` plus two
     tiny side files the driver writes (metadata only, O(1) size):
-    ``_header.<ext>`` and ``_footer.<ext>``. A consumer concatenates
-    header + parts + footer."""
+    ``_header.<ext>`` and ``_footer.<ext>``, each only when not empty."""
     values.write.mode("overwrite").text(path)
     sc = values.sparkSession.sparkContext
     hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
     fs = hadoop_path(path).getFileSystem(sc._jsc.hadoopConfiguration())
     for name, text in (("_header", header), ("_footer", footer)):
-        out = fs.create(hadoop_path(f"{path}/{name}.{ext}"), True)
-        out.write(bytearray(text.encode()))
-        out.close()
+        if text:
+            out = fs.create(hadoop_path(f"{path}/{name}.{ext}"), True)
+            out.write(bytearray(text.encode()))
+            out.close()
 
 
 def element_struct() -> Column:

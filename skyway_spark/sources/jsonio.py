@@ -29,14 +29,7 @@ from pyspark.sql.types import StringType
 
 from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
-from skyway_spark.sources._rowutil import (
-    canonical_order,
-    element_struct,
-    node_xy,
-    records,
-    seq,
-    write_enveloped,
-)
+from skyway_spark.sources._rowutil import element_struct, node_xy, records, seq
 
 _J = json.dumps  # compact string quoting, like json::stringify
 
@@ -115,30 +108,6 @@ def element_json_col(df: DataFrame):
     """Column of per-element JSON strings (vectorized UDF over the
     full row struct)."""
     return _element_json_udf(element_struct())
-
-
-def serialize_json_string(
-    df: DataFrame, metadata: dict | None = None, overpass: bool = False
-) -> str:
-    """Driver-side full document in canonical order (fixture scale)."""
-    metadata = metadata or empty_metadata()
-    body = ",".join(
-        r["j"]
-        for r in canonical_order(df).select(element_json_col(df).alias("j")).collect()
-    )
-    return create_header(metadata, overpass) + body + "]}"
-
-
-def write_json(
-    df: DataFrame, path: str, metadata: dict | None = None, overpass: bool = False
-) -> None:
-    """Distributed write: element-per-line JSON parts plus a _header /
-    _footer pair, so 100 TB never funnels through the driver. A
-    downstream consumer concatenates header + (comma-joined) parts +
-    footer; at fixture scale use serialize_json_string."""
-    metadata = metadata or empty_metadata()
-    values = canonical_order(df).select(element_json_col(df).alias("value"))
-    write_enveloped(values, path, "json", create_header(metadata, overpass), "]}")
 
 
 # ---------------------------------------------------------------------------

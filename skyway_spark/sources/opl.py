@@ -281,17 +281,6 @@ def serialize_opl(df: DataFrame) -> DataFrame:
     return canonical_order(df).select(opl_line(df).alias("value"))
 
 
-def write_opl(df: DataFrame, path: str) -> None:
-    """Distributed text write (one file per partition; canonical order
-    within partitions by range partitioning of the sort)."""
-    serialize_opl(df).write.mode("overwrite").text(path)
-
-
-def serialize_opl_string(df: DataFrame) -> str:
-    """Driver-side full document (golden fixtures only)."""
-    return "".join(r["value"] + "\n" for r in serialize_opl(df).collect())
-
-
 # ---------------------------------------------------------------------------
 # reader
 # ---------------------------------------------------------------------------

@@ -36,14 +36,7 @@ from pyspark.sql.types import StringType
 
 from skyway_spark.plans.session import local_frame
 from skyway_spark.schema import ELEMENTS_SCHEMA, empty_metadata
-from skyway_spark.sources._rowutil import (
-    canonical_order,
-    element_struct,
-    node_xy,
-    records,
-    seq,
-    write_enveloped,
-)
+from skyway_spark.sources._rowutil import element_struct, node_xy, records, seq
 
 
 def _esc(v: str) -> str:
@@ -110,8 +103,7 @@ def _element_xml_udf(rows: pd.DataFrame) -> pd.Series:
     return pd.Series([serialize_element_xml_py(r) for r in records(rows)])
 
 
-def xml_envelope_open(metadata: dict | None) -> str:
-    metadata = metadata or empty_metadata()
+def xml_envelope_open(metadata: dict) -> str:
     attrs = []
     for k in ("version", "generator", "copyright", "license"):
         if metadata.get(k) is not None:
@@ -122,22 +114,6 @@ def xml_envelope_open(metadata: dict | None) -> str:
 
 def element_xml_col(df: DataFrame):
     return _element_xml_udf(element_struct())
-
-
-def serialize_xml_string(df: DataFrame, metadata: dict | None = None) -> str:
-    """Driver-side full document in canonical order (fixtures)."""
-    body = "".join(
-        r["x"]
-        for r in canonical_order(df).select(element_xml_col(df).alias("x")).collect()
-    )
-    return xml_envelope_open(metadata) + body + "</osm>"
-
-
-def write_xml(df: DataFrame, path: str, metadata: dict | None = None) -> None:
-    """Distributed fragment write + O(1) envelope side files (the
-    reference buffers everything in RAM instead, xml.rs:200-213)."""
-    values = canonical_order(df).select(element_xml_col(df).alias("value"))
-    write_enveloped(values, path, "xml", xml_envelope_open(metadata), "</osm>")
 
 
 # ---------------------------------------------------------------------------

@@ -68,7 +68,7 @@ def tiny(spark):
 
 
 def test_opl_layout(tiny):
-    lines = opl.serialize_opl_string(tiny).splitlines()
+    lines = convert.serialize_string(tiny, "opl").splitlines()
     # node: x(lon) BEFORE y(lat); ' T' always present even with 0 tags
     assert lines[0] == "n1 v3 dV c77 t2024-01-01T00:00:00Z i9 uann%20%e Tamenity=cafe,name=a%20%b x-122.25 y37.5"
     assert lines[1] == "n2 dD T x3.25 y-1.5"
@@ -87,23 +87,23 @@ def test_writers_reject_node_without_coordinates(spark, tmp_path):
         return ("node", i, lat, lon, None, None, {}, None, None, None, None, None, None)
 
     inf = spark.createDataFrame([node(1, float("inf"), float("-inf"))], ELEMENTS_SCHEMA)
-    assert opl.serialize_opl_string(inf) == "n1 T x-inf yinf\n"
+    assert convert.serialize_string(inf, "opl") == "n1 T x-inf yinf\n"
     for i, lat, lon in ((2, float("nan"), 2.5), (3, 1.5, None)):
         df = spark.createDataFrame([node(1, 0.5, 2.5), node(i, lat, lon)], ELEMENTS_SCHEMA)
         for write in (
-            opl.serialize_opl_string,
-            lambda d: opl.write_opl(d, str(tmp_path / f"out{i}.opl")),
-            jsonio.serialize_json_string,
-            xmlio.serialize_xml_string,
+            lambda d: convert.serialize_string(d, "opl"),
+            lambda d: convert.write_elements(d, str(tmp_path / f"out{i}.opl")),
+            lambda d: convert.serialize_string(d, "json"),
+            lambda d: convert.serialize_string(d, "xml"),
         ):
             with pytest.raises(Exception, match=f"node {i}: lat or lon is null or NaN"):
                 write(df)
 
 
 def test_json_layout(tiny):
-    s = jsonio.serialize_json_string(tiny, {"generator": "g", "copyright": "c",
-                                            "license": "l", "version": None,
-                                            "timestamp": None})
+    s = convert.serialize_string(tiny, "json", {"generator": "g", "copyright": "c",
+                                                "license": "l", "version": None,
+                                                "timestamp": None})
     # OSM header: string version
     assert s.startswith('{"generator":"g","copyright":"c","license":"l","version":"0.6","elements":[')
     doc = json.loads(s)
@@ -127,10 +127,10 @@ def test_json_layout(tiny):
 
 
 def test_overpass_header(tiny):
-    s = jsonio.serialize_json_string(
+    s = convert.serialize_string(
         tiny,
+        "overpass",
         {"generator": "g", "copyright": "c", "timestamp": "T0", "version": None, "license": None},
-        overpass=True,
     )
     # numeric version + osm3s block
     assert s.startswith(
@@ -140,9 +140,9 @@ def test_overpass_header(tiny):
 
 
 def test_xml_layout(tiny):
-    s = xmlio.serialize_xml_string(tiny, {"version": "0.6", "generator": "g",
-                                          "copyright": None, "license": None,
-                                          "timestamp": None})
+    s = convert.serialize_string(tiny, "xml", {"version": "0.6", "generator": "g",
+                                               "copyright": None, "license": None,
+                                               "timestamp": None})
     assert s.startswith('<?xml version="1.0" encoding="UTF-8"?><osm version="0.6" generator="g">')
     # nodes then ways then relations; visible null -> "true"
     i_node = s.index("<node")
@@ -177,7 +177,7 @@ def test_opl_roundtrip(spark, elements, tmp_path):
     # zero-node way and an empty-M relation
     extra = ["", "w900001 N", "r900002 M"]
     with open(p, "w") as f:
-        body = opl.serialize_opl_string(elements).splitlines()
+        body = convert.serialize_string(elements, "opl").splitlines()
         f.write("\n".join(body[:5] + extra + body[5:]) + "\n")
     back, md = opl.read_opl(spark, p)
     assert back.count() == elements.count() + len(extra)
@@ -207,7 +207,7 @@ def test_json_roundtrip(spark, elements, tmp_path):
     md_in = {"version": "0.6", "generator": "skyway_spark", "copyright": "c",
              "license": "l", "timestamp": None}
     with open(p, "w") as f:
-        f.write(jsonio.serialize_json_string(elements, md_in))
+        f.write(convert.serialize_string(elements, "json", md_in))
     back, md = jsonio.read_json(spark, p)
     want = _canon(elements)
     got = _canon(back)
@@ -234,7 +234,7 @@ def test_xml_roundtrip(spark, elements, tmp_path):
     md_in = {"version": "0.6", "generator": "g", "copyright": None, "license": None,
              "timestamp": None}
     with open(p, "w") as f:
-        f.write(xmlio.serialize_xml_string(elements, md_in))
+        f.write(convert.serialize_string(elements, "xml", md_in))
     back, md = xmlio.read_xml(spark, p)
     want = _canon(elements)
     got = _canon(back)
@@ -253,7 +253,7 @@ def test_overpass_roundtrip(spark, elements, tmp_path):
     md_in = {"version": None, "generator": "overpass-ish", "copyright": "cr",
              "license": None, "timestamp": "2024-02-02T00:00:00Z"}
     with open(p, "w") as f:
-        f.write(jsonio.serialize_json_string(elements, md_in, overpass=True))
+        f.write(convert.serialize_string(elements, "overpass", md_in))
     back, md = jsonio.read_json(spark, p)
     assert back.count() == elements.count()
     # numeric version 0.6 read back as string (reference version
@@ -421,51 +421,198 @@ def test_writers_keep_changeset_past_2_53_beside_a_null(spark):
         assert str(big - 1) not in "".join(out)
 
 
-def test_convert_cli_end_to_end(spark, elements, tmp_path):
-    """jobs/convert.py: opl -> filter -> json, reference flag
-    semantics (extension inference, filter chain order)."""
+def _element_dicts(rows) -> list[dict]:
+    """``element_rows`` tuples -> ``encode_pbf`` element dicts (PBF
+    stores timestamps as epoch values; the opaque fixture string is
+    left out)."""
+    from skyway_spark.schema import ELEMENTS_SCHEMA
+
+    names = ELEMENTS_SCHEMA.fieldNames()
+    out = []
+    for r in rows:
+        e = {k: v for k, v in zip(names, r) if v is not None and k != "timestamp"}
+        if "members" in e:
+            e["members"] = [{"type": t, "ref": ref, "role": role or ""} for t, ref, role in e["members"]]
+        out.append(e)
+    return out
+
+
+@pytest.fixture(scope="module")
+def cli_inputs(elements, tmp_path_factory):
+    """The 300-row fixture as one OPL, JSON, XML and PBF input file."""
+    from skyway_spark.sources.generate import element_rows
+
+    d = tmp_path_factory.mktemp("cli_inputs")
+    md = {"version": "0.6", "generator": "g", "copyright": "c", "license": None, "timestamp": None}
+    paths = {}
+    for fmt in ("opl", "json", "xml"):
+        paths[fmt] = str(d / f"in.{fmt}")
+        with open(paths[fmt], "w", encoding="utf-8") as f:
+            f.write(convert.serialize_string(elements, fmt, md))
+    paths["pbf"] = str(d / "in.pbf")
+    # several blobs, so the decode and the sort span several partitions
+    pbf.encode_pbf(paths["pbf"], _element_dicts(element_rows()), block_size=100)
+    return paths
+
+
+@pytest.fixture
+def cli(spark, monkeypatch):
+    """jobs/convert.py's ``main`` on the test session, with AQE partition
+    coalescing off so each write makes several part files. Returns
+    ``run(argv) -> part files of each write_elements call``."""
     import sys as _sys
     from pathlib import Path
+
+    from skyway_spark.plans import session
 
     # jobs/convert.py is a script, imported as the top-level module
     # "convert"; it also puts its checkout's root on sys.path
     saved_path, saved_mod = _sys.path[:], _sys.modules.pop("convert", None)
     _sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     try:
-        import convert as cli
-
-        src = str(tmp_path / "in.opl")
-        Path(src).write_text(convert.serialize_string(elements, "opl") + "")
-        flt = tmp_path / "keep.cel"
-        flt.write_text('type == "node"')
-        out = str(tmp_path / "out.json")
-        rc = cli.main(["--input", src, "--output", out, "--to", "json",
-                       "--filter", str(flt)])
+        import convert as cli_mod
     finally:
         _sys.path[:] = saved_path
         _sys.modules.pop("convert", None)
         if saved_mod is not None:
             _sys.modules["convert"] = saved_mod
-    assert rc == 0
-    import json as _json
 
-    if Path(out).is_file():
-        doc = _json.loads(Path(out).read_text())
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    parts = []
+    write_elements = convert.write_elements
+
+    def spy(df, path, *args):
+        write_elements(df, path, *args)
+        parts.append(len([n for n in os.listdir(path) if n.startswith("part-")]))
+
+    monkeypatch.setattr(convert, "write_elements", spy)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+
+    def run(argv):
+        parts.clear()
+        assert cli_mod.main(argv) == 0
+        return list(parts)
+
+    yield run
+    spark.conf.set(key, saved)
+
+
+_CLI_FILTER = 'type == "node" || type == "way"'
+
+
+@pytest.mark.parametrize("to", ["opl", "json", "overpass", "xml"])
+@pytest.mark.parametrize("src", ["opl", "json", "xml", "pbf"])
+def test_convert_cli_end_to_end(spark, cli, cli_inputs, capsys, tmp_path, src, to):
+    """jobs/convert.py: read -> filter -> one document, to a file and to
+    stdout, each byte for byte ``convert.serialize_string`` of the
+    filtered input, assembled from at least two part files."""
+    from pathlib import Path
+
+    from skyway_spark.functions.filter import apply_filters
+
+    flt = tmp_path / "keep.cel"
+    flt.write_text(_CLI_FILTER)
+    df, md = convert.read_elements(spark, cli_inputs[src])
+    want = convert.serialize_string(apply_filters(df, [_CLI_FILTER]), to, md)
+
+    out = str(tmp_path / "out.doc")
+    argv = ["--input", cli_inputs[src], "--to", to, "--filter", str(flt)]
+    capsys.readouterr()
+    (n_parts,) = cli(argv + ["--output", out])
+    assert n_parts >= 2
+    assert capsys.readouterr().out == ""
+    assert Path(out).read_bytes() == want.encode("utf-8")
+    assert sorted(os.listdir(tmp_path)) == ["keep.cel", "out.doc"]
+    (n_parts,) = cli(argv + ["--output", "-"])
+    assert n_parts >= 2
+    assert capsys.readouterr().out.encode("utf-8") == want.encode("utf-8")
+
+    kept = df.where(F.col("type").isin("node", "way")).count()
+    if to in ("json", "overpass"):
+        doc = json.loads(want)
+        assert {e["type"] for e in doc["elements"]} == {"node", "way"}
+        assert len(doc["elements"]) == kept
+    elif to == "opl":
+        assert want.count("\n") == kept
     else:
-        # distributed layout: _header.json + line-per-element parts
-        # (comma-joined) + _footer.json (see jsonio.write_json)
-        header = (Path(out) / "_header.json").read_text()
-        lines = [
-            ln
-            for p in sorted(Path(out).glob("part-*"))
-            for ln in p.read_text().splitlines()
-            if ln
-        ]
-        doc = _json.loads(header + ",".join(lines) + "]}")
-    types = {e["type"] for e in doc["elements"]}
-    assert types == {"node"}
-    n_nodes = elements.where(F.col("type") == "node").count()
-    assert len(doc["elements"]) == n_nodes
+        assert want.count("<node ") + want.count("<way ") == kept
+
+
+@pytest.mark.parametrize(
+    "to, want",
+    [
+        ("opl", ""),
+        ("json", '{"version":"0.6","elements":[]}'),
+        ("overpass", '{"osm3s":{},"version":0.6,"elements":[]}'),
+        ("xml", '<?xml version="1.0" encoding="UTF-8"?><osm></osm>'),
+    ],
+    ids=["opl", "json", "overpass", "xml"],
+)
+def test_convert_cli_no_elements(cli, capsys, tmp_path, to, want):
+    """An input with no elements: the document is the header and the
+    footer alone."""
+    src = tmp_path / "empty.opl"
+    src.write_text("")
+    out = tmp_path / "out.doc"
+    cli(["--input", str(src), "--output", str(out), "--to", to])
+    assert out.read_text(encoding="utf-8") == want
+    capsys.readouterr()
+    cli(["--input", str(src), "--output", "-", "--to", to])
+    assert capsys.readouterr().out == want
+
+
+def test_convert_cli_stdin_leaves_no_file(cli, cli_inputs, capsys, monkeypatch, tmp_path):
+    """``--input -`` copies stdin to a temporary file for the reader;
+    the run removes it (and its own temporary directory) again."""
+    import io
+    import sys as _sys
+    import tempfile
+
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmpdir))
+    with open(cli_inputs["opl"], "rb") as f:
+        data = f.read()
+    monkeypatch.setattr(_sys, "stdin", io.TextIOWrapper(io.BytesIO(data)))
+    capsys.readouterr()
+    cli(["--input", "-", "--from", "opl", "--output", "-", "--to", "opl"])
+    assert capsys.readouterr().out.encode("utf-8") == data
+    assert os.listdir(tmpdir) == []
+
+
+def test_one_line_is_one_element(spark, tmp_path):
+    """Every writer escapes the newline characters inside values (OPL
+    ``%a%``, JSON ``\\n``, XML ``&#10;``), so each element is one line
+    of a ``write_elements`` part file and a document splits back into
+    its elements."""
+    import xml.etree.ElementTree as ET
+
+    from skyway_spark.schema import ELEMENTS_SCHEMA
+
+    nasty = "a\nb\rc\r\nd\u2028e\x85f"
+    rows = [
+        ("node", 1, 1.5, 2.5, None, None, {nasty: nasty}, None, None, nasty, None, None, None),
+        ("way", 2, None, None, [1], None, {"k": nasty}, None, None, None, None, None, None),
+        ("relation", 3, None, None, None, [("node", 1, nasty)], {}, None, None, nasty,
+         None, None, None),
+    ]
+    df = spark.createDataFrame(rows, ELEMENTS_SCHEMA)
+    for fmt in ("opl", "json", "xml"):
+        path = str(tmp_path / fmt)
+        convert.write_elements(df, path, fmt)
+        text = "".join(
+            open(os.path.join(path, n), encoding="utf-8", newline="").read()
+            for n in os.listdir(path)
+            if n.startswith("part-")
+        )
+        assert text.count("\n") == 3 and "\r" not in text, fmt
+    assert len(convert.serialize_string(df, "opl").splitlines()) == 3
+    back = json.loads(convert.serialize_string(df, "json"))["elements"]
+    assert back[0]["tags"] == {nasty: nasty} and back[2]["members"][0]["role"] == nasty
+    root = ET.fromstring(convert.serialize_string(df, "xml"))
+    assert root.find("node").get("user") == nasty
 
 
 def test_distributed_opl_write_read(spark, elements, tmp_path):
@@ -591,14 +738,14 @@ def test_reference_example_json_end_to_end(spark, tmp_path):
 
     # JSON round-trip through the repo writer: re-read matches
     p = str(tmp_path / "example_rt.json")
-    s1 = jsonio.serialize_json_string(els, md)
+    s1 = convert.serialize_string(els, "json", md)
     with open(p, "w", encoding="utf-8") as f:
         f.write(s1)
     back, md2 = jsonio.read_json(spark, p)
     assert _canon(back) == _canon(els)
     assert md2["generator"] == md["generator"]
     # idempotence: writer output is byte-stable across a round-trip
-    assert jsonio.serialize_json_string(back, md2) == s1
+    assert convert.serialize_string(back, "json", md2) == s1
 
 
 # ------------- seeded adversarial write->read round-trip fuzz (r5) -------------
@@ -721,7 +868,7 @@ def fuzz_elements_xmlsafe(spark):
 def test_fuzz_opl_roundtrip(spark, fuzz_elements, tmp_path):
     p = str(tmp_path / "fuzz.opl")
     with open(p, "w", encoding="utf-8") as f:
-        f.write(opl.serialize_opl_string(fuzz_elements))
+        f.write(convert.serialize_string(fuzz_elements, "opl"))
     back, _ = opl.read_opl(spark, p)
     want, got = _canon(fuzz_elements), _canon(back)
     assert len(want) == len(got)
@@ -737,7 +884,7 @@ def test_fuzz_json_roundtrip(spark, fuzz_elements, tmp_path):
     md_in = {"version": "0.6", "generator": "fuzz", "copyright": None,
              "license": None, "timestamp": None}
     with open(p, "w", encoding="utf-8") as f:
-        f.write(jsonio.serialize_json_string(fuzz_elements, md_in))
+        f.write(convert.serialize_string(fuzz_elements, "json", md_in))
     back, _ = jsonio.read_json(spark, p)
     want, got = _canon(fuzz_elements), _canon(back)
     assert len(want) == len(got)
@@ -756,7 +903,7 @@ def test_fuzz_xml_roundtrip(spark, fuzz_elements_xmlsafe, tmp_path):
     md_in = {"version": "0.6", "generator": "fuzz", "copyright": None,
              "license": None, "timestamp": None}
     with open(p, "w", encoding="utf-8") as f:
-        f.write(xmlio.serialize_xml_string(fuzz_elements_xmlsafe, md_in))
+        f.write(convert.serialize_string(fuzz_elements_xmlsafe, "xml", md_in))
     back, _ = xmlio.read_xml(spark, p)
     want, got = _canon(fuzz_elements_xmlsafe), _canon(back)
     assert len(want) == len(got)
@@ -772,7 +919,7 @@ def test_fuzz_opl_field_order_and_escapes(fuzz_elements):
     reference's fixed order (opl.rs:78-109), every token except the
     first is introduced by its prefix letter, and no unescaped
     delimiter survives outside its structural position."""
-    lines = opl.serialize_opl_string(fuzz_elements).splitlines()
+    lines = convert.serialize_string(fuzz_elements, "opl").splitlines()
     assert len(lines) == 320
     order = "vdctiuTNMxy"
     for ln in lines:

@@ -138,13 +138,14 @@ def test_pip_matches_oracle(spark, entities, res):
     assert len(want) > 0  # hot-city polygons guarantee hits
 
 
-def test_pip_hole_and_concave(spark):
-    # explicit tiny cases: square with hole + concave "U"
+def _square_and_u(spark):
+    """Explicit tiny polygons: a square with a hole (pid 1) and a
+    concave "U" (pid 2)."""
     square = [(0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0), (0.0, 0.0)]
     hole = [(1.0, 1.0), (1.0, 3.0), (3.0, 3.0), (3.0, 1.0), (1.0, 1.0)]
     u_shape = [(10.0, 0.0), (14.0, 0.0), (14.0, 1.0), (11.0, 1.0), (11.0, 3.0),
                (14.0, 3.0), (14.0, 4.0), (10.0, 4.0), (10.0, 0.0)]
-    polys = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             (1, "sq", [{"lat": a, "lon": b} for a, b in square], "outer"),
             (1, "sq", [{"lat": a, "lon": b} for a, b in hole], "hole"),
@@ -152,22 +153,43 @@ def test_pip_hole_and_concave(spark):
         ],
         POLYGONS_SCHEMA,
     )
-    pts = spark.createDataFrame(
-        [
-            (1, 0.5, 0.5),    # in square, outside hole -> pid 1
-            (2, 2.0, 2.0),    # inside hole -> nothing
-            (3, 10.5, 0.5),   # in U arm -> pid 2
-            (4, 12.0, 2.0),   # in U notch -> nothing
-            (5, 13.5, 0.5),   # in U other arm... (lat 13.5, lon 0.5) -> pid 2
-            (6, 50.0, 50.0),  # far away -> nothing
-        ],
-        "id long, lat double, lon double",
-    )
-    got = {
+
+
+_SQUARE_AND_U_POINTS = [
+    (1, 0.5, 0.5),    # in square, outside hole -> pid 1
+    (2, 2.0, 2.0),    # inside hole -> nothing
+    (3, 10.5, 0.5),   # in U arm -> pid 2
+    (4, 12.0, 2.0),   # in U notch -> nothing
+    (5, 13.5, 0.5),   # in U other arm... (lat 13.5, lon 0.5) -> pid 2
+    (6, 50.0, 50.0),  # far away -> nothing
+]
+
+
+def _pip_pairs(pts, polys) -> set:
+    return {
         (r["id"], r["polygon_id"])
         for r in point_in_polygon(pts, polys, res=4).select("id", "polygon_id").collect()
     }
-    assert got == {(1, 1), (3, 2), (5, 2)}
+
+
+def test_pip_hole_and_concave(spark):
+    pts = spark.createDataFrame(_SQUARE_AND_U_POINTS, "id long, lat double, lon double")
+    assert _pip_pairs(pts, _square_and_u(spark)) == {(1, 1), (3, 2), (5, 2)}
+
+
+def test_pip_null_coordinate_rows_add_no_pairs(spark):
+    """A point whose lat or lon is null gets a null cell from
+    ``cell_encode``, so it joins no polygon: the pairs are exactly those
+    of the frame without it, also where its other coordinate lies in
+    a polygon's range."""
+    polys = _square_and_u(spark)
+    nulls = [(7, None, 0.5), (8, 0.5, None), (9, 10.5, None), (10, None, None)]
+    with_nulls = spark.createDataFrame(
+        _SQUARE_AND_U_POINTS + nulls, "id long, lat double, lon double"
+    )
+    without = with_nulls.where(F.col("lat").isNotNull() & F.col("lon").isNotNull())
+    assert without.count() == len(_SQUARE_AND_U_POINTS)
+    assert _pip_pairs(with_nulls, polys) == _pip_pairs(without, polys) == {(1, 1), (3, 2), (5, 2)}
 
 
 def test_pip_empty_polygon_table(spark):
